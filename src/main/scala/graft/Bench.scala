@@ -261,8 +261,9 @@ object Bench {
           noop(ranks)
           // free the result's localCheckpoint blocks: repeated bench runs
           // would otherwise accumulate block-manager litter and feed the
-          // run-to-run spread the r13 verdict flagged on this row
-          org.apache.spark.sql.graftbridge.freeCheckpoint(ranks)
+          // run-to-run spread the r13 verdict flagged on this row. The
+          // result is a projection of the final round, so the deep free
+          org.apache.spark.sql.graftbridge.freeCheckpoints(ranks)
         }),
         "ops_bm25_sec" -> (() => {
           val docs = t("documents").df

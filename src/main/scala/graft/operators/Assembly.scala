@@ -72,7 +72,7 @@ object Assembly {
       col(sourceCol).as("source"), col(langCol).as("lang"))
 
     // Each stage's narrow (id, verdict) table is pinned with a checkpoint
-    // (Dedup.truncate): the audit join below consumes every stage AND each
+    // (Materialize.pin): the audit join below consumes every stage AND each
     // stage feeds the next one's survivor filter, so without pinning Spark
     // re-executes the expensive text pipelines per consumer — the quality
     // gate (including its corpus-wide LM training) ran 4x, decontamination
@@ -81,28 +81,28 @@ object Assembly {
     // summarize — and the heavy lineage behind them executes exactly once.
 
     // 1. quality gate — the LM trains on exactly this input corpus
-    val gate = Dedup.truncate(
+    val gate = Materialize.pin(
       Corpus.qualityGate(base, "id", "text", minTokens, maxTokens,
           maxTopNgramFrac, maxDupNgramFrac, maxAvgNll)
         .select(col("id"), col("n_tokens"), col("keep").as("gate_keep")))
     val kept1 = base.join(gate.filter(col("gate_keep")).select("id"), Seq("id"), "left_semi")
 
     // 2. near-dedup over the gate's survivors, keep-canonical
-    val dd = Dedup.truncate(
+    val dd = Materialize.pin(
       Dedup.winnowNearDup(kept1, "id", "text", minJaccard = minJaccard,
           shingleWidth = shingleWidth)
         .select(col("id"), (col("cluster_id") <=> col("id")).as("canonical")))
     val kept2 = kept1.join(dd.filter(col("canonical")).select("id"), Seq("id"), "left_semi")
 
     // 3. decontamination against the (broadcast) benchmark shingle set
-    val dec = Dedup.truncate(
+    val dec = Materialize.pin(
       Corpus.decontaminate(kept2, benchmark, "id", "text", shingleWidth, minShared)
         .select(col("id"), col("contaminated")))
     val kept3 = kept2.join(dec.filter(!col("contaminated")).select("id"), Seq("id"), "left_semi")
 
     // 4/5. per-source quality cap over the decontaminated survivors
     val scored = kept3.withColumn("quality", TextFunctions.qualityScore(col("text")))
-    val ranked = Dedup.truncate(Corpus.capPerGroup(scored, "source", "quality", "id", capPerSource))
+    val ranked = Materialize.pin(Corpus.capPerGroup(scored, "source", "quality", "id", capPerSource))
     val kept4 = scored.join(ranked.select("id"), Seq("id"), "left_semi")
 
     // 4/6. deterministic split + shard packing of the final survivors
@@ -191,11 +191,11 @@ object Assembly {
     val bench = benchmark.select(col(idCol).as("id"), col(textCol).as("text"))
 
     // 1. corpus-wide line dedup (rewrite, no drops)
-    val ld = Dedup.truncate(Corpus.lineDedup(valid, "id", "text", sep)
+    val ld = Materialize.pin(Corpus.lineDedup(valid, "id", "text", sep)
       .select(col("id"), col("n_lines"), col("n_removed_lines"), col("text_deduped")))
 
     // 2. surgical decontamination of the deduped text vs the benchmark
-    val dec = Dedup.truncate(Corpus.decontaminateSpans(
+    val dec = Materialize.pin(Corpus.decontaminateSpans(
         ld.select(col("id"), col("text_deduped").as("text")), bench, "id", "text", spanLen)
       .select(col("id"), col("n_removed_tokens").as("n_decont_tokens"),
         col("text_deduped").as("text_clean")))
@@ -206,7 +206,7 @@ object Assembly {
     // text, and the audit carries the per-category counts. piiPatterns =
     // Nil (the default) skips the stage and keeps the legacy audit schema.
     val pii: Option[DataFrame] = if (piiPatterns.isEmpty) None
-      else Some(Dedup.truncate(Corpus.redactPiiAudited(
+      else Some(Materialize.pin(Corpus.redactPiiAudited(
         dec.select(col("id"), col("text_clean").as("text")), "id", "text", piiPatterns)))
     val cleanForGate = pii match {
       case Some(p) => p.select(col("id"), col("text_redacted").as("text"))
@@ -216,13 +216,13 @@ object Assembly {
 
     // 3. OOV gate — vocabulary from the cleaned (and, when enabled,
     // masked) corpus itself
-    val oov = Dedup.truncate(Corpus.vocabCoverage(cleanForGate, "id", "text", oovPerMille)
+    val oov = Materialize.pin(Corpus.vocabCoverage(cleanForGate, "id", "text", oovPerMille)
       .select(col("id"), col("oov_frac")))
 
     // 4. epoch mixing over the gate's survivors
     val surv = valid.select(col("id"), col("source"))
       .join(oov.filter(col("oov_frac") <= maxOovFrac).select("id"), Seq("id"), "left_semi")
-    val mixed = Dedup.truncate(
+    val mixed = Materialize.pin(
       Corpus.epochMix(surv, "id", "source", salt, budget, maxEpochs)
         .select(col("id"), col("n_repeats")))
 

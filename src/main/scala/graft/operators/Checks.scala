@@ -208,7 +208,9 @@ object Checks {
     // the same counts table (equal values have equal deviations), so it
     // costs O(distinct values) and no second scan of the raw rows: the
     // full input is scanned twice total (counts + the output re-attach)
-    // instead of three times.
+    // instead of three times — only because exchange reuse serves the
+    // second `counts` consumer from the first one's shuffle (pinned in
+    // PlanQualitySpec; with spark.sql.exchangeReuseEnabled off it is three).
     val counts = df.groupBy(col(groupCol).as("__g1"), col(valueCol).as("__v"))
       .agg(count(lit(1)).as("__cnt"))
     val med = counts.groupBy(col("__g1"))
@@ -267,7 +269,7 @@ object Checks {
     // measured, the composite made ~8 full scans of the two inputs where
     // 3 suffice (2 reference passes + 1 current pass)
     scorePsiAgainst(current,
-      psiBaseline(reference, valueCol, buckets).localCheckpoint(),
+      Materialize.pin(psiBaseline(reference, valueCol, buckets)),
       valueCol)
 
   /** Frozen PSI baseline: one row per bucket carrying the reference
@@ -370,13 +372,12 @@ object Checks {
     // r18: pin the O(maxCategories) domain — it feeds BOTH labeled scans,
     // the grid, and (pre-r18) a grid count, and unpinned each consumer
     // re-ran the reference top-k reduce from scratch
-    val top = reference.filter(col(catCol).isNotNull)
+    val top = Materialize.pin(reference.filter(col(catCol).isNotNull)
       .groupBy(col(catCol).cast("string").as("category"))
       .agg(count(lit(1)).as("__cnt"))
       .orderBy(col("__cnt").desc, col("category").asc)
       .limit(maxCategories)
-      .select("category")
-      .localCheckpoint()
+      .select("category"))
     def labeled(df: DataFrame, as: String) = df
       .select(when(col(catCol).isNull, lit("__null__"))
         .otherwise(col(catCol).cast("string")).as("raw"))
@@ -442,7 +443,7 @@ object Checks {
     // r18: pin the O(labels) baseline — the scorer reads it twice (domain
     // + join side); the driftPsi composite fix
     scoreChi2Against(current,
-      chi2Baseline(reference, catCol, maxCategories).localCheckpoint(),
+      Materialize.pin(chi2Baseline(reference, catCol, maxCategories)),
       catCol)
 
   /** Map a frame onto a frozen top-category domain (the PSI-cat
@@ -472,13 +473,12 @@ object Checks {
     // r18: pinned domain + window-sum total, the driftPsiCategorical fixes
     // (grid and labelOntoDomain both read `top`; ref_n is the exact sum of
     // the label counts since every row maps onto exactly one grid label)
-    val top = reference.filter(col(catCol).isNotNull)
+    val top = Materialize.pin(reference.filter(col(catCol).isNotNull)
       .groupBy(col(catCol).cast("string").as("category"))
       .agg(count(lit(1)).as("__cnt"))
       .orderBy(col("__cnt").desc, col("category").asc)
       .limit(maxCategories)
-      .select("category")
-      .localCheckpoint()
+      .select("category"))
     val grid = top.union(Seq("__other__", "__null__").toDF("category"))
     grid
       .join(labelOntoDomain(reference, catCol, top, "ref_cnt"), Seq("category"), "left")
@@ -583,7 +583,7 @@ object Checks {
     // both value reduces and the full-outer join — the composite made ~9
     // reference passes where 2 suffice. O(distinct values) narrow rows,
     // disk-backed local blocks.
-    val m = (rc.join(cc, Seq("v"), "full_outer")
+    val m = Materialize.pin(rc.join(cc, Seq("v"), "full_outer")
       .select(col("v"),
         coalesce(col("ref_c"), lit(0L)).as("ref_c"),
         coalesce(col("cur_c"), lit(0L)).as("cur_c"))
@@ -591,7 +591,6 @@ object Checks {
       .withColumn("__bucket",
         size(filter(col("edges"), e => col("v") > e)).cast("long"))
       .drop("edges"))
-      .localCheckpoint()
     val inner = org.apache.spark.sql.expressions.Window
       .partitionBy("__bucket").orderBy("v")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
@@ -614,12 +613,11 @@ object Checks {
     val totals = m.agg(sum(col("ref_c")).as("n_ref"), sum(col("cur_c")).as("n_cur"))
     // r18: PINNED — `gaps` feeds the max aggregate and the argmin join;
     // unpinned, the second consumer re-ran both prefix-sum windows
-    val gaps = (cum.join(broadcast(offsets), Seq("__bucket"))
+    val gaps = Materialize.pin(cum.join(broadcast(offsets), Seq("__bucket"))
       .crossJoin(broadcast(totals))
       .select(col("v"), col("n_ref"), col("n_cur"),
         abs((col("off_ref") + col("in_ref")) * col("n_cur") -
           (col("off_cur") + col("in_cur")) * col("n_ref")).as("gap")))
-      .localCheckpoint()
     val dMax = gaps.agg(max(col("gap")).as("d_num"))
     gaps.join(broadcast(dMax), col("gap") === col("d_num"))
       .groupBy(col("n_ref"), col("n_cur"), col("d_num"))

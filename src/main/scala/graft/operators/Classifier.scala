@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge
 
 /** Trained quality classification (SURVEY.md §2.3 extensions): logistic
   * regression over md5-hashed bag-of-words features — the fastText-style
@@ -29,10 +28,6 @@ object Classifier {
 
   /** Bias pseudo-feature id in the model table. */
   val BiasFeature: Long = -1L
-
-  private def truncate(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
 
   /** md5-hashed feature index in [0, dim) — engine-portable (the
     * splitByHash pattern): first 8 md5 hex digits as an integer, mod dim. */
@@ -82,19 +77,17 @@ object Classifier {
       .select(col(idCol).as("id"), coalesce(col(textCol), lit("")).as("__t"),
         col(labelCol).cast("long").as("y"))
       .filter(col("y").isNotNull)
-    val feats = truncate(features(base, "id", "__t", dim))
-    val labels = truncate(base.select("id", "y"))
-    val nRow = labels.agg(count(lit(1)).as("n"))
-    // model rows: (f, w_micro); bias at f = -1; starts EMPTY ≡ all-zero
-    var model = truncate(labels.sparkSession.createDataFrame(
-      labels.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("f", org.apache.spark.sql.types.LongType, false),
-        org.apache.spark.sql.types.StructField("w_micro", org.apache.spark.sql.types.LongType, false)))))
-    var inflight: DataFrame = null
-    try {
-      var t = 0
-      while (t < iters) {
+    Materialize.rounds(docs.sparkSession) { rounds =>
+      val feats = rounds.invariant(features(base, "id", "__t", dim))
+      val labels = rounds.invariant(base.select("id", "y"))
+      val nRow = labels.agg(count(lit(1)).as("n"))
+      // model rows: (f, w_micro); bias at f = -1; starts EMPTY ≡ all-zero
+      var model = rounds.next(labels.sparkSession.createDataFrame(
+        labels.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("f", org.apache.spark.sql.types.LongType, false),
+          org.apache.spark.sql.types.StructField("w_micro", org.apache.spark.sql.types.LongType, false)))))
+      for (_ <- 1 to iters) {
         val errs = marginsOf(labels, feats, model)
           .select(col("id"), (pMicro(col("margin_micro")) - col("y") * lit(1000000L)).as("err"))
         val featGrad = feats.join(errs, Seq("id"))
@@ -104,27 +97,13 @@ object Classifier {
         val grads = featGrad.unionByName(biasGrad)
           .crossJoin(broadcast(nRow))
           .select(col("f"), updateExpr(lrMicro).as("upd"))
-        val next = truncate(
+        model = rounds.next(
           model.join(grads, Seq("f"), "full_outer")
             .select(col("f"),
               (coalesce(col("w_micro"), lit(0L)) - coalesce(col("upd"), lit(0L))).as("w_micro")))
-        inflight = next
-        graftbridge.freeCheckpoint(model)
-        model = next
-        inflight = null
-        t += 1
       }
-    } catch {
-      case th: Throwable =>
-        if (inflight != null && (inflight ne model)) graftbridge.freeCheckpoint(inflight)
-        graftbridge.freeCheckpoint(model)
-        graftbridge.freeCheckpoint(feats)
-        graftbridge.freeCheckpoint(labels)
-        throw th
+      rounds.keep()
     }
-    graftbridge.freeCheckpoint(feats)
-    graftbridge.freeCheckpoint(labels)
-    model
   }
 
   /** Integer micro margins of every document under a model: Σ w over the

@@ -842,6 +842,13 @@ object Corpus {
     * doc). Token-less docs fail `too_short` and `low_lm_quality` (NULL
     * score is not evidence of quality). Output is one row per input row,
     * keyed by id under the usual unique-id convention.
+    *
+    * EAGER: building the returned frame runs one Spark job — the shared
+    * (id, tokens) projection is pinned ([[Materialize.pin]]) so the LM
+    * trainer, the LM scorer and the repetition signals tokenize once. The
+    * pin holds O(corpus text bytes) of token arrays in executor-local
+    * blocks until the ContextCleaner reclaims them. A streaming input is
+    * not pinned and stays lazy.
     */
   def qualityGate(
       df: DataFrame,
@@ -858,8 +865,7 @@ object Corpus {
     // repetition signals each tokenized the text independently — three
     // regex passes over the corpus. One pinned (id, tokens) projection now
     // feeds all three; every aggregation downstream is byte-identical
-    // algebra over the same arrays, so the verdicts cannot move. See
-    // [[gateTokens]] for the pin contract (eager; O(text) local bytes).
+    // algebra over the same arrays, so the verdicts cannot move
     val toks = gateTokens(df, idCol, textCol)
     val counts = lmCountsFromTokens(toks)
     gateVerdict(lmScoreFromTokens(toks, counts, addK),
@@ -875,7 +881,11 @@ object Corpus {
     * them (the self-trained gate's thresholds drift with the input slice by
     * design — right for one-shot corpus builds, wrong for a stable
     * ingestion bar). Same verdict columns, same deterministic micro-nat
-    * arithmetic; OOV tokens score with c = 0 per [[lmScoreAgainst]]. */
+    * arithmetic; OOV tokens score with c = 0 per [[lmScoreAgainst]].
+    *
+    * EAGER like [[qualityGate]]: building the returned frame runs one
+    * Spark job that pins the batch's (id, tokens) projection, O(batch text
+    * bytes) of executor-local blocks; a streaming input stays lazy. */
   def qualityGateAgainst(
       df: DataFrame,
       counts: DataFrame,
@@ -896,20 +906,16 @@ object Corpus {
       minTokens, maxTokens, maxTopNgramFrac, maxDupNgramFrac, maxAvgNll)
   }
 
-  /** The gate's shared tokenize pass (r19 fusion): one pinned (id, __ts)
-    * projection feeding the LM scorer, the repetition signals, and (for
-    * the self-trained gate) the LM trainer — before, each re-tokenized the
-    * text from scratch because a bare projection has no exchange for AQE
-    * runtime reuse to latch onto. Pin storage bound: O(corpus token bytes
-    * ≈ text bytes) in executor-local blocks, ContextCleaner-reclaimed —
-    * the §5 materialize-once-vs-rescan-thrice trade. EAGER: the pin runs a
-    * Spark job at construction time (the drift-suite convention). Left
-    * unpinned for a streaming frame, where checkpointing is illegal and
-    * per-consumer recompute matches the pre-fusion cost. */
+  /** The gate's shared tokenize pass: one pinned (id, __ts) projection
+    * feeding the LM scorer, the repetition signals, and (for the
+    * self-trained gate) the LM trainer — the materialize-once-vs-rescan-
+    * thrice trade; the public gates document the eager job and the pin's
+    * size. Left unpinned for a streaming frame, where checkpointing is
+    * illegal and per-consumer recompute matches the pre-fusion cost. */
   private def gateTokens(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val t = df.select(col(idCol).as("id"),
       graft.functions.TextFunctions.tokens(col(textCol)).as("__ts"))
-    if (t.isStreaming) t else t.localCheckpoint()
+    if (t.isStreaming) t else Materialize.pin(t)
   }
 
   /** [[lmCounts]] over a pre-tokenized (id, __ts) frame — identical
@@ -2407,8 +2413,9 @@ object Corpus {
     * combinable, uniform hash keys); every merge round then runs on the
     * WORD table — vocabulary-sized, not corpus-sized — as one
     * pair-count reduce plus a `TakeOrderedAndProject` argmax (O(1) rows
-    * to the driver) and a row-local `replace`. The word table
-    * localCheckpoints each round to keep lineage flat. Returns the merge
+    * to the driver) and a row-local `replace`. The word table is
+    * checkpointed each round in a [[Materialize.rounds]] scope to keep
+    * lineage flat; each round frees the one before. Returns the merge
     * table (merge_rank, lhs, rhs, merged, pair_count); fewer than
     * `nMerges` rows iff the vocabulary runs out of adjacent pairs. */
   def bpeTrain(
@@ -2418,36 +2425,36 @@ object Corpus {
     require(nMerges >= 1, "nMerges must be at least 1")
     val spark = df.sparkSession
     import spark.implicits._
-    var words = df
-      .select(explode(graft.functions.TextFunctions.tokens(col(textCol))).as("w"))
-      .filter(col("w") =!= "" && !col("w").rlike("[\\x1e\\x1f]"))
-      .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .select(bpeWrapChars(col("w")).as("state"), col("cnt"))
-      .localCheckpoint()
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
-    var r = 0
-    var exhausted = false
-    while (r < nMerges && !exhausted) {
-      val top = words
-        .select(bpeSyms(col("state")).as("syms"), col("cnt"))
-        .filter(size(col("syms")) >= 2)
-        .select(explode(transform(sequence(lit(0), size(col("syms")) - 2), i =>
-          struct(element_at(col("syms"), i + 1).as("a"),
-            element_at(col("syms"), i + 2).as("b")))).as("p"), col("cnt"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("cnt")).as("c"))
-        .orderBy(col("c").desc, col("a").asc, col("b").asc)
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (a, b, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((r, a, b, a + b, c))
-        words = words
-          .select(replace(col("state"),
-            lit(BpeRS + a + BpeUS + BpeRS + b + BpeUS),
-            lit(BpeRS + a + b + BpeUS)).as("state"), col("cnt"))
-          .localCheckpoint()
-        r += 1
+    Materialize.rounds(spark) { rounds =>
+      var words = rounds.next(df
+        .select(explode(graft.functions.TextFunctions.tokens(col(textCol))).as("w"))
+        .filter(col("w") =!= "" && !col("w").rlike("[\\x1e\\x1f]"))
+        .groupBy("w").agg(count(lit(1)).as("cnt"))
+        .select(bpeWrapChars(col("w")).as("state"), col("cnt")))
+      var r = 0
+      var exhausted = false
+      while (r < nMerges && !exhausted) {
+        val top = words
+          .select(bpeSyms(col("state")).as("syms"), col("cnt"))
+          .filter(size(col("syms")) >= 2)
+          .select(explode(transform(sequence(lit(0), size(col("syms")) - 2), i =>
+            struct(element_at(col("syms"), i + 1).as("a"),
+              element_at(col("syms"), i + 2).as("b")))).as("p"), col("cnt"))
+          .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+          .agg(sum(col("cnt")).as("c"))
+          .orderBy(col("c").desc, col("a").asc, col("b").asc)
+          .limit(1).collect()
+        if (top.isEmpty) exhausted = true
+        else {
+          val (a, b, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
+          merges += ((r, a, b, a + b, c))
+          words = rounds.next(words
+            .select(replace(col("state"),
+              lit(BpeRS + a + BpeUS + BpeRS + b + BpeUS),
+              lit(BpeRS + a + b + BpeUS)).as("state"), col("cnt")))
+          r += 1
+        }
       }
     }
     merges.toSeq.toDF("merge_rank", "lhs", "rhs", "merged", "pair_count")
@@ -2495,54 +2502,55 @@ object Corpus {
     require(candidateWindow >= 1, "candidateWindow must be at least 1")
     val spark = df.sparkSession
     import spark.implicits._
-    var words = df
-      .select(explode(graft.functions.TextFunctions.tokens(col(textCol))).as("w"))
-      .filter(col("w") =!= "" && !col("w").rlike("[\\x1e\\x1f]"))
-      .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .select(bpeWrapChars(col("w")).as("state"), col("cnt"))
-      .localCheckpoint()
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
-    val nRounds = (nMerges + batchSize - 1) / batchSize
-    var round = 0
-    var rank = 0
-    var exhausted = false
-    while (round < nRounds && !exhausted) {
-      val cap = math.min(batchSize, nMerges - round * batchSize)
-      val cands = words
-        .select(bpeSyms(col("state")).as("syms"), col("cnt"))
-        .filter(size(col("syms")) >= 2)
-        .select(explode(transform(sequence(lit(0), size(col("syms")) - 2), i =>
-          struct(element_at(col("syms"), i + 1).as("a"),
-            element_at(col("syms"), i + 2).as("b")))).as("p"), col("cnt"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("cnt")).as("c"))
-        .orderBy(col("c").desc, col("a").asc, col("b").asc)
-        .limit(candidateWindow * batchSize).collect()
-      if (cands.isEmpty) exhausted = true
-      else {
-        val used = scala.collection.mutable.Set.empty[String]
-        val accepted = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-        var i = 0
-        var rejected = 0
-        while (i < cands.length && accepted.size < cap) {
-          val (a, b, c) = (cands(i).getString(0), cands(i).getString(1), cands(i).getLong(2))
-          if (!used(a) && !used(b) && !used(a + b)) {
-            accepted += ((a, b, c))
-            used += a; used += b; used += (a + b)
-          } else rejected += 1
-          i += 1
+    Materialize.rounds(spark) { rounds =>
+      var words = rounds.next(df
+        .select(explode(graft.functions.TextFunctions.tokens(col(textCol))).as("w"))
+        .filter(col("w") =!= "" && !col("w").rlike("[\\x1e\\x1f]"))
+        .groupBy("w").agg(count(lit(1)).as("cnt"))
+        .select(bpeWrapChars(col("w")).as("state"), col("cnt")))
+      val nRounds = (nMerges + batchSize - 1) / batchSize
+      var round = 0
+      var rank = 0
+      var exhausted = false
+      while (round < nRounds && !exhausted) {
+        val cap = math.min(batchSize, nMerges - round * batchSize)
+        val cands = words
+          .select(bpeSyms(col("state")).as("syms"), col("cnt"))
+          .filter(size(col("syms")) >= 2)
+          .select(explode(transform(sequence(lit(0), size(col("syms")) - 2), i =>
+            struct(element_at(col("syms"), i + 1).as("a"),
+              element_at(col("syms"), i + 2).as("b")))).as("p"), col("cnt"))
+          .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+          .agg(sum(col("cnt")).as("c"))
+          .orderBy(col("c").desc, col("a").asc, col("b").asc)
+          .limit(candidateWindow * batchSize).collect()
+        if (cands.isEmpty) exhausted = true
+        else {
+          val used = scala.collection.mutable.Set.empty[String]
+          val accepted = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
+          var i = 0
+          var rejected = 0
+          while (i < cands.length && accepted.size < cap) {
+            val (a, b, c) = (cands(i).getString(0), cands(i).getString(1), cands(i).getLong(2))
+            if (!used(a) && !used(b) && !used(a + b)) {
+              accepted += ((a, b, c))
+              used += a; used += b; used += (a + b)
+            } else rejected += 1
+            i += 1
+          }
+          // dev-measurement hook (MeasureProps --bpe-scale): candidates
+          // considered this round, accepted, and conflict-rejected
+          onRound(i, accepted.size, rejected)
+          accepted.foreach { case (a, b, c) =>
+            merges += ((rank, a, b, a + b, c)); rank += 1
+          }
+          val newState = accepted.foldLeft(col("state")) { case (st, (a, b, _)) =>
+            replace(st, lit(BpeRS + a + BpeUS + BpeRS + b + BpeUS), lit(BpeRS + a + b + BpeUS))
+          }
+          words = rounds.next(words.select(newState.as("state"), col("cnt")))
+          round += 1
         }
-        // dev-measurement hook (MeasureProps --bpe-scale): candidates
-        // considered this round, accepted, and conflict-rejected
-        onRound(i, accepted.size, rejected)
-        accepted.foreach { case (a, b, c) =>
-          merges += ((rank, a, b, a + b, c)); rank += 1
-        }
-        val newState = accepted.foldLeft(col("state")) { case (st, (a, b, _)) =>
-          replace(st, lit(BpeRS + a + BpeUS + BpeRS + b + BpeUS), lit(BpeRS + a + b + BpeUS))
-        }
-        words = words.select(newState.as("state"), col("cnt")).localCheckpoint()
-        round += 1
       }
     }
     merges.toSeq.toDF("merge_rank", "lhs", "rhs", "merged", "pair_count")
@@ -2737,56 +2745,57 @@ object Corpus {
     require(maxWordLen >= maxPieceLen, "maxWordLen must cover maxPieceLen")
     val spark = df.sparkSession
     import spark.implicits._
-    val words = df
-      .select(explode(graft.functions.TextFunctions.tokens(
-        coalesce(col(textCol), lit("")))).as("w0"))
-      .filter(col("w0") =!= "")
-      .select(substring(col("w0"), 1, maxWordLen).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
-    // seed: every substring of length 1..maxPieceLen weighted by word
-    // count; ALL single chars + the top `seedSize` multi-char pieces
-    val subs = words
-      .select(explode(flatten(transform(sequence(lit(1), length(col("w"))), p =>
-        transform(sequence(lit(1),
-            least(lit(maxPieceLen), length(col("w")) - p + 1)),
-          l => col("w").substr(p, l))))).as("piece"), col("cnt"))
-      .groupBy("piece").agg(sum(col("cnt")).as("n"))
-    val seed = subs.filter(length(col("piece")) === 1)
-      .unionAll(subs.filter(length(col("piece")) > 1)
-        .orderBy(col("n").desc, col("piece").asc).limit(seedSize))
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    def toScores(counts: Array[(String, Long)],
-        membership: Array[String]): Map[String, Long] = {
-      val m = counts.toMap
-      val total = counts.map(_._2).sum.toDouble
-      membership.map { p =>
-        p -> m.get(p).filter(_ > 0L)
-          .map(c => math.round(math.log(c / total) * 1e6))
-          .getOrElse(UnigramForbiddenMicro)
-      }.toMap
-    }
-    val membership = seed.map(_._1)
-    var scores = toScores(seed, membership)
-    var lastCounts = seed
-    (1 to emRounds).foreach { _ =>
-      lastCounts = words
-        .select(explode(unigramViterbi(col("w"), scores, maxPieceLen, maxWordLen))
-          .as("sp"), col("cnt"))
-        .groupBy(col("sp.piece").as("piece")).agg(sum(col("cnt")).as("n"))
+    Materialize.rounds(spark) { rounds =>
+      val words = rounds.invariant(df
+        .select(explode(graft.functions.TextFunctions.tokens(
+          coalesce(col(textCol), lit("")))).as("w0"))
+        .filter(col("w0") =!= "")
+        .select(substring(col("w0"), 1, maxWordLen).as("w"))
+        .groupBy("w").agg(count(lit(1)).as("cnt")))
+      // seed: every substring of length 1..maxPieceLen weighted by word
+      // count; ALL single chars + the top `seedSize` multi-char pieces
+      val subs = words
+        .select(explode(flatten(transform(sequence(lit(1), length(col("w"))), p =>
+          transform(sequence(lit(1),
+              least(lit(maxPieceLen), length(col("w")) - p + 1)),
+            l => col("w").substr(p, l))))).as("piece"), col("cnt"))
+        .groupBy("piece").agg(sum(col("cnt")).as("n"))
+      val seed = subs.filter(length(col("piece")) === 1)
+        .unionAll(subs.filter(length(col("piece")) > 1)
+          .orderBy(col("n").desc, col("piece").asc).limit(seedSize))
         .collect().map(r => (r.getString(0), r.getLong(1)))
-      scores = toScores(lastCounts, membership)
+      def toScores(counts: Array[(String, Long)],
+          membership: Array[String]): Map[String, Long] = {
+        val m = counts.toMap
+        val total = counts.map(_._2).sum.toDouble
+        membership.map { p =>
+          p -> m.get(p).filter(_ > 0L)
+            .map(c => math.round(math.log(c / total) * 1e6))
+            .getOrElse(UnigramForbiddenMicro)
+        }.toMap
+      }
+      val membership = seed.map(_._1)
+      var scores = toScores(seed, membership)
+      var lastCounts = seed
+      (1 to emRounds).foreach { _ =>
+        lastCounts = words
+          .select(explode(unigramViterbi(col("w"), scores, maxPieceLen, maxWordLen))
+            .as("sp"), col("cnt"))
+          .groupBy(col("sp.piece").as("piece")).agg(sum(col("cnt")).as("n"))
+          .collect().map(r => (r.getString(0), r.getLong(1)))
+        scores = toScores(lastCounts, membership)
+      }
+      // prune: top vocabSize by (final count desc, piece asc) among the
+      // membership pieces actually used in the last round, scores
+      // re-quantized over the pruned total
+      val inVocab = membership.toSet
+      val kept = lastCounts.filter { case (p, n) => inVocab(p) && n > 0 }
+        .sortBy { case (p, n) => (-n, p) }.take(vocabSize)
+      val keptTotal = kept.map(_._2).sum.toDouble
+      kept.toSeq.map { case (p, n) =>
+        (p, n, math.round(math.log(n / keptTotal) * 1e6))
+      }.toDF("piece", "n", "score_micro")
     }
-    // prune: top vocabSize by (final count desc, piece asc) among the
-    // membership pieces actually used in the last round, scores
-    // re-quantized over the pruned total
-    val inVocab = membership.toSet
-    val kept = lastCounts.filter { case (p, n) => inVocab(p) && n > 0 }
-      .sortBy { case (p, n) => (-n, p) }.take(vocabSize)
-    val keptTotal = kept.map(_._2).sum.toDouble
-    kept.toSeq.map { case (p, n) =>
-      (p, n, math.round(math.log(n / keptTotal) * 1e6))
-    }.toDF("piece", "n", "score_micro")
   }
 
   /** The persisted-model kind tag for a trained unigram vocabulary. */

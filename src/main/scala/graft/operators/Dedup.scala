@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge
 
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
@@ -209,78 +208,28 @@ object Dedup {
           coalesce(col("__rep_cluster"), assignments("cluster_id"))).as("cluster_id"))
   }
 
-  /** Lineage truncation for iterative loops: self-referencing rounds grow
-    * the LOGICAL plan exponentially (caching truncates execution but not
-    * analysis), so every round must checkpoint. Uses a RELIABLE checkpoint
-    * when `sparkContext.setCheckpointDir` was called (replicated — survives
-    * executor loss, the right mode on preemptible clusters) and
-    * `localCheckpoint` otherwise (executor-local blocks; an executor loss
-    * mid-loop fails the job and it must rerun). */
-  private[graft] def truncate(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
-
-  /** INTRA-OPERATOR materialization pin (r18's multi-consumer reuse fix,
-    * r19 split from [[truncate]] per ADVICE): a bare projection has no
-    * exchange for AQE runtime reuse to latch onto, so a frame feeding two+
-    * consumers re-runs per consumer unless materialized once. Always
-    * `localCheckpoint` — executor-local disk/memory blocks, reclaimed by
-    * the ContextCleaner when the frame is GC'd. Unlike [[truncate]] this
-    * must NOT upgrade to a reliable `checkpoint()` when a checkpointDir is
-    * set: reliable checkpoint files are never auto-deleted
-    * (`spark.cleaner.referenceTracking.cleanCheckpoints` defaults to
-    * false), so per-call pins would accumulate files forever, and an
-    * intra-operator intermediate needs no executor-loss durability (the
-    * job simply reruns). Eager: runs a Spark job at CONSTRUCTION time. */
-  private[graft] def pin(df: DataFrame): DataFrame = df.localCheckpoint()
-
-  /** Fused round materialization + convergence probe for the iterative
-    * label loops: materializes `df` as this round's checkpoint AND counts
-    * rows matching `changed` in the SAME Spark job (r19, VERDICT #4 —
-    * before, every round paid one job to checkpoint and a SECOND
-    * join-shaped job to diff the new labels against the old). The caller
-    * carries the previous round's value in a column so `changed` is
-    * row-local — no join. On the localCheckpoint path the checkpoint is
-    * lazy and the full (un-limited) count is the materializing action:
-    * every partition is computed and stored exactly once, and the
-    * post-job doCheckpoint finds all blocks cached. On the reliable-
-    * checkpoint path (checkpointDir set) `checkpoint()` is eager as
-    * before and the probe is a cheap scan of the materialized blocks. */
-  private def truncateAndCountChanged(
-      df: DataFrame, changed: org.apache.spark.sql.Column): (DataFrame, Boolean) =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) {
-      val pinned = df.checkpoint()
-      (pinned, pinned.filter(changed).limit(1).count() > 0)
-    } else {
-      val pinned = df.localCheckpoint(eager = false)
-      (pinned, pinned.filter(changed).count() > 0)
-    }
-
   /** Iterates [[refineClusters]] to fixpoint (bounded by `maxRounds`).
     * Convergence is checked with one count per round; pointer jumping halves
     * the pointer depth each round, so log2(longest chain) rounds suffice.
-    * Rounds are checkpointed (see [[truncate]]) and the previous round's
-    * blocks freed, keeping storage O(1) in rounds. Fail-loud like
-    * [[connectedComponents]]: throws if the round budget is exhausted before
-    * the fixpoint — silently returning partially-refined labels would hand
-    * callers unconverged cluster ids with no signal. */
-  def refineToFixpoint(assignments: DataFrame, idCol: String, maxRounds: Int = 10): DataFrame = {
-    var cur = truncate(assignments)
-    // the round that is checkpointed but not yet promoted to `cur`: between
-    // the round's materialization and `cur = next` a failure (freeCheckpoint)
-    // would otherwise leak next's reliable-checkpoint files — the handler
-    // frees whatever is in flight in addition to the promoted frame
-    var inflight: DataFrame = null
-    var round = 0
-    var changed = true
-    // on ANY failure path (non-convergence throw, job failure mid-round) the
-    // live checkpoints — promoted AND in-flight — are freed before rethrowing
-    try {
+    * Rounds run in a [[Materialize.rounds]] scope: checkpointed, the
+    * previous round's storage freed, everything freed on failure. Fail-loud
+    * like [[connectedComponents]]: throws if the round budget is exhausted
+    * before the fixpoint — silently returning partially-refined labels
+    * would hand callers unconverged cluster ids with no signal.
+    *
+    * The result is a projection of the final round's checkpoint, so a
+    * caller owning the whole result reclaims that checkpoint with
+    * `graftbridge.freeCheckpoints(result)`; `freeCheckpoint(result)` is a
+    * no-op on a projection. */
+  def refineToFixpoint(assignments: DataFrame, idCol: String, maxRounds: Int = 10): DataFrame =
+    Materialize.rounds(assignments.sparkSession) { rounds =>
+      var cur = rounds.next(assignments)
+      var round = 0
+      var changed = true
       while (changed && round < maxRounds) {
-        // r19: the round carries the previous label as __old so the
+        // the round carries the previous label as __old so the
         // convergence diff is a row-local predicate counted in the SAME
-        // job that materializes the round's checkpoint — one job per
-        // round where the join-shaped diff used to be a second
+        // job that materializes the round's checkpoint
         val reps = cur.select(
           col(idCol).as("__rep_id"), col("cluster_id").as("__rep_cluster"))
         val step = cur.select(col(idCol), col("cluster_id").as("__old"))
@@ -289,26 +238,16 @@ object Dedup {
             least(col("__old"), coalesce(col("__rep_cluster"), col("__old")))
               .as("cluster_id"),
             col("__old"))
-        val (next, diff) = truncateAndCountChanged(
-          step, col("cluster_id") =!= col("__old"))
-        inflight = next
-        graftbridge.freeCheckpoint(cur)
-        changed = diff
+        val (next, diff) = rounds.nextCounting(step, col("cluster_id") =!= col("__old"))
+        changed = diff > 0L
         cur = next
-        inflight = null
         round += 1
       }
       if (changed) throw new IllegalStateException(
         s"refineToFixpoint did not converge within $maxRounds rounds — " +
           "raise maxRounds (rounds needed ≈ log2 of the longest pointer chain)")
-    } catch {
-      case t: Throwable =>
-        if (inflight != null && (inflight ne cur)) graftbridge.freeCheckpoint(inflight)
-        graftbridge.freeCheckpoint(cur)
-        throw t
+      rounds.keep().select(col(idCol), col("cluster_id"))
     }
-    cur.select(col(idCol), col("cluster_id"))
-  }
 
   /** Exact connected components over an undirected candidate-pair edge list
     * (the output shape of [[simhashNearDup]] / [[embeddingNearDup]]):
@@ -317,37 +256,36 @@ object Dedup {
     * follows its new label's own label one hop. The combination converges in
     * O(log diameter) rounds of two shuffles each. Unlike [[refineClusters]]
     * this consumes the raw EDGES, so components connected only through a
-    * shared non-minimum document merge correctly. Rounds are checkpointed
-    * (see [[truncate]]) with the previous round's blocks freed; throws
-    * instead of silently returning partial labels if `maxRounds` is hit
-    * before the fixpoint. */
+    * shared non-minimum document merge correctly. Rounds run in a
+    * [[Materialize.rounds]] scope (checkpointed, the previous round and the
+    * edge list freed, everything freed on failure); throws instead of
+    * silently returning partial labels if `maxRounds` is hit before the
+    * fixpoint.
+    *
+    * The result is a projection of the final round's checkpoint, so a
+    * caller owning the whole result reclaims that checkpoint with
+    * `graftbridge.freeCheckpoints(result)`; `freeCheckpoint(result)` is a
+    * no-op on a projection. */
   def connectedComponents(
-      pairs: DataFrame, srcCol: String, dstCol: String, maxRounds: Int = 20): DataFrame = {
-    val edges = truncate(
-      pairs.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-        .union(pairs.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-        .distinct())
-    var labels = truncate(
-      edges.select(col("src").as("id")).distinct()
-        .withColumn("component", col("id")))
-    // same in-flight tracking as [[refineToFixpoint]]: a failure between
-    // truncate(next) and `labels = next` must free next's checkpoint too
-    var inflight: DataFrame = null
-    var round = 0
-    var changed = true
-    // failure paths free the live checkpoints (edges + current and in-flight
-    // labels) before rethrowing, so neither the non-convergence throw nor a
-    // mid-round job failure leaks reliable-checkpoint files
-    try {
+      pairs: DataFrame, srcCol: String, dstCol: String, maxRounds: Int = 20): DataFrame =
+    Materialize.rounds(pairs.sparkSession) { rounds =>
+      val edges = rounds.invariant(
+        pairs.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+          .union(pairs.select(col(dstCol).as("src"), col(srcCol).as("dst")))
+          .distinct())
+      var labels = rounds.next(
+        edges.select(col("src").as("id")).distinct()
+          .withColumn("component", col("id")))
+      var round = 0
+      var changed = true
       while (changed && round < maxRounds) {
         val neighborMin = edges
           .join(labels, edges("dst") === labels("id"))
           .groupBy(edges("src").as("id2"))
           .agg(min(col("component")).as("nbr_min"))
-        // r19: carry the previous label as __old so the convergence diff
-        // is a row-local predicate counted in the SAME job that
-        // materializes the round's checkpoint — one job per round where
-        // the join-shaped diff used to be a second (VERDICT r18 #4)
+        // carry the previous label as __old so the convergence diff is a
+        // row-local predicate counted in the SAME job that materializes
+        // the round's checkpoint
         val propagated = labels
           .join(neighborMin, labels("id") === col("id2"), "left")
           .select(labels("id"),
@@ -363,30 +301,18 @@ object Dedup {
             least(propagated("component"),
               coalesce(col("__rep_component"), propagated("component"))).as("component"),
             col("__old"))
-        val (next, diff) = truncateAndCountChanged(
-          step, col("component") =!= col("__old"))
-        inflight = next
-        graftbridge.freeCheckpoint(labels)
-        changed = diff
+        val (next, diff) = rounds.nextCounting(step, col("component") =!= col("__old"))
+        changed = diff > 0L
         labels = next
-        inflight = null
         round += 1
       }
       if (changed) throw new IllegalStateException(
         s"connectedComponents did not converge within $maxRounds rounds — " +
           "raise maxRounds (rounds needed ≈ log2 of the largest component's diameter)")
-    } catch {
-      case t: Throwable =>
-        if (inflight != null && (inflight ne labels)) graftbridge.freeCheckpoint(inflight)
-        graftbridge.freeCheckpoint(labels)
-        graftbridge.freeCheckpoint(edges)
-        throw t
+      // rounds ≥ 1 carry the __old diff column in the checkpoint — the
+      // public contract stays (id, component)
+      rounds.keep().select(col("id"), col("component"))
     }
-    graftbridge.freeCheckpoint(edges)
-    // rounds ≥ 1 carry the __old diff column in the checkpoint — the
-    // public contract stays (id, component)
-    labels.select(col("id"), col("component"))
-  }
 
   /** SimHash near-dedup: 64-bit signature, banded into four 16-bit keys;
     * docs sharing any band are candidates, confirmed by Hamming distance.
@@ -1139,8 +1065,8 @@ object Dedup {
     // ends — compute the tokenize+shingle projection once and pin it
     // instead of re-deriving it per join side. Storage bound: O(corpus
     // distinct-shingle bytes) in executor-local blocks, reclaimed by the
-    // ContextCleaner when the frame is GC'd (see [[pin]]).
-    val ss = pin(shingleSets(df, idCol, textCol, shingleWidth, "b_id"))
+    // ContextCleaner when the frame is GC'd (see [[Materialize.pin]]).
+    val ss = Materialize.pin(shingleSets(df, idCol, textCol, shingleWidth, "b_id"))
     val confirmed = confirmedMatchesFromSets(cand, ss,
       ss.select(col("b_id").as("c_id"), col("b_id_sh").as("c_id_sh")), minJaccard)
     val comps = connectedComponents(confirmed, "batch_id", "corpus_id")
@@ -1195,7 +1121,7 @@ object Dedup {
     // pure extra materialization — skip it.
     val usePin = maxFpDf != Long.MaxValue
     def sideFps(df: DataFrame, out: String): DataFrame =
-      if (usePin) pin(fps(df, out)) else fps(df, out)
+      if (usePin) Materialize.pin(fps(df, out)) else fps(df, out)
     val bFps = sideFps(batch, "batch_id")
     val cFps = sideFps(corpus, "corpus_id")
     // combined-df cut: fingerprints are distinct per doc, so the count over
@@ -1283,7 +1209,7 @@ object Dedup {
     // Storage bound: O(corpus × dim) executor-local bytes (the pin carries
     // the full vector column for the pair stage), ContextCleaner-reclaimed
     // — the deliberate §5 trade of one materialization vs three scorings.
-    val assigned = pin(corpus.crossJoin(broadcast(cents))
+    val assigned = Materialize.pin(corpus.crossJoin(broadcast(cents))
       .select(col(idCol), col(vecCol),
         explode(Similarity.topCellsLocal(col(vecCol), 1)).as("__best"))
       .select(col(idCol).as("id"), col(vecCol).as("__vec"),
@@ -1386,9 +1312,9 @@ object Dedup {
     // batch side the match join plus the final re-attach; unpinned each
     // consumer re-ran the scan + centroid scoring. Storage bound:
     // O((batch + store) × dim) executor-local bytes (full vector columns),
-    // ContextCleaner-reclaimed (see [[pin]]).
-    val b = pin(assign(batch, "id", "__bv"))
-    val store0 = pin(assign(corpus, "corpus_id", "__cv"))
+    // ContextCleaner-reclaimed (see [[Materialize.pin]]).
+    val b = Materialize.pin(assign(batch, "id", "__bv"))
+    val store0 = Materialize.pin(assign(corpus, "corpus_id", "__cv"))
     val store =
       if (maxCellStore == Exact) store0.select("cell", "corpus_id", "__cv")
       else {

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge
 
 /** Link-graph centrality (SURVEY.md §2.3 extensions): integer-quantized
   * PageRank for corpus curation — the seed-quality / domain-importance
@@ -18,12 +17,6 @@ import org.apache.spark.sql.graftbridge
   * ANSI-SQL CTEs (the oracle form). No doubles anywhere.
   */
 object Graph {
-
-  /** Reliable checkpoint when a checkpoint dir is set, executor-local
-    * otherwise — the [[Dedup]] iterative-loop convention. */
-  private def truncate(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
 
   /** Integer PageRank over a directed edge list. Per iteration, every
     * node's new rank is
@@ -77,21 +70,19 @@ object Graph {
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct()
-    // the NARROW edge list, checkpointed once: the loop's big join input
-    // never recomputes the distinct and carries no degree payload
-    val ek = truncate(e0)
-    // nodes carry their loop-invariant out-degree (NULL = sink, which
-    // receives but contributes nothing), computed and checkpointed once
-    // and threaded through the rank frame across rounds
-    val deg = ek.groupBy("src").agg(count(lit(1)).as("__deg"))
-    val nodes = truncate(
-      ek.select(col("src").as("id")).union(ek.select(col("dst").as("id"))).distinct()
-        .join(deg.withColumnRenamed("src", "id"), Seq("id"), "left"))
-    var ranks = truncate(nodes.withColumn("rank_micro", lit(1000000L)))
-    var inflight: DataFrame = null
-    try {
-      var i = 0
-      while (i < iterations) {
+    Materialize.rounds(edges.sparkSession) { rounds =>
+      // the NARROW edge list, checkpointed once: the loop's big join input
+      // never recomputes the distinct and carries no degree payload
+      val ek = rounds.invariant(e0)
+      // nodes carry their loop-invariant out-degree (NULL = sink, which
+      // receives but contributes nothing), computed and checkpointed once
+      // and threaded through the rank frame across rounds
+      val deg = ek.groupBy("src").agg(count(lit(1)).as("__deg"))
+      val nodes = rounds.invariant(
+        ek.select(col("src").as("id")).union(ek.select(col("dst").as("id"))).distinct()
+          .join(deg.withColumnRenamed("src", "id"), Seq("id"), "left"))
+      var ranks = rounds.next(nodes.withColumn("rank_micro", lit(1000000L)))
+      for (_ <- 1 to iterations) {
         // per-source damped quotient, ROW-LOCAL on the O(nodes) rank
         // frame: one divide per source per round, not one per edge.
         // `div` is Spark's exact integer floor-division on longs — the
@@ -101,27 +92,13 @@ object Graph {
             expr(s"(${dampingMicro}L * (rank_micro div __deg)) div 1000000L").as("__c"))
         val contrib = ek.join(srcC.hint("shuffle_hash"), Seq("src"))
           .groupBy("dst").agg(sum(col("__c")).as("__s"))
-        val next = truncate(
+        ranks = rounds.next(
           nodes.join(contrib, nodes("id") === contrib("dst"), "left")
             .select(nodes("id"), nodes("__deg"),
               (lit(base) + coalesce(col("__s"), lit(0L))).as("rank_micro")))
-        inflight = next
-        graftbridge.freeCheckpoint(ranks)
-        ranks = next
-        inflight = null
-        i += 1
       }
-    } catch {
-      case t: Throwable =>
-        if (inflight != null && (inflight ne ranks)) graftbridge.freeCheckpoint(inflight)
-        graftbridge.freeCheckpoint(ranks)
-        graftbridge.freeCheckpoint(ek)
-        graftbridge.freeCheckpoint(nodes)
-        throw t
+      rounds.keep().select("id", "rank_micro")
     }
-    graftbridge.freeCheckpoint(ek)
-    graftbridge.freeCheckpoint(nodes)
-    ranks.select("id", "rank_micro")
   }
 
   /** Personalized PageRank (integer form): [[pageRankInt]] with the
@@ -159,48 +136,32 @@ object Graph {
     // the pageRankInt r16 loop shape: narrow checkpointed edge list, the
     // loop-invariant out-degree folded into the node frame (NULL = sink),
     // per-source damped quotient computed row-locally per round
-    val ek = truncate(e0)
-    val deg = ek.groupBy("src").agg(count(lit(1)).as("__deg"))
-    val seedSet = seeds.select(col(seedIdCol).as("id"), lit(1L).as("__seed")).distinct()
-    val nodes = truncate(
-      ek.select(col("src").as("id")).union(ek.select(col("dst").as("id"))).distinct()
-        .join(broadcast(seedSet), Seq("id"), "left")
-        .select(col("id"), coalesce(col("__seed"), lit(0L)).as("__seed"))
-        .join(deg.withColumnRenamed("src", "id"), Seq("id"), "left"))
-    var ranks = truncate(
-      nodes.select(col("id"), col("__seed"), col("__deg"),
-        (col("__seed") * lit(1000000L)).as("rank_micro")))
-    var inflight: DataFrame = null
-    try {
-      var i = 0
-      while (i < iterations) {
+    Materialize.rounds(edges.sparkSession) { rounds =>
+      val ek = rounds.invariant(e0)
+      val deg = ek.groupBy("src").agg(count(lit(1)).as("__deg"))
+      val seedSet = seeds.select(col(seedIdCol).as("id"), lit(1L).as("__seed")).distinct()
+      val nodes = rounds.invariant(
+        ek.select(col("src").as("id")).union(ek.select(col("dst").as("id"))).distinct()
+          .join(broadcast(seedSet), Seq("id"), "left")
+          .select(col("id"), coalesce(col("__seed"), lit(0L)).as("__seed"))
+          .join(deg.withColumnRenamed("src", "id"), Seq("id"), "left"))
+      var ranks = rounds.next(
+        nodes.select(col("id"), col("__seed"), col("__deg"),
+          (col("__seed") * lit(1000000L)).as("rank_micro")))
+      for (_ <- 1 to iterations) {
         val srcC = ranks.filter(col("__deg").isNotNull)
           .select(col("id").as("src"),
             expr(s"(${dampingMicro}L * (rank_micro div __deg)) div 1000000L").as("__c"))
         val contrib = ek.join(srcC.hint("shuffle_hash"), Seq("src"))
           .groupBy("dst").agg(sum(col("__c")).as("__s"))
-        val next = truncate(
+        ranks = rounds.next(
           nodes.join(contrib, nodes("id") === contrib("dst"), "left")
             .select(nodes("id"), nodes("__seed"), nodes("__deg"),
               (nodes("__seed") * lit(base) + coalesce(col("__s"), lit(0L)))
                 .as("rank_micro")))
-        inflight = next
-        graftbridge.freeCheckpoint(ranks)
-        ranks = next
-        inflight = null
-        i += 1
       }
-    } catch {
-      case t: Throwable =>
-        if (inflight != null && (inflight ne ranks)) graftbridge.freeCheckpoint(inflight)
-        graftbridge.freeCheckpoint(ranks)
-        graftbridge.freeCheckpoint(ek)
-        graftbridge.freeCheckpoint(nodes)
-        throw t
+      rounds.keep().select("id", "rank_micro")
     }
-    graftbridge.freeCheckpoint(ek)
-    graftbridge.freeCheckpoint(nodes)
-    ranks.select("id", "rank_micro")
   }
 
   /** Cluster-size audit over a connected-components labeling (any
@@ -393,11 +354,11 @@ object Graph {
     // orientation join, and `oriented` feeds the wedge self-join three
     // times — so without plan cuts the (often expensive) upstream edge
     // pipeline recomputes ~5x per run. Cut at the two reuse points with
-    // ids-only localCheckpoints: `und` (freed eagerly below once both
-    // dependents materialize) and `deg`/`oriented` (both reachable from
-    // the returned plan — `graftbridge.freeCheckpoints` or the
-    // ContextCleaner reclaim them).
-    val und = (if (inputNormalized)
+    // ids-only pins: `und` (freed eagerly below once both dependents
+    // materialize) and `deg`/`oriented` (both reachable from the returned
+    // plan — `graftbridge.freeCheckpoints` or the ContextCleaner reclaim
+    // them).
+    val und = Materialize.pin(if (inputNormalized)
         edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
       else edges
         .filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
@@ -405,11 +366,9 @@ object Graph {
         .select(least(col(srcCol), col(dstCol)).as("u"),
           greatest(col(srcCol), col(dstCol)).as("v"))
         .distinct())
-      .localCheckpoint()
-    val deg = und.select(col("u").as("id"))
+    val deg = Materialize.pin(und.select(col("u").as("id"))
       .unionAll(und.select(col("v").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("degree"))
-      .localCheckpoint()
+      .groupBy(col("id")).agg(count(lit(1)).as("degree")))
     // pendant pre-filter: a degree-1 vertex cannot close a triangle (all
     // three triangle vertices have degree >= 2 in the undirected graph),
     // so its edges only inflate the orientation joins and the wedge
@@ -423,12 +382,11 @@ object Graph {
     val uFirst = col("__du") < col("__dv") ||
       (col("__du") === col("__dv") && col("u") < col("v"))
     // (a, b): a strictly precedes b in the (degree, id) total order
-    val oriented = withDeg.select(
+    val oriented = Materialize.pin(withDeg.select(
       when(uFirst, col("u")).otherwise(col("v")).as("a"),
-      when(uFirst, col("v")).otherwise(col("u")).as("b"))
-      .localCheckpoint()
-    // und's blocks served deg + oriented (both just materialized — local
-    // checkpoints are eager); nothing downstream reads und again
+      when(uFirst, col("v")).otherwise(col("u")).as("b")))
+    // und's blocks served deg + oriented (both just materialized — pins
+    // are eager); nothing downstream reads und again
     org.apache.spark.sql.graftbridge.freeCheckpoint(und)
     val tri = oriented
       .join(oriented.select(col("a").as("b"), col("b").as("c")), Seq("b"))
@@ -453,9 +411,10 @@ object Graph {
     * repeatedly drop vertices of degree < k together with their edges
     * until a fixpoint. Each round is one degree reduce + two
     * membership joins over the (checkpointed, ids-only) edge list — the
-    * connected-components cost discipline — and the PREVIOUS round's
-    * checkpoint frees as soon as the next materializes, so plan depth and
-    * storage stay O(1) in rounds.
+    * connected-components cost discipline — in a [[Materialize.rounds]]
+    * scope: the PREVIOUS round's checkpoint frees as soon as the next
+    * materializes, so plan depth and storage stay O(1) in rounds, and a
+    * failure frees every live round.
     *
     * DETERMINISM / ORACLE CONTRACT: the result after `maxRounds` rounds is
     * well-defined whether or not the peel converged — the engine's
@@ -483,34 +442,32 @@ object Graph {
       .groupBy(col("id")).agg(count(lit(1)).as("degree"))
     // inputNormalized: the [[triangles]] contract — input already unique,
     // src < dst, no NULLs/self-loops — skips the normalization exchange
-    var e = (if (inputNormalized)
+    val e0 = if (inputNormalized)
         edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
       else edges
         .filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
           col(srcCol) =!= col(dstCol))
         .select(least(col(srcCol), col(dstCol)).as("u"),
           greatest(col(srcCol), col(dstCol)).as("v"))
-        .distinct())
-      // r19: lazy checkpoint + count = ONE job materializes the round AND
-      // probes convergence (eager localCheckpoint ran its own job, then
-      // count() a second — every round paid twice; VERDICT r18 #4 pattern)
-      .localCheckpoint(eager = false)
-    var n = e.count()
-    var r = 0
-    var done = n == 0L
-    while (r < maxRounds && !done) {
-      val keep = degrees(e).filter(col("degree") >= k).select(col("id"))
-      val next = e
-        .join(keep.select(col("id").as("u")), Seq("u"))
-        .join(keep.select(col("id").as("v")), Seq("v"))
-        .select(col("u"), col("v"))
-        .localCheckpoint(eager = false)
-      val n2 = next.count()
-      org.apache.spark.sql.graftbridge.freeCheckpoint(e)
-      done = n2 == n || n2 == 0L // no edge dropped → degrees unchanged → fixpoint
-      e = next; n = n2; r += 1
+        .distinct()
+    Materialize.rounds(edges.sparkSession) { rounds =>
+      // ONE job per round materializes it AND counts its edges, the
+      // convergence probe
+      var (e, n) = rounds.nextCounting(e0, lit(true))
+      var r = 0
+      var done = n == 0L
+      while (r < maxRounds && !done) {
+        val keep = degrees(e).filter(col("degree") >= k).select(col("id"))
+        val (next, n2) = rounds.nextCounting(
+          e.join(keep.select(col("id").as("u")), Seq("u"))
+            .join(keep.select(col("id").as("v")), Seq("v"))
+            .select(col("u"), col("v")),
+          lit(true))
+        done = n2 == n || n2 == 0L // no edge dropped → degrees unchanged → fixpoint
+        e = next; n = n2; r += 1
+      }
+      degrees(rounds.keep()).select(col("id"), col("degree").as("core_degree"))
     }
-    degrees(e).select(col("id"), col("degree").as("core_degree"))
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007's near-linear
@@ -539,8 +496,8 @@ object Graph {
     * needed a full sort of the (node, label) count table per round; the
     * argmin is a hash aggregate with map-side partials — no sort, fewer
     * shuffled bytes, same bit-exact winner. The label frame is
-    * `localCheckpoint`ed per round (ids only) so plans stay O(1) deep,
-    * with the previous round's blocks freed eagerly.
+    * checkpointed per round (ids only) in a [[Materialize.rounds]] scope
+    * so plans stay O(1) deep, with the previous round freed eagerly.
     *
     * `inputNormalized = true` is the [[triangles]] contract (unique rows,
     * src < dst, no NULLs/self-loops): the symmetric closure of such a
@@ -560,32 +517,27 @@ object Graph {
       .select(col(srcCol).as("u"), col(dstCol).as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
     val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-    val und = (if (inputNormalized) sym else sym.distinct())
-      .localCheckpoint()
-    var labels = und.select(col("u").as("id")).distinct()
-      .select(col("id"), col("id").as("label"))
-      .localCheckpoint()
-    var r = 0
-    while (r < rounds) {
-      val adopted = und
-        .join(labels.select(col("id").as("u"), col("label")), Seq("u"))
-        .groupBy(col("v").as("id"), col("label"))
-        .agg(count(lit(1)).as("__n"))
-        // argmin over (−count, label): lexicographic struct order gives
-        // most-frequent-label, smallest-label tie-break — bit-identical
-        // to the former (count desc, label asc) row_number pick
-        .groupBy(col("id"))
-        .agg(min(struct((-col("__n")).as("__negn"), col("label"))).as("__m"))
-        .select(col("id"), col("__m.label").as("__new"))
-      val next = labels
-        .join(adopted, Seq("id"), "left")
-        .select(col("id"), coalesce(col("__new"), col("label")).as("label"))
-        .localCheckpoint()
-      org.apache.spark.sql.graftbridge.freeCheckpoint(labels)
-      labels = next; r += 1
+    Materialize.rounds(edges.sparkSession) { scope =>
+      val und = scope.invariant(if (inputNormalized) sym else sym.distinct())
+      var labels = scope.next(und.select(col("u").as("id")).distinct()
+        .select(col("id"), col("id").as("label")))
+      for (_ <- 1 to rounds) {
+        val adopted = und
+          .join(labels.select(col("id").as("u"), col("label")), Seq("u"))
+          .groupBy(col("v").as("id"), col("label"))
+          .agg(count(lit(1)).as("__n"))
+          // argmin over (−count, label): lexicographic struct order gives
+          // most-frequent-label, smallest-label tie-break — bit-identical
+          // to the former (count desc, label asc) row_number pick
+          .groupBy(col("id"))
+          .agg(min(struct((-col("__n")).as("__negn"), col("label"))).as("__m"))
+          .select(col("id"), col("__m.label").as("__new"))
+        labels = scope.next(labels
+          .join(adopted, Seq("id"), "left")
+          .select(col("id"), coalesce(col("__new"), col("label")).as("label")))
+      }
+      scope.keep()
     }
-    org.apache.spark.sql.graftbridge.freeCheckpoint(und)
-    labels
   }
 
   /** Item co-occurrence mining (market basket / related items / co-click):

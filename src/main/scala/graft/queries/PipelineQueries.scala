@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft._
 import graft.functions.TextFunctions
-import graft.operators.{Assembly, Corpus, Dedup, Graph, Similarity}
+import graft.operators.{Assembly, Corpus, Dedup, Graph, Materialize, Similarity}
 import graft.sources.Tables
 
 /** Declared queries for the beyond-reference pipeline operators
@@ -1492,9 +1492,9 @@ object PipelineQueries {
       // inverted-index pair derivation each execute ONCE, same as the
       // Assembly stage tables (values unchanged; this is the composite
       // whose sf1 ratio was dominated by branch re-execution)
-      val matched = Dedup.truncate(out.filter(col("matched_id").isNotNull)
+      val matched = Materialize.pin(out.filter(col("matched_id").isNotNull)
         .select(col("id"), col("matched_id")))
-      val hi = Dedup.truncate(hiJaccardPairs(s, d)
+      val hi = Materialize.pin(hiJaccardPairs(s, d)
         .filter((col("id_a") % 5 === 0) =!= (col("id_b") % 5 === 0))
         .select(
           when(col("id_a") % 5 === 0, col("id_a")).otherwise(col("id_b")).as("b_id"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.operators.{Corpus, Dedup}
+import graft.operators.{Corpus, Dedup, Materialize}
 
 /** Ingestion-time corpus assembly — the STREAMING twin of
   * [[graft.operators.Assembly.assembleCorpus]], structured the way a
@@ -69,8 +69,9 @@ object Ingest {
     * Pure batch function (usable standalone for backfills); every stage is
     * deterministic, so the audit table is exactly reproducible from
     * (batch, corpus, benchmark, counts). Stage verdict tables are pinned
-    * via checkpoint exactly as in the batch assembly — each feeds both the
-    * next stage's survivor filter and the final audit join. */
+    * ([[graft.operators.Materialize.pin]]) exactly as in the batch
+    * assembly — each feeds both the next stage's survivor filter and the
+    * final audit join. */
   def assembleMicroBatch(
       batch: DataFrame,
       corpus: DataFrame,
@@ -103,14 +104,14 @@ object Ingest {
     val corpusNorm = corpus.select(col(idCol).as("id"), col(textCol).as("text"))
 
     // 1. quality gate against the frozen LM
-    val gate = Dedup.truncate(
+    val gate = Materialize.pin(
       Corpus.qualityGateAgainst(valid, lmCounts, "id", "text", minTokens, maxTokens,
           maxTopNgramFrac, maxDupNgramFrac, maxAvgNll)
         .select(col("id"), col("n_tokens"), col("keep").as("gate_keep")))
     val kept1 = valid.join(gate.filter(col("gate_keep")).select("id"), Seq("id"), "left_semi")
 
     // 2. in-batch near-dedup, keep-canonical (lowest id of each cluster)
-    val dd = Dedup.truncate(
+    val dd = Materialize.pin(
       Dedup.winnowNearDup(kept1, "id", "text", minJaccard = minJaccard,
           shingleWidth = shingleWidth)
         .select(col("id"), (col("cluster_id") <=> col("id")).as("canonical")))
@@ -118,7 +119,7 @@ object Ingest {
 
     // 3. batch-vs-corpus near-dedup: candidates are fingerprint collisions
     // only, the corpus never self-joins — O(corpus + batch + candidates)
-    val cm = Dedup.truncate(
+    val cm = Materialize.pin(
       Dedup.winnowIncremental(corpusNorm, kept2, "id", "text", minJaccard = minJaccard,
           shingleWidth = shingleWidth)
         .filter(col("matched_id").isNotNull)
@@ -126,7 +127,7 @@ object Ingest {
     val kept3 = kept2.join(cm.select("id"), Seq("id"), "left_anti")
 
     // 4. decontamination against the (broadcast) benchmark shingle set
-    val dec = Dedup.truncate(
+    val dec = Materialize.pin(
       Corpus.decontaminate(kept3, benchmark, "id", "text", shingleWidth, minShared)
         .select(col("id"), col("contaminated")))
     val kept4 = kept3.join(dec.filter(!col("contaminated")).select("id"), Seq("id"), "left_semi")
@@ -212,7 +213,10 @@ object Ingest {
     * own `batch_id=N` subdirectory; the corpus view excludes that
     * partition, so the verdicts a replay computes are bit-identical to the
     * first attempt's. Audit first, then corpus: a crash between the two
-    * replays into the same overwrites either way. */
+    * replays into the same overwrites either way. The delivery owns
+    * everything it materializes ([[Materialize.owned]]): after both writes
+    * its stage pins, the operators' internal pins and their kept loop
+    * rounds are freed. */
   private[graft] def runBatch(
       base: DataFrame,
       batchId: Long,
@@ -234,13 +238,15 @@ object Ingest {
     val spark = base.sparkSession
     val corpus = readCorpus(spark, corpusDir, excludeBatchId = batchId)
       .getOrElse(base.limit(0))
-    val audit = assembleMicroBatch(base, corpus, benchmark, lmCounts,
-      "id", "text", "source", "lang", minTokens, maxTokens,
-      maxTopNgramFrac, maxDupNgramFrac, maxAvgNll, minJaccard,
-      shingleWidth, minShared, salt, trainPct, valPct)
-    audit.write.mode("overwrite").parquet(s"$auditDir/batch_id=$batchId")
-    base.join(audit.filter(col("keep")).select("id"), Seq("id"), "left_semi")
-      .write.mode("overwrite").parquet(s"$corpusDir/batch_id=$batchId")
+    Materialize.owned {
+      val audit = assembleMicroBatch(base, corpus, benchmark, lmCounts,
+        "id", "text", "source", "lang", minTokens, maxTokens,
+        maxTopNgramFrac, maxDupNgramFrac, maxAvgNll, minJaccard,
+        shingleWidth, minShared, salt, trainPct, valPct)
+      audit.write.mode("overwrite").parquet(s"$auditDir/batch_id=$batchId")
+      base.join(audit.filter(col("keep")).select("id"), Seq("id"), "left_semi")
+        .write.mode("overwrite").parquet(s"$corpusDir/batch_id=$batchId")
+    }
   }
 
   /** One micro-batch through the CURATION (edit-pipeline) stages — the
@@ -283,12 +289,12 @@ object Ingest {
     val benchNorm = benchmark.select(lit(0L).as("id"), col(textCol).as("text"))
 
     // 1. corpus-precedence line dedup vs the accepted store (rewrite)
-    val ld = Dedup.truncate(
+    val ld = Materialize.pin(
       Corpus.lineDedupAgainst(valid, corpusNorm, "id", "text", sep)
         .select(col("id"), col("n_removed_lines"), col("text_deduped")))
 
     // 2. surgical span decontamination of the rewrite vs the benchmark
-    val dec0 = Dedup.truncate(
+    val dec0 = Materialize.pin(
       Corpus.decontaminateSpans(
           ld.select(col("id"), col("text_deduped").as("text")), benchNorm, "id", "text", spanLen)
         .select(col("id"), col("n_removed_tokens").as("n_decont_tokens"),
@@ -300,7 +306,7 @@ object Ingest {
     // per-category counts. piiPatterns = Nil keeps the legacy schema.
     val piiCountCols = piiPatterns.map { case (n, _, _) => s"n_$n" } :+ "n_pii"
     val dec = if (piiPatterns.isEmpty) dec0
-      else Dedup.truncate(
+      else Materialize.pin(
         dec0.drop("text_final").join(
           Corpus.redactPiiAudited(
             dec0.select(col("id"), col("text_final").as("text")), "id", "text", piiPatterns)
@@ -308,7 +314,7 @@ object Ingest {
           Seq("id")))
 
     // 3. frozen-vocabulary OOV gate over the final text
-    val oov = Dedup.truncate(
+    val oov = Materialize.pin(
       Corpus.vocabCoverageAgainst(
           dec.select(col("id"), col("text_final").as("text")), vocabModel, "id", "text")
         .select(col("id"), col("oov_frac")))
@@ -376,7 +382,8 @@ object Ingest {
   /** One delivery of one CURATED micro-batch — the testable replay body,
     * mirroring [[runBatch]]: audit partition first (minus the text
     * payload), then the accepted store partition carrying the final
-    * rewritten text; both whole-partition overwrites of `batch_id=N`. */
+    * rewritten text; both whole-partition overwrites of `batch_id=N`;
+    * everything the delivery materialized is freed after the writes. */
   private[graft] def runCuratedBatch(
       base: DataFrame,
       batchId: Long,
@@ -394,13 +401,15 @@ object Ingest {
     val spark = base.sparkSession
     val corpus = readCorpus(spark, corpusDir, excludeBatchId = batchId)
       .getOrElse(base.limit(0))
-    val audit = curateMicroBatch(base, corpus, benchmark, vocabModel,
-      "id", "text", "source", "lang", sep, spanLen, maxOovFrac, salt, trainPct, valPct,
-      piiPatterns)
-    audit.drop("text_final").write.mode("overwrite").parquet(s"$auditDir/batch_id=$batchId")
-    audit.filter(col("keep"))
-      .select(col("id"), col("text_final").as("text"), col("source"), col("lang"), col("split"))
-      .write.mode("overwrite").parquet(s"$corpusDir/batch_id=$batchId")
+    Materialize.owned {
+      val audit = curateMicroBatch(base, corpus, benchmark, vocabModel,
+        "id", "text", "source", "lang", sep, spanLen, maxOovFrac, salt, trainPct, valPct,
+        piiPatterns)
+      audit.drop("text_final").write.mode("overwrite").parquet(s"$auditDir/batch_id=$batchId")
+      audit.filter(col("keep"))
+        .select(col("id"), col("text_final").as("text"), col("source"), col("lang"), col("split"))
+        .write.mode("overwrite").parquet(s"$corpusDir/batch_id=$batchId")
+    }
   }
 
   /** The accepted-corpus store with the given batch's own partition

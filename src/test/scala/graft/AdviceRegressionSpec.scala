@@ -206,16 +206,23 @@ class AdviceRegressionSpec extends AnyFunSuite {
 
   // ---- ADVICE r4 low: failure paths free in-flight checkpoints too
 
+  /** The directory holding every checkpoint dir this test JVM sets. */
+  private def checkpointRoot: java.io.File = {
+    val dir = new java.io.File(
+      new java.net.URI(spark.sparkContext.getCheckpointDir.get).getPath)
+    dir.getParentFile
+  }
+
+  private def checkpointFiles(): Int = {
+    def walk(f: java.io.File): Int =
+      if (f.isDirectory) Option(f.listFiles).map(_.map(walk).sum).getOrElse(0) else 1
+    walk(checkpointRoot)
+  }
+
   test("failed iterative loops leave no new reliable-checkpoint files") {
     import spark.implicits._
-    val cpDir = new java.io.File(
-      new java.net.URI(spark.sparkContext.getCheckpointDir.get).getPath)
-    def nFiles: Int = {
-      def walk(f: java.io.File): Int =
-        if (f.isDirectory) Option(f.listFiles).map(_.map(walk).sum).getOrElse(0) else 1
-      if (cpDir.exists) walk(cpDir) else 0
-    }
-    val before = nFiles
+    import graft.operators.{Classifier, Graph}
+    val before = checkpointFiles()
     // a 17-node pointer chain needs ~log2 rounds; budget 1 forces the
     // non-convergence throw AFTER a round materialized its checkpoint —
     // every file that round wrote (promoted AND in-flight) must be freed
@@ -227,8 +234,66 @@ class AdviceRegressionSpec extends AnyFunSuite {
     intercept[IllegalStateException] {
       Dedup.connectedComponents(edges, "id_a", "id_b", maxRounds = 1)
     }
-    assert(nFiles == before,
-      s"failure paths must free all reliable-checkpoint files (before=$before after=$nFiles)")
+    assert(checkpointFiles() == before,
+      s"failure paths must free all reliable-checkpoint files (before=$before after=${checkpointFiles()})")
+
+    // ADVICE r19 #1: a converged result is a PROJECTION of the final
+    // round, so the root-only freeCheckpoint is a no-op on it; its owner
+    // reclaims the final round with freeCheckpoints
+    val cc = Dedup.connectedComponents(edges, "id_a", "id_b")
+    val refined = Dedup.refineToFixpoint(chain, "id")
+    assert(checkpointFiles() > before, "each result keeps its final round")
+    org.apache.spark.sql.graftbridge.freeCheckpoint(cc)
+    org.apache.spark.sql.graftbridge.freeCheckpoint(refined)
+    assert(checkpointFiles() > before, "freeCheckpoint does not reach under a projection")
+    org.apache.spark.sql.graftbridge.freeCheckpoints(cc)
+    org.apache.spark.sql.graftbridge.freeCheckpoints(refined)
+    assert(checkpointFiles() == before, "freeCheckpoints reclaims the final rounds")
+
+    // more loops, each failed at its 2nd and 4th reliable checkpoint: the
+    // failure lands after loop-invariant frames and earlier rounds are
+    // materialized, and every one of them must be freed
+    val path = ((1L to 6L).map(i => (i, i + 1)) ++ Seq((7L, 8L), (8L, 9L), (9L, 7L)))
+      .toDF("src", "dst")
+    val docs = Seq((1L, "good clean text", 1), (2L, "spam spam buy now", 0),
+      (3L, "clean good words", 1), (4L, "buy spam now", 0)).toDF("id", "text", "y")
+    val loops: Seq[(String, () => Any)] = Seq(
+      "kCore" -> (() => Graph.kCore(path, "src", "dst", k = 2)),
+      "labelPropagation" -> (() => Graph.labelPropagation(path, "src", "dst")),
+      "pageRankInt" -> (() => Graph.pageRankInt(path, "src", "dst")),
+      "trainLogistic" -> (() => Classifier.trainLogistic(docs, "id", "text", "y", dim = 16)))
+    for ((name, run) <- loops; n <- Seq(2, 4)) {
+      val err = intercept[Exception] {
+        FailingCheckpointFs.failingNth(spark, checkpointRoot, n)(run())
+      }
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains("injected checkpoint failure")),
+        s"$name must fail at its checkpoint #$n under a checkpoint dir, got $err")
+      assert(checkpointFiles() == before,
+        s"$name failing at checkpoint #$n left files (before=$before after=${checkpointFiles()})")
+    }
+  }
+
+  test("replaying Ingest.runBatch leaves no new checkpoint files") {
+    import spark.implicits._
+    import graft.operators.Corpus
+    import graft.streaming.Ingest
+    val dirBase = Files.createTempDirectory("graft_replay_pins").toString
+    val good = "the quick brown fox jumps over the lazy dog near the quiet river bank today"
+    val novel = "spark catalyst optimizer pushes filters below joins for scan pruning wins"
+    val bench = Seq((1L, "benchmark held out text strictly")).toDF("doc_id", "text")
+    val lm = Corpus.lmCounts(Seq((1L, good), (2L, novel)).toDF("doc_id", "text"), "text")
+    val batch = Seq((20L, good, "web", "en"), (21L, novel, "web", "en"), (22L, good, "web", "en"))
+      .toDF("id", "text", "source", "lang")
+    val before = checkpointFiles()
+    // stage pins are always local, and both deliveries free theirs after
+    // the writes — under the session's checkpoint dir too
+    for (_ <- 1 to 2)
+      Ingest.runBatch(batch, 0L, s"$dirBase/corpus", s"$dirBase/audit", bench, lm,
+        maxTopNgramFrac = 0.5)
+    assert(spark.read.parquet(s"$dirBase/audit").count() == 3L)
+    assert(checkpointFiles() == before,
+      s"a replayed batch left checkpoint files (before=$before after=${checkpointFiles()})")
   }
 
   // ---- ADVICE r1 low: dot product length-mismatch semantics

@@ -231,6 +231,20 @@ class PlanQualitySpec extends AnyFunSuite {
       s"the five consumer branches must reuse the shingle-hash exchange:\n$plan")
   }
 
+  test("outliersMad reuses the shared per-(group, value) counts exchange") {
+    import graft.operators.Checks
+    // `counts` feeds both the median and the MAD subtree unpinned; the
+    // raw input is scanned once for it only because the second consumer
+    // reads the first one's shuffle — a ReusedExchange of the
+    // (group, value) hash partitioning
+    val q = Checks.outliersMad(t("lineitem").df, "l_returnflag", "l_extendedprice")
+    q.collect() // AQE finalizes reuse
+    val plan = q.queryExecution.executedPlan.toString
+    assert(plan.linesIterator.exists(l => l.contains("ReusedExchange") &&
+        l.contains("hashpartitioning(l_returnflag#") && l.contains("l_extendedprice#")),
+      s"the MAD pass must reuse the counts aggregate's exchange:\n$plan")
+  }
+
   test("df-cut executes as a broadcast anti join against the over-cap key set") {
     import graft.operators.Dedup
     import graft.sources.Tables
