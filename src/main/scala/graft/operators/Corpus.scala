@@ -1133,7 +1133,13 @@ object Corpus {
     *
     * Returns one row per raw-pool row: (id, n_feats, w_micro, g_micro,
     * key_micro, selected) — feature-less docs keep weight 0 and still draw
-    * a Gumbel (they can be sampled, matching the resampling semantics). */
+    * a Gumbel (they can be sampled, matching the resampling semantics).
+    *
+    * EAGER: building the returned frame runs Spark jobs — the k-th key
+    * `collect` needs the scores, so the narrow per-doc score table (id +
+    * three longs) is pinned ([[Materialize.pin]]) once and serves both
+    * that probe and the caller, which owns the pin and frees it with
+    * `graftbridge.freeCheckpoints` (else the ContextCleaner reclaims it). */
   def dsirSelect(
       raw: DataFrame,
       target: DataFrame,
@@ -1147,13 +1153,12 @@ object Corpus {
     val model = dsirModel(raw, target, textCol, buckets, addK)
     val u = ((conv(substring(md5(concat(col("id").cast("string"), lit(":" + salt))), 1, 8),
         16, 10).cast("long") % lit(1000000L)) + lit(0.5)) / lit(1000000.0)
-    // cache the NARROW per-doc score table (id + three longs): the k-th
-    // threshold probe and the caller's consumption are two executions, and
-    // without the cache each would re-tokenize and re-hash every document
-    val scored = dsirScoreAgainst(raw, model, idCol, textCol, buckets)
+    // pinned: the k-th threshold probe and the caller's consumption are
+    // two executions, and without the pin each would re-tokenize and
+    // re-hash every document
+    val scored = Materialize.pin(dsirScoreAgainst(raw, model, idCol, textCol, buckets)
       .withColumn("g_micro", round(-log(-log(u)) * lit(1e6)).cast("long"))
-      .withColumn("key_micro", col("w_micro") + col("g_micro"))
-      .cache()
+      .withColumn("key_micro", col("w_micro") + col("g_micro")))
     // k-th key threshold via per-partition top-k + O(k) driver merge
     val kth = scored.select(col("key_micro"), col("id"))
       .orderBy(col("key_micro").desc, col("id").asc)

@@ -1,8 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession, graftbridge}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.MetaFrame
 
@@ -13,22 +16,77 @@ import graft.MetaFrame
   * metaframe/metaframe.py:63-69): ingestion is plain `spark.read`, the wrapper
   * only annotates. Parquet scans keep Catalyst's filter pushdown and column
   * pruning because nothing is materialized here.
+  *
+  * Source resolution: each parquet path's schema is inferred once per
+  * process and reused while the source is unchanged (see [[load]]). Only
+  * schemas are cached, never data or file indexes.
   */
 object Tables {
   val All: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Loads one fixture table. Sets `spark.sql.legacy.parquet.nanosAsLong`
+    * on the session: events.ts is parquet TIMESTAMP(NANOS), which Spark 4
+    * rejects outright unless read as a raw long, so it is read
+    * nanos-as-long and truncated to microsecond TimestampType (matching
+    * DuckDB's ns→us behavior). The schema comes from [[readParquet]]'s
+    * cache, so a repeated load runs no Spark job. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // events.ts is parquet TIMESTAMP(NANOS): Spark 4 rejects it outright
-    // unless read as a raw long, so read nanos-as-long and truncate to
-    // microsecond TimestampType (matching DuckDB's ns→us behavior).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = readParquet(spark, s"$sfDir/$name.parquet")
     if (name == "events" && df.schema("ts").dataType == LongType)
       df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else df
   }
+
+  /** The session confs that change what parquet schema inference returns. */
+  private val InferenceConfs: Seq[String] = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** What an inferred schema was inferred from: every leaf file's
+    * (path, length, modification time), sorted, and the inference confs. */
+  private type Signature = (Seq[(String, Long, Long)], Seq[Option[String]])
+
+  /** Qualified path → the schema inferred there and its [[Signature]]. */
+  private val schemas = new ConcurrentHashMap[String, (Signature, StructType)]()
+
+  /** `spark.read.parquet(path)` that infers each source's schema once.
+    * Every call lists the source's leaf files (skipping the names Spark's
+    * own listing skips) and compares them and the inference confs with the
+    * cached entry's signature: on a match the read is
+    * `spark.read.schema(cached).parquet(path)`, which runs no Spark job;
+    * otherwise the schema is inferred as usual and stored. Rewriting,
+    * adding or removing a file, or changing an inference conf, therefore
+    * invalidates the entry. The listing is taken before the inference, so
+    * a file rewritten in between only causes a later miss. A path that
+    * does not exist is read uncached, so Spark raises its own error. */
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) return spark.read.parquet(path)
+    val key = fs.makeQualified(p).toString
+    val sig: Signature =
+      (leafFiles(fs, fs.getFileStatus(p)).sortBy(_._1), InferenceConfs.map(spark.conf.getOption))
+    schemas.get(key) match {
+      case (`sig`, schema) => spark.read.schema(schema).parquet(path)
+      case _ =>
+        val df = spark.read.parquet(path)
+        schemas.put(key, (sig, df.schema))
+        df
+    }
+  }
+
+  private def leafFiles(fs: FileSystem, st: FileStatus): Seq[(String, Long, Long)] =
+    if (st.isDirectory)
+      fs.listStatus(st.getPath).toSeq
+        .filterNot(c => graftbridge.hiddenPathName(c.getPath.getName))
+        .flatMap(leafFiles(fs, _))
+    else Seq((st.getPath.toString, st.getLen, st.getModificationTime))
 
   def loadMeta(spark: SparkSession, sfDir: String, name: String): MetaFrame =
     MetaFrame(load(spark, sfDir, name), Map("table" -> name, "source" -> s"$sfDir/$name.parquet"))

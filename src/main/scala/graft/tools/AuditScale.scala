@@ -576,7 +576,7 @@ object AuditScale {
     // exactly by data_ratio)
     val charRatio = {
       def chars(dir: String): Double =
-        spark.read.parquet(s"$dir/documents.parquet")
+        Tables.load(spark, dir, "documents")
           .agg(org.apache.spark.sql.functions.sum(
             org.apache.spark.sql.functions.length(col("text"))))
           .head.getLong(0).toDouble

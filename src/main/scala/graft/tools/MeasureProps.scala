@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, Retrieval, Similarity}
+import graft.sources.Tables
 
 /** Dev-only measurement run backing the property-oracle bounds declared in
   * PipelineQueries: prints, at a given SF dir, the empirical recall /
@@ -22,7 +23,8 @@ object MeasureProps {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = Tables.load(spark, sfDir, "documents")
+    val emb = Tables.load(spark, sfDir, "embeddings")
 
     // ---- n-gram shingle document-frequency profile (sizes the
     // Dedup.DefaultMaxShingleDf production cap exactly as the winnow fp
@@ -38,7 +40,6 @@ object MeasureProps {
     // channel by construction; what the measurement shows is whether fusing
     // the weak lexical channel DILUTES it (the k0=60 damping question).
     if (args.contains("--hybrid-eval")) {
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       val qs = docs.filter(col("doc_id") % 100 === 3)
         .select(col("doc_id").as("qid"),
           array_join(slice(split(col("text"), "\\s+"), 1, 5), " ").as("qtext"))
@@ -91,7 +92,6 @@ object MeasureProps {
     // catastrophe — so measure the largest cell the declared k=8 quantizer
     // actually produces and report the headroom under the default).
     if (args.contains("--semantic-cell")) {
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       val centroids = Similarity.trainCentroids(emb, "vec_id", "embedding", k = 8, iters = 2)
       val cents = Similarity.centroidArray(centroids, "cell", "cvec")
       val cellSizes = emb.crossJoin(broadcast(cents))
@@ -116,7 +116,7 @@ object MeasureProps {
     // the ADC scan scores every corpus row against 32 query LUTs.
     if (args.contains("--pq-kernel")) {
       import graft.expressions.PqExpressions
-      val embK = spark.read.parquet(s"$sfDir/embeddings.parquet").cache()
+      val embK = Tables.load(spark, sfDir, "embeddings").cache()
       val nRows = embK.count()
       val m = 8; val ksub = 64; val dim = 64
       val cb = Similarity.trainPqCodebooks(embK, "vec_id", "embedding", dim, m, ksub, iters = 1)
@@ -173,7 +173,7 @@ object MeasureProps {
     // permutation/rotation-invariant, so the exact ground truth is
     // computed once per corpus and shared by all arms.
     if (args.contains("--pq-permute")) {
-      val embR = spark.read.parquet(s"$sfDir/embeddings.parquet").cache()
+      val embR = Tables.load(spark, sfDir, "embeddings").cache()
       embR.count(): Unit
       val skewed = embR.select(col("vec_id"),
         transform(col("embedding"), (x, i) =>
@@ -252,7 +252,7 @@ object MeasureProps {
     // shortlist (code-space ranking error) — the sweep shows which dial
     // buys recall at each point.
     if (args.contains("--ivfpq-recall")) {
-      val embR = spark.read.parquet(s"$sfDir/embeddings.parquet").cache()
+      val embR = Tables.load(spark, sfDir, "embeddings").cache()
       embR.count(): Unit
       val qs = embR.limit(32)
         .select(col("vec_id").as("query_id"), col("embedding").as("query_vec")).cache()
@@ -429,7 +429,7 @@ object MeasureProps {
       import graft.operators.Corpus
       import graft.streaming.Ingest
       import spark.implicits._
-      val docsC = spark.read.parquet(s"$sfDir/documents.parquet")
+      val docsC = Tables.load(spark, sfDir, "documents")
       val rowsC = docsC.limit(4000)
         .select(col("doc_id"), col("text"), col("source"), col("lang")).collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3)))
@@ -480,8 +480,6 @@ object MeasureProps {
       }
       spark.stop(); return
     }
-
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
 
     // ---- exact high-jaccard pairs (ground truth for text dedup recall)
     val sh = docs.select(col("doc_id"),

@@ -69,6 +69,12 @@ package object graftbridge {
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  /** Whether Spark's file listing skips a file or directory of this name
+    * (`_`/`.` prefixes, in-flight copies; `HadoopFSUtils` is
+    * `private[spark]`, hence the shim). */
+  def hiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
   /** Parses a user-supplied table name with Spark's own SQL parser (rejecting
     * malformed identifiers) and returns it fully quoted for safe
     * interpolation into SQL text. */

@@ -512,4 +512,176 @@ class SourcesSpec extends AnyFunSuite {
     assert(json.exceptAll(parquetDocs).isEmpty && parquetDocs.exceptAll(json).isEmpty,
       "JSON roundtrip must be bit-identical to the parquet truth")
   }
+
+  // ---------------------------------------------------- source resolution
+
+  /** A fresh directory under target/, so a test starts from cold schema
+    * entries and may rewrite its sources. */
+  private def freshDir(): java.nio.file.Path = {
+    val parent = java.nio.file.Paths.get(out("resolution"))
+    java.nio.file.Files.createDirectories(parent)
+    java.nio.file.Files.createTempDirectory(parent, "sf")
+  }
+
+  /** A fresh copy of fixture tables from the sf0.001 directory `base` reads. */
+  private def freshSf(tables: Seq[String]): String = {
+    val dir = freshDir()
+    val fixtures = java.nio.file.Paths.get(new java.net.URI(base.inputFiles.head)).getParent
+    tables.foreach(t => java.nio.file.Files.copy(
+      fixtures.resolve(s"$t.parquet"), dir.resolve(s"$t.parquet")))
+    dir.toString
+  }
+
+  /** `body`'s result and the number of Spark jobs it started on this thread
+    * (jobs are tagged with a job group unique to the call). */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"sources-spec-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, "jobsDuring")
+    try {
+      val result = body
+      org.apache.spark.sql.graftbridge.drainListenerBus(spark)
+      (result, jobs.get)
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  /** Writes `df` as the single parquet FILE `dest`, replacing any file there. */
+  private def writeFile(df: org.apache.spark.sql.DataFrame, dest: String): Unit = {
+    val tmp = freshDir().resolve("out").toString
+    df.coalesce(1).write.parquet(tmp)
+    val part = new java.io.File(tmp).listFiles().find(f =>
+      f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+    java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(dest),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.Row] =
+    df.collect().toSeq
+
+  test("a repeated Tables.load of an unchanged source runs no Spark job") {
+    val sf = freshSf(Seq("nation"))
+    val (_, inferJobs) = jobsDuring(Tables.load(spark, sf, "nation"))
+    assert(inferJobs >= 1, "the first load infers the schema with a Spark job")
+    val (again, hitJobs) = jobsDuring(Tables.load(spark, sf, "nation"))
+    assert(hitJobs == 0, s"an unchanged source must resolve without a job, ran $hitJobs")
+    assert(again.count() == 25)
+  }
+
+  test("overwriting a source file invalidates its cached schema") {
+    import org.apache.spark.sql.functions.col
+    val sf = freshDir().toString
+    writeFile(spark.range(3).toDF("a"), s"$sf/t.parquet")
+    assert(Tables.load(spark, sf, "t").columns.toSeq == Seq("a"))
+    Tables.load(spark, sf, "t")
+    val wider = spark.range(5).toDF("a").withColumn("b", col("a") * 10)
+    writeFile(wider, s"$sf/t.parquet")
+    val (reread, jobs) = jobsDuring(Tables.load(spark, sf, "t"))
+    assert(jobs >= 1, "a rewritten file must be re-inferred")
+    assert(reread.schema.map(f => (f.name, f.dataType)) ==
+      wider.schema.map(f => (f.name, f.dataType)))
+    assert(rows(reread.orderBy("a")) == rows(wider))
+  }
+
+  test("a part file added to a directory source shows up in the next load") {
+    val sf = freshDir().toString
+    val path = s"$sf/t.parquet"
+    spark.range(3).toDF("a").write.parquet(path)
+    assert(Tables.load(spark, sf, "t").count() == 3)
+    assert(Tables.load(spark, sf, "t").count() == 3)
+    spark.range(10, 14).toDF("a").coalesce(1).write.mode("append").parquet(path)
+    val (reread, jobs) = jobsDuring(Tables.load(spark, sf, "t"))
+    assert(jobs >= 1, "a new leaf file changes the source's signature")
+    assert(reread.collect().map(_.getLong(0)).sorted.toSeq == Seq(0L, 1L, 2L, 10L, 11L, 12L, 13L))
+  }
+
+  test("flipping spark.sql.parquet.binaryAsString re-infers the schema") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    import org.apache.spark.sql.types.{BinaryType, StringType}
+    // a plain (unannotated) binary column and no Spark schema in the footer:
+    // only then does binaryAsString decide the inferred type
+    val sf = freshDir().toString
+    val message = MessageTypeParser.parseMessageType("message m { required binary b; }")
+    val writer = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(s"$sf/t.parquet"))
+      .withType(message).build()
+    val groups = new SimpleGroupFactory(message)
+    try Seq("x", "y").foreach(v => writer.write(groups.newGroup().append("b", v)))
+    finally writer.close()
+    val key = "spark.sql.parquet.binaryAsString"
+    val before = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "false")
+      assert(Tables.load(spark, sf, "t").schema("b").dataType == BinaryType)
+      assert(jobsDuring(Tables.load(spark, sf, "t"))._2 == 0)
+      spark.conf.set(key, "true")
+      val (asString, jobs) = jobsDuring(Tables.load(spark, sf, "t"))
+      assert(jobs >= 1, "a changed inference conf must re-infer")
+      assert(asString.schema("b").dataType == StringType)
+      assert(asString.collect().map(_.getString(0)).toSeq == Seq("x", "y"))
+      spark.conf.set(key, "false")
+      assert(Tables.load(spark, sf, "t").schema("b").dataType == BinaryType)
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("every fixture table resolves from the cache to the same schema and rows as a fresh read") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    import org.apache.spark.sql.functions.{expr, timestamp_micros}
+    import org.apache.spark.sql.types.{LongType, TimestampType}
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val sf = freshSf(Tables.All)
+    // the fixture's events.ts is micros; an events twin whose ts is
+    // TIMESTAMP(NANOS) takes the nanos → micros path
+    val nanosSf = freshDir().toString
+    val message = MessageTypeParser.parseMessageType(
+      "message m { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val writer = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(s"$nanosSf/events.parquet"))
+      .withType(message).build()
+    val groups = new SimpleGroupFactory(message)
+    try Seq(1L -> 1700000000123456789L, 2L -> 1700000001999999999L).foreach { case (id, ts) =>
+      writer.write(groups.newGroup().append("event_id", id).append("ts", ts))
+    } finally writer.close()
+    val sources = Tables.All.map(sf -> _) :+ (nanosSf -> "events")
+    // the uncached read as Tables.load did it before the cache
+    def fresh(dir: String, name: String) = {
+      val df = spark.read.parquet(s"$dir/$name.parquet")
+      if (name == "events" && df.schema("ts").dataType == LongType)
+        df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      else df
+    }
+    // two cold loads of every source race from two threads
+    val racing = Seq.fill(2)(Future(sources.map { case (d, n) => Tables.load(spark, d, n) }))
+    val loaded = racing.map(Await.result(_, 5.minutes))
+    for (((dir, name), i) <- sources.zipWithIndex) {
+      val (hit, jobs) = jobsDuring(Tables.load(spark, dir, name))
+      assert(jobs == 0, s"$dir/$name: the cached schema must serve the load, ran $jobs jobs")
+      val expected = fresh(dir, name)
+      val want = rows(expected)
+      for (df <- hit +: loaded.map(_(i))) {
+        assert(df.schema == expected.schema, s"$dir/$name")
+        assert(rows(df) == want, s"$dir/$name")
+      }
+    }
+    val nanos = Tables.load(spark, nanosSf, "events")
+    assert(nanos.schema("ts").dataType == TimestampType)
+    assert(nanos.selectExpr("unix_micros(ts)").collect().map(_.getLong(0)).toSeq ==
+      Seq(1700000000123456L, 1700000001999999L))
+  }
 }
