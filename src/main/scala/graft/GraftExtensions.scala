@@ -143,7 +143,8 @@ object GraftExtensions {
         val rhs = stringsArg(args(2), 3)
         require(!lhs.contains(null) && !rhs.contains(null),
           "bpe_encode: merge symbols must not be NULL")
-        BpeEncode.validateTable(lhs.zip(rhs))
+        BpeEncode.tableDefect(lhs.zip(rhs)).foreach(d =>
+          throw new IllegalArgumentException(s"bpe_encode: $d"))
         BpeEncode(args(0), lhs, rhs)
       }),
   )

@@ -50,20 +50,13 @@ object Verify {
     // degrades to the default instead of crashing the whole dump before
     // oracle_sql.json exists — re-creating the zeroed-round failure this
     // rewrite prevents would be the worst possible way to fail
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
-      .filter(_ >= 1).getOrElse(4).toString
+    val cpus = LocalSession.envCores
     val nThreads = sys.env.get("SPARK_GRAFT_VERIFY_THREADS").flatMap(_.toIntOption)
-      .filter(_ >= 1).getOrElse(math.min(4, cpus.toInt))
+      .filter(_ >= 1).getOrElse(math.min(4, cpus))
     val budgetSec = sys.env.get("SPARK_GRAFT_VERIFY_BUDGET_SEC").flatMap(_.toLongOption)
       .filter(_ >= 1L).getOrElse(240L)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus,
+      Map("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"))
     new java.io.File(outDir).mkdirs()
 
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -35,10 +35,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * (two different pairs concatenating to the same string), and under one
   * a later merge could re-create a pair an earlier rank already passed —
   * the priority loop would merge it, the replace chain would not.
-  * [[graft.operators.Corpus.bpeSegmentFast]] therefore VALIDATES both
-  * properties on the driver and rejects the table loudly rather than
-  * silently diverging (fall back to [[graft.operators.Corpus.bpeSegment]]
-  * for such tables). Under the validated precondition every creator of a
+  * [[graft.operators.Corpus.bpeSegment]] therefore checks both
+  * properties on the driver ([[BpeEncode.tableDefect]]) and runs this
+  * expression only on a table that passes; any other table takes the
+  * exact replace chain. Under the validated precondition every creator of a
   * pair occurrence has lower rank than the pair itself, so min-rank-first
   * merges exactly the occurrence set the rank-order chain merges.
   *
@@ -52,25 +52,23 @@ object BpeEncode {
   def apply(tokens: Column, lhs: Seq[String], rhs: Seq[String]): Column =
     graftbridge.toColumn(BpeEncode(graftbridge.toExpression(tokens), lhs, rhs))
 
-  /** Validates the component-monotone + unique-output precondition.
-    * Throws IllegalArgumentException naming the offending rank. */
-  def validateTable(merges: Seq[(String, String)]): Unit = {
+  /** Why the native loop cannot replace the rank-order `replace` chain
+    * on `merges`, naming the offending rank; None when the table is
+    * component-monotone with unique merged outputs. */
+  def tableDefect(merges: Seq[(String, String)]): Option[String] = {
     val outputs = scala.collection.mutable.HashSet.empty[String]
-    merges.zipWithIndex.foreach { case ((a, b), r) =>
-      def checkComponent(s: String, side: String): Unit =
-        require(s.codePointCount(0, s.length) == 1 || outputs.contains(s),
-          s"BPE merge table is not component-monotone at rank $r: $side symbol " +
-            s"'$s' is multi-character but not the merged output of an earlier " +
-            "rank; use Corpus.bpeSegment (exact replace chain) for this table")
-      checkComponent(a, "lhs")
-      checkComponent(b, "rhs")
-      val out = a + b
-      require(!outputs.contains(out),
-        s"BPE merge table has a duplicate merged output '$out' at rank $r; " +
-          "the rank-priority loop could re-merge a passed rank — use " +
-          "Corpus.bpeSegment (exact replace chain) for this table")
-      outputs += out
-    }
+    def component(s: String, side: String, r: Int): Option[String] =
+      Option.unless(s.codePointCount(0, s.length) == 1 || outputs.contains(s))(
+        s"BPE merge table is not component-monotone at rank $r: $side symbol " +
+          s"'$s' is multi-character but not the merged output of an earlier rank")
+    merges.iterator.zipWithIndex.map { case ((a, b), r) =>
+      val defect = component(a, "lhs", r).orElse(component(b, "rhs", r)).orElse(
+        Option.when(outputs.contains(a + b))(
+          s"BPE merge table has a duplicate merged output '${a + b}' at rank $r; " +
+            "the rank-priority loop could re-merge a passed rank"))
+      outputs += a + b
+      defect
+    }.collectFirst { case Some(d) => d }
   }
 }
 

@@ -274,10 +274,10 @@ object Checks {
 
   /** Frozen PSI baseline: one row per bucket carrying the reference
     * quantile edges, the reference bucket counts, and the reference total
-    * — the O(buckets) table the streaming monitor
-    * ([[graft.streaming.Streams.psiMonitorStream]]) broadcasts against
-    * each micro-batch. Persist it and rebuild on the reference's own
-    * cadence; scorers never mutate it. */
+    * — the O(buckets) table a streaming monitor
+    * (`Streams.eachBatch(s)(scorePsiAgainst(_, baseline, col))(sink)`)
+    * broadcasts against each micro-batch. Persist it and rebuild on the
+    * reference's own cadence; scorers never mutate it. */
   def psiBaseline(
       reference: DataFrame,
       valueCol: String,
@@ -460,8 +460,8 @@ object Checks {
     .groupBy("category").agg(count(lit(1)).as(as))
 
   /** Frozen chi-square baseline: one row per domain label — (category,
-    * ref_cnt, ref_n). The O(labels) table the streaming monitor
-    * ([[graft.streaming.Streams.chi2MonitorStream]]) broadcasts against
+    * ref_cnt, ref_n). The O(labels) table a streaming monitor
+    * (`Streams.eachBatch` over [[scoreChi2Against]]) broadcasts against
     * each micro-batch; persist and rebuild on the reference's cadence. */
   def chi2Baseline(
       reference: DataFrame,
@@ -510,7 +510,7 @@ object Checks {
     val eRef = rowTotal * col("ref_n") / n
     val eCur = rowTotal * col("__cn") / n
     // A zero-expected cell (one side empty — possible for a
-    // chi2MonitorStream micro-batch) contributes an explicit 0: without
+    // streaming micro-batch under Streams.eachBatch) contributes an explicit 0: without
     // the guard the (0−0)²/0 term is NaN, which round(...).cast(long)
     // silently turns into 0 under default casting but THROWS under ANSI
     // mode — breaking the documented ANSI re-derivability (r15 ADVICE).

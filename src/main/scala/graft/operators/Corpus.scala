@@ -1244,8 +1244,10 @@ object Corpus {
     * literal map in the plan, and each doc's weight is an integer fold
     * over its own bucket array — no join of any kind, nothing shuffles,
     * and re-executions of a downstream plan never re-derive the model.
-    * The same plan runs unchanged on a STREAMING frame
-    * (`Streams.dsirScoreStream`) with zero streaming state. A NULL text
+    * The same plan runs unchanged on a STREAMING frame with zero
+    * streaming state; selection (the Gumbel-top-k step) stays a batch
+    * concern — a global top-k over an unbounded stream is not a
+    * meaningful operator, so gate streams on `w_micro`. A NULL text
     * scores (0, 0) like the batch trainer path; a SPARSE model (not from
     * [[dsirModel]]) yields NULL weights — visible breakage, never a
     * silently wrong score. Returns one row per input row:
@@ -1271,8 +1273,10 @@ object Corpus {
 
   /** Per-line duplicate VERDICTS of `df` against a static corpus line
     * store — the row-local core shared by [[lineDedupAgainst]] (batch,
-    * with reassembly) and `Streams.lineDedupStream` (append-mode
-    * stream-static twin, no aggregation): explode lines, flag each
+    * with reassembly) and streaming use (called directly on a streaming
+    * frame it is an append-mode stream-static join with zero state; the
+    * per-doc reassembly is an aggregation left to the batch consumer):
+    * explode lines, flag each
     * occurrence whose exact line already exists ANYWHERE in the corpus
     * (corpus precedence — within-batch repeats are NOT deduped here; run
     * [[lineDedup]] over the accepted corpus for that). Lines shorter than
@@ -1606,7 +1610,7 @@ object Corpus {
     * entries) collects into the plan as a literal, and each doc's OOV
     * fraction is one row-local filter over its own tokens — no join, no
     * shuffle, no aggregation, so the identical plan runs append-mode on
-    * a stream (`Streams.vocabScoreStream`). Retraining means restarting
+    * a stream. Retraining means restarting
     * the query — mid-stream vocabulary drift must be an explicit
     * redeploy, never a silent change. Output schema matches
     * [[vocabCoverage]]. */
@@ -2048,7 +2052,7 @@ object Corpus {
     * (threshold, label) pairs collect into the plan as literal arrays
     * and each row's bucket is the LABEL of the largest threshold_bin ≤
     * its bin (0 when none is) — one row-local fold, no join, no shuffle,
-    * no aggregation, stateless on a stream (`Streams.bucketScoreStream`).
+    * no aggregation, stateless on a stream.
     * Label monotonicity (labels ascend with thresholds by construction)
     * makes the lookup `labels[count(thresholds ≤ bin)]`; the count alone
     * is NOT the bucket — non-consecutive trained labels (tied scores
@@ -2414,92 +2418,50 @@ object Corpus {
     * GPT-2-style simplification); words containing the 0x1E/0x1F bracket
     * chars are excluded from training (they would corrupt the encoding).
     *
+    * Rounds: each round runs one pair-count pass and accepts up to
+    * `batchSize` merges from it. The default `batchSize = 1` is exact
+    * sequential BPE: one merge per round at freshly counted pairs. A
+    * larger `batchSize` is the production-merge-count form — sequential
+    * BPE is one pair-count reduce plus one driver round-trip PER MERGE, so
+    * at a 32k-merge vocabulary the fixed stage latency of 32k jobs, not
+    * the data, dominates. A round scans the
+    * top-(candidateWindow×batchSize) pairs by (count desc, lhs, rhs) in
+    * rank order and accepts a pair iff none of its {lhs, rhs, lhs+rhs}
+    * symbols was already touched by an earlier acceptance this round.
+    * Symbol-disjoint merges act on disjoint positions of every bracketed
+    * word state — no accepted pattern can create, destroy, or overlap an
+    * occurrence of another — so the round applies as one chained
+    * row-local `replace` whose per-pair effect is exactly what sequential
+    * greedy would have done at the ROUND-START counts.
+    *
+    * The trade, stated honestly: merges 2..batchSize of a round use
+    * counts that sequential BPE would have refreshed, so with
+    * `batchSize > 1` the learned table can diverge from the exact greedy
+    * sequence (a conflicting pair whose count survives the round's earlier
+    * merges would have been picked first by the sequential trainer).
+    * Rounds are statically `ceil(nMerges / batchSize)` with a per-round
+    * acceptance cap (the final round takes the remainder), so the round
+    * structure — and therefore the unrolled-SQL oracle — does not depend
+    * on the data; conflict-starved rounds under-fill. The table carries
+    * fewer than `nMerges` rows when rounds under-fill or the vocabulary
+    * runs out of adjacent pairs. `merge_rank` is global acceptance order
+    * and `pair_count` is the round-start count.
+    *
     * Scale shape: the corpus is read ONCE (word-count reduce, map-side
-    * combinable, uniform hash keys); every merge round then runs on the
-    * WORD table — vocabulary-sized, not corpus-sized — as one
-    * pair-count reduce plus a `TakeOrderedAndProject` argmax (O(1) rows
-    * to the driver) and a row-local `replace`. The word table is
-    * checkpointed each round in a [[Materialize.rounds]] scope to keep
-    * lineage flat; each round frees the one before. Returns the merge
-    * table (merge_rank, lhs, rhs, merged, pair_count); fewer than
-    * `nMerges` rows iff the vocabulary runs out of adjacent pairs. */
+    * combinable, uniform hash keys); every round then runs on the WORD
+    * table — vocabulary-sized, not corpus-sized — as one pair-count
+    * reduce plus a `TakeOrderedAndProject` candidate window (O(candidateWindow
+    * × batchSize) rows to the driver) and a row-local `replace`. The word
+    * table is checkpointed each round in a [[Materialize.rounds]] scope to
+    * keep lineage flat; each round frees the one before. `onRound` is a
+    * measurement hook: candidates considered, accepted and
+    * conflict-rejected per round. Returns the merge table (merge_rank, lhs,
+    * rhs, merged, pair_count). */
   def bpeTrain(
       df: DataFrame,
       textCol: String,
-      nMerges: Int): DataFrame = {
-    require(nMerges >= 1, "nMerges must be at least 1")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
-    Materialize.rounds(spark) { rounds =>
-      var words = rounds.next(df
-        .select(explode(graft.functions.TextFunctions.tokens(col(textCol))).as("w"))
-        .filter(col("w") =!= "" && !col("w").rlike("[\\x1e\\x1f]"))
-        .groupBy("w").agg(count(lit(1)).as("cnt"))
-        .select(bpeWrapChars(col("w")).as("state"), col("cnt")))
-      var r = 0
-      var exhausted = false
-      while (r < nMerges && !exhausted) {
-        val top = words
-          .select(bpeSyms(col("state")).as("syms"), col("cnt"))
-          .filter(size(col("syms")) >= 2)
-          .select(explode(transform(sequence(lit(0), size(col("syms")) - 2), i =>
-            struct(element_at(col("syms"), i + 1).as("a"),
-              element_at(col("syms"), i + 2).as("b")))).as("p"), col("cnt"))
-          .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-          .agg(sum(col("cnt")).as("c"))
-          .orderBy(col("c").desc, col("a").asc, col("b").asc)
-          .limit(1).collect()
-        if (top.isEmpty) exhausted = true
-        else {
-          val (a, b, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-          merges += ((r, a, b, a + b, c))
-          words = rounds.next(words
-            .select(replace(col("state"),
-              lit(BpeRS + a + BpeUS + BpeRS + b + BpeUS),
-              lit(BpeRS + a + b + BpeUS)).as("state"), col("cnt")))
-          r += 1
-        }
-      }
-    }
-    merges.toSeq.toDF("merge_rank", "lhs", "rhs", "merged", "pair_count")
-  }
-
-  /** Batched BPE training — the production-merge-count form of [[bpeTrain]].
-    * Sequential BPE is one pair-count reduce + one driver round-trip PER
-    * MERGE: at a 32k-merge production vocabulary that is 32k Spark jobs
-    * whose fixed stage latency, not the data, dominates. This variant
-    * accepts up to `batchSize` merges per round from one pair-count pass:
-    * the top-(candidateWindow×batchSize) pairs by (count desc, lhs, rhs)
-    * are scanned in rank order and a pair is accepted iff none of its
-    * {lhs, rhs, lhs+rhs} symbols was already touched by an earlier
-    * acceptance this round. Symbol-disjoint merges act on disjoint
-    * positions of every bracketed word state — no accepted pattern can
-    * create, destroy, or overlap an occurrence of another — so the
-    * batch applies as one chained row-local `replace` whose per-pair
-    * effect is exactly what sequential greedy would have done at the
-    * ROUND-START counts.
-    *
-    * The trade, stated honestly: merges 2..batchSize of a round use
-    * counts that sequential BPE would have refreshed, so the learned
-    * table can diverge from the exact greedy sequence (a conflicting
-    * pair whose count survives the round's earlier merges would have
-    * been picked first by the sequential trainer). `batchSize = 1`
-    * reproduces [[bpeTrain]] exactly (pinned in spec). Rounds are
-    * statically `ceil(nMerges / batchSize)` with a per-round acceptance
-    * cap (final round takes the remainder), so the round structure —
-    * and therefore the unrolled-SQL oracle — does not depend on the
-    * data; conflict-starved rounds under-fill and the table simply
-    * carries fewer than `nMerges` rows, like [[bpeTrain]]'s exhaustion.
-    * `merge_rank` is global acceptance order and `pair_count` is the
-    * round-start count. Scale shape is [[bpeTrain]]'s (corpus read once;
-    * rounds are vocabulary-sized) with batchSize× fewer rounds and a
-    * driver window of O(candidateWindow × batchSize) rows per round. */
-  def bpeTrainBatched(
-      df: DataFrame,
-      textCol: String,
       nMerges: Int,
-      batchSize: Int = 16,
+      batchSize: Int = 1,
       candidateWindow: Int = 8,
       onRound: (Int, Int, Int) => Unit = (_, _, _) => ()): DataFrame = {
     require(nMerges >= 1, "nMerges must be at least 1")
@@ -2544,16 +2506,13 @@ object Corpus {
             } else rejected += 1
             i += 1
           }
-          // dev-measurement hook (MeasureProps --bpe-scale): candidates
-          // considered this round, accepted, and conflict-rejected
           onRound(i, accepted.size, rejected)
           accepted.foreach { case (a, b, c) =>
             merges += ((rank, a, b, a + b, c)); rank += 1
           }
-          val newState = accepted.foldLeft(col("state")) { case (st, (a, b, _)) =>
-            replace(st, lit(BpeRS + a + BpeUS + BpeRS + b + BpeUS), lit(BpeRS + a + b + BpeUS))
-          }
-          words = rounds.next(words.select(newState.as("state"), col("cnt")))
+          words = rounds.next(words.select(
+            bpeMergeAll(col("state"), accepted.toSeq.map { case (a, b, _) => (a, b) }).as("state"),
+            col("cnt")))
           round += 1
         }
       }
@@ -2561,64 +2520,87 @@ object Corpus {
     merges.toSeq.toDF("merge_rank", "lhs", "rhs", "merged", "pair_count")
   }
 
+  /** The merges applied to a bracketed symbol string as one `replace`
+    * per merge, in the given order. */
+  private def bpeMergeAll(state: Column, merges: Seq[(String, String)]): Column =
+    merges.foldLeft(state) { case (st, (a, b)) =>
+      replace(st, lit(BpeRS + a + BpeUS + BpeRS + b + BpeUS), lit(BpeRS + a + b + BpeUS))
+    }
+
   /** Apply a trained BPE merge table to every word of every document —
     * row-local: the merges collect to the driver (bounded vocabulary
-    * metadata, like the ANN centroid collect) and compile into a chain of
-    * `nMerges` codegen'd `replace` calls over the bracketed symbol string;
-    * no join, no shuffle, identical plan on a streaming frame. Returns one
-    * row per input row: (id, n_words, n_subwords, segmented) where
-    * `segmented` joins subwords with "+" inside each word and words with
-    * a space — the standard subword-NMT-style audit rendering. */
+    * metadata, like the ANN centroid collect); no join, no shuffle, and
+    * the same call runs on a streaming frame in append mode with zero
+    * state. The table is frozen at query start: retraining means
+    * restarting the query with the new table, so a stream never changes
+    * vocabulary mid-flight. Returns one row per input row: (id, n_words,
+    * n_subwords, segmented) where `segmented` joins subwords with "+"
+    * inside each word and words with a space — the standard
+    * subword-NMT-style audit rendering. NULL text segments as empty.
+    *
+    * The code picks the execution path from the collected table. A table
+    * that passes [[graft.expressions.BpeEncode.tableDefect]]
+    * (component-monotone with unique merged outputs — both trainer modes
+    * produce such tables) runs the native rank-priority loop
+    * ([[graft.expressions.BpeEncode]]): O(1) rank lookup per adjacent
+    * pair, cost independent of vocabulary size. Any other table runs the
+    * exact chain of one codegen'd `replace` per merge over the bracketed
+    * symbol string, which is the only correct path for it (the priority
+    * loop could re-merge a rank the chain has already passed). Both paths
+    * give the same rows on a passing table; the declared
+    * `text_bpe_segment` (chain) and `text_bpe_segment_fast` (this entry)
+    * share one oracle. */
   def bpeSegment(
       df: DataFrame,
       idCol: String,
       textCol: String,
       merges: DataFrame): DataFrame = {
-    val ms = merges.orderBy("merge_rank")
-      .select("lhs", "rhs").collect()
-      .map(r => (r.getString(0), r.getString(1)))
-    val segWord = (w: Column) => {
-      val merged = ms.foldLeft(bpeWrapChars(w)) { case (st, (a, b)) =>
-        replace(st, lit(BpeRS + a + BpeUS + BpeRS + b + BpeUS), lit(BpeRS + a + b + BpeUS))
-      }
-      // ⟨s1⟩⟨s2⟩… → s1+s2+…
-      replace(replace(replace(merged, lit(BpeUS + BpeRS), lit("+")),
-        lit(BpeRS), lit("")), lit(BpeUS), lit(""))
-    }
-    val ts = graft.functions.TextFunctions.tokens(coalesce(col(textCol), lit("")))
-    df.select(col(idCol).as("id"), transform(ts, segWord).as("__segs"))
-      .select(col("id"),
-        size(col("__segs")).cast("long").as("n_words"),
-        aggregate(col("__segs"), lit(0L),
-          (acc, s) => acc + size(split(s, "\\+"))).as("n_subwords"),
-        array_join(col("__segs"), " ").as("segmented"))
+    val ms = bpeCollect(merges)
+    val native = graft.expressions.BpeEncode.tableDefect(ms).isEmpty
+    bpeRender(df, idCol, textCol, if (native) bpeNative(ms) else bpeChain(ms))
   }
 
-  /** [[bpeSegment]] at production merge counts — same output row for row,
-    * different execution: instead of compiling the table into `nMerges`
-    * chained `replace` calls (ideal at oracle scale, unusable at a 32k-merge
-    * production vocabulary where the expression tree itself grows with the
-    * table), the collected merges ride ONE native
-    * [[graft.expressions.BpeEncode]] expression that applies the
-    * rank-priority merge loop per word — O(1) table lookup per adjacent
-    * pair, cost independent of vocabulary size. The table is validated
-    * component-monotone with unique outputs on the driver (both trainers
-    * produce such tables; a table failing validation throws rather than
-    * risking divergence from the exact chain — see BpeEncode's Scaladoc).
-    * Equivalence to [[bpeSegment]] is pinned in ExtensionsSpec on real
-    * corpus text under both trainers' tables. */
-  def bpeSegmentFast(
+  /** [[bpeSegment]] through the `replace` chain, whatever the table. */
+  private[graft] def bpeSegmentChain(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      merges: DataFrame): DataFrame =
+    bpeRender(df, idCol, textCol, bpeChain(bpeCollect(merges)))
+
+  /** [[bpeSegment]] through the native loop; a table failing
+    * [[graft.expressions.BpeEncode.tableDefect]] throws. */
+  private[graft] def bpeSegmentNative(
       df: DataFrame,
       idCol: String,
       textCol: String,
       merges: DataFrame): DataFrame = {
-    val ms = merges.orderBy("merge_rank")
-      .select("lhs", "rhs").collect()
+    val ms = bpeCollect(merges)
+    graft.expressions.BpeEncode.tableDefect(ms).foreach(d => throw new IllegalArgumentException(d))
+    bpeRender(df, idCol, textCol, bpeNative(ms))
+  }
+
+  private def bpeCollect(merges: DataFrame): Seq[(String, String)] =
+    merges.orderBy("merge_rank").select("lhs", "rhs").collect()
       .map(r => (r.getString(0), r.getString(1))).toSeq
-    graft.expressions.BpeEncode.validateTable(ms)
+
+  // token array → per-word segmented renderings (`sub+sub+…`)
+  private def bpeChain(ms: Seq[(String, String)]): Column => Column =
+    ts => transform(ts, w =>
+      // ⟨s1⟩⟨s2⟩… → s1+s2+…
+      replace(replace(replace(bpeMergeAll(bpeWrapChars(w), ms), lit(BpeUS + BpeRS), lit("+")),
+        lit(BpeRS), lit("")), lit(BpeUS), lit("")))
+
+  private def bpeNative(ms: Seq[(String, String)]): Column => Column =
+    ts => graft.expressions.BpeEncode(ts, ms.map(_._1), ms.map(_._2))
+
+  private def bpeRender(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      segment: Column => Column): DataFrame = {
     val ts = graft.functions.TextFunctions.tokens(coalesce(col(textCol), lit("")))
-    df.select(col(idCol).as("id"),
-        graft.expressions.BpeEncode(ts, ms.map(_._1), ms.map(_._2)).as("__segs"))
+    df.select(col(idCol).as("id"), segment(ts).as("__segs"))
       .select(col("id"),
         size(col("__segs")).cast("long").as("n_words"),
         aggregate(col("__segs"), lit(0L),
@@ -2809,10 +2791,10 @@ object Corpus {
   /** The persisted-model kind tag for a trained BPE merge table. */
   val BpeKind = "bpe_merges"
 
-  /** Persist a trained BPE merge table ([[bpeTrain]]/[[bpeTrainBatched]]
-    * output) kind-tagged through [[graft.sources.MetaPersist.writeModel]]
-    * — the same served-model contract every other frozen artifact here
-    * has (LM counts, IVF centroids, PQ codebooks, DSIR weights): a
+  /** Persist a trained BPE merge table ([[bpeTrain]] output)
+    * kind-tagged through [[graft.sources.MetaPersist.writeModel]] — the
+    * same served-model contract every other frozen artifact here has
+    * (LM counts, IVF centroids, PQ codebooks, DSIR weights): a
     * segmenter handed the wrong artifact fails loudly at LOAD, never
     * silently segments under the wrong vocabulary (r15 verdict #4). */
   def writeBpeModel(
@@ -2847,9 +2829,17 @@ object Corpus {
     * piece), `word_idx` 1-based over the text's whitespace tokens,
     * `piece_start` the piece's 1-based char offset within the (capped)
     * word. Vocabulary scores ride a literal map (bounded table, the BPE
-    * convention); the DP is row-local, so the same call serves batch and
-    * streaming frames ([[graft.streaming.Streams.unigramSegmentStream]]
-    * pins stream ≡ batch). */
+    * convention), frozen at query start.
+    *
+    * On a batch frame the DP runs once per DISTINCT word (the Zipf
+    * shortcut of [[unigramFertility]]) and joins back onto the
+    * occurrences. On a streaming frame (`df.isStreaming`) it runs
+    * row-local per occurrence instead — no distinct, no join, so zero
+    * streaming state and append mode; the distinct+join would carry
+    * unbounded word state on a stream, while micro-batches are small
+    * enough that the per-occurrence DP is the right trade. The DP is a
+    * pure function of the word form, so both paths give bit-equal rows
+    * (stream ≡ batch pinned in StreamingSpec). */
   def unigramSegment(
       df: DataFrame,
       idCol: String,
@@ -2860,41 +2850,15 @@ object Corpus {
     val scores = vocab.select("piece", "score_micro").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val ts = graft.functions.TextFunctions.tokens(coalesce(col(textCol), lit("")))
-    // ZIPF SHORTCUT (see [[unigramFertility]]): the DP is a pure function
-    // of the word form — run it once per DISTINCT word and join the spans
-    // back onto the occurrence stream by the word key.
     val occ = df.select(col(idCol).as("id"), posexplode(ts))
       .filter(col("col") =!= "")
       .select(col("id"), (col("pos") + 1).cast("long").as("word_idx"),
         col("col").as("__w"))
-    val perWord = occ.select(col("__w")).distinct()
-      .select(col("__w"),
-        unigramViterbi(col("__w"), scores, maxPieceLen, maxWordLen).as("__sps"))
-    occ.join(perWord, Seq("__w"))
-      .select(col("id"), col("word_idx"), explode(col("__sps")).as("sp"))
-      .select(col("id"), col("word_idx"),
-        col("sp.start").cast("long").as("piece_start"), col("sp.piece").as("piece"))
-  }
-
-  /** Row-local [[unigramSegment]] (per-occurrence DP, no distinct/join) —
-    * the STREAMING form: the Zipf shortcut's distinct+join would carry
-    * unbounded word state on a stream, while micro-batches are small
-    * enough that the per-occurrence DP is the right trade. Bit-equal
-    * output (the DP is a pure function of the word form). */
-  private[graft] def unigramSegmentRowLocal(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      vocab: DataFrame,
-      maxPieceLen: Int = 3,
-      maxWordLen: Int = 12): DataFrame = {
-    val scores = vocab.select("piece", "score_micro").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val ts = graft.functions.TextFunctions.tokens(coalesce(col(textCol), lit("")))
-    df.select(col(idCol).as("id"), posexplode(ts))
-      .filter(col("col") =!= "")
-      .select(col("id"), (col("pos") + 1).cast("long").as("word_idx"),
-        explode(unigramViterbi(col("col"), scores, maxPieceLen, maxWordLen)).as("sp"))
+    val viterbi = unigramViterbi(col("__w"), scores, maxPieceLen, maxWordLen).as("__sps")
+    val spans =
+      if (df.isStreaming) occ.select(col("id"), col("word_idx"), viterbi)
+      else occ.join(occ.select(col("__w")).distinct().select(col("__w"), viterbi), Seq("__w"))
+    spans.select(col("id"), col("word_idx"), explode(col("__sps")).as("sp"))
       .select(col("id"), col("word_idx"),
         col("sp.start").cast("long").as("piece_start"), col("sp.piece").as("piece"))
   }

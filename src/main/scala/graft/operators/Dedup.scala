@@ -412,9 +412,9 @@ object Dedup {
   /** N-gram Jaccard best match via an inverted shingle index.
     *
     * Instead of materializing every within-block pair and intersecting two
-    * shingle arrays per pair (O(block² · |shingles|) — the naive reference
-    * below), explode each doc's distinct shingles and self-join on
-    * (block, shingle): only pairs that actually SHARE a shingle appear, and
+    * shingle arrays per pair (O(block² · |shingles|) — the naive
+    * reference in PipelineOpsSpec), explode each doc's distinct shingles
+    * and self-join on (block, shingle): only pairs that actually SHARE a shingle appear, and
     * `count(*)` per pair IS the intersection size. Union size follows from
     * the per-doc shingle counts (|a|+|b|−|a∩b|). Cost is Σ_shingle freq² —
     * for natural text (shingles are near-unique) orders of magnitude below
@@ -589,34 +589,6 @@ object Dedup {
         col("inter").cast("double") / col("nsh_a").cast("double"))
       .filter(col("containment") >= minContainment)
       .select(col("id_a"), col("id_b"), round(col("containment"), 6).as("containment"))
-  }
-
-  /** Naive all-pairs reference for [[ngramJaccardBestMatch]] (kept for
-    * equivalence testing; O(block²) array intersections — do not use at
-    * corpus scale). */
-  def ngramJaccardBestMatchNaive(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      blockCol: String,
-      shingleWidth: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val toks = df.select(
-      col(idCol).as("id"),
-      col(blockCol).as("block"),
-      array_distinct(shingles(col(textCol), shingleWidth)).as("sh"))
-    val a = toks.select(col("block"), col("id").as("id_a"), col("sh").as("sh_a"))
-    val b = toks.select(col("block"), col("id").as("id_b"), col("sh").as("sh_b"))
-    val pairs = a.join(b, Seq("block"))
-      .filter(col("id_a") =!= col("id_b"))
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
-    val w = Window.partitionBy(col("id_a")).orderBy(desc("jaccard"), asc("id_b"))
-    pairs
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("id_a").as("id"), col("id_b").as("best_match"), round(col("jaccard"), 6).as("jaccard"))
   }
 
   /** Embedding-cosine near-dup: random-hyperplane LSH bucketing (row-local
@@ -1512,7 +1484,9 @@ object Dedup {
 
   /** Per-window duplicate VERDICTS of a batch against a STATIC corpus span
     * store — the row-local core of incremental [[spanDedup]] and its
-    * streaming twin (`Streams.spanDedupStream`): a batch window is `dup`
+    * streaming use (called directly on a streaming frame; the
+    * coverage-union reassembly stays with the batch consumer
+    * [[spanDedupAgainst]]): a batch window is `dup`
     * iff its exact `spanLen`-token span occurs ANYWHERE in the corpus
     * (corpus precedence; within-batch repeats are not deduped here). The
     * store reduces to distinct 128-bit span hashes once; the batch side

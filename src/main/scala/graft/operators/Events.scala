@@ -668,7 +668,7 @@ object Events {
   }
 
   /** The ONE z-score parenthesization shared by [[dailyAnomalies]] and the
-    * streaming monitor ([[graft.streaming.Streams.volumeMonitorStream]]) —
+    * streaming monitor (`Streams.eachBatch` over [[scoreAgainstBaseline]]) —
     * batch and stream verdicts over the same numbers are bit-identical
     * because the IEEE op order is literally this expression in both. */
   private[graft] def zMicro(

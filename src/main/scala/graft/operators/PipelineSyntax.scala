@@ -663,31 +663,20 @@ object PipelineSyntax {
           mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
     }
 
-    /** BPE vocabulary training: the merge table keyed by rank. */
-    def bpeTrained(textCol: String, nMerges: Int): MetaFrame =
-      derived(mf, Corpus.bpeTrain(mf.df, textCol, nMerges),
-        "bpe_train", Map("text" -> textCol, "nMerges" -> nMerges),
+    /** BPE vocabulary training: the merge table keyed by rank
+      * (`batchSize` merges per round; 1 is exact sequential BPE). */
+    def bpeTrained(textCol: String, nMerges: Int, batchSize: Int = 1,
+        candidateWindow: Int = 8): MetaFrame =
+      derived(mf, Corpus.bpeTrain(mf.df, textCol, nMerges, batchSize, candidateWindow),
+        "bpe_train",
+        Map("text" -> textCol, "nMerges" -> nMerges, "batchSize" -> batchSize,
+            "candidateWindow" -> candidateWindow),
         pk = Some(Seq("merge_rank")))
 
     /** BPE segmentation against a trained merge table. */
     def bpeSegmented(merges: MetaFrame, idCol: String, textCol: String): MetaFrame =
       perDoc(Corpus.bpeSegment(mf.df, idCol, textCol, merges.df),
         "bpe_segment", idCol, Map("id" -> idCol, "text" -> textCol))
-
-    /** Batched BPE training (production merge counts): same keyed table. */
-    def bpeTrainedBatched(textCol: String, nMerges: Int, batchSize: Int = 16,
-        candidateWindow: Int = 8): MetaFrame =
-      derived(mf, Corpus.bpeTrainBatched(mf.df, textCol, nMerges, batchSize, candidateWindow),
-        "bpe_train_batched",
-        Map("text" -> textCol, "nMerges" -> nMerges, "batchSize" -> batchSize,
-            "candidateWindow" -> candidateWindow),
-        pk = Some(Seq("merge_rank")))
-
-    /** BPE segmentation through the native rank-priority loop
-      * (production-sized tables). */
-    def bpeSegmentedFast(merges: MetaFrame, idCol: String, textCol: String): MetaFrame =
-      perDoc(Corpus.bpeSegmentFast(mf.df, idCol, textCol, merges.df),
-        "bpe_segment_fast", idCol, Map("id" -> idCol, "text" -> textCol))
 
     /** Full Gopher A1 document-rule verdicts: one row per doc. */
     def gopherRuled(idCol: String, textCol: String): MetaFrame =

@@ -55,8 +55,8 @@ object Similarity {
     microCentroids(reference, labelCol, vecCol, dim, "ref_c", "n_ref")
 
   /** Score a current frame's per-label centroids against a frozen
-    * [[centroidBaseline]] — the per-micro-batch body of
-    * [[graft.streaming.Streams.centroidDriftStream]], exposed for batch
+    * [[centroidBaseline]] — the per-micro-batch body of a streaming
+    * drift monitor under [[graft.streaming.Streams.eachBatch]], exposed for batch
     * backfills too (and what [[centroidDrift]] itself runs). */
   def scoreCentroidDriftAgainst(
       current: DataFrame,

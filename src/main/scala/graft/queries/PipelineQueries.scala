@@ -244,7 +244,7 @@ object PipelineQueries {
     sb.toString
   }
 
-  /** Unrolled-SQL twin of `Corpus.bpeTrainBatched`: per round, pair counts
+  /** Unrolled-SQL twin of `Corpus.bpeTrain` at `batchSize > 1`: per round, pair counts
     * (p-r) and the ranked candidate window (cand-r) feed a RECURSIVE
     * greedy scan (g-r) that walks candidates in (count desc, lhs, rhs)
     * order accepting a pair iff none of its {lhs, rhs, lhs||rhs} symbols
@@ -298,7 +298,8 @@ object PipelineQueries {
 
   /** The 8-round train + apply-to-every-word derivation shared verbatim by
     * `text_bpe_segment` (replace chain) and `text_bpe_segment_fast`
-    * (native rank-priority loop) — one oracle, two execution strategies. */
+    * (`Corpus.bpeSegment`, which picks the native rank-priority loop for
+    * a trained table) — one oracle, two execution strategies. */
   private lazy val BpeSegmentOracleSql: String =
     ("WITH " + bpeRoundsSql(8) +
      "tok AS (SELECT doc_id, ts, unnest(range(1, len(ts)+1)) AS p FROM " +
@@ -1069,23 +1070,25 @@ object PipelineQueries {
     // DuckDB re-runs both rounds, the recursive greedy candidate scan,
     // and the recursive merge fold from raw text
     "text_bpe_train_batched" -> ((s, d) =>
-      Corpus.bpeTrainBatched(t(s, d, "documents").df, "text", nMerges = 8, batchSize = 4)
+      Corpus.bpeTrain(t(s, d, "documents").df, "text", nMerges = 8, batchSize = 4)
         .orderBy("merge_rank")),
 
-    // the trained merges applied to every word of every doc (train +
-    // segment re-derived end-to-end by the oracle, like the PQ pipelines)
+    // the trained merges applied to every word of every doc through the
+    // replace chain (train + segment re-derived end-to-end by the oracle,
+    // like the PQ pipelines)
     "text_bpe_segment" -> ((s, d) => {
       val m = Corpus.bpeTrain(t(s, d, "documents").df, "text", nMerges = 8)
-      Corpus.bpeSegment(t(s, d, "documents").df, "doc_id", "text", m).orderBy("id")
+      Corpus.bpeSegmentChain(t(s, d, "documents").df, "doc_id", "text", m).orderBy("id")
     }),
 
-    // the production-table application path (native rank-priority loop,
-    // table-size-independent) must reproduce the replace chain exactly —
-    // this query shares text_bpe_segment's oracle VERBATIM, so the two
-    // execution strategies are pinned to one DuckDB derivation
+    // the public segmenter, which runs a trained table on the native
+    // rank-priority loop (table-size-independent), must reproduce the
+    // replace chain exactly — this query shares text_bpe_segment's oracle
+    // VERBATIM, so the two execution strategies are pinned to one DuckDB
+    // derivation
     "text_bpe_segment_fast" -> ((s, d) => {
       val m = Corpus.bpeTrain(t(s, d, "documents").df, "text", nMerges = 8)
-      Corpus.bpeSegmentFast(t(s, d, "documents").df, "doc_id", "text", m).orderBy("id")
+      Corpus.bpeSegment(t(s, d, "documents").df, "doc_id", "text", m).orderBy("id")
     }),
 
     // unigram-LM (SentencePiece/Kudo 2018, hard-EM) tokenizer training:

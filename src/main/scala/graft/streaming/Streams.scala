@@ -690,368 +690,41 @@ object Streams {
       .withColumn("ppl", exp(col("avg_nll")))
   }
 
-  /** Streaming DSIR scoring: a STREAM of documents weighted against a
-    * frozen [[graft.operators.Corpus.dsirModel]] — the ingestion-time twin
-    * of the batch scorer, and literally the SAME plan: the batch
-    * implementation is already stateless and row-local (dense model as one
-    * broadcast map row, per-doc integer fold over the doc's own bucket
-    * array), so it runs on a streaming frame in append mode with zero
-    * streaming state. Batch-vs-stream row equality pinned in
-    * StreamingSpec. Selection (the Gumbel-top-k step) stays a batch/
-    * consumer concern — a global top-k over an unbounded stream is not a
-    * meaningful operator; gate on `w_micro` thresholds instead. */
-  def dsirScoreStream(
-      stream: DataFrame,
-      model: DataFrame,
-      idCol: String,
-      textCol: String,
-      buckets: Int = 4096): DataFrame =
-    graft.operators.Corpus.dsirScoreAgainst(stream, model, idCol, textCol, buckets)
-
-  /** Streaming C4 line-and-document filter — `Corpus.c4LineFilter` is one
-    * row-local projection, so the identical plan runs on a streaming frame
-    * in append mode with zero state. */
-  def c4FilterStream(
-      stream: DataFrame,
-      idCol: String,
-      textCol: String,
-      minWordsPerLine: Int = 5,
-      minLines: Int = 3,
-      sep: String = "\n"): DataFrame =
-    graft.operators.Corpus.c4LineFilter(stream, idCol, textCol, minWordsPerLine, minLines, sep)
-
-  /** Streaming BPE segmentation against a FROZEN merge table — the
-    * train-once / serve-streams split (same contract as the frozen-LM and
-    * DSIR scorers): the merges collect into the plan at query start, each
-    * micro-batch is a row-local `replace` chain, zero streaming state,
-    * append mode. Retraining means restarting the query with the new
-    * table — segmentation mid-stream must never silently change vocab. */
-  def bpeSegmentStream(
-      stream: DataFrame,
-      merges: DataFrame,
-      idCol: String,
-      textCol: String): DataFrame =
-    graft.operators.Corpus.bpeSegment(stream, idCol, textCol, merges)
-
-  /** [[bpeSegmentStream]] through the native rank-priority loop
-    * (`Corpus.bpeSegmentFast`) — the serving path for production-sized
-    * merge tables, where the replace chain's expression tree would grow
-    * with the vocabulary. Same frozen-table contract, zero streaming
-    * state, append mode; the table validation (component-monotone,
-    * unique outputs) runs once at query start. */
-  def bpeSegmentFastStream(
-      stream: DataFrame,
-      merges: DataFrame,
-      idCol: String,
-      textCol: String): DataFrame =
-    graft.operators.Corpus.bpeSegmentFast(stream, idCol, textCol, merges)
-
-  /** [[bpeSegmentFastStream]] against a PERSISTED merge table — loads the
-    * artifact through the kind-tagged model contract
-    * ([[graft.operators.Corpus.readBpeModel]]), so a path pointing at any
-    * other model kind fails loudly at query start instead of silently
-    * serving the wrong vocabulary for the stream's lifetime. */
-  def bpeSegmentFastStream(
-      stream: DataFrame,
-      spark: org.apache.spark.sql.SparkSession,
-      modelPath: String,
-      idCol: String,
-      textCol: String): DataFrame =
-    bpeSegmentFastStream(stream,
-      graft.operators.Corpus.readBpeModel(spark, modelPath), idCol, textCol)
-
-  /** Streaming unigram-LM segmentation against a FROZEN
-    * [[graft.operators.Corpus.unigramTrain]] vocabulary — the same
-    * train-once / serve-streams contract as [[bpeSegmentStream]]: scores
-    * collect into the plan at query start as a literal map, the Viterbi
-    * DP is a row-local HOF expression, zero streaming state, append mode.
-    * Stream ≡ batch is pinned in StreamingSpec. */
-  def unigramSegmentStream(
-      stream: DataFrame,
-      vocab: DataFrame,
-      idCol: String,
-      textCol: String): DataFrame =
-    // the row-local form: the batch operator's Zipf distinct+join would
-    // carry unbounded word state on a stream (bit-equal output either way)
-    graft.operators.Corpus.unigramSegmentRowLocal(stream, idCol, textCol, vocab)
-
-  /** [[unigramSegmentStream]] against a PERSISTED vocabulary — the
-    * kind-tagged load contract ([[graft.operators.Corpus.readUnigramModel]]):
-    * a wrong-kind artifact fails at query start, never serves silently. */
-  def unigramSegmentStream(
-      stream: DataFrame,
-      spark: org.apache.spark.sql.SparkSession,
-      modelPath: String,
-      idCol: String,
-      textCol: String): DataFrame =
-    unigramSegmentStream(stream,
-      graft.operators.Corpus.readUnigramModel(spark, modelPath), idCol, textCol)
-
-  /** Streaming Gopher document-quality rules — `Corpus.gopherRules` is one
-    * row-local projection of exact integer signals, so the identical plan
-    * runs on a streaming frame in append mode with zero state. */
-  def gopherStream(
-      stream: DataFrame,
-      idCol: String,
-      textCol: String): DataFrame =
-    graft.operators.Corpus.gopherRules(stream, idCol, textCol)
-
-  /** Streaming character statistics — `Corpus.charStats` is one
-    * row-local projection (HOF histogram per row), append mode, zero
-    * state. */
-  def charStatsStream(
-      stream: DataFrame,
-      idCol: String,
-      textCol: String): DataFrame =
-    graft.operators.Corpus.charStats(stream, idCol, textCol)
-
-  /** Streaming Gopher A1.1 repetition verdicts — all nine signals come
-    * from one row-local native expression (`Corpus.gopherRepetition`),
-    * so the identical plan runs append-mode with zero state. */
-  def gopherRepetitionStream(
-      stream: DataFrame,
-      idCol: String,
-      textCol: String): DataFrame =
-    graft.operators.Corpus.gopherRepetition(stream, idCol, textCol)
-
-  /** Streaming category-audited PII redaction — pure row-local regex
-    * work (`Corpus.redactPiiAudited`), append mode, zero state. The
-    * pattern set freezes at query start: masking rules changing
-    * mid-stream would make the store's redaction provenance ambiguous. */
-  def piiRedactStream(
-      stream: DataFrame,
-      idCol: String,
-      textCol: String,
-      patterns: Seq[(String, String, String)] =
-        graft.operators.Corpus.DefaultPiiPatterns): DataFrame =
-    graft.operators.Corpus.redactPiiAudited(stream, idCol, textCol, patterns)
-
-  /** Streaming incremental line dedup — per-LINE verdicts of the stream's
-    * docs against the static accepted-corpus line store
-    * (`Corpus.lineVerdicts`): a row-local explode plus one stream-static
-    * equi-join on the line hash, so it runs append-mode with zero
-    * streaming state. Emits (id, idx, line, dup); reassembly of kept
-    * lines is a per-doc AGGREGATION, which is deliberately left to the
-    * batch consumer (`Corpus.lineDedupAgainst`) — the same
-    * aggregate-stays-batch-side split as the ANN rerank stage. */
-  def lineDedupStream(
-      stream: DataFrame,
-      corpus: DataFrame,
-      idCol: String,
-      textCol: String,
-      sep: String = "\n",
-      minLineChars: Int = 0): DataFrame =
-    graft.operators.Corpus.lineVerdicts(stream, corpus, idCol, textCol, sep, minLineChars)
-
-  /** Streaming OOV scoring against a FROZEN `Corpus.vocabModel` — the
-    * model's word set is structurally bounded (≤ 1000/perMille entries),
-    * collects into the plan as a literal, and the scorer is one
-    * row-local filter: zero streaming state, append mode, identical
-    * plan to the batch scorer. */
-  def vocabScoreStream(
-      stream: DataFrame,
-      model: DataFrame,
-      idCol: String,
-      textCol: String): DataFrame =
-    graft.operators.Corpus.vocabCoverageAgainst(stream, model, idCol, textCol)
-
-  /** Streaming curriculum-bucket assignment against a FROZEN
-    * `Corpus.bucketModel` — ≤ nBuckets−1 threshold bins ride in the plan
-    * as a literal array; one row-local fold per row, zero streaming
-    * state, append mode, bit-equal to the batch scorer. */
-  def bucketScoreStream(
-      stream: DataFrame,
-      model: DataFrame,
-      idCol: String,
-      scoreCol: String,
-      binWidthMicro: Long = 1000L): DataFrame =
-    graft.operators.Corpus.scoreBucketsAgainst(stream, model, idCol, scoreCol, binWidthMicro)
-
-  /** Streaming soft quality sampling — `Corpus.softQualitySample` is one
-    * row-local projection whose coin is a pure function of (id, salt):
-    * stateless, append mode, stream ≡ batch, and verdicts are stable
-    * across micro-batch boundaries by construction. */
-  def softSampleStream(
-      stream: DataFrame,
-      idCol: String,
-      scoreCol: String,
-      tau: Double,
-      gamma: Double = 1.0,
-      saltKey: String = "softsample"): DataFrame =
-    graft.operators.Corpus.softQualitySample(stream, idCol, scoreCol, tau, gamma, saltKey)
-
-  /** Streaming blocklist filter — `Corpus.blocklistFilter` is one
-    * row-local projection over a literal term set: stateless, append
-    * mode, stream ≡ batch. */
-  def blocklistStream(
-      stream: DataFrame,
-      idCol: String,
-      textCol: String,
-      blocklist: Seq[String]): DataFrame =
-    graft.operators.Corpus.blocklistFilter(stream, idCol, textCol, blocklist)
-
-  /** Streaming incremental span dedup — per-WINDOW verdicts of the
-    * stream's docs against the static corpus span store
-    * (`Dedup.spanVerdicts`): row-local windows plus one stream-static
-    * equi-join on the span hash, append mode, zero streaming state. The
-    * coverage-union reassembly is a per-doc aggregation left to the batch
-    * consumer (`Dedup.spanDedupAgainst`), mirroring [[lineDedupStream]].
-    * Emits (id, s, dup) per stream window. */
-  def spanDedupStream(
-      stream: DataFrame,
-      corpus: DataFrame,
-      idCol: String,
-      textCol: String,
-      spanLen: Int = 20): DataFrame =
-    graft.operators.Dedup.spanVerdicts(stream, corpus, idCol, textCol, spanLen)
-
-  /** Streaming canary scan — `Corpus.canaryScan` is one row-local explode
-    * against a literal canary list: stateless, append mode, stream ≡
-    * batch. Emits only leaking (id, canary, hits) rows, so a quiet stream
-    * emits nothing. */
-  def canaryScanStream(
-      stream: DataFrame,
-      idCol: String,
-      textCol: String,
-      canaries: Seq[String]): DataFrame =
-    graft.operators.Corpus.canaryScan(stream, idCol, textCol, canaries)
-
-  /** Per-micro-batch data-quality monitoring (the streaming form of
-    * [[graft.operators.Checks.check]]): each micro-batch evaluates the
-    * SAME batch constraint suite and its verdict rows — tagged with the
-    * micro-batch id — flow to `sink`. The suite is a per-batch aggregate,
-    * so this is deliberately the foreachBatch form: verdicts are
-    * batch-scoped with ZERO cross-batch streaming state (cumulative
-    * monitoring is the consumer's fold over batch_id), the same
-    * batch-boundary contract as the exactly-once ingestion twins. */
-  def dqMonitorStream(
-      stream: DataFrame,
-      constraints: Seq[graft.operators.Checks.Constraint])(
+  /** Runs a batch operator on every micro-batch: `score` gets each
+    * micro-batch of `stream` through `foreachBatch`, its result is tagged
+    * with the micro-batch id as `batch_id` and handed to `sink`, and the
+    * query is started. This is the streaming form of any operator that
+    * aggregates, which one streaming DAG cannot run in append mode: a
+    * constraint suite (`Checks.check`), a drift scorer against a frozen
+    * baseline (`Checks.scorePsiAgainst`, `Checks.scoreChi2Against`,
+    * `Similarity.scoreCentroidDriftAgainst`,
+    * `Events.scoreAgainstBaseline`), `Checks.fdCheck`, BM25 serving
+    * (`Retrieval.bm25TopKIndexed`) or `Graph.coOccurrenceStore`.
+    *
+    * Verdicts are batch-scoped with zero cross-batch streaming state:
+    * each result describes its micro-batch alone, and cumulative
+    * monitoring is the consumer's fold over `batch_id`. A frozen baseline
+    * or index is a broadcast table rebuilt on its own cadence, never
+    * mutated here. Because `score` is the batch operator itself, a batch
+    * backfill over the same rows is bit-identical (pinned in
+    * StreamingSpec). An operator keyed on groups sees only the part of a
+    * group inside one micro-batch: `Graph.coOccurrenceStore` needs
+    * complete baskets per micro-batch (a session-window or basket-keyed
+    * upstream guarantees it), and its per-batch stores re-merge through
+    * `Graph.coOccurrenceFromStore` to exactly the one-shot operator, with
+    * the `minPairCount` floor applied at serve time. Independent rows
+    * (BM25 queries) lose nothing to batch scope.
+    *
+    * Row-local operators need no wrapper: the batch call runs unchanged
+    * on a streaming frame, in append mode with zero state (`Corpus`'s
+    * scorers against a frozen model, `bpeSegment`, `unigramSegment`,
+    * `c4LineFilter`, `gopherRules`, `charStats`, `redactPiiAudited`,
+    * `lineVerdicts`, `Dedup.spanVerdicts`, `canaryScan`, …). */
+  def eachBatch(stream: DataFrame)(score: DataFrame => DataFrame)(
       sink: DataFrame => Unit): StreamingQuery =
     stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(graft.operators.Checks.check(batch, constraints)
-          .withColumn("batch_id", lit(batchId)))
-      }
-      .start()
-
-  /** Streaming BM25 serving over a frozen
-    * [[graft.operators.Retrieval.bm25Index]] — the lexical twin of
-    * [[annTopKStream]]: a stream of (query id, query text) rows served
-    * against the kind-tagged posting index, each micro-batch's results
-    * tagged batch_id. Unlike the ANN server (row-local candidate scores →
-    * one update-mode TopKAgg), BM25 needs TWO aggregation levels — the
-    * per-(query, doc) term-score sum and then the per-query top-k — which
-    * a single streaming DAG cannot chain, so this is the `foreachBatch`
-    * shape; that is semantically EXACT here, not a compromise: queries
-    * are independent rows, so batch scope changes nothing (pinned in
-    * StreamingSpec — streamed results are bit-equal to the batch
-    * [[graft.operators.Retrieval.bm25TopKIndexed]] over the same
-    * queries). The corpus is never re-tokenized: each batch broadcasts
-    * its query terms onto the index scan. */
-  def bm25ServeStream(
-      stream: DataFrame,
-      indexPath: String,
-      queryIdCol: String,
-      queryTextCol: String,
-      k: Int = 10,
-      k1: Double = 1.2,
-      b: Double = 0.75)(
-      sink: DataFrame => Unit): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(graft.operators.Retrieval
-          .bm25TopKIndexed(batch.sparkSession, indexPath, batch,
-            queryIdCol, queryTextCol, k, k1, b)
-          .withColumn("batch_id", lit(batchId)))
-      }
-      .start()
-
-  /** Streaming embedding-drift monitor — the stream twin of
-    * [[graft.operators.Similarity.centroidDrift]]: each micro-batch's
-    * per-label centroids score against a FROZEN
-    * [[graft.operators.Similarity.centroidBaseline]] through the
-    * literally shared scorer (bit-equal to the batch backfill, pinned in
-    * StreamingSpec). Batch-scope: one O(labels) verdict table per
-    * micro-batch, tagged batch_id, zero cross-batch state — a corrupted
-    * or re-embedded shard flags in the batch that carries it. */
-  def centroidDriftStream(
-      stream: DataFrame,
-      baseline: DataFrame,
-      labelCol: String,
-      vecCol: String,
-      dim: Int)(
-      sink: DataFrame => Unit): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(graft.operators.Similarity
-          .scoreCentroidDriftAgainst(batch, baseline, labelCol, vecCol, dim)
-          .withColumn("batch_id", lit(batchId)))
-      }
-      .start()
-
-  /** Streaming PSI drift monitor — the stream twin of
-    * [[graft.operators.Checks.driftPsi]]: each micro-batch's value
-    * distribution scores against a FROZEN
-    * [[graft.operators.Checks.psiBaseline]] through the literally shared
-    * scorer, so a batch backfill over the same rows is bit-identical
-    * (pinned in StreamingSpec). Batch-scope semantics: one O(buckets)
-    * verdict table per micro-batch, tagged batch_id, zero cross-batch
-    * state. */
-  def psiMonitorStream(
-      stream: DataFrame,
-      baseline: DataFrame,
-      valueCol: String)(
-      sink: DataFrame => Unit): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(graft.operators.Checks.scorePsiAgainst(batch, baseline, valueCol)
-          .withColumn("batch_id", lit(batchId)))
-      }
-      .start()
-
-  /** Streaming chi-square drift monitor — the categorical twin of
-    * [[psiMonitorStream]]: each micro-batch's label counts score against
-    * a FROZEN [[graft.operators.Checks.chi2Baseline]] through the
-    * literally shared Pearson-term expression, so a batch backfill over
-    * the same rows is bit-identical. Batch-scope semantics: zero
-    * cross-batch state, every verdict row tagged batch_id; the baseline
-    * is a broadcast O(labels) table rebuilt on its own cadence. */
-  def chi2MonitorStream(
-      stream: DataFrame,
-      baseline: DataFrame,
-      catCol: String)(
-      sink: DataFrame => Unit): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(graft.operators.Checks.scoreChi2Against(batch, baseline, catCol)
-          .withColumn("batch_id", lit(batchId)))
-      }
-      .start()
-
-  /** Streaming volume-anomaly monitor — the stream twin of
-    * [[graft.operators.Events.dailyAnomalies]]: each micro-batch's
-    * per-(type, day) counts score against a FROZEN
-    * [[graft.operators.Events.anomalyBaseline]] through the literally
-    * shared z expression, so a batch backfill over the same numbers is
-    * bit-identical (pinned in StreamingSpec). Batch-scope semantics like
-    * [[dqMonitorStream]]: zero cross-batch state — each verdict row is
-    * tagged batch_id and describes that batch alone; the baseline is a
-    * broadcast table rebuilt on its own cadence, never mutated here. */
-  def volumeMonitorStream(
-      stream: DataFrame,
-      baseline: DataFrame,
-      tsCol: String,
-      typeCol: String,
-      minPrior: Int = 3,
-      thresholdMicro: Long = 3000000L)(
-      sink: DataFrame => Unit): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(graft.operators.Events
-          .scoreAgainstBaseline(batch, baseline, tsCol, typeCol, minPrior,
-            thresholdMicro)
-          .withColumn("batch_id", lit(batchId)))
+        sink(score(batch).withColumn("batch_id", lit(batchId)))
       }
       .start()
 
@@ -1208,25 +881,6 @@ object Streams {
       .start()
   }
 
-  /** Streaming functional-dependency monitor — the stream twin of
-    * [[graft.operators.Checks.fdCheck]]: each micro-batch's candidate
-    * verdicts (violations, g3 repair cost, confidence) computed through
-    * the LITERALLY SHARED checker and tagged batch_id. Batch-scope
-    * semantics like [[dqMonitorStream]]: zero cross-batch state — an FD
-    * that holds globally but breaks inside one shard's batch flags in
-    * exactly the batch that carries the contradiction, which is the
-    * denormalization-drift alert this exists for. */
-  def fdMonitorStream(
-      stream: DataFrame,
-      candidates: Seq[(String, String)])(
-      sink: DataFrame => Unit): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(graft.operators.Checks.fdCheck(batch, candidates)
-          .withColumn("batch_id", lit(batchId)))
-      }
-      .start()
-
   /** Streaming CDC apply — the foreachBatch twin of
     * [[graft.operators.Corpus.applyChanges]]: each micro-batch of change
     * rows compacts into the snapshot the caller's `readBase`/`write`
@@ -1251,31 +905,6 @@ object Streams {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         write(graft.operators.Corpus.applyChanges(
           readBase(), batch, idCol, opCol, tsCol), batchId)
-      }
-      .start()
-
-  /** Streaming co-occurrence store builder — the stream twin of
-    * [[graft.operators.Graph.coOccurrenceStore]]: each micro-batch emits
-    * its (pair, item, total) count-store rows through the LITERALLY
-    * SHARED batch builder, tagged batch_id; the union of everything ever
-    * emitted re-merges via `coOccurrenceFromStore` to exactly the
-    * one-shot operator over all batches (pinned in StreamingSpec). The
-    * basket-partition contract carries over: each micro-batch must hold
-    * COMPLETE baskets (a session-window or basket-keyed upstream
-    * guarantees it), because cross-batch pairs of a straddling basket are
-    * invisible to every batch's builder. minPairCount is deliberately
-    * absent here — the floor belongs at serve time over merged counts. */
-  def coOccurrenceStoreStream(
-      stream: DataFrame,
-      basketCol: String,
-      itemCol: String,
-      maxBasketSize: Int = 100)(
-      sink: DataFrame => Unit): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(graft.operators.Graph
-          .coOccurrenceStore(batch, basketCol, itemCol, maxBasketSize)
-          .withColumn("batch_id", lit(batchId)))
       }
       .start()
 

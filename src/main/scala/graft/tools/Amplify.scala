@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.LocalSession
 import graft.sources.Tables
 
 /** Scale-rehearsal data amplifier: writes an sf1-equivalent dataset derived
@@ -163,13 +164,7 @@ object Amplify {
     val copies = args.lift(1).map(_.toInt).getOrElse(10)
     val vocabMode = args.lift(2).getOrElse("bijection")
     val embedMode = args.lift(3).getOrElse("rotate")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(32)
     amplify(spark, "/root/testdata/sf0.1", outDir, copies, vocabMode, embedMode)
     spark.stop()
   }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.SparkEntry
+import graft.{LocalSession, SparkEntry}
 import graft.operators.Dedup
 import graft.sources.Tables
 
@@ -556,14 +556,7 @@ object AuditScale {
     // entries it gates are the ones whose sf1 spreads are already tight
     val runsPerEntry = args.lift(6).flatMap(_.toIntOption).getOrElse(5)
     val warmDir = "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(32)
 
     if (!Files.exists(Paths.get(bigDir)))
       Amplify.amplify(spark, smallDir, bigDir, copies = copies)

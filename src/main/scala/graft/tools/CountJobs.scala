@@ -3,9 +3,8 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-import graft.SparkEntry
+import graft.{LocalSession, SparkEntry}
 
 /** Dev-only Spark-job counter (r19): noop-writes each named declared query
   * once (after one untimed warm pass) with a listener counting jobs and
@@ -18,15 +17,7 @@ object CountJobs {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.envCores)
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
     val listener = new SparkListener {

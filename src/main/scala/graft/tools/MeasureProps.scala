@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.LocalSession
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, Retrieval, Similarity}
 import graft.sources.Tables
@@ -15,13 +15,7 @@ import graft.sources.Tables
 object MeasureProps {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(16)
 
     val docs = Tables.load(spark, sfDir, "documents")
     val emb = Tables.load(spark, sfDir, "embeddings")
@@ -361,8 +355,8 @@ object MeasureProps {
       spark.stop(); return
     }
 
-    // ---- BPE at production merge counts: sequential (one driver
-    // round-trip per merge) vs batched (one per batchSize merges) wall
+    // ---- BPE at production merge counts: sequential (batchSize 1, one
+    // driver round-trip per merge) vs batched (one per batchSize merges) wall
     // time, plus the honesty metric — how much of the exact greedy
     // sequential table the batched variant reproduces (the stale-count
     // approximation's measured cost).
@@ -379,7 +373,7 @@ object MeasureProps {
         (c: Int, a: Int, r: Int) => { buf += ((c, a, r)); () }
       val st16 = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int)]
       val (batT, batSecs) = time(
-        Corpus.bpeTrainBatched(docs, "text", n, batchSize = 16, onRound = statsHook(st16))
+        Corpus.bpeTrain(docs, "text", n, batchSize = 16, onRound = statsHook(st16))
           .collect())
       val (seqT, seqSecs) = time(Corpus.bpeTrain(docs, "text", n).collect())
       val seqSet = seqT.map(r => (r.getString(1), r.getString(2))).toSet
@@ -395,7 +389,7 @@ object MeasureProps {
       for (b <- Seq(4, 16, 64)) {
         val stb = if (b == 16) st16 else {
           val buf = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int)]
-          Corpus.bpeTrainBatched(docs, "text", n, batchSize = b, onRound = statsHook(buf))
+          Corpus.bpeTrain(docs, "text", n, batchSize = b, onRound = statsHook(buf))
             .collect(): Unit
           buf
         }
@@ -405,19 +399,20 @@ object MeasureProps {
           f"considered=$considered%d accepted=$acc%d rejected=$rej%d " +
           f"reject-rate=${if (considered == 0) 0.0 else rej.toDouble / considered}%.3f")
       }
-      // application side: the nMerges-deep replace chain vs the native
-      // rank-priority loop, same trained table, checksums asserted equal
+      // application side: the two paths bpeSegment picks between — the
+      // nMerges-deep replace chain vs the native rank-priority loop —
+      // on the exact (batchSize 1) table, checksums asserted equal
       import spark.implicits._
-      val mDf = batT.map(r => (r.getInt(0), r.getString(1), r.getString(2),
+      val mDf = seqT.map(r => (r.getInt(0), r.getString(1), r.getString(2),
         r.getString(3), r.getLong(4))).toSeq
         .toDF("merge_rank", "lhs", "rhs", "merged", "pair_count").cache()
       mDf.count(): Unit
       def segSum(df: org.apache.spark.sql.DataFrame): Long =
         df.agg(sum(length(col("segmented"))).cast("long")).head().getLong(0)
-      val (chainSum, chainT) = time(segSum(Corpus.bpeSegment(docs, "doc_id", "text", mDf)))
-      val (fastSum, fastT) = time(segSum(Corpus.bpeSegmentFast(docs, "doc_id", "text", mDf)))
+      val (chainSum, chainT) = time(segSum(Corpus.bpeSegmentChain(docs, "doc_id", "text", mDf)))
+      val (fastSum, fastT) = time(segSum(Corpus.bpeSegmentNative(docs, "doc_id", "text", mDf)))
       assert(chainSum == fastSum, s"segment checksum mismatch: $chainSum vs $fastSum")
-      println(f"[measure] $sfDir bpe segment @${batT.length} merges: " +
+      println(f"[measure] $sfDir bpe segment @${seqT.length} merges: " +
         f"replace-chain=$chainT%.1fs native-loop=$fastT%.1fs " +
         f"(${chainT / fastT}%.1fx) checksum=$chainSum")
       spark.stop(); return

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.SparkEntry
+import graft.{LocalSession, SparkEntry}
 import graft.sources.Tables
 
 /** Dev tool (r18 optimization round): dump `.explain("formatted")` output for
@@ -116,15 +116,7 @@ object PlanDump {
     val outDir = args(1)
     val suffix = args(2)
     val names = args(3).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(LocalSession.envCores, logLevel = "ERROR")
     Files.createDirectories(Paths.get(outDir))
     val bench = benchShapes(spark, sfDir)
     names.foreach { name =>

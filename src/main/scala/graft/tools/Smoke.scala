@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 import graft._
 import graft.sources.Tables
@@ -10,13 +9,7 @@ import graft.sources.Tables
   * `sbt "runMain graft.tools.Smoke"`. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(8)
 
     val entryRows = SparkEntry.entry(spark).collect()
     println(s"[smoke] entry rows=${entryRows.length}")

@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{LocalSession, SparkEntry}
 
 /** Dev-only single-query timer: noop-writes each named declared query N
   * times against a testdata dir and prints per-run wall seconds — for
@@ -14,15 +12,7 @@ object TimeQuery {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val runs = args.lift(2).flatMap(_.toIntOption).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.envCores)
     // optional extra session confs: k=v,k=v in arg 3
     args.lift(3).foreach(_.split(",").foreach { kv =>
       val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)

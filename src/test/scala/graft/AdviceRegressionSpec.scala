@@ -900,7 +900,7 @@ class AdviceRegressionSpec extends AnyFunSuite {
   }
 
   // ---- ADVICE r15 low: scoreChi2Against with an EMPTY current side
-  // (possible for a chi2MonitorStream micro-batch) gave eCur = 0 and a
+  // (possible for a streaming micro-batch) gave eCur = 0 and a
   // 0/0 = NaN Pearson term; round(NaN).cast(long) silently yielded 0
   // under default casting and THROWS under ANSI mode
 

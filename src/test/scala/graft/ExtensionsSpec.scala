@@ -191,13 +191,13 @@ class ExtensionsSpec extends AnyFunSuite {
   test("bpeSegmentFast: native rank-priority loop == replace chain on real corpus; bad tables rejected") {
     import graft.operators.Corpus
     val docs = graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "documents")
-    // both trainers' tables, applied both ways, must agree row for row
+    // both trainer modes' tables, applied both ways, must agree row for row
     for (merges <- Seq(
         Corpus.bpeTrain(docs, "text", nMerges = 8),
-        Corpus.bpeTrainBatched(docs, "text", nMerges = 8, batchSize = 4))) {
+        Corpus.bpeTrain(docs, "text", nMerges = 8, batchSize = 4))) {
       val m = merges.cache()
-      val slow = Corpus.bpeSegment(docs, "doc_id", "text", m).orderBy("id").collect()
-      val fast = Corpus.bpeSegmentFast(docs, "doc_id", "text", m).orderBy("id").collect()
+      val slow = Corpus.bpeSegmentChain(docs, "doc_id", "text", m).orderBy("id").collect()
+      val fast = Corpus.bpeSegmentNative(docs, "doc_id", "text", m).orderBy("id").collect()
       assert(slow.length == fast.length && slow.length > 0)
       slow.zip(fast).foreach { case (a, b) => assert(a == b) }
       m.unpersist(): Unit
@@ -205,13 +205,14 @@ class ExtensionsSpec extends AnyFunSuite {
     // repeat semantics survive the loop: "bbbb bbb" under (b,b) → bb+bb bb+b
     import spark.implicits._
     val m2 = Seq((0, "b", "b", "bb", 1L)).toDF("merge_rank", "lhs", "rhs", "merged", "pair_count")
-    val seg2 = Corpus.bpeSegmentFast(Seq((1L, "bbbb bbb")).toDF("doc_id", "text"),
+    val seg2 = Corpus.bpeSegmentNative(Seq((1L, "bbbb bbb")).toDF("doc_id", "text"),
       "doc_id", "text", m2).collect().head
     assert(seg2.getAs[String]("segmented") == "bb+bb bb+b")
-    // non-monotone component (rhs 'xy' is no earlier rank's output) → loud reject
+    // non-monotone component (rhs 'xy' is no earlier rank's output) → the
+    // native path rejects loudly
     val bad1 = Seq((0, "s", "xy", "sxy", 1L)).toDF("merge_rank", "lhs", "rhs", "merged", "pair_count")
     val e1 = intercept[IllegalArgumentException] {
-      Corpus.bpeSegmentFast(Seq((1L, "s x y")).toDF("doc_id", "text"), "doc_id", "text", bad1)
+      Corpus.bpeSegmentNative(Seq((1L, "s x y")).toDF("doc_id", "text"), "doc_id", "text", bad1)
     }
     assert(e1.getMessage.contains("component-monotone"))
     // duplicate merged output ((a,bc) and (ab,c) both → 'abc') → loud reject
@@ -220,14 +221,79 @@ class ExtensionsSpec extends AnyFunSuite {
       (2, "a", "bc", "abc", 5L), (3, "ab", "c", "abc", 4L))
       .toDF("merge_rank", "lhs", "rhs", "merged", "pair_count")
     val e2 = intercept[IllegalArgumentException] {
-      Corpus.bpeSegmentFast(Seq((1L, "abc")).toDF("doc_id", "text"), "doc_id", "text", bad2)
+      Corpus.bpeSegmentNative(Seq((1L, "abc")).toDF("doc_id", "text"), "doc_id", "text", bad2)
     }
     assert(e2.getMessage.contains("duplicate merged output"))
+    // the public segmenter takes the chain for both bad tables instead
+    assert(Corpus.bpeSegment(Seq((1L, "s x y")).toDF("doc_id", "text"), "doc_id", "text", bad1)
+      .collect().head.getAs[String]("segmented") == "s x y")
+    assert(Corpus.bpeSegment(Seq((1L, "abc")).toDF("doc_id", "text"), "doc_id", "text", bad2)
+      .collect().head.getAs[String]("segmented") == "abc")
     // NULL text behaves as empty (the curation-wide NULL contract)
-    val segNull = Corpus.bpeSegmentFast(
+    val segNull = Corpus.bpeSegmentNative(
       Seq((1L, null.asInstanceOf[String])).toDF("doc_id", "text"), "doc_id", "text", m2)
       .collect().head
     assert(segNull.getAs[String]("segmented") == "")
+  }
+
+  test("bpeSegment on empty, all-NULL and non-ASCII input: native path, equal to the chain") {
+    import graft.operators.Corpus
+    import spark.implicits._
+    // a trained table over accented, non-BMP (U+1D11E, a surrogate pair
+    // in UTF-16) and CJK words, so merges involve multi-byte symbols
+    val merges = Corpus.bpeTrain(
+      Seq((0L, "naïve naïve ééé éé \uD834\uDD1E\uD834\uDD1E \uD834\uDD1E\uD834\uDD1E 日本 日本語"))
+        .toDF("doc_id", "text"), "text", nMerges = 7).cache()
+    // the 7th and last merge is the non-BMP pair
+    assert(merges.orderBy("merge_rank").collect().last.getAs[String]("merged") ==
+      "\uD834\uDD1E\uD834\uDD1E")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("id").collect().toSeq
+    val inputs = Seq(
+      "empty" -> Seq.empty[(Long, String)].toDF("doc_id", "text"),
+      "all-NULL" -> Seq((1L, null: String), (2L, null: String)).toDF("doc_id", "text"),
+      "non-ASCII" -> Seq((1L, "naïve éé"), (2L, "\uD834\uDD1E\uD834\uDD1E\uD834\uDD1E a\uD834\uDD1Eb"),
+        (3L, "日本語 日本"), (4L, " lead")).toDF("doc_id", "text"))
+    inputs.foreach { case (name, df) =>
+      val seg = Corpus.bpeSegment(df, "doc_id", "text", merges)
+      assert(seg.queryExecution.analyzed.toString.contains("bpe_encode"),
+        s"$name: a trained table runs the native loop")
+      assert(rows(seg) == rows(Corpus.bpeSegmentChain(df, "doc_id", "text", merges)), name)
+    }
+    assert(Corpus.bpeSegment(inputs(0)._2, "doc_id", "text", merges).count() == 0L)
+    // NULL text segments as empty: one empty word, one empty subword
+    assert(rows(Corpus.bpeSegment(inputs(1)._2, "doc_id", "text", merges))
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))) ==
+      Seq((1L, 1L, 1L, ""), (2L, 1L, 1L, "")))
+    // the non-BMP pair merged as one code-point symbol pair, never split
+    // into surrogate halves
+    val nonBmp = rows(Corpus.bpeSegment(inputs(2)._2, "doc_id", "text", merges))
+      .map(r => r.getLong(0) -> r.getString(3)).toMap
+    assert(nonBmp(2L) == "\uD834\uDD1E\uD834\uDD1E+\uD834\uDD1E a+\uD834\uDD1E+b", nonBmp(2L))
+    merges.unpersist(): Unit
+  }
+
+  test("bpeSegment takes the replace chain for a trained-shape table with a duplicate merged output") {
+    import graft.operators.Corpus
+    import spark.implicits._
+    // component-monotone, but 'abc' is produced twice (ranks 2 and 4).
+    // On "abcd" the chain merges (b,c), then (a,bc) at rank 4 — after
+    // rank 3 (abc,d) has passed — so the hand-computed segmentation is
+    // abc+d. The rank-priority loop would re-merge (abc,d) into "abcd".
+    val dupOut = Seq(
+      (0, "b", "c", "bc", 9L), (1, "a", "b", "ab", 8L), (2, "ab", "c", "abc", 7L),
+      (3, "abc", "d", "abcd", 6L), (4, "a", "bc", "abc", 5L))
+      .toDF("merge_rank", "lhs", "rhs", "merged", "pair_count")
+    val docs = Seq((1L, "abcd abc xabcd")).toDF("doc_id", "text")
+    val seg = Corpus.bpeSegment(docs, "doc_id", "text", dupOut)
+    assert(!seg.queryExecution.analyzed.toString.contains("bpe_encode"))
+    val row = seg.collect().head
+    assert(row.getAs[String]("segmented") == "abc+d abc x+abc+d")
+    assert(row.getAs[Long]("n_subwords") == 6L)
+    assert(seg.collect().toSeq == Corpus.bpeSegmentChain(docs, "doc_id", "text", dupOut).collect().toSeq)
+    val e = intercept[IllegalArgumentException] {
+      Corpus.bpeSegmentNative(docs, "doc_id", "text", dupOut)
+    }
+    assert(e.getMessage.contains("duplicate merged output 'abc' at rank 4"), e.getMessage)
   }
 
   test("char_class_stats from SQL matches the operator's signals") {

@@ -216,6 +216,33 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(out(4L)._2 < 0.2, "unrelated doc has low best jaccard")
   }
 
+  /** Naive all-pairs reference for `Dedup.ngramJaccardBestMatch`:
+    * O(block²) array intersections, for equivalence testing only. */
+  private def ngramJaccardBestMatchNaive(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      blockCol: String,
+      shingleWidth: Int = 3): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val toks = df.select(
+      col(idCol).as("id"),
+      col(blockCol).as("block"),
+      array_distinct(TextFunctions.shingles(col(textCol), shingleWidth)).as("sh"))
+    val a = toks.select(col("block"), col("id").as("id_a"), col("sh").as("sh_a"))
+    val b = toks.select(col("block"), col("id").as("id_b"), col("sh").as("sh_b"))
+    val pairs = a.join(b, Seq("block"))
+      .filter(col("id_a") =!= col("id_b"))
+      .withColumn("jaccard",
+        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
+          size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
+    val w = Window.partitionBy(col("id_a")).orderBy(desc("jaccard"), asc("id_b"))
+    pairs
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .select(col("id_a").as("id"), col("id_b").as("best_match"), round(col("jaccard"), 6).as("jaccard"))
+  }
+
   test("inverted-index jaccard equals the naive all-pairs version, incl. zero-overlap docs") {
     import spark.implicits._
     val withLonely = docs.union(Seq(
@@ -224,7 +251,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("best_match"), r.getAs[Double]("jaccard"))).toSet
     val fast = rows(Dedup.ngramJaccardBestMatch(withLonely, "doc_id", "text", "block"))
-    val naive = rows(Dedup.ngramJaccardBestMatchNaive(withLonely, "doc_id", "text", "block"))
+    val naive = rows(ngramJaccardBestMatchNaive(withLonely, "doc_id", "text", "block"))
     assert(fast == naive)
     assert(fast.exists { case (id, bm, j) => id == 6L && bm == 1L && j == 0.0 },
       "zero-overlap doc falls back to smallest other id at jaccard 0")
@@ -1230,7 +1257,6 @@ class PipelineOpsSpec extends AnyFunSuite {
 
   test("tokenizer model persistence: kind-tagged round-trip segments bit-identically, wrong kind refused") {
     import spark.implicits._
-    import graft.streaming.Streams
     val docs = Seq(
       (1L, "banana banana bandana"),
       (2L, "banana band and sand")).toDF("doc_id", "text")
@@ -1240,9 +1266,9 @@ class PipelineOpsSpec extends AnyFunSuite {
     val merges = Corpus.bpeTrain(docs, "text", nMerges = 3)
     Corpus.writeBpeModel(merges, s"$base/bpe", Map("nMerges" -> 3))
     val bpeLoaded = Corpus.readBpeModel(spark, s"$base/bpe")
-    val live = Corpus.bpeSegmentFast(serve, "doc_id", "text", merges)
+    val live = Corpus.bpeSegment(serve, "doc_id", "text", merges)
       .collect().map(_.toSeq).toSet
-    val reloaded = Corpus.bpeSegmentFast(serve, "doc_id", "text", bpeLoaded)
+    val reloaded = Corpus.bpeSegment(serve, "doc_id", "text", bpeLoaded)
       .collect().map(_.toSeq).toSet
     assert(live == reloaded, "reloaded merge table must segment bit-identically")
     // unigram: same contract
@@ -1255,21 +1281,20 @@ class PipelineOpsSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSet
     assert(uniLive == uniReloaded, "reloaded vocabulary must segment bit-identically")
     // wrong-kind loads fail LOUDLY at load, not silently downstream —
-    // including through the streaming path-taking overloads
+    // including a load feeding the segmenter
     val e1 = intercept[IllegalArgumentException] {
       Corpus.readBpeModel(spark, s"$base/uni")
     }
     assert(e1.getMessage.contains("bpe_merges"), e1.getMessage)
     val e2 = intercept[IllegalArgumentException] {
-      Streams.unigramSegmentStream(serve, spark, s"$base/bpe", "doc_id", "text")
+      Corpus.unigramSegment(serve, "doc_id", "text", Corpus.readUnigramModel(spark, s"$base/bpe"))
     }
     assert(e2.getMessage.contains("unigram_vocab"), e2.getMessage)
-    // the path-taking streaming overloads serve the loaded artifact
-    // (row-local plans — the same call works on batch frames)
-    val viaPath = Streams.bpeSegmentFastStream(serve, spark, s"$base/bpe", "doc_id", "text")
+    // the loaded artifacts serve through the segmenters
+    val viaPath = Corpus.bpeSegment(serve, "doc_id", "text", Corpus.readBpeModel(spark, s"$base/bpe"))
       .collect().map(_.toSeq).toSet
     assert(viaPath == live)
-    assert(Streams.unigramSegmentStream(serve, spark, s"$base/uni", "doc_id", "text")
+    assert(Corpus.unigramSegment(serve, "doc_id", "text", Corpus.readUnigramModel(spark, s"$base/uni"))
       .count() > 0)
   }
 
@@ -2024,9 +2049,9 @@ class PipelineOpsSpec extends AnyFunSuite {
     val seg = mf.bpeSegmented(merges, "doc_id", "text")
     assert(seg.primaryKey.contains(Seq("id")))
     val mergesB = MetaFrame(langed, Map.empty[String, Any])
-      .bpeTrainedBatched("text", nMerges = 2, batchSize = 2)
+      .bpeTrained("text", nMerges = 2, batchSize = 2)
     assert(mergesB.primaryKey.contains(Seq("merge_rank")))
-    val segF = mf.bpeSegmentedFast(mergesB, "doc_id", "text")
+    val segF = mf.bpeSegmented(mergesB, "doc_id", "text")
     assert(segF.primaryKey.contains(Seq("id")))
     val gr = mf.gopherRuled("doc_id", "text")
     assert(gr.primaryKey.contains(Seq("id")))
@@ -2270,9 +2295,14 @@ class PipelineOpsSpec extends AnyFunSuite {
     // hardest fixture — must survive the batched path at batchSize = 1
     val docs = Seq((1L, "abab abab abab aab aab merger merger mer er er er")).toDF("doc_id", "text")
     val seqMerges = Corpus.bpeTrain(docs, "text", nMerges = 6).collect().map(_.toSeq)
-    val b1Merges = Corpus.bpeTrainBatched(docs, "text", nMerges = 6, batchSize = 1)
+    val b1Merges = Corpus.bpeTrain(docs, "text", nMerges = 6, batchSize = 1)
       .collect().map(_.toSeq)
     assert(b1Merges.toSeq == seqMerges.toSeq)
+    // the exact greedy sequence, derived by hand: 8 (a,b) and 8 (e,r)
+    // occurrences tie and break on lhs; merged symbols are reused
+    assert(seqMerges.toSeq == Seq(
+      Seq(0, "a", "b", "ab", 8L), Seq(1, "e", "r", "er", 8L), Seq(2, "ab", "ab", "abab", 3L),
+      Seq(3, "m", "er", "mer", 3L), Seq(4, "a", "ab", "aab", 2L), Seq(5, "g", "er", "ger", 2L)))
 
     // conflict skip: pair counts (a,b)=10 > (b,c)=9 > (c,d)=8 > (x,y)=7;
     // one round at batchSize=3 accepts (a,b), rejects (b,c) on the shared
@@ -2280,7 +2310,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     val conflict = Seq((1L,
       (Seq.fill(10)("ab") ++ Seq.fill(9)("bc") ++ Seq.fill(8)("cd") ++ Seq.fill(7)("xy"))
         .mkString(" "))).toDF("doc_id", "text")
-    val batched = Corpus.bpeTrainBatched(conflict, "text", nMerges = 6, batchSize = 3)
+    val batched = Corpus.bpeTrain(conflict, "text", nMerges = 6, batchSize = 3)
       .collect().map(r => (r.getAs[Int]("merge_rank"), r.getAs[String]("lhs"),
         r.getAs[String]("rhs"), r.getAs[String]("merged"), r.getAs[Long]("pair_count")))
     assert(batched(0) == ((0, "a", "b", "ab", 10L)))
@@ -2291,12 +2321,12 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(batched(3) == ((3, "b", "c", "bc", 9L)))
     assert(batched.length == 4)
     // determinism: the table is a pure function of the corpus
-    val again = Corpus.bpeTrainBatched(conflict, "text", nMerges = 6, batchSize = 3)
+    val again = Corpus.bpeTrain(conflict, "text", nMerges = 6, batchSize = 3)
       .collect().map(_.toSeq)
     assert(again.toSeq == batched.map(t => Seq(t._1, t._2, t._3, t._4, t._5)).toSeq)
     // the batched table feeds bpeSegment unchanged
     val seg = Corpus.bpeSegment(Seq((9L, "abcd xy")).toDF("doc_id", "text"), "doc_id", "text",
-      Corpus.bpeTrainBatched(conflict, "text", nMerges = 6, batchSize = 3)).collect().head
+      Corpus.bpeTrain(conflict, "text", nMerges = 6, batchSize = 3)).collect().head
     assert(seg.getAs[String]("segmented") == "ab+cd xy")
   }
 

@@ -360,7 +360,7 @@ class PlanQualitySpec extends AnyFunSuite {
       "redactPiiAudited" -> Corpus.redactPiiAudited(docs, "doc_id", "text"),
       "gopherRepetition" -> Corpus.gopherRepetition(docs, "doc_id", "text"),
       "charStats" -> Corpus.charStats(docs, "doc_id", "text"),
-      "bpeSegmentFast" -> Corpus.bpeSegmentFast(docs, "doc_id", "text", merges))
+      "bpeSegment" -> Corpus.bpeSegment(docs, "doc_id", "text", merges))
     plans.foreach { case (name, df) =>
       df.collect(): Unit
       val plan = df.queryExecution.executedPlan.toString

@@ -303,7 +303,7 @@ class StreamingSpec extends AnyFunSuite {
       (12L, null.asInstanceOf[String]),     // NULL text → (0, 0)
       (13L, "delta"))                       // single token, no bigrams
     val ms = MemoryStream[(Long, String)](spark)
-    val out = Streams.dsirScoreStream(
+    val out = graft.operators.Corpus.dsirScoreAgainst(
       ms.toDF().toDF("doc_id", "text"), model, "doc_id", "text", buckets = 256)
     ms.addData(batchRows.take(3): _*)
     // APPEND mode works — the scorer carries no streaming aggregate
@@ -333,13 +333,13 @@ class StreamingSpec extends AnyFunSuite {
     val merges = graft.operators.Corpus.bpeTrain(trainDocs, "text", 2)
     val ms = MemoryStream[(Long, String)](spark)
     val sdf = ms.toDF().toDF("doc_id", "text")
-    val c4 = Streams.c4FilterStream(sdf, "doc_id", "text")
-    val bpe = Streams.bpeSegmentStream(sdf, merges, "doc_id", "text")
-    val bpeFast = Streams.bpeSegmentFastStream(sdf, merges, "doc_id", "text")
-    val gopher = Streams.gopherStream(sdf, "doc_id", "text")
-    val pii = Streams.piiRedactStream(sdf, "doc_id", "text")
-    val grep = Streams.gopherRepetitionStream(sdf, "doc_id", "text")
-    val cst = Streams.charStatsStream(sdf, "doc_id", "text")
+    val c4 = graft.operators.Corpus.c4LineFilter(sdf, "doc_id", "text")
+    val bpe = graft.operators.Corpus.bpeSegmentChain(sdf, "doc_id", "text", merges)
+    val bpeFast = graft.operators.Corpus.bpeSegment(sdf, "doc_id", "text", merges)
+    val gopher = graft.operators.Corpus.gopherRules(sdf, "doc_id", "text")
+    val pii = graft.operators.Corpus.redactPiiAudited(sdf, "doc_id", "text")
+    val grep = graft.operators.Corpus.gopherRepetition(sdf, "doc_id", "text")
+    val cst = graft.operators.Corpus.charStats(sdf, "doc_id", "text")
     ms.addData(rows: _*)
     val q1 = Streams.runToMemory(c4, "c4_out", OutputMode.Append())
     val q2 = Streams.runToMemory(bpe, "bpe_out", OutputMode.Append())
@@ -375,16 +375,23 @@ class StreamingSpec extends AnyFunSuite {
       vocabSize = 30, seedSize = 40)
     val rows = Seq((10L, "the cat on a log"), (11L, "unseen wordz"))
     val ms = MemoryStream[(Long, String)](spark)
-    val out = Streams.unigramSegmentStream(
-      ms.toDF().toDF("doc_id", "text"), vocab, "doc_id", "text")
+    val out = graft.operators.Corpus.unigramSegment(
+      ms.toDF().toDF("doc_id", "text"), "doc_id", "text", vocab)
+    val batchOut = graft.operators.Corpus.unigramSegment(
+      rows.toDF("doc_id", "text"), "doc_id", "text", vocab)
+    // on a stream the segmenter is row-local: no Aggregate or Join in the
+    // plan (the batch call's per-distinct-word join would carry state)
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    def statefulNodes(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collect { case a: Aggregate => a; case j: Join => j }
+    assert(statefulNodes(out).isEmpty, out.queryExecution.analyzed.toString)
+    assert(statefulNodes(batchOut).nonEmpty)
     ms.addData(rows: _*)
     val q = Streams.runToMemory(out, "uni_out", OutputMode.Append())
     try {
       q.processAllAvailable()
       def norm(rs: Array[org.apache.spark.sql.Row]) = rs.map(_.toString).sorted.toSeq
-      assert(norm(spark.table("uni_out").collect()) ==
-        norm(graft.operators.Corpus.unigramSegment(
-          rows.toDF("doc_id", "text"), "doc_id", "text", vocab).collect()))
+      assert(norm(spark.table("uni_out").collect()) == norm(batchOut.collect()))
       assert(spark.table("uni_out").count() > 0)
     } finally q.stop()
   }
@@ -396,7 +403,7 @@ class StreamingSpec extends AnyFunSuite {
       (10L, "boilerplate header\nfresh new content"),
       (11L, "totally novel doc\nboilerplate header"))
     val ms = MemoryStream[(Long, String)](spark)
-    val out = Streams.lineDedupStream(ms.toDF().toDF("doc_id", "text"), corpus, "doc_id", "text")
+    val out = graft.operators.Corpus.lineVerdicts(ms.toDF().toDF("doc_id", "text"), corpus, "doc_id", "text")
     ms.addData(batchRows: _*)
     val q = Streams.runToMemory(out, "ld_out", OutputMode.Append())
     try {
@@ -419,8 +426,8 @@ class StreamingSpec extends AnyFunSuite {
     val rows = Seq((10L, "alpha beta unknown"), (11L, null.asInstanceOf[String]))
     val ms = MemoryStream[(Long, String)](spark)
     val sdf = ms.toDF().toDF("doc_id", "text")
-    val vs = Streams.vocabScoreStream(sdf, model, "doc_id", "text")
-    val bl = Streams.blocklistStream(sdf, "doc_id", "text", Seq("unknown"))
+    val vs = graft.operators.Corpus.vocabCoverageAgainst(sdf, model, "doc_id", "text")
+    val bl = graft.operators.Corpus.blocklistFilter(sdf, "doc_id", "text", Seq("unknown"))
     ms.addData(rows: _*)
     val q1 = Streams.runToMemory(vs, "vs_out", OutputMode.Append())
     val q2 = Streams.runToMemory(bl, "bl_out", OutputMode.Append())
@@ -444,7 +451,7 @@ class StreamingSpec extends AnyFunSuite {
     val train = (1 to 100).map(i => (i.toLong, i / 1000.0)).toDF("doc_id", "s")
     val model = graft.operators.Corpus.bucketModel(train, "doc_id", "s", 10, 1L)
     val ms = MemoryStream[(Long, Double)](spark)
-    val out = Streams.bucketScoreStream(ms.toDF().toDF("doc_id", "s"), model, "doc_id", "s", 1L)
+    val out = graft.operators.Corpus.scoreBucketsAgainst(ms.toDF().toDF("doc_id", "s"), model, "doc_id", "s", 1L)
     ms.addData((10L, 0.005), (11L, 0.095), (12L, 9.9))
     val q = Streams.runToMemory(out, "bs_out", OutputMode.Append())
     try {
@@ -458,7 +465,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val rows = (1L to 40L).map(i => (i, i / 40.0))
     val ms = MemoryStream[(Long, Double)](spark)
-    val out = Streams.softSampleStream(ms.toDF().toDF("doc_id", "s"), "doc_id", "s", tau = 0.5)
+    val out = graft.operators.Corpus.softQualitySample(ms.toDF().toDF("doc_id", "s"), "doc_id", "s", tau = 0.5)
     ms.addData(rows.take(20): _*)
     val q = Streams.runToMemory(out, "soft_out", OutputMode.Append())
     try {
@@ -478,7 +485,7 @@ class StreamingSpec extends AnyFunSuite {
     val dup = "d1 d2 d3 d4 d5"
     val corpus = Seq((1L, s"old text $dup more old words here")).toDF("doc_id", "text")
     val ms = MemoryStream[(Long, String)](spark)
-    val out = Streams.spanDedupStream(ms.toDF().toDF("doc_id", "text"), corpus,
+    val out = graft.operators.Dedup.spanVerdicts(ms.toDF().toDF("doc_id", "text"), corpus,
       "doc_id", "text", spanLen = 4)
     ms.addData((10L, s"n1 $dup n2 n3"))
     val q = Streams.runToMemory(out, "sd_out", OutputMode.Append())
@@ -1183,8 +1190,8 @@ class StreamingSpec extends AnyFunSuite {
     import graft.operators.Checks
     val ms = MemoryStream[Event](spark)
     val buf = scala.collection.mutable.ArrayBuffer[(Long, String, Long, Long, Boolean)]()
-    val q = Streams.dqMonitorStream(ms.toDF(),
-        Seq(Checks.NotNull("event_type"), Checks.RowCountBetween(1L, 2L))) { verdicts =>
+    val q = Streams.eachBatch(ms.toDF())(
+        Checks.check(_, Seq(Checks.NotNull("event_type"), Checks.RowCountBetween(1L, 2L)))) { verdicts =>
       buf.synchronized {
         buf ++= verdicts.collect().map(r => (r.getAs[Long]("batch_id"),
           r.getString(0), r.getLong(3), r.getLong(4), r.getBoolean(5)))
@@ -1218,8 +1225,8 @@ class StreamingSpec extends AnyFunSuite {
     Retrieval.bm25Index(corpus, "doc_id", "text", dir)
     val ms = MemoryStream[(Long, String)](spark)
     val buf = scala.collection.mutable.ArrayBuffer[(Long, Seq[Any])]()
-    val q = Streams.bm25ServeStream(ms.toDF().toDF("qid", "qtext"), dir,
-        "qid", "qtext", k = 3) { res =>
+    val q = Streams.eachBatch(ms.toDF().toDF("qid", "qtext"))(b =>
+        Retrieval.bm25TopKIndexed(b.sparkSession, dir, b, "qid", "qtext", k = 3)) { res =>
       buf.synchronized {
         buf ++= res.collect().map(r => (r.getAs[Long]("batch_id"), r.toSeq.dropRight(1)))
       }
@@ -1355,8 +1362,8 @@ class StreamingSpec extends AnyFunSuite {
     val baseline = Similarity.centroidBaseline(ref, "label", "embedding", dim = 2)
     val ms = MemoryStream[(Int, Seq[Float])](spark)
     val buf = scala.collection.mutable.ArrayBuffer[(Long, Int, Option[Long])]()
-    val q = Streams.centroidDriftStream(ms.toDF().toDF("label", "embedding"),
-        baseline, "label", "embedding", dim = 2) { v =>
+    val q = Streams.eachBatch(ms.toDF().toDF("label", "embedding"))(
+        Similarity.scoreCentroidDriftAgainst(_, baseline, "label", "embedding", dim = 2)) { v =>
       buf.synchronized {
         buf ++= v.collect().map(r => (r.getAs[Long]("batch_id"), r.getInt(0),
           Option(r.get(4)).map(_.asInstanceOf[Long])))
@@ -1410,8 +1417,8 @@ class StreamingSpec extends AnyFunSuite {
     import graft.operators.Checks
     val ms = MemoryStream[(Long, String)](spark)
     val buf = scala.collection.mutable.ArrayBuffer[(Long, Boolean, Long)]()
-    val q = Streams.fdMonitorStream(
-        ms.toDF().toDF("k", "v"), Seq(("k", "v"))) { verdicts =>
+    val q = Streams.eachBatch(ms.toDF().toDF("k", "v"))(
+        Checks.fdCheck(_, Seq(("k", "v")))) { verdicts =>
       val r = verdicts.select("batch_id", "holds", "g3_remove_rows").head()
       buf.synchronized { buf += ((r.getLong(0), r.getBoolean(1), r.getLong(2))) }
     }
@@ -1432,8 +1439,8 @@ class StreamingSpec extends AnyFunSuite {
     import graft.operators.Graph
     val ms = MemoryStream[(Long, String)](spark)
     val buf = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
-    val q = Streams.coOccurrenceStoreStream(
-        ms.toDF().toDF("basket", "item"), "basket", "item") { store =>
+    val q = Streams.eachBatch(ms.toDF().toDF("basket", "item"))(
+        Graph.coOccurrenceStore(_, "basket", "item")) { store =>
       val rows = store.collect()
       buf.synchronized { buf ++= rows }
     }
@@ -1467,7 +1474,7 @@ class StreamingSpec extends AnyFunSuite {
     val baseline = Checks.psiBaseline(ref, "v", buckets = 5)
     val ms = MemoryStream[Double](spark)
     val buf = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
-    val q = Streams.psiMonitorStream(ms.toDF().toDF("v"), baseline, "v") { verdicts =>
+    val q = Streams.eachBatch(ms.toDF().toDF("v"))(Checks.scorePsiAgainst(_, baseline, "v")) { verdicts =>
       val total = verdicts.agg(org.apache.spark.sql.functions.sum("psi_micro"))
         .collect()(0).getLong(0)
       val bid = verdicts.select("batch_id").head().getLong(0)
@@ -1497,8 +1504,8 @@ class StreamingSpec extends AnyFunSuite {
     val baseline = Checks.chi2Baseline(ref, "cat", maxCategories = 3)
     val ms = MemoryStream[String](spark)
     val buf = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
-    val q = graft.streaming.Streams.chi2MonitorStream(
-        ms.toDF().toDF("cat"), baseline, "cat") { verdicts =>
+    val q = graft.streaming.Streams.eachBatch(ms.toDF().toDF("cat"))(
+        Checks.scoreChi2Against(_, baseline, "cat")) { verdicts =>
       val total = verdicts.agg(org.apache.spark.sql.functions.sum("chi2_term_micro"))
         .collect()(0).getLong(0)
       val bid = verdicts.select("batch_id").head().getLong(0)
@@ -1538,7 +1545,8 @@ class StreamingSpec extends AnyFunSuite {
     val ms = MemoryStream[Streams.Event](spark)
     val buf = scala.collection.mutable.ArrayBuffer[
       (Long, String, Long, Long, Option[Long], Boolean)]()
-    val q = Streams.volumeMonitorStream(ms.toDF(), baseline, "ts", "event_type") { v =>
+    val q = Streams.eachBatch(ms.toDF())(
+        Events.scoreAgainstBaseline(_, baseline, "ts", "event_type")) { v =>
       buf.synchronized {
         buf ++= v.collect().map(r => (r.getAs[Long]("batch_id"), r.getString(0),
           r.getLong(2), r.getLong(3), Option(r.get(4)).map(_.asInstanceOf[Long]),
@@ -1566,7 +1574,7 @@ class StreamingSpec extends AnyFunSuite {
   test("canary scan is stateless on a stream: append-mode hits match batch") {
     import spark.implicits._
     val ms = MemoryStream[(Long, String)](spark)
-    val scanned = Streams.canaryScanStream(
+    val scanned = graft.operators.Corpus.canaryScan(
       ms.toDF().toDF("doc_id", "text"), "doc_id", "text", Seq("CANARY-A1"))
     val q = Streams.runToMemory(scanned, "canary_out", OutputMode.Append())
     try {
