@@ -46,7 +46,7 @@ object Verify {
       case Array(s, o, f)          =>
         val set = f.split(",").toSet; (s, o, (n: String) => set.contains(n))
     }
-    // lenient env parsing (the TimeQuery convention): a malformed value
+    // lenient env parsing (`LocalSession.envCores`): a malformed value
     // degrades to the default instead of crashing the whole dump before
     // oracle_sql.json exists — re-creating the zeroed-round failure this
     // rewrite prevents would be the worst possible way to fail

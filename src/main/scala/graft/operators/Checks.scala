@@ -349,60 +349,31 @@ object Checks {
     * drift). Same add-one-smoothed shares and micro-quantized
     * `(q − p)·ln(q/p)` terms as the numeric monitor.
     *
-    * Scale shape: one reference category reduce; the top-category table
-    * is TakeOrderedAndProject-bounded and broadcasts onto both row scans
+    * Scale shape: the [[driftChi2Categorical]] one — one reference
+    * category reduce; the top-category table is
+    * TakeOrderedAndProject-bounded and broadcasts onto both row scans
     * as a label join; two label-key reduces; O(labels) everything after.
     * Values named like the sentinels would collide with them — documented
     * limitation, not guarded.
     *
     * Returns one row per domain label: (category, ref_cnt, cur_cnt,
-    * psi_micro), ordered by category.
+    * psi_micro), ordered by caller.
     *
-    * EAGER (r18 pin): the O(maxCategories) domain is materialized with a
-    * Spark job at CONSTRUCTION time (executor-local blocks,
+    * EAGER (r18 pins): the O(labels) [[chi2Baseline]] is materialized
+    * with Spark jobs at CONSTRUCTION time (executor-local blocks,
     * ContextCleaner-reclaimed). */
   def driftPsiCategorical(
       reference: DataFrame,
       current: DataFrame,
       catCol: String,
       maxCategories: Int = 20): DataFrame = {
-    require(maxCategories >= 1, "maxCategories must be at least 1")
-    val s = reference.sparkSession
-    import s.implicits._
-    // r18: pin the O(maxCategories) domain — it feeds BOTH labeled scans,
-    // the grid, and (pre-r18) a grid count, and unpinned each consumer
-    // re-ran the reference top-k reduce from scratch
-    val top = Materialize.pin(reference.filter(col(catCol).isNotNull)
-      .groupBy(col(catCol).cast("string").as("category"))
-      .agg(count(lit(1)).as("__cnt"))
-      .orderBy(col("__cnt").desc, col("category").asc)
-      .limit(maxCategories)
-      .select("category"))
-    def labeled(df: DataFrame, as: String) = df
-      .select(when(col(catCol).isNull, lit("__null__"))
-        .otherwise(col(catCol).cast("string")).as("raw"))
-      .join(broadcast(top.select(col("category").as("raw"),
-        lit(1).as("__t"))), Seq("raw"), "left")
-      .select(when(col("raw") === "__null__", lit("__null__"))
-        .when(col("__t").isNotNull, col("raw"))
-        .otherwise(lit("__other__")).as("category"))
-      .groupBy("category").agg(count(lit(1)).as(as))
-    val grid = top.union(Seq("__other__", "__null__").toDF("category"))
-    // r18: every row of either side lands on exactly one grid label
-    // (__null__/__other__ included), so the side totals are the exact
-    // sums of the label counts and the label count is the joined frame's
-    // own row count — whole-frame windows over O(labels) rows replace
-    // what were two more full input scans plus a grid re-derivation
-    val wAll = org.apache.spark.sql.expressions.Window.partitionBy()
-    val joined = grid
-      .join(labeled(reference, "ref_cnt"), Seq("category"), "left")
-      .join(labeled(current, "cur_cnt"), Seq("category"), "left")
-      .withColumn("ref_cnt", coalesce(col("ref_cnt"), lit(0L)))
-      .withColumn("cur_cnt", coalesce(col("cur_cnt"), lit(0L)))
-      .withColumn("__rn", sum(col("ref_cnt")).over(wAll))
-      .withColumn("__cn", sum(col("cur_cnt")).over(wAll))
-      .withColumn("__nl", count(lit(1)).over(wAll))
-    val p = (col("ref_cnt") + 1).cast("double") / (col("__rn") + col("__nl"))
+    // every row of either side lands on exactly one domain label, so the
+    // label count is the joined frame's own row count
+    val joined = labelAgainst(current,
+        Materialize.pin(chi2Baseline(reference, catCol, maxCategories)), catCol)
+      .withColumn("__nl",
+        count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy()))
+    val p = (col("ref_cnt") + 1).cast("double") / (col("ref_n") + col("__nl"))
     val q = (col("cur_cnt") + 1).cast("double") / (col("__cn") + col("__nl"))
     joined.select(col("category"), col("ref_cnt"), col("cur_cnt"),
       round(((q - p) * log(q / p)) * lit(1e6)).cast("long").as("psi_micro"))
@@ -470,9 +441,9 @@ object Checks {
     require(maxCategories >= 1, "maxCategories must be at least 1")
     val s = reference.sparkSession
     import s.implicits._
-    // r18: pinned domain + window-sum total, the driftPsiCategorical fixes
-    // (grid and labelOntoDomain both read `top`; ref_n is the exact sum of
-    // the label counts since every row maps onto exactly one grid label)
+    // r18: pinned domain + window-sum total (grid and labelOntoDomain
+    // both read `top`; ref_n is the exact sum of the label counts since
+    // every row maps onto exactly one grid label)
     val top = Materialize.pin(reference.filter(col(catCol).isNotNull)
       .groupBy(col(catCol).cast("string").as("category"))
       .agg(count(lit(1)).as("__cnt"))
@@ -488,16 +459,14 @@ object Checks {
           .partitionBy()))
   }
 
-  /** Score a current frame against a frozen [[chi2Baseline]] — the
-    * per-micro-batch body of the streaming monitor, exposed for batch
-    * backfills too (and what [[driftChi2Categorical]] itself runs). */
-  def scoreChi2Against(
-      current: DataFrame,
-      baseline: DataFrame,
-      catCol: String): DataFrame = {
+  /** A frozen [[chi2Baseline]] joined with the current frame's per-label
+    * counts (`cur_cnt`, 0 for an absent label) and their total (`__cn`) —
+    * the scoring side of [[scoreChi2Against]] and [[driftPsiCategorical]]. */
+  private def labelAgainst(
+      current: DataFrame, baseline: DataFrame, catCol: String): DataFrame = {
     val top = baseline.select("category")
       .filter(col("category") =!= "__other__" && col("category") =!= "__null__")
-    val joined = baseline
+    baseline
       .join(labelOntoDomain(current, catCol, top, "cur_cnt"), Seq("category"), "left")
       .withColumn("cur_cnt", coalesce(col("cur_cnt"), lit(0L)))
       // r18: exact current total from the label counts — one current scan
@@ -505,6 +474,16 @@ object Checks {
       .withColumn("__cn",
         sum(col("cur_cnt")).over(org.apache.spark.sql.expressions.Window
           .partitionBy()))
+  }
+
+  /** Score a current frame against a frozen [[chi2Baseline]] — the
+    * per-micro-batch body of the streaming monitor, exposed for batch
+    * backfills too (and what [[driftChi2Categorical]] itself runs). */
+  def scoreChi2Against(
+      current: DataFrame,
+      baseline: DataFrame,
+      catCol: String): DataFrame = {
+    val joined = labelAgainst(current, baseline, catCol)
     val rowTotal = (col("ref_cnt") + col("cur_cnt")).cast("double")
     val n = (col("ref_n") + col("__cn")).cast("double")
     val eRef = rowTotal * col("ref_n") / n

@@ -243,6 +243,15 @@ object Corpus {
     * shingles) at any scale. Shingles travel as rolled 64-bit hashes
     * (same representation as the dedup family).
     *
+    * On a streaming corpus (`corpus.isStreaming`) the plan is row-local
+    * and STATELESS (append mode, zero streaming state): the benchmark's
+    * distinct shingles collapse to ONE static row, every stream row
+    * crossJoins it and counts its overlap with `array_intersect` — the
+    * join-then-regroup shape would need an update-mode aggregate with
+    * O(stream ids) state. A stream scores per row, so NULL and duplicate
+    * ids are not grouped into one pseudo-doc; with unique ids both plans
+    * give the same rows (pinned in StreamingSpec).
+    *
     * Returns one row per corpus doc: (id, n_shared_shingles, contaminated).
     */
   def decontaminate(
@@ -255,6 +264,16 @@ object Corpus {
     require(minShared >= 1, "minShared must be at least 1")
     val shingleSet = shingleSetCol(textCol, shingleWidth)
     val benchShingles = benchmark.select(explode(shingleSet).as("s")).distinct()
+    if (corpus.isStreaming) {
+      // NULL text null-propagates through the intersect; coalesce restores
+      // the batch plan's (0, false)
+      val nShared = coalesce(
+        size(array_intersect(col("sh"), col("bench_sh"))).cast("long"), lit(0L))
+      return corpus.select(col(idCol).as("id"), shingleSet.as("sh"))
+        .crossJoin(benchShingles.agg(collect_set(col("s")).as("bench_sh")))
+        .select(col("id"), nShared.as("n_shared_shingles"),
+          (nShared >= minShared).as("contaminated"))
+    }
     val corpusShingles = corpus.select(col(idCol).as("id"), explode(shingleSet).as("s"))
     val shared = corpusShingles
       .join(broadcast(benchShingles), Seq("s"))
@@ -469,11 +488,17 @@ object Corpus {
       df: DataFrame,
       idCol: String,
       textCol: String,
-      n: Int = 2): DataFrame = {
+      n: Int = 2): DataFrame =
+    repetitionStatsOf(df, col(idCol), graft.functions.TextFunctions.tokens(col(textCol)), n)
+
+  /** [[repetitionStats]]' algebra over any (id, token array) pair of
+    * columns of `df` — the public operator passes the text's tokens, the
+    * quality gates the `__ts` column of their pinned [[gateTokens]]. */
+  private def repetitionStatsOf(df: DataFrame, id: Column, toks: Column, n: Int): DataFrame = {
     require(n >= 1, "n must be at least 1")
     val grams = graft.expressions.MinHashSignature.shingleHashes(
-      transform(graft.functions.TextFunctions.tokens(col(textCol)), t => xxhash64(t)), n)
-    val perGram = df.select(col(idCol).as("id"), explode(grams).as("h"))
+      transform(toks, t => xxhash64(t)), n)
+    val perGram = df.select(id.as("id"), explode(grams).as("h"))
       .groupBy("id", "h").agg(count(lit(1)).as("c"))
     val perDoc = perGram.groupBy("id").agg(
         sum(col("c")).as("n_ngrams"),
@@ -482,7 +507,7 @@ object Corpus {
       .withColumnRenamed("id", "__rep_id")
     // null-safe re-attach, same shape as [[decontaminate]]: NULL-id rows
     // group as one pseudo-doc and must find their stats again
-    df.select(col(idCol).as("id"))
+    df.select(id.as("id"))
       .join(perDoc, col("id") <=> col("__rep_id"), "left")
       .select(
         col("id"),
@@ -712,12 +737,16 @@ object Corpus {
       addK: Double = 1.0): DataFrame =
     lmScoreAgainst(df, lmCounts(df, textCol), idCol, textCol, addK)
 
-  /** Unigram count table (term, c) — the trained LM [[lmScoreAgainst]] and
-    * [[graft.streaming.Streams.lmScoreStream]] score against. One fully
-    * map-side-combinable reduce; persist it once per corpus snapshot and
-    * every later batch scores against the frozen model. */
+  /** Unigram count table (term, c) — the trained LM [[lmScoreAgainst]]
+    * scores against. One fully map-side-combinable reduce; persist it once
+    * per corpus snapshot and every later batch scores against the frozen
+    * model. */
   def lmCounts(df: DataFrame, textCol: String): DataFrame =
-    df.select(explode(graft.functions.TextFunctions.tokens(col(textCol))).as("term"))
+    lmCountsOf(df, graft.functions.TextFunctions.tokens(col(textCol)))
+
+  /** [[lmCounts]]' reduce over any token-array column of `df`. */
+  private def lmCountsOf(df: DataFrame, toks: Column): DataFrame =
+    df.select(explode(toks).as("term"))
       .filter(col("term") =!= "")
       .groupBy("term").agg(count(lit(1)).as("c"))
 
@@ -728,20 +757,55 @@ object Corpus {
     * smoothing keeps the probability finite, which is exactly why
     * [[lmScore]] requires addK > 0. Self-scoring (`lmScoreAgainst(df,
     * lmCounts(df, ...), ...)`) has no OOV and reduces to the one-shot
-    * [[lmScore]]. Determinism and scale notes: see [[lmScore]]. */
+    * [[lmScore]]. Determinism and scale notes: see [[lmScore]].
+    *
+    * On a streaming batch (`batch.isStreaming`) the plan is row-local and
+    * STATELESS (append mode): the count table collapses to ONE static row
+    * (term→count map + totals; a frozen quality LM's vocabulary is model
+    * metadata, bounded like a benchmark, not corpus data) and each row
+    * folds its own tokens through the same micro-nat arithmetic — the
+    * join-then-regroup shape would need an update-mode aggregate with
+    * O(stream ids) state. A stream scores per row, so NULL and duplicate
+    * ids are not grouped into one pseudo-doc; with unique ids both plans
+    * give bit-equal rows (pinned in StreamingSpec). */
   def lmScoreAgainst(
       batch: DataFrame,
       counts: DataFrame,
       idCol: String,
       textCol: String,
-      addK: Double = 1.0): DataFrame = {
+      addK: Double = 1.0): DataFrame =
+    lmScoreOf(batch, col(idCol), graft.functions.TextFunctions.tokens(col(textCol)),
+      counts, addK)
+
+  /** [[lmScoreAgainst]]' algebra over any (id, token array) pair of
+    * columns of `df` — the public operator passes the text's tokens, the
+    * quality gates the `__ts` column of their pinned [[gateTokens]]. */
+  private def lmScoreOf(
+      df: DataFrame, id: Column, toks: Column, counts: DataFrame, addK: Double): DataFrame = {
     require(addK > 0, "addK must be positive (unsmoothed counts divide by zero on OOV)")
-    val toks = batch
-      .select(col(idCol).as("id"),
-        explode(graft.functions.TextFunctions.tokens(col(textCol))).as("term"))
+    if (df.isStreaming) {
+      val lmRow = counts.agg(
+        map_from_entries(collect_list(struct(col("term"), col("c")))).as("lm"),
+        sum(col("c")).as("t"), count(lit(1)).as("v"))
+      return df.select(id.as("id"), filter(toks, t => t =!= "").as("__toks"))
+        .crossJoin(lmRow)
+        .select(col("id"),
+          coalesce(size(col("__toks")).cast("long"), lit(0L)).as("n_tokens"),
+          aggregate(
+            transform(col("__toks"), tk =>
+              round(log((coalesce(element_at(col("lm"), tk), lit(0L)) + lit(addK)) /
+                (col("t") + lit(addK) * col("v"))) * lit(1e6)).cast("long")),
+            lit(0L), (acc, x) => acc + x).as("__sum"))
+        .select(col("id"), col("n_tokens"),
+          when(col("n_tokens") > 0, -col("__sum") / (lit(1e6) * col("n_tokens")))
+            .as("avg_nll"))
+        .withColumn("ppl", exp(col("avg_nll")))
+    }
+    val terms = df
+      .select(id.as("id"), explode(toks).as("term"))
       .filter(col("term") =!= "")
     val tot = counts.agg(sum(col("c")).as("t"), count(lit(1)).as("v"))
-    val perDoc = toks
+    val perDoc = terms
       .join(counts, Seq("term"), "left") // OOV keeps the row, c = 0
       .crossJoin(broadcast(tot))
       .select(col("id"),
@@ -753,7 +817,7 @@ object Corpus {
       .withColumnRenamed("id", "__lm_id")
     // null-safe re-attach, same shape as [[decontaminate]]: every input row
     // comes back, token-less docs with zero counts and NULL scores
-    batch.select(col(idCol).as("id"))
+    df.select(id.as("id"))
       .join(perDoc, col("id") <=> col("__lm_id"), "left")
       .select(
         col("id"),
@@ -864,12 +928,11 @@ object Corpus {
     // r19 gate fusion (§1.2/§2.3): the LM scorer, the LM trainer, and the
     // repetition signals each tokenized the text independently — three
     // regex passes over the corpus. One pinned (id, tokens) projection now
-    // feeds all three; every aggregation downstream is byte-identical
-    // algebra over the same arrays, so the verdicts cannot move
+    // feeds all three through the public operators' own algebra, so the
+    // verdicts cannot move
     val toks = gateTokens(df, idCol, textCol)
-    val counts = lmCountsFromTokens(toks)
-    gateVerdict(lmScoreFromTokens(toks, counts, addK),
-      repetitionStatsFromTokens(toks, ngram),
+    gateVerdict(lmScoreOf(toks, col("id"), col("__ts"), lmCountsOf(toks, col("__ts")), addK),
+      repetitionStatsOf(toks, col("id"), col("__ts"), ngram),
       minTokens, maxTokens, maxTopNgramFrac, maxDupNgramFrac, maxAvgNll)
   }
 
@@ -901,8 +964,8 @@ object Corpus {
     // r19 gate fusion: one tokenize pass shared by the LM scorer and the
     // repetition signals (was two) — see [[qualityGate]] / [[gateTokens]]
     val toks = gateTokens(df, idCol, textCol)
-    gateVerdict(lmScoreFromTokens(toks, counts, addK),
-      repetitionStatsFromTokens(toks, ngram),
+    gateVerdict(lmScoreOf(toks, col("id"), col("__ts"), counts, addK),
+      repetitionStatsOf(toks, col("id"), col("__ts"), ngram),
       minTokens, maxTokens, maxTopNgramFrac, maxDupNgramFrac, maxAvgNll)
   }
 
@@ -916,73 +979,6 @@ object Corpus {
     val t = df.select(col(idCol).as("id"),
       graft.functions.TextFunctions.tokens(col(textCol)).as("__ts"))
     if (t.isStreaming) t else Materialize.pin(t)
-  }
-
-  /** [[lmCounts]] over a pre-tokenized (id, __ts) frame — identical
-    * algebra from the explode down. */
-  private def lmCountsFromTokens(toks: DataFrame): DataFrame =
-    toks.select(explode(col("__ts")).as("term"))
-      .filter(col("term") =!= "")
-      .groupBy("term").agg(count(lit(1)).as("c"))
-
-  /** [[lmScoreAgainst]] over a pre-tokenized (id, __ts) frame — identical
-    * algebra from the explode down (same joins, same micro-nat
-    * quantization, same null-safe re-attach), so scores are bit-identical
-    * to the unfused operator's. */
-  private def lmScoreFromTokens(
-      toks: DataFrame, counts: DataFrame, addK: Double): DataFrame = {
-    require(addK > 0, "addK must be positive (unsmoothed counts divide by zero on OOV)")
-    val terms = toks
-      .select(col("id"), explode(col("__ts")).as("term"))
-      .filter(col("term") =!= "")
-    val tot = counts.agg(sum(col("c")).as("t"), count(lit(1)).as("v"))
-    val perDoc = terms
-      .join(counts, Seq("term"), "left") // OOV keeps the row, c = 0
-      .crossJoin(broadcast(tot))
-      .select(col("id"),
-        round(log((coalesce(col("c"), lit(0L)) + lit(addK)) /
-            (col("t") + lit(addK) * col("v"))) * lit(1e6))
-          .cast("long").as("micro_lp"))
-      .groupBy("id")
-      .agg(count(lit(1)).as("n_tokens"), sum(col("micro_lp")).as("sum_micro_lp"))
-      .withColumnRenamed("id", "__lm_id")
-    toks.select(col("id"))
-      .join(perDoc, col("id") <=> col("__lm_id"), "left")
-      .select(
-        col("id"),
-        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
-        (-col("sum_micro_lp") / (lit(1e6) * col("n_tokens"))).as("avg_nll"))
-      .withColumn("ppl", exp(col("avg_nll")))
-  }
-
-  /** [[repetitionStats]] over a pre-tokenized (id, __ts) frame — identical
-    * algebra from the gram hashing down (same per-(doc, gram) reduce, same
-    * null-safe re-attach), so the fractions are bit-identical to the
-    * unfused operator's. */
-  private def repetitionStatsFromTokens(toks: DataFrame, n: Int): DataFrame = {
-    require(n >= 1, "n must be at least 1")
-    val grams = graft.expressions.MinHashSignature.shingleHashes(
-      transform(col("__ts"), t => xxhash64(t)), n)
-    val perGram = toks.select(col("id"), explode(grams).as("h"))
-      .groupBy("id", "h").agg(count(lit(1)).as("c"))
-    val perDoc = perGram.groupBy("id").agg(
-        sum(col("c")).as("n_ngrams"),
-        max(col("c")).as("top_ngram_count"),
-        coalesce(sum(when(col("c") > 1, col("c"))), lit(0L)).as("dup_ngram_count"))
-      .withColumnRenamed("id", "__rep_id")
-    toks.select(col("id"))
-      .join(perDoc, col("id") <=> col("__rep_id"), "left")
-      .select(
-        col("id"),
-        coalesce(col("n_ngrams"), lit(0L)).as("n_ngrams"),
-        coalesce(col("top_ngram_count"), lit(0L)).as("top_ngram_count"),
-        coalesce(col("dup_ngram_count"), lit(0L)).as("dup_ngram_count"),
-        when(col("n_ngrams") > 0,
-          col("top_ngram_count").cast("double") / col("n_ngrams").cast("double"))
-          .otherwise(0.0).as("top_ngram_frac"),
-        when(col("n_ngrams") > 0,
-          col("dup_ngram_count").cast("double") / col("n_ngrams").cast("double"))
-          .otherwise(0.0).as("dup_ngram_frac"))
   }
 
   /** The shared verdict assembly of [[qualityGate]]/[[qualityGateAgainst]]:

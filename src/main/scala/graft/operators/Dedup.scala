@@ -905,9 +905,10 @@ object Dedup {
     * per vector are pairwise distinct (base XOR distinct non-zero masks)
     * and the index holds one row per corpus vector, so each (batch,
     * corpus) pair joins at most once. That is what makes this SAME plan
-    * legal under Structured Streaming append mode
-    * ([[graft.streaming.Streams.embeddingNearDupMultiProbeStream]]
-    * delegates here verbatim): no streaming dedup state, no aggregate.
+    * legal under Structured Streaming append mode with a streaming
+    * `batch`: no streaming dedup state, no aggregate. `probes = 1` is the
+    * single-table serving path (`lshBucket` collisions, same planes and
+    * signs); StreamingSpec pins stream ≡ batch across micro-batches.
     *
     * Returns (id, matched_id, cos, nbits, n_probes) — one row per
     * confirmed (batch, corpus) pair. */
@@ -1181,11 +1182,7 @@ object Dedup {
     // Storage bound: O(corpus × dim) executor-local bytes (the pin carries
     // the full vector column for the pair stage), ContextCleaner-reclaimed
     // — the deliberate §5 trade of one materialization vs three scorings.
-    val assigned = Materialize.pin(corpus.crossJoin(broadcast(cents))
-      .select(col(idCol), col(vecCol),
-        explode(Similarity.topCellsLocal(col(vecCol), 1)).as("__best"))
-      .select(col(idCol).as("id"), col(vecCol).as("__vec"),
-        col("__best.cell").as("cell"), round(col("__best.cos"), 6).as("cent_cos")))
+    val assigned = Materialize.pin(assignCells(corpus, idCol, vecCol, cents, "id", "__vec"))
     // sub-cell split of oversized cells: m = ceil(n / maxCellSize) salted
     // sub-cells (m = 1 — the expected case — reproduces the uncapped plan
     // bit-for-bit: every row lands in sub-cell 0)
@@ -1273,35 +1270,16 @@ object Dedup {
       maxCellStore: Long = DefaultMaxCellSize): DataFrame = {
     require(maxCellStore >= 1, "maxCellStore must be at least 1")
     val cents = Similarity.centroidArray(centroids, centroidIdCol, centroidVecCol)
-    def assign(df: DataFrame, idOut: String, vecOut: String): DataFrame =
-      df.crossJoin(broadcast(cents))
-        .select(col(idCol), col(vecCol),
-          explode(Similarity.topCellsLocal(col(vecCol), 1)).as("__best"))
-        .select(col(idCol).as(idOut), col(vecCol).as(vecOut),
-          col("__best.cell").as("cell"), round(col("__best.cos"), 6).as("cent_cos"))
     // r18: both assignments pinned (the [[semanticDedup]] fix) — the
     // store side feeds the cell-count reduce plus both cap branches, the
     // batch side the match join plus the final re-attach; unpinned each
     // consumer re-ran the scan + centroid scoring. Storage bound:
     // O((batch + store) × dim) executor-local bytes (full vector columns),
     // ContextCleaner-reclaimed (see [[Materialize.pin]]).
-    val b = Materialize.pin(assign(batch, "id", "__bv"))
-    val store0 = Materialize.pin(assign(corpus, "corpus_id", "__cv"))
-    val store =
-      if (maxCellStore == Exact) store0.select("cell", "corpus_id", "__cv")
-      else {
-        // count-gated cap: only oversized cells pay the ranking window
-        val counts = store0.groupBy("cell").agg(count(lit(1)).as("__n"))
-        val withN = store0.join(broadcast(counts), Seq("cell"))
-        val small = withN.filter(col("__n") <= maxCellStore)
-          .select("cell", "corpus_id", "__cv")
-        val w = Window.partitionBy(col("cell")).orderBy(desc("cent_cos"), asc("corpus_id"))
-        val capped = withN.filter(col("__n") > maxCellStore)
-          .withColumn("__rk", row_number().over(w))
-          .filter(col("__rk") <= maxCellStore)
-          .select("cell", "corpus_id", "__cv")
-        small.union(capped)
-      }
+    val b = Materialize.pin(assignCells(batch, idCol, vecCol, cents, "id", "__bv"))
+    val store = cappedCellStore(
+      Materialize.pin(assignCells(corpus, idCol, vecCol, cents, "corpus_id", "__cv")),
+      maxCellStore)
     val matched = b.select(col("id").as("__bid"), col("cell"), col("__bv"))
       .join(store, Seq("cell"))
       .withColumn("__cos", cosine(col("__bv"), col("__cv")))
@@ -1313,6 +1291,40 @@ object Dedup {
       .join(matched, col("id") === col("__bid"), "left")
       .select(col("id"), col("cell"), col("cent_cos"), col("matched_id"), col("best_cos"))
   }
+
+  /** Row-local best-cell assignment against a broadcast 1-row centroid
+    * array ([[Similarity.centroidArray]]): (idOut, vecOut, cell,
+    * cent_cos), cent_cos rounded to 6 places. Shared by [[semanticDedup]],
+    * [[semanticDedupIncremental]] and `Streams.semanticDedupStream`. */
+  private[graft] def assignCells(
+      df: DataFrame, idCol: String, vecCol: String, cents: DataFrame,
+      idOut: String, vecOut: String): DataFrame =
+    df.crossJoin(broadcast(cents))
+      .select(col(idCol), col(vecCol),
+        explode(Similarity.topCellsLocal(col(vecCol), 1)).as("__best"))
+      .select(col(idCol).as(idOut), col(vecCol).as(vecOut),
+        col("__best.cell").as("cell"), round(col("__best.cos"), 6).as("cent_cos"))
+
+  /** The `maxCellStore` cap of [[semanticDedupIncremental]] over an
+    * [[assignCells]] store (corpus_id, __cv, cell, cent_cos): cells over
+    * the cap keep their `maxCellStore` most central members (cent_cos
+    * descending, id tiebreak). Count-gated — only oversized cells pay the
+    * ranking window. Returns (cell, corpus_id, __cv); the caller decides
+    * whether the store is pinned. */
+  private[graft] def cappedCellStore(store: DataFrame, maxCellStore: Long): DataFrame =
+    if (maxCellStore == Exact) store.select("cell", "corpus_id", "__cv")
+    else {
+      val counts = store.groupBy("cell").agg(count(lit(1)).as("__n"))
+      val withN = store.join(broadcast(counts), Seq("cell"))
+      val small = withN.filter(col("__n") <= maxCellStore)
+        .select("cell", "corpus_id", "__cv")
+      val w = Window.partitionBy(col("cell")).orderBy(desc("cent_cos"), asc("corpus_id"))
+      val capped = withN.filter(col("__n") > maxCellStore)
+        .withColumn("__rk", row_number().over(w))
+        .filter(col("__rk") <= maxCellStore)
+        .select("cell", "corpus_id", "__cv")
+      small.union(capped)
+    }
 
   /** D4 data selection (Tirumala et al., "D4: Improving LLM Pretraining
     * via Document De-Duplication and Diversification", arXiv:2308.12284):

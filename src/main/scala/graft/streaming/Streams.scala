@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DecimalType, StructType}
@@ -337,86 +337,6 @@ object Streams {
       }
       .start()
 
-  /** Streaming embedding near-dedup: a STREAM of new vectors matched
-    * against a STATIC corpus — the embedding-modality twin of
-    * [[incrementalNearDupStream]], and completely STATELESS (append mode):
-    * both sides bucket by the row-local random-hyperplane sign pattern
-    * (`VectorFunctions.lshBucket`, the batch `Dedup.embeddingNearDup`
-    * representation), candidates are stream-bucket × corpus-bucket
-    * collisions ONLY (one stream-static equi-join on an integer key — the
-    * corpus never self-joins, no cross join), and each candidate confirms
-    * with a row-local exact cosine, so emitted matches are structurally
-    * exact. One row per confirmed (stream, corpus) pair — a pair-grained
-    * append needs no aggregate state, where a best-match-per-doc contract
-    * would force an UPDATE-mode aggregate.
-    *
-    * Recall model is the batch operator's, verbatim: a true near-dup is
-    * missed iff the pair splits buckets (probability (1−θ/π)^nbits-ish per
-    * hyperplane miss) — raise recall with fewer bits, with
-    * [[embeddingNearDupMultiProbeStream]] (the T-probe dial over the same
-    * O(n) index — the recall fix for this path), or run the batch sweep
-    * periodically. `nbits` defaults to the batch operator's
-    * occupancy-aware auto-sizing (`Dedup.recommendedNbits`) over the
-    * STATIC corpus count — the corpus is the side whose growth fills the
-    * buckets, and one `count()` of a batch frame at query build is legal
-    * where counting the stream would not be. Emitted pairs are pinned
-    * bit-equal to the batch operator's straddling pairs in StreamingSpec.
-    * At scale, persist the bucketed corpus projection so each micro-batch
-    * reuses it instead of re-bucketing the corpus. */
-  def embeddingNearDupStream(
-      stream: DataFrame,
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      dim: Int,
-      threshold: Double = 0.95,
-      nbits: Int = graft.operators.Dedup.AutoNbits): DataFrame = {
-    import graft.functions.VectorFunctions.{cosine, lshBucket}
-    import graft.operators.Dedup
-    val bits =
-      if (nbits == Dedup.AutoNbits) Dedup.recommendedNbits(corpus.count()) else nbits
-    val s = stream.select(col(idCol).as("stream_id"), col(vecCol).as("__s_vec"),
-      lshBucket(col(vecCol), bits, dim).as("__bucket"))
-    val c = corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("__c_vec"),
-      lshBucket(col(vecCol), bits, dim).as("__bucket"))
-    s.join(c, Seq("__bucket"))
-      .withColumn("cos", cosine(col("__s_vec"), col("__c_vec")))
-      .filter(col("cos") >= threshold)
-      .select(col("stream_id"), col("corpus_id"), round(col("cos"), 6).as("cos"))
-  }
-
-  /** Multi-probe twin of [[embeddingNearDupStream]] — the recall fix for
-    * the serving path, which otherwise buckets both sides with
-    * single-table `lshBucket` at the measured-low single-shot recall
-    * (0.35/0.22/0.12 at nbits 2/3/4). Delegates VERBATIM to the batch
-    * [[graft.operators.Dedup.embeddingNearDupMultiProbeIncremental]] —
-    * the plan is already streaming-legal in append mode: the corpus index
-    * stays ONE O(n) base-bucket projection (never rebuilt, at any probe
-    * count), only the STREAM side explodes to T margin-ranked probe
-    * buckets, the single stream-static equi-join is stateless, and no
-    * dedup state is needed because each (stream, corpus) pair can join at
-    * most once (probe codes per vector are pairwise distinct; one index
-    * row per corpus vector). `probes` is therefore a pure per-query dial:
-    * raising recall between restarts re-reads more buckets of the SAME
-    * index. At T = 1 this is exactly the single-table path; at
-    * T = `Dedup.maxProbes(nbits)` the output is the exact straddling
-    * cosine pairs. Emitted columns (stream_id, corpus_id, cos, nbits,
-    * n_probes); pinned against the batch twin in StreamingSpec. */
-  def embeddingNearDupMultiProbeStream(
-      stream: DataFrame,
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      dim: Int,
-      threshold: Double = 0.95,
-      nbits: Int = graft.operators.Dedup.AutoNbits,
-      probes: Int = graft.operators.Dedup.AutoProbes,
-      targetRecall: Double = 0.8): DataFrame =
-    graft.operators.Dedup.embeddingNearDupMultiProbeIncremental(
-        corpus, stream, idCol, vecCol, dim, threshold, nbits, probes, targetRecall)
-      .select(col("id").as("stream_id"), col("matched_id").as("corpus_id"),
-        col("cos"), col("nbits"), col("n_probes"))
-
   /** Streaming SemDeDup: a STREAM of new embeddings matched against a
     * STATIC deduplicated corpus under a FROZEN coarse quantizer — the
     * ingestion-time twin of `Dedup.semanticDedupIncremental`, same shape
@@ -445,34 +365,11 @@ object Streams {
       maxCellStore: Long = graft.operators.Dedup.DefaultMaxCellSize): DataFrame = {
     import graft.functions.VectorFunctions.cosine
     import graft.operators.{Dedup, Similarity}
-    import org.apache.spark.sql.expressions.Window
     require(maxCellStore >= 1, "maxCellStore must be at least 1")
     val cents = Similarity.centroidArray(centroids, centroidIdCol, centroidVecCol)
-    def assign(df: DataFrame, idOut: String, vecOut: String): DataFrame =
-      df.crossJoin(broadcast(cents))
-        .select(col(idCol), col(vecCol),
-          explode(Similarity.topCellsLocal(col(vecCol), 1)).as("__best"))
-        .select(col(idCol).as(idOut), col(vecCol).as(vecOut),
-          col("__best.cell").as("cell"))
-    val s = assign(stream, "stream_id", "__sv")
-    val store0 = corpus.crossJoin(broadcast(cents))
-      .select(col(idCol), col(vecCol),
-        explode(Similarity.topCellsLocal(col(vecCol), 1)).as("__best"))
-      .select(col(idCol).as("corpus_id"), col(vecCol).as("__cv"),
-        col("__best.cell").as("cell"), round(col("__best.cos"), 6).as("cent_cos"))
-    val store =
-      if (maxCellStore == Dedup.Exact) store0.select("cell", "corpus_id", "__cv")
-      else {
-        val counts = store0.groupBy("cell").agg(count(lit(1)).as("__n"))
-        val withN = store0.join(broadcast(counts), Seq("cell"))
-        val w = Window.partitionBy(col("cell")).orderBy(desc("cent_cos"), asc("corpus_id"))
-        withN.filter(col("__n") <= maxCellStore)
-          .select("cell", "corpus_id", "__cv")
-          .union(withN.filter(col("__n") > maxCellStore)
-            .withColumn("__rk", row_number().over(w))
-            .filter(col("__rk") <= maxCellStore)
-            .select("cell", "corpus_id", "__cv"))
-      }
+    val s = Dedup.assignCells(stream, idCol, vecCol, cents, "stream_id", "__sv")
+    val store = Dedup.cappedCellStore(
+      Dedup.assignCells(corpus, idCol, vecCol, cents, "corpus_id", "__cv"), maxCellStore)
     s.join(store, Seq("cell"))
       .withColumn("__cos", cosine(col("__sv"), col("__cv")))
       .filter(col("__cos") >= threshold)
@@ -605,91 +502,6 @@ object Streams {
         round(max(col("jaccard")), 6).as("best_jaccard"))
   }
 
-  /** Streaming benchmark decontamination: a STREAM of new documents flagged
-    * against a STATIC eval suite — the ingestion-time twin of
-    * `Corpus.decontaminate`. Completely STATELESS (append mode, no
-    * watermark, zero streaming state): the benchmark's distinct shingle
-    * hashes collapse to ONE static row (eval suites are tiny by
-    * construction), the stream crossJoins that single broadcast row, and
-    * the overlap count is a row-local `array_intersect`. The batch variant's
-    * broadcast-join-then-regroup shape would need an UPDATE-mode aggregate
-    * with O(stream ids) state here — this layout trades it for a per-row
-    * set intersection against the in-memory benchmark array. */
-  def decontaminateStream(
-      stream: DataFrame,
-      benchmark: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleWidth: Int = 3,
-      minShared: Long = 1L): DataFrame = {
-    import graft.expressions.MinHashSignature.shingleHashes
-    import graft.functions.TextFunctions.tokens
-    require(minShared >= 1, "minShared must be at least 1")
-    def shingleSet(c: Column): Column =
-      array_distinct(shingleHashes(transform(tokens(c), t => xxhash64(t)), shingleWidth))
-    // 1-row static side: the union of the benchmark's distinct shingles
-    val benchRow = benchmark.select(explode(shingleSet(col(textCol))).as("s"))
-      .distinct()
-      .agg(collect_set(col("s")).as("bench_sh"))
-    // crossJoin is a 1-row static broadcast against the stream. NULL text
-    // null-propagates through the shingle expressions; coalesce restores
-    // the batch twin's (0, false) for such rows — the two paths are pinned
-    // equal in StreamingSpec.
-    val nShared =
-      coalesce(size(array_intersect(col("sh"), col("bench_sh"))).cast("long"), lit(0L))
-    stream.select(col(idCol).as("id"), shingleSet(col(textCol)).as("sh"))
-      .crossJoin(benchRow)
-      .select(
-        col("id"),
-        nShared.as("n_shared_shingles"),
-        (nShared >= minShared).as("contaminated"))
-  }
-
-  /** Ingestion-time LM quality scoring: the streaming twin of
-    * [[graft.operators.Corpus.lmScoreAgainst]], completely STATELESS (append
-    * mode) — the trained count table collapses to ONE static row (term→count
-    * map + totals; a frozen quality LM's vocabulary is model METADATA,
-    * bounded like the benchmark in [[decontaminateStream]], not corpus
-    * data), and each stream row scores itself with a row-local fold over
-    * its own tokens. The batch shape's join-then-regroup would need an
-    * update-mode aggregate with O(stream ids) state here.
-    *
-    * Arithmetic is the batch twin's, token for token: micro-nat-quantized
-    * add-k log-probs summed as exact integers — the two paths are pinned
-    * bit-equal (including OOV tokens and NULL/empty text) in StreamingSpec.
-    * One shape divergence: the batch scorer groups duplicate ids into one
-    * pseudo-doc (a groupBy key, like every id-keyed operator here); this
-    * row-local scorer emits one row per stream ROW — identical exactly when
-    * ids are unique, which a keyed ingestion stream guarantees.
-    */
-  def lmScoreStream(
-      stream: DataFrame,
-      counts: DataFrame,
-      idCol: String,
-      textCol: String,
-      addK: Double = 1.0): DataFrame = {
-    require(addK > 0, "addK must be positive (unsmoothed counts divide by zero on OOV)")
-    import graft.functions.TextFunctions.tokens
-    val lmRow = counts.agg(
-      map_from_entries(collect_list(struct(col("term"), col("c")))).as("lm"),
-      sum(col("c")).as("t"), count(lit(1)).as("v"))
-    val toks = filter(tokens(col(textCol)), t => t =!= "")
-    stream.select(col(idCol).as("id"), toks.as("__toks"))
-      .crossJoin(lmRow)
-      .select(col("id"),
-        size(col("__toks")).cast("long").as("n_tokens"),
-        aggregate(
-          transform(col("__toks"), tk =>
-            round(log((coalesce(element_at(col("lm"), tk), lit(0L)) + lit(addK)) /
-              (col("t") + lit(addK) * col("v"))) * lit(1e6)).cast("long")),
-          lit(0L), (acc, x) => acc + x).as("__sum"))
-      .select(col("id"),
-        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
-        when(coalesce(col("n_tokens"), lit(0L)) > 0,
-          -col("__sum") / (lit(1e6) * col("n_tokens"))).as("avg_nll"))
-      .withColumn("ppl", exp(col("avg_nll")))
-  }
-
   /** Runs a batch operator on every micro-batch: `score` gets each
     * micro-batch of `stream` through `foreachBatch`, its result is tagged
     * with the micro-batch id as `batch_id` and handed to `sink`, and the
@@ -719,7 +531,10 @@ object Streams {
     * on a streaming frame, in append mode with zero state (`Corpus`'s
     * scorers against a frozen model, `bpeSegment`, `unigramSegment`,
     * `c4LineFilter`, `gopherRules`, `charStats`, `redactPiiAudited`,
-    * `lineVerdicts`, `Dedup.spanVerdicts`, `canaryScan`, …). */
+    * `lineVerdicts`, `Dedup.spanVerdicts`, `canaryScan`,
+    * `Dedup.embeddingNearDupMultiProbeIncremental` with the stream as its
+    * batch side, …). `Corpus.decontaminate` and `Corpus.lmScoreAgainst`
+    * pick a row-local plan themselves when their input streams. */
   def eachBatch(stream: DataFrame)(score: DataFrame => DataFrame)(
       sink: DataFrame => Unit): StreamingQuery =
     stream.writeStream

@@ -425,8 +425,8 @@ object AuditScale {
       // batch probed at T buckets against the O(n) base-bucket index of
       // the other 80%; the corpus side never self-joins and never
       // re-buckets, so the cost class is n·T·occupancy with the corpus
-      // scan read once — the path embeddingNearDupMultiProbeStream runs
-      // verbatim per micro-batch
+      // scan read once — the same plan serves a streaming batch side
+      // per micro-batch
       "embedding_multiprobe_incremental_operator" -> ((s: SparkSession, d: String) => {
         val emb = Tables.load(s, d, "embeddings")
         Dedup.embeddingNearDupMultiProbeIncremental(

@@ -1837,6 +1837,21 @@ class PipelineOpsSpec extends AnyFunSuite {
       out(4L)._2 == "too_short,low_lm_quality")
   }
 
+  test("lmCounts, lmScoreAgainst, repetitionStats and decontaminate build without a Spark job") {
+    import TestSparkSession.jobsDuring
+    val counts = Corpus.lmCounts(docs, "text")
+    val bench = docs.filter(col("doc_id") === 4L)
+    // the public operators stay lazy: building the frame runs no job
+    assert(jobsDuring(Corpus.lmCounts(docs, "text"))._2 == 0)
+    assert(jobsDuring(Corpus.lmScoreAgainst(docs, counts, "doc_id", "text"))._2 == 0)
+    assert(jobsDuring(Corpus.repetitionStats(docs, "doc_id", "text"))._2 == 0)
+    assert(jobsDuring(Corpus.decontaminate(docs, bench, "doc_id", "text"))._2 == 0)
+    // the ingestion gate's one construction job is its token pin
+    val (gate, gateJobs) = jobsDuring(Corpus.qualityGateAgainst(docs, counts, "doc_id", "text"))
+    assert(gateJobs == 1, s"qualityGateAgainst ran $gateJobs jobs at construction")
+    assert(gate.count() == 5L)
+  }
+
   test("tfidfTopTerms matches hand-computed scores with deterministic integer ranking") {
     import spark.implicits._
     val docs = Seq(

@@ -11,6 +11,7 @@ import graft.sources.Tables
 class SourcesSpec extends AnyFunSuite {
 
   private lazy val spark = TestSparkSession.spark
+  import TestSparkSession.jobsDuring
 
   private lazy val base = Tables.load(spark, "/root/testdata/sf0.001", "nation")
 
@@ -530,29 +531,6 @@ class SourcesSpec extends AnyFunSuite {
     tables.foreach(t => java.nio.file.Files.copy(
       fixtures.resolve(s"$t.parquet"), dir.resolve(s"$t.parquet")))
     dir.toString
-  }
-
-  /** `body`'s result and the number of Spark jobs it started on this thread
-    * (jobs are tagged with a job group unique to the call). */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val group = s"sources-spec-${java.util.UUID.randomUUID}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (js.properties != null && js.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup(group, "jobsDuring")
-    try {
-      val result = body
-      org.apache.spark.sql.graftbridge.drainListenerBus(spark)
-      (result, jobs.get)
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
   }
 
   /** Writes `df` as the single parquet FILE `dest`, replacing any file there. */

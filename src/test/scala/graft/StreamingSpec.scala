@@ -231,7 +231,7 @@ class StreamingSpec extends AnyFunSuite {
     val bench = Seq((1L, base)).toDF("doc_id", "text")
     val ms = MemoryStream[(Long, String)](spark)
     val stream = ms.toDF().toDF("doc_id", "text")
-    val out = Streams.decontaminateStream(stream, bench, "doc_id", "text")
+    val out = graft.operators.Corpus.decontaminate(stream, bench, "doc_id", "text")
     ms.addData(
       (10L, base), // full overlap
       (11L, base.replace("quiet", "noisy")), // partial overlap
@@ -267,7 +267,8 @@ class StreamingSpec extends AnyFunSuite {
       (12L, null.asInstanceOf[String]), // NULL text → (0, NULL, NULL)
       (13L, "d d d"))
     val ms = MemoryStream[(Long, String)](spark)
-    val out = Streams.lmScoreStream(ms.toDF().toDF("doc_id", "text"), counts, "doc_id", "text")
+    val out = graft.operators.Corpus.lmScoreAgainst(
+      ms.toDF().toDF("doc_id", "text"), counts, "doc_id", "text")
     ms.addData(batchRows.take(3): _*)
     // APPEND mode works — proof the scorer carries no streaming aggregate
     val q = Streams.runToMemory(out, "lm_out", OutputMode.Append())
@@ -288,6 +289,46 @@ class StreamingSpec extends AnyFunSuite {
       assert(nll(11L).get > nll(10L).get)
       assert(nll(12L).isEmpty && got.find(_._1 == 12L).get._2 == 0L)
     } finally q.stop()
+  }
+
+  test("decontaminate and lmScoreAgainst on a stream equal the batch call on empty, NULL-id, NULL-text and non-BMP input") {
+    import spark.implicits._
+    import graft.operators.Corpus
+    val emoji = "\uD83D\uDE00" // U+1F600, one surrogate pair
+    val bench = Seq((1L, s"the quick brown $emoji fox")).toDF("doc_id", "text")
+    val counts = Corpus.lmCounts(
+      Seq((1L, s"the quick $emoji brown fox $emoji")).toDF("doc_id", "text"), "text")
+    val rows = Seq(
+      (Option.empty[Long], "the quick brown fox jumps"), // the one NULL-id row
+      (Some(10L), null.asInstanceOf[String]),
+      (Some(11L), s"the quick brown $emoji fox jumps"),
+      (Some(12L), s"$emoji $emoji unseen words"))
+    def sorted(rs: Array[org.apache.spark.sql.Row]) = rs.toSeq.sortBy(_.toString)
+    def check(name: String, op: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) = {
+      val ms = MemoryStream[(Option[Long], String)](spark)
+      val q = Streams.runToMemory(op(ms.toDF().toDF("doc_id", "text")), name, OutputMode.Append())
+      try {
+        ms.addData(Seq.empty[(Option[Long], String)]) // an empty micro-batch
+        q.processAllAvailable()
+        assert(spark.table(name).isEmpty, s"$name: empty micro-batch emitted rows")
+        ms.addData(rows.take(2): _*)
+        ms.addData(rows.drop(2): _*)
+        q.processAllAvailable()
+        val got = sorted(spark.table(name).collect())
+        val batch = sorted(op(rows.toDF("doc_id", "text")).collect())
+        assert(got == batch, s"$name: stream $got != batch $batch")
+        assert(got.length == rows.length)
+      } finally q.stop()
+    }
+    check("edge_decon_out", Corpus.decontaminate(_, bench, "doc_id", "text"))
+    check("edge_lm_out", Corpus.lmScoreAgainst(_, counts, "doc_id", "text"))
+    // the emoji-bearing shingles really match: doc 11 shares all three of
+    // the benchmark's, the NULL-id row only "the quick brown"
+    val shared = Corpus.decontaminate(rows.toDF("doc_id", "text"), bench, "doc_id", "text")
+      .collect().map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0))) -> r.getLong(1))
+      .toMap
+    assert(shared == Map(None -> 1L, Some(10L) -> 0L, Some(11L) -> 3L, Some(12L) -> 0L),
+      s"$shared")
   }
 
   test("dsirScoreStream is stateless and bit-equal to the batch scorer against a frozen model") {
@@ -733,8 +774,11 @@ class StreamingSpec extends AnyFunSuite {
       (11L, Array(0.5f, -0.5f, 0.5f, -0.5f))) // novel direction
     val b2 = Seq((12L, Array(0.01f, 0.98f, 0.06f, 0f))) // near-dup of corpus 2
     val ms = MemoryStream[(Long, Array[Float])](spark)
-    val out = Streams.embeddingNearDupStream(
-      ms.toDF().toDF("vec_id", "vec"), corpus, "vec_id", "vec", dim = 4, threshold = 0.95)
+    // probes = 1 is the single-table path: the base bucket is lshBucket's
+    val out = graft.operators.Dedup.embeddingNearDupMultiProbeIncremental(
+        corpus, ms.toDF().toDF("vec_id", "vec"), "vec_id", "vec", dim = 4, threshold = 0.95,
+        probes = 1)
+      .select(col("id").as("stream_id"), col("matched_id").as("corpus_id"), col("cos"))
     ms.addData(b1: _*)
     // APPEND mode works — the operator carries no streaming aggregate
     val q = Streams.runToMemory(out, "emb_stream_out", OutputMode.Append())
@@ -781,9 +825,11 @@ class StreamingSpec extends AnyFunSuite {
     } yield (bi, ci)).toSet
     def run(probes: Int): Set[(Long, Long)] = {
       val ms = MemoryStream[(Long, Array[Float])](spark)
-      val out = Streams.embeddingNearDupMultiProbeStream(
-        ms.toDF().toDF("vec_id", "vec"), corpus, "vec_id", "vec",
-        dim = 8, threshold = 0.3, nbits = 2, probes = probes)
+      val out = Dedup.embeddingNearDupMultiProbeIncremental(
+          corpus, ms.toDF().toDF("vec_id", "vec"), "vec_id", "vec",
+          dim = 8, threshold = 0.3, nbits = 2, probes = probes)
+        .select(col("id").as("stream_id"), col("matched_id").as("corpus_id"),
+          col("cos"), col("nbits"), col("n_probes"))
       ms.addData(batch1: _*)
       val q = Streams.runToMemory(out, s"emb_mp_stream_$probes", OutputMode.Append())
       try {

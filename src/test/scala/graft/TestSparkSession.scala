@@ -23,4 +23,27 @@ object TestSparkSession {
     s.sparkContext.setCheckpointDir("target/test-checkpoints")
     s
   }
+
+  /** `body`'s result and the number of Spark jobs it started on this thread
+    * (jobs are tagged with a job group unique to the call). */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"jobs-during-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, "jobsDuring")
+    try {
+      val result = body
+      org.apache.spark.sql.graftbridge.drainListenerBus(spark)
+      (result, jobs.get)
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
 }
