@@ -48,12 +48,17 @@ final case class MetaFrame(df: DataFrame, metadata: Map[String, Any]) {
     case s: Seq[_] => s.map(_.toString)
   }
 
-  /** reference: `set_metadata(**params)` merge-and-replace, metaframe.py:179-186. */
-  def setMetadata(params: (String, Any)*): MetaFrame =
-    copy(metadata = metadata ++ params)
+  /** reference: `set_metadata(**params)` merge-and-replace, metaframe.py:179-186.
+    * A key set by hand is a claim, not a proof: changing `primary_key`
+    * drops the pk-verified flag. */
+  def setMetadata(params: (String, Any)*): MetaFrame = {
+    val next = metadata ++ params
+    copy(metadata =
+      if (next.get(PrimaryKeyField) == metadata.get(PrimaryKeyField)) next
+      else MetaFrame.withoutProof(next))
+  }
 
-  def withPrimaryKey(cols: Seq[String]): MetaFrame =
-    copy(metadata = metadata + (PrimaryKeyField -> cols))
+  def withPrimaryKey(cols: Seq[String]): MetaFrame = setMetadata(PrimaryKeyField -> cols)
 
   /** reference: `__str__`, metaframe.py:71-75. */
   override def toString: String = s"$df metadata: $metadata"
@@ -76,13 +81,13 @@ final case class MetaFrame(df: DataFrame, metadata: Map[String, Any]) {
     * left rows, union can duplicate, generators multiply). The user-visible
     * `primary_key` still propagates reference-style (stale allowed, exactly
     * like the reference's blind dict propagation, metaframe.py:113-114). */
-  @inline private def wrap(d: DataFrame): MetaFrame =
-    MetaFrame(d, metadata - PkVerifiedField)
+  @inline private[graft] def wrap(d: DataFrame): MetaFrame =
+    MetaFrame(d, MetaFrame.withoutProof(metadata))
 
   /** Rewrap for operations that can only keep or remove whole rows
     * (filter/sort/limit/repartition/…): uniqueness is preserved, so the
     * pk-verified flag survives and downstream dedups can still be elided. */
-  @inline private def wrapKeep(d: DataFrame): MetaFrame = copy(df = d)
+  @inline private[graft] def wrapKeep(d: DataFrame): MetaFrame = copy(df = d)
 
   /** Memoized views of THIS frame's analyzed plan, shared by every
     * projection forwarded from it: a long synthesized chain of projections
@@ -127,18 +132,21 @@ final case class MetaFrame(df: DataFrame, metadata: Map[String, Any]) {
   def selectExpr(exprs: String*): MetaFrame = wrapProj(df.selectExpr(exprs: _*))
   def withColumn(colName: String, col: Column): MetaFrame = wrapProj(df.withColumn(colName, col))
   def withColumns(colsMap: Map[String, Column]): MetaFrame = wrapProj(df.withColumns(colsMap))
+  /** Renames and drops are projections too: the proof survives only while
+    * the pk columns pass through, so another column renamed onto a pk name
+    * is never taken as proven. */
   def withColumnRenamed(existing: String, newName: String): MetaFrame =
-    wrapKeep(df.withColumnRenamed(existing, newName))
+    wrapProj(df.withColumnRenamed(existing, newName))
   def withColumnsRenamed(renames: Map[String, String]): MetaFrame =
-    wrapKeep(df.withColumnsRenamed(renames))
+    wrapProj(df.withColumnsRenamed(renames))
   /** Attaches COLUMN-level (schema) metadata — orthogonal to the
     * frame-level metadata dict this wrapper carries. Row-preserving
     * projection, so the pk-verified flag survives via [[wrapProj]]'s
     * pass-through check. */
   def withMetadata(columnName: String, md: org.apache.spark.sql.types.Metadata): MetaFrame =
     wrapProj(df.withMetadata(columnName, md))
-  def drop(colNames: String*): MetaFrame = wrapKeep(df.drop(colNames: _*))
-  def drop(col: Column): MetaFrame = wrapKeep(df.drop(col))
+  def drop(colNames: String*): MetaFrame = wrapProj(df.drop(colNames: _*))
+  def drop(col: Column): MetaFrame = wrapProj(df.drop(col))
   def toDF(colNames: String*): MetaFrame =
     wrap(if (colNames.isEmpty) df.toDF() else df.toDF(colNames: _*))
   def to(schema: StructType): MetaFrame = wrap(df.to(schema))
@@ -161,17 +169,12 @@ final case class MetaFrame(df: DataFrame, metadata: Map[String, Any]) {
   // left row matches at most one right row) — in those cases the left's
   // pk-verified flag survives and downstream dedups still elide.
 
-  private def rowPreservingType(joinType: String): Boolean =
+  /** `rightUnique`: the right side is proven unique on the `using` columns
+    * (an expression join never proves it). */
+  private def wrapJoin(d: DataFrame, joinType: String, rightUnique: Boolean = false): MetaFrame =
     joinType.replace("_", "").toLowerCase match {
-      case "leftsemi" | "semi" | "leftanti" | "anti" => true
-      case _ => false
-    }
-
-  private def wrapJoin(d: DataFrame, right: MetaFrame, usingColumns: Seq[String],
-      joinType: String): MetaFrame =
-    if (rowPreservingType(joinType)) wrapKeep(d)
-    else joinType.replace("_", "").toLowerCase match {
-      case "inner" | "left" | "leftouter" if right.uniqueOn(usingColumns) => wrapKeep(d)
+      case "leftsemi" | "semi" | "leftanti" | "anti" => wrapKeep(d)
+      case "inner" | "left" | "leftouter" if rightUnique => wrapKeep(d)
       case _ => wrap(d)
     }
 
@@ -179,21 +182,18 @@ final case class MetaFrame(df: DataFrame, metadata: Map[String, Any]) {
   def join(right: MetaFrame, usingColumn: String): MetaFrame =
     join(right, Seq(usingColumn))
   def join(right: MetaFrame, usingColumns: Seq[String]): MetaFrame =
-    wrapJoin(df.join(right.df, usingColumns), right, usingColumns, "inner")
+    wrapJoin(df.join(right.df, usingColumns), "inner", right.uniqueOn(usingColumns))
   def join(right: MetaFrame, usingColumns: Seq[String], joinType: String): MetaFrame =
-    wrapJoin(df.join(right.df, usingColumns, joinType), right, usingColumns, joinType)
+    wrapJoin(df.join(right.df, usingColumns, joinType), joinType, right.uniqueOn(usingColumns))
   def join(right: MetaFrame, joinExprs: Column): MetaFrame =
     wrap(df.join(right.df, joinExprs))
   def join(right: MetaFrame, joinExprs: Column, joinType: String): MetaFrame =
-    if (rowPreservingType(joinType)) wrapKeep(df.join(right.df, joinExprs, joinType))
-    else wrap(df.join(right.df, joinExprs, joinType))
+    wrapJoin(df.join(right.df, joinExprs, joinType), joinType)
   def crossJoin(right: MetaFrame): MetaFrame = wrap(df.crossJoin(right.df))
   def join(right: DataFrame, usingColumns: Seq[String], joinType: String): MetaFrame =
-    if (rowPreservingType(joinType)) wrapKeep(df.join(right, usingColumns, joinType))
-    else wrap(df.join(right, usingColumns, joinType))
+    wrapJoin(df.join(right, usingColumns, joinType), joinType)
   def join(right: DataFrame, joinExprs: Column, joinType: String): MetaFrame =
-    if (rowPreservingType(joinType)) wrapKeep(df.join(right, joinExprs, joinType))
-    else wrap(df.join(right, joinExprs, joinType))
+    wrapJoin(df.join(right, joinExprs, joinType), joinType)
   def hint(name: String, parameters: Any*): MetaFrame = wrapKeep(df.hint(name, parameters: _*))
 
   // ----------------------------------------------- aggregations (SURVEY §2.2d)
@@ -334,8 +334,11 @@ final case class MetaFrame(df: DataFrame, metadata: Map[String, Any]) {
   def coalesce(numPartitions: Int): MetaFrame = wrapKeep(df.coalesce(numPartitions))
   def sample(fraction: Double): MetaFrame = wrapKeep(df.sample(fraction))
   def sample(fraction: Double, seed: Long): MetaFrame = wrapKeep(df.sample(fraction, seed))
-  def sample(withReplacement: Boolean, fraction: Double, seed: Long): MetaFrame =
-    wrapKeep(df.sample(withReplacement, fraction, seed))
+  /** Sampling with replacement can repeat a row, so it drops the proof. */
+  def sample(withReplacement: Boolean, fraction: Double, seed: Long): MetaFrame = {
+    val d = df.sample(withReplacement, fraction, seed)
+    if (withReplacement) wrap(d) else wrapKeep(d)
+  }
 
   /** Divergence: reference returns a raw list (metadata lost, SURVEY §2.2i);
     * we keep metadata on every split. */
@@ -525,7 +528,25 @@ object MetaFrame {
     * lineage since pk inference is provably uniqueness-preserving, enabling
     * the dedup short-circuits. Any operation that can duplicate or fan out
     * rows drops it; the user-visible `primary_key` is never touched. */
-  val PkVerifiedField = "__pk_verified"
+  private[graft] val PkVerifiedField = "__pk_verified"
+
+  /** `metadata` without the proof flag — what leaves the process (a
+    * sidecar never carries a proof) or starts a derived frame's metadata. */
+  private[graft] def withoutProof(metadata: Map[String, Any]): Map[String, Any] =
+    metadata - PkVerifiedField
+
+  /** A derived frame over `df`: `primary_key` set to `pk` (removed when
+    * None), proven exactly when `proven` and a key is set. The proof is
+    * decided by the caller through [[MetaFrame.uniqueOn]]; this is the one
+    * writer of the flag outside the forwarders. */
+  private[graft] def keyed(df: DataFrame, metadata: Map[String, Any],
+      pk: Option[Seq[String]], proven: Boolean): MetaFrame = {
+    val base = withoutProof(metadata)
+    MetaFrame(df, pk.fold(base - PrimaryKeyField) { cols =>
+      val withPk = base + (PrimaryKeyField -> cols)
+      if (proven) withPk + (PkVerifiedField -> true) else withPk
+    })
+  }
 
   /** reference: default metadata `{}` (metaframe.py:66-69). */
   def apply(df: DataFrame): MetaFrame = MetaFrame(df, Map.empty)
@@ -613,11 +634,9 @@ final class MetaWriter(val w: DataFrameWriter[Row], val metadata: Map[String, An
 /** Metadata-preserving facade over `DataFrameNaFunctions` (divergence: the
   * reference returns the raw object and loses metadata — SURVEY §1.2). */
 final class MetaNaFunctions(val na: DataFrameNaFunctions, parent: MetaFrame) {
-  // fill/replace mutate values (could collide pk values) → drop the verified
-  // flag; drop() only removes rows and keeps it.
-  @inline private def wrap(d: DataFrame): MetaFrame =
-    parent.copy(df = d, metadata = parent.metadata - MetaFrame.PkVerifiedField)
-  @inline private def wrapKeep(d: DataFrame): MetaFrame = parent.copy(df = d)
+  // fill/replace mutate values (could collide pk values) → the parent's
+  // proof-dropping rewrap; drop() only removes rows → its row-keeping one.
+  import parent.{wrap, wrapKeep}
   def fill(value: Long): MetaFrame = wrap(na.fill(value))
   def fill(value: Double): MetaFrame = wrap(na.fill(value))
   def fill(value: String): MetaFrame = wrap(na.fill(value))
@@ -639,8 +658,7 @@ final class MetaNaFunctions(val na: DataFrameNaFunctions, parent: MetaFrame) {
 /** Metadata-preserving facade over `DataFrameStatFunctions` (same divergence). */
 final class MetaStatFunctions(val stat: DataFrameStatFunctions, parent: MetaFrame) {
   // crosstab/freqItems build new frames; sampleBy only removes rows
-  @inline private def wrap(d: DataFrame): MetaFrame =
-    parent.copy(df = d, metadata = parent.metadata - MetaFrame.PkVerifiedField)
+  import parent.{wrap, wrapKeep}
   def approxQuantile(col: String, probabilities: Array[Double], relativeError: Double): Array[Double] =
     stat.approxQuantile(col, probabilities, relativeError)
   def approxQuantile(cols: Array[String], probabilities: Array[Double],
@@ -654,7 +672,7 @@ final class MetaStatFunctions(val stat: DataFrameStatFunctions, parent: MetaFram
   def freqItems(cols: Seq[String], support: Double): MetaFrame =
     wrap(stat.freqItems(cols, support))
   def sampleBy[T](col: String, fractions: Map[T, Double], seed: Long): MetaFrame =
-    parent.copy(df = stat.sampleBy(col, fractions, seed))
+    wrapKeep(stat.sampleBy(col, fractions, seed))
   // sketch builders are terminal actions (driver-side sketch objects, no
   // frame to re-wrap) — forwarded raw like the other scalar stat members
   def bloomFilter(colName: String, expectedNumItems: Long, fpp: Double): sketch.BloomFilter =

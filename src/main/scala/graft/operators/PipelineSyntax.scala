@@ -13,25 +13,47 @@ import graft.functions.TextFunctions
   * metadata layer with a `lineage` entry describing the derivation. */
 object PipelineSyntax {
 
-  private def derived(
-      parent: MetaFrame,
-      df: DataFrame,
-      op: String,
-      params: Map[String, Any],
-      pk: Option[Seq[String]],
-      pkVerified: Boolean = true): MetaFrame = {
+  /** How a verb's output key follows from its inputs. Each verb declares
+    * one rule; [[derived]] alone resolves it, and the proof is always
+    * MetaFrame's own `uniqueOn`. */
+  private sealed trait KeyRule
+  /** Unique by construction (a groupBy, a rank window, a distinct-node or
+    * TopK contract): `cols` is claimed and proven. */
+  private final case class Unique(cols: String*) extends KeyRule
+  /** Row subset or row-preserving: the parent's key and proof carry over. */
+  private case object SameAsParent extends KeyRule
+  /** One output row (or one ranked run) per input row: `cols` is the key
+    * only when every input is keyed by its id column, proven when each is
+    * proven on it. */
+  private final case class PerRow(cols: Seq[String], inputs: (MetaFrame, String)*)
+      extends KeyRule
+  /** `cols` is always claimed but proven only when every named input is
+    * proven on its id column (duplicate input ids repeat output keys);
+    * with no input named it is never proven. */
+  private final case class Claimed(cols: Seq[String], inputs: (MetaFrame, String)*)
+      extends KeyRule
+  /** No uniqueness: the parent's key is removed. */
+  private case object NoKey extends KeyRule
+
+  private def derived(parent: MetaFrame, df: DataFrame, op: String,
+      params: Map[String, Any], key: KeyRule): MetaFrame = {
+    val step = Map("op" -> op, "params" -> params)
     val lineage = parent.metadata.get("lineage") match {
-      case Some(prev: Seq[_]) => prev :+ Map("op" -> op, "params" -> params)
-      case _ => Seq(Map("op" -> op, "params" -> params))
+      case Some(prev: Seq[_]) => prev :+ step
+      case _ => Seq(step)
     }
-    val base = parent.metadata - MetaFrame.PkVerifiedField +
-      ("lineage" -> lineage)
-    pk match {
-      case Some(cols) =>
-        val withPk = base + (MetaFrame.PrimaryKeyField -> cols)
-        MetaFrame(df, if (pkVerified) withPk + (MetaFrame.PkVerifiedField -> true) else withPk)
-      case None => MetaFrame(df, base - MetaFrame.PrimaryKeyField)
+    def keyedBy(inputs: Seq[(MetaFrame, String)]) =
+      inputs.forall { case (in, id) => in.primaryKey.contains(Seq(id)) }
+    def provenBy(inputs: Seq[(MetaFrame, String)]) =
+      inputs.nonEmpty && inputs.forall { case (in, id) => in.uniqueOn(Seq(id)) }
+    val (pk, proven) = key match {
+      case Unique(cols @ _*) => (Some(cols), true)
+      case SameAsParent => (parent.primaryKey, parent.primaryKey.exists(parent.uniqueOn))
+      case PerRow(cols, inputs @ _*) if keyedBy(inputs) => (Some(cols), provenBy(inputs))
+      case Claimed(cols, inputs @ _*) => (Some(cols), provenBy(inputs))
+      case _ => (None, false)
     }
+    MetaFrame.keyed(df, parent.metadata + ("lineage" -> lineage), pk, proven)
   }
 
   implicit final class PipelineMetaFrame(private val mf: MetaFrame) extends AnyVal {
@@ -40,14 +62,14 @@ object PipelineSyntax {
     def dedupExact(idCol: String, contentCol: String): MetaFrame =
       derived(mf, Dedup.exact(mf.df, idCol, contentCol),
         "dedup_exact", Map("id" -> idCol, "content" -> contentCol),
-        pk = Some(Seq("content_hash")))
+        Unique("content_hash"))
 
     /** [[dedupExact]] over the canonical rendering (Unicode NFC + casefold
       * + whitespace collapse) — same pk contract on the normalized hash. */
     def dedupExactNormalized(idCol: String, contentCol: String): MetaFrame =
       derived(mf, Dedup.exactNormalized(mf.df, idCol, contentCol),
         "dedup_exact_normalized", Map("id" -> idCol, "content" -> contentCol),
-        pk = Some(Seq("content_hash")))
+        Unique("content_hash"))
 
     /** MinHash+LSH clusters: one row per input id (pk set + verified). */
     def dedupMinHash(
@@ -57,19 +79,21 @@ object PipelineSyntax {
         "dedup_minhash_lsh",
         Map("id" -> idCol, "text" -> textCol, "numHashes" -> numHashes,
             "bands" -> bands, "shingleWidth" -> shingleWidth),
-        pk = Some(Seq(idCol)))
+        Unique(idCol))
 
     /** PassJoin edit-distance pairs within the frame (exact recall +
       * precision — every emitted pair confirmed by `levenshtein`); one row
-      * per unordered id pair, so (id_a, id_b) is the verified pk. */
+      * per unordered id pair, so (id_a, id_b) is the pk, proven when the
+      * parent is proven on `idCol`. */
     def fuzzyEditPairs(idCol: String, strCol: String, maxDist: Int): MetaFrame =
       derived(mf, FuzzyJoin.editDistancePairs(mf.df, idCol, strCol, maxDist),
         "fuzzy_edit_pairs",
         Map("id" -> idCol, "str" -> strCol, "maxDist" -> maxDist),
-        pk = Some(Seq("id_a", "id_b")))
+        Claimed(Seq("id_a", "id_b"), mf -> idCol))
 
     /** PassJoin record linkage against `other`: every (left, right) pair
-      * within `maxDist` — one row per cross-table id pair. */
+      * within `maxDist` — one row per cross-table id pair, proven when
+      * both sides are proven on their id columns. */
     def fuzzyEditJoin(
         idCol: String, strCol: String,
         other: MetaFrame, otherIdCol: String, otherStrCol: String,
@@ -80,7 +104,7 @@ object PipelineSyntax {
         "fuzzy_edit_join",
         Map("id" -> idCol, "str" -> strCol, "otherId" -> otherIdCol,
             "otherStr" -> otherStrCol, "maxDist" -> maxDist),
-        pk = Some(Seq("id_a", "id_b")))
+        Claimed(Seq("id_a", "id_b"), mf -> idCol, other -> otherIdCol))
 
     /** Item co-occurrence mining over (basket, item) rows: one row per
       * surviving unordered item pair, so (item_a, item_b) is the pk. */
@@ -91,7 +115,7 @@ object PipelineSyntax {
         "co_occurrence",
         Map("basket" -> basketCol, "item" -> itemCol,
             "minPairCount" -> minPairCount, "maxBasketSize" -> maxBasketSize),
-        pk = Some(Seq("item_a", "item_b")))
+        Unique("item_a", "item_b"))
 
     /** CDC change application: this frame is the BASE snapshot; `changes`
       * is the feed. One row per surviving id, base schema preserved, so
@@ -103,9 +127,7 @@ object PipelineSyntax {
         Corpus.applyChanges(mf.df, changes.df, idCol, opCol, tsCol),
         "apply_changes",
         Map("id" -> idCol, "op" -> opCol, "ts" -> tsCol),
-        pk = Some(Seq(idCol)),
-        pkVerified = mf.primaryKey.contains(Seq(idCol)) &&
-          mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
+        Claimed(Seq(idCol), mf -> idCol))
 
     /** Cross-source quantile normalization of `scoreCol` within
       * `groupCol`: one row per input row keyed by `id`. */
@@ -116,9 +138,7 @@ object PipelineSyntax {
         "quantile_normalize",
         Map("group" -> groupCol, "id" -> idCol, "score" -> scoreCol,
             "binWidthMicro" -> binWidthMicro),
-        pk = Some(Seq("id")),
-        pkVerified = mf.primaryKey.contains(Seq(idCol)) &&
-          mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
+        Claimed(Seq("id"), mf -> idCol))
 
     /** Dense per-key daily resample with explicit zero fill: one row per
       * (key, day) in each key's observed range. */
@@ -126,7 +146,7 @@ object PipelineSyntax {
       derived(mf, Events.resampleDaily(mf.df, keyCol, tsCol),
         "resample_daily",
         Map("key" -> keyCol, "ts" -> tsCol),
-        pk = Some(Seq("key", "day")))
+        Unique("key", "day"))
 
     /** Seasonal (same-weekday) daily volume anomalies over the frame's
       * events: one row per (event_type, day). */
@@ -138,7 +158,7 @@ object PipelineSyntax {
         "anomaly_seasonal",
         Map("ts" -> tsCol, "type" -> typeCol, "window" -> window,
             "minPrior" -> minPrior, "thresholdMicro" -> thresholdMicro),
-        pk = Some(Seq("event_type", "day")))
+        Unique("event_type", "day"))
 
     /** Calibration report (ECE) over scored+labeled rows: one row per
       * populated bin. */
@@ -148,7 +168,7 @@ object PipelineSyntax {
         Classifier.calibrationReport(mf.df, labelCol, scoreMicroCol, bins),
         "calibration_report",
         Map("label" -> labelCol, "score" -> scoreMicroCol, "bins" -> bins),
-        pk = Some(Seq("bin")))
+        Unique("bin"))
 
     /** Referential-integrity check of this frame's `fkCol` against
       * `parent`'s `pkCol`: named orphan keys + totals (no pk — the clean
@@ -159,7 +179,7 @@ object PipelineSyntax {
         Checks.referentialIntegrity(mf.df, fkCol, parent.df, pkCol, sampleK),
         "ref_integrity",
         Map("fk" -> fkCol, "pk" -> pkCol, "sampleK" -> sampleK),
-        pk = None)
+        NoKey)
 
     /** Join pre-flight against `right`: top-K contributing keys + totals;
       * each surviving key appears once, so `key` is the pk. */
@@ -169,7 +189,7 @@ object PipelineSyntax {
         Checks.joinPreflight(mf.df, leftKey, right.df, rightKey, topK),
         "join_preflight",
         Map("leftKey" -> leftKey, "rightKey" -> rightKey, "topK" -> topK),
-        pk = Some(Seq("key")))
+        Unique("key"))
 
     /** Functional-dependency check over candidate column pairs: one row
       * per candidate, so (lhs, rhs) is the pk. */
@@ -177,7 +197,7 @@ object PipelineSyntax {
       derived(mf, Checks.fdCheck(mf.df, candidates),
         "fd_check",
         Map("candidates" -> candidates.map { case (l, r) => s"$l->$r" }.mkString(",")),
-        pk = Some(Seq("lhs", "rhs")))
+        Unique("lhs", "rhs"))
 
     /** Related-items top-k index over the frame's co-occurrence pairs:
       * one row per (item, rank). */
@@ -185,7 +205,7 @@ object PipelineSyntax {
       derived(mf, Graph.relatedItemsIndex(mf.df, k),
         "related_items_index",
         Map("k" -> k),
-        pk = Some(Seq("item", "rank")))
+        Unique("item", "rank"))
 
     /** Per-node triangle counts + clustering over the frame's edge list:
       * one row per node, so `id` is the pk. */
@@ -193,7 +213,7 @@ object PipelineSyntax {
       derived(mf, Graph.triangles(mf.df, srcCol, dstCol),
         "triangles",
         Map("src" -> srcCol, "dst" -> dstCol),
-        pk = Some(Seq("id")))
+        Unique("id"))
 
     /** Z-order (Morton) layout rewrite: range-partition + in-partition
       * sort on the interleaved bucket bits of `cols`, so parquet min/max
@@ -205,11 +225,11 @@ object PipelineSyntax {
         "zorder_cluster",
         Map("cols" -> cols.mkString(","), "numPartitions" -> numPartitions,
             "bitsPerCol" -> bitsPerCol),
-        pk = mf.primaryKey,
-        pkVerified = mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
+        SameAsParent)
 
     /** One-call entity resolution (fuzzy pairs → components → canonical
-      * election): one output row per input row, so the id is the pk. */
+      * election): one output row per input row, so the id is the pk,
+      * proven when the parent is proven on it. */
     def entityResolved(idCol: String, strCol: String, maxDist: Int,
         scoreCol: Option[String] = None): MetaFrame =
       derived(mf,
@@ -217,14 +237,14 @@ object PipelineSyntax {
         "entity_resolve",
         Map("id" -> idCol, "str" -> strCol, "maxDist" -> maxDist,
             "score" -> scoreCol.getOrElse("")),
-        pk = Some(Seq(idCol)))
+        Claimed(Seq(idCol), mf -> idCol))
 
     /** SimHash near-dup pairs (no uniqueness guarantee → no pk). */
     def dedupSimHashPairs(idCol: String, textCol: String, maxHamming: Int = 8): MetaFrame =
       derived(mf, Dedup.simhashNearDup(mf.df, idCol, textCol, maxHamming),
         "dedup_simhash_pairs",
         Map("id" -> idCol, "text" -> textCol, "maxHamming" -> maxHamming),
-        pk = None)
+        NoKey)
 
     /** As-of backward join (provenance recorded; join can't fan out left
       * rows — one match max per left row — but unmatched tolerance nulls
@@ -237,8 +257,7 @@ object PipelineSyntax {
         "join_asof_backward",
         Map("key" -> keyCol, "leftTs" -> leftTsCol, "rightTs" -> rightTsCol,
             "payloads" -> payloadCols),
-        pk = mf.primaryKey,
-        pkVerified = mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
+        SameAsParent)
 
     /** Binned range join against an interval table (no uniqueness → no pk). */
     def rangeJoinPointInInterval(
@@ -248,11 +267,11 @@ object PipelineSyntax {
         RangeJoin.pointInInterval(mf.df, pointCol, intervals.df, loCol, hiCol, binWidth),
         "join_range_binned",
         Map("point" -> pointCol, "lo" -> loCol, "hi" -> hiCol, "binWidth" -> binWidth),
-        pk = None)
+        NoKey)
 
     /** Incremental near-dedup of THIS frame (the new batch) against an
-      * existing corpus: one row per batch id (pk set + verified), corpus
-      * never self-joins. */
+      * existing corpus: one row per batch row, keyed by `id` (proven when
+      * the batch is proven on `idCol`); the corpus never self-joins. */
     def dedupIncremental(
         corpus: MetaFrame, idCol: String, textCol: String,
         numHashes: Int = 32, bands: Int = 8, shingleWidth: Int = 3,
@@ -263,7 +282,7 @@ object PipelineSyntax {
         "dedup_incremental",
         Map("id" -> idCol, "text" -> textCol, "numHashes" -> numHashes,
             "bands" -> bands, "shingleWidth" -> shingleWidth, "minJaccard" -> minJaccard),
-        pk = Some(Seq("id")))
+        Claimed(Seq("id"), mf -> idCol))
 
     /** Deterministic hash split: row-preserving column add, so parent pk
       * survives (verified-if-it-was). */
@@ -272,8 +291,7 @@ object PipelineSyntax {
       derived(mf, Corpus.hashSplit(mf.df, idCol, salt, trainPct, valPct),
         "split_hash",
         Map("id" -> idCol, "salt" -> salt, "trainPct" -> trainPct, "valPct" -> valPct),
-        pk = mf.primaryKey,
-        pkVerified = mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
+        SameAsParent)
 
     /** Leakage-safe split: hashSplit keyed on the near-dup component from
       * `pairs`, so near-duplicates never straddle a train/eval boundary.
@@ -287,8 +305,7 @@ object PipelineSyntax {
         "split_leakage_safe",
         Map("id" -> idCol, "salt" -> salt, "trainPct" -> trainPct,
             "valPct" -> valPct),
-        pk = mf.primaryKey,
-        pkVerified = mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
+        SameAsParent)
 
     /** Benchmark decontamination of THIS frame against an eval suite: one
       * row per corpus ROW, so the output is keyed by `id` only when the
@@ -296,17 +313,13 @@ object PipelineSyntax {
       * over exactly when the parent held it. */
     def decontaminateAgainst(
         benchmark: MetaFrame, idCol: String, textCol: String,
-        shingleWidth: Int = 3, minShared: Long = 1L): MetaFrame = {
-      val parentKeyed = mf.primaryKey.contains(Seq(idCol))
+        shingleWidth: Int = 3, minShared: Long = 1L): MetaFrame =
       derived(mf,
         Corpus.decontaminate(mf.df, benchmark.df, idCol, textCol, shingleWidth, minShared),
         "decontaminate",
         Map("id" -> idCol, "text" -> textCol, "shingleWidth" -> shingleWidth,
             "minShared" -> minShared),
-        pk = if (parentKeyed) Some(Seq("id")) else None,
-        pkVerified = parentKeyed &&
-          mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
-    }
+        PerRow(Seq("id"), mf -> idCol))
 
     /** [[decontaminateAgainst]]'s Bloom-prefiltered scale path: identical
       * output (and pk semantics) at any fpp — the dial moves broadcast
@@ -314,8 +327,7 @@ object PipelineSyntax {
     def decontaminateAgainstBloom(
         benchmark: MetaFrame, idCol: String, textCol: String,
         shingleWidth: Int = 3, minShared: Long = 1L,
-        expectedShingles: Long = 4L * 1000 * 1000, fpp: Double = 0.03): MetaFrame = {
-      val parentKeyed = mf.primaryKey.contains(Seq(idCol))
+        expectedShingles: Long = 4L * 1000 * 1000, fpp: Double = 0.03): MetaFrame =
       derived(mf,
         Corpus.decontaminateBloom(mf.df, benchmark.df, idCol, textCol, shingleWidth,
           minShared, expectedShingles, fpp),
@@ -323,10 +335,7 @@ object PipelineSyntax {
         Map("id" -> idCol, "text" -> textCol, "shingleWidth" -> shingleWidth,
             "minShared" -> minShared, "expectedShingles" -> expectedShingles,
             "fpp" -> fpp),
-        pk = if (parentKeyed) Some(Seq("id")) else None,
-        pkVerified = parentKeyed &&
-          mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
-    }
+        PerRow(Seq("id"), mf -> idCol))
 
     /** Deterministic exact-size stratified sample: row SUBSET plus a
       * sample_rank column, so parent pk survives (verified-if-it-was). */
@@ -335,8 +344,7 @@ object PipelineSyntax {
       derived(mf, Corpus.stratifiedSample(mf.df, stratumCol, idCol, salt, k),
         "stratified_sample",
         Map("stratum" -> stratumCol, "id" -> idCol, "salt" -> salt, "k" -> k),
-        pk = mf.primaryKey,
-        pkVerified = mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
+        SameAsParent)
 
     /** PMI collocation mining: rank is unique by the re-rank window. */
     def pmiCollocationsOf(textCol: String, minCount: Long = 5L,
@@ -344,8 +352,7 @@ object PipelineSyntax {
       derived(mf, Corpus.pmiCollocations(mf.df, textCol, minCount, k),
         "pmi_collocations",
         Map("text" -> textCol, "minCount" -> minCount, "k" -> k),
-        pk = Some(Seq("rank")),
-        pkVerified = true)
+        Unique("rank"))
 
     /** Deterministic weighted sample without replacement (A-ES): rank is
       * unique by the re-rank window over the k survivors. */
@@ -354,8 +361,7 @@ object PipelineSyntax {
       derived(mf, Corpus.weightedSample(mf.df, idCol, weightCol, k, salt),
         "weighted_sample",
         Map("id" -> idCol, "weight" -> weightCol, "k" -> k, "salt" -> salt),
-        pk = Some(Seq("rank")),
-        pkVerified = true)
+        Unique("rank"))
 
     /** Per-group weighted sample: (stratum, rank) unique by the per-group
       * window. */
@@ -367,8 +373,7 @@ object PipelineSyntax {
         "weighted_sample_by",
         Map("stratum" -> stratumCol, "id" -> idCol, "weight" -> weightCol,
             "kPerGroup" -> kPerGroup, "salt" -> salt),
-        pk = Some(Seq(stratumCol, "rank")),
-        pkVerified = true)
+        Unique(stratumCol, "rank"))
 
     /** [[qualityGate]] against a FROZEN pre-trained count table (e.g. a
       * `MetaPersist.readModel` artifact) — the stable ingestion bar. Same
@@ -378,8 +383,7 @@ object PipelineSyntax {
         minTokens: Long = 1L, maxTokens: Long = Long.MaxValue,
         maxTopNgramFrac: Double = 1.0, maxDupNgramFrac: Double = 1.0,
         maxAvgNll: Double = Double.MaxValue,
-        ngram: Int = 2, addK: Double = 1.0): MetaFrame = {
-      val parentKeyed = mf.primaryKey.contains(Seq(idCol))
+        ngram: Int = 2, addK: Double = 1.0): MetaFrame =
       derived(mf,
         Corpus.qualityGateAgainst(mf.df, counts.df, idCol, textCol, minTokens,
           maxTokens, maxTopNgramFrac, maxDupNgramFrac, maxAvgNll, ngram, addK),
@@ -388,10 +392,7 @@ object PipelineSyntax {
             "maxTokens" -> maxTokens, "maxTopNgramFrac" -> maxTopNgramFrac,
             "maxDupNgramFrac" -> maxDupNgramFrac, "maxAvgNll" -> maxAvgNll,
             "ngram" -> ngram, "addK" -> addK),
-        pk = if (parentKeyed) Some(Seq("id")) else None,
-        pkVerified = parentKeyed &&
-          mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
-    }
+        PerRow(Seq("id"), mf -> idCol))
 
     /** The ingestion micro-batch pipeline
       * ([[graft.streaming.Ingest.assembleMicroBatch]]) metadata-aware: one
@@ -403,8 +404,7 @@ object PipelineSyntax {
         maxTopNgramFrac: Double = 1.0, maxDupNgramFrac: Double = 1.0,
         maxAvgNll: Double = Double.MaxValue,
         minJaccard: Double = 0.8, shingleWidth: Int = 3, minShared: Long = 1L,
-        salt: String = "graft", trainPct: Int = 80, valPct: Int = 10): MetaFrame = {
-      val parentKeyed = mf.primaryKey.contains(Seq(idCol))
+        salt: String = "graft", trainPct: Int = 80, valPct: Int = 10): MetaFrame =
       derived(mf,
         graft.streaming.Ingest.assembleMicroBatch(mf.df, corpus.df, benchmark.df,
           lmCounts.df, idCol, textCol, sourceCol, langCol, minTokens, maxTokens,
@@ -417,24 +417,15 @@ object PipelineSyntax {
             "maxAvgNll" -> maxAvgNll, "minJaccard" -> minJaccard,
             "shingleWidth" -> shingleWidth, "minShared" -> minShared,
             "salt" -> salt, "trainPct" -> trainPct, "valPct" -> valPct),
-        pk = if (parentKeyed) Some(Seq("id")) else None,
-        pkVerified = parentKeyed &&
-          mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
-    }
+        PerRow(Seq("id"), mf -> idCol))
 
     /** Corpus version diff against a newer version: one row per id in
-      * either version (pk = id, set + verified — the full-outer join keys
-      * uniquely by id when both parents do). */
-    def diffAgainst(newer: MetaFrame, idCol: String, contentCol: String): MetaFrame = {
-      val bothKeyed = mf.primaryKey.contains(Seq(idCol)) &&
-        newer.primaryKey.contains(Seq(idCol))
+      * either version (pk = id when both versions are keyed by it — the
+      * full-outer join keys uniquely by id when both parents do). */
+    def diffAgainst(newer: MetaFrame, idCol: String, contentCol: String): MetaFrame =
       derived(mf, Corpus.corpusDiff(mf.df, newer.df, idCol, contentCol),
         "corpus_diff", Map("id" -> idCol, "content" -> contentCol),
-        pk = if (bothKeyed) Some(Seq("id")) else None,
-        pkVerified = bothKeyed &&
-          mf.metadata.get(MetaFrame.PkVerifiedField).contains(true) &&
-          newer.metadata.get(MetaFrame.PkVerifiedField).contains(true))
-    }
+        PerRow(Seq("id"), mf -> idCol, newer -> idCol))
 
     /** Deterministic corpus mixing: row SUBSET plus bucket/retain_pct
       * columns, so parent pk survives (verified-if-it-was). */
@@ -445,63 +436,46 @@ object PipelineSyntax {
         "corpus_mix",
         Map("id" -> idCol, "source" -> sourceCol, "salt" -> salt,
             "weights" -> weights, "defaultPct" -> defaultPct),
-        pk = mf.primaryKey,
-        pkVerified = mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
+        SameAsParent)
 
     /** Intra-doc repetition signals: one row per corpus ROW (same pk rule
       * as [[decontaminateAgainst]] — keyed by `id` exactly when the parent
       * was keyed by `idCol`). */
-    def repetitionStats(idCol: String, textCol: String, n: Int = 2): MetaFrame = {
-      val parentKeyed = mf.primaryKey.contains(Seq(idCol))
+    def repetitionStats(idCol: String, textCol: String, n: Int = 2): MetaFrame =
       derived(mf, Corpus.repetitionStats(mf.df, idCol, textCol, n),
         "repetition_stats",
         Map("id" -> idCol, "text" -> textCol, "n" -> n),
-        pk = if (parentKeyed) Some(Seq("id")) else None,
-        pkVerified = parentKeyed &&
-          mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
-    }
+        PerRow(Seq("id"), mf -> idCol))
 
     /** Cross-corpus repeated-block removal: one row per corpus ROW (pk rule
       * as above). */
     def dropRepeatedBlocks(
         idCol: String, textCol: String,
-        blockTokens: Int = 3, maxOccurrences: Int = 1): MetaFrame = {
-      val parentKeyed = mf.primaryKey.contains(Seq(idCol))
+        blockTokens: Int = 3, maxOccurrences: Int = 1): MetaFrame =
       derived(mf, Corpus.dropRepeatedBlocks(mf.df, idCol, textCol, blockTokens, maxOccurrences),
         "drop_repeated_blocks",
         Map("id" -> idCol, "text" -> textCol, "blockTokens" -> blockTokens,
             "maxOccurrences" -> maxOccurrences),
-        pk = if (parentKeyed) Some(Seq("id")) else None,
-        pkVerified = parentKeyed &&
-          mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
-    }
+        PerRow(Seq("id"), mf -> idCol))
 
     /** Corpus-trained unigram LM quality score: one row per corpus ROW (pk
       * rule as [[decontaminateAgainst]] — keyed by `id` exactly when the
       * parent was keyed by `idCol`). */
-    def lmScore(idCol: String, textCol: String, addK: Double = 1.0): MetaFrame = {
-      val parentKeyed = mf.primaryKey.contains(Seq(idCol))
+    def lmScore(idCol: String, textCol: String, addK: Double = 1.0): MetaFrame =
       derived(mf, Corpus.lmScore(mf.df, idCol, textCol, addK),
         "lm_score",
         Map("id" -> idCol, "text" -> textCol, "addK" -> addK),
-        pk = if (parentKeyed) Some(Seq("id")) else None,
-        pkVerified = parentKeyed &&
-          mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
-    }
+        PerRow(Seq("id"), mf -> idCol))
 
     /** Interpolated bigram LM quality score: one row per corpus ROW (pk
       * rule as [[decontaminateAgainst]]). */
     def lmScoreBigram(
         idCol: String, textCol: String,
-        addK: Double = 1.0, lambda: Double = 0.7): MetaFrame = {
-      val parentKeyed = mf.primaryKey.contains(Seq(idCol))
+        addK: Double = 1.0, lambda: Double = 0.7): MetaFrame =
       derived(mf, Corpus.lmScoreBigram(mf.df, idCol, textCol, addK, lambda),
         "lm_score_bigram",
         Map("id" -> idCol, "text" -> textCol, "addK" -> addK, "lambda" -> lambda),
-        pk = if (parentKeyed) Some(Seq("id")) else None,
-        pkVerified = parentKeyed &&
-          mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
-    }
+        PerRow(Seq("id"), mf -> idCol))
 
     /** Composite quality gate: one row per corpus ROW (pk rule as
       * [[decontaminateAgainst]]). */
@@ -509,8 +483,7 @@ object PipelineSyntax {
         idCol: String, textCol: String,
         minTokens: Long = 1L, maxTokens: Long = Long.MaxValue,
         maxTopNgramFrac: Double = 1.0, maxDupNgramFrac: Double = 1.0,
-        maxAvgNll: Double = Double.MaxValue): MetaFrame = {
-      val parentKeyed = mf.primaryKey.contains(Seq(idCol))
+        maxAvgNll: Double = Double.MaxValue): MetaFrame =
       derived(mf,
         Corpus.qualityGate(mf.df, idCol, textCol, minTokens, maxTokens,
           maxTopNgramFrac, maxDupNgramFrac, maxAvgNll),
@@ -518,24 +491,17 @@ object PipelineSyntax {
         Map("id" -> idCol, "text" -> textCol, "minTokens" -> minTokens,
             "maxTokens" -> maxTokens, "maxTopNgramFrac" -> maxTopNgramFrac,
             "maxDupNgramFrac" -> maxDupNgramFrac, "maxAvgNll" -> maxAvgNll),
-        pk = if (parentKeyed) Some(Seq("id")) else None,
-        pkVerified = parentKeyed &&
-          mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
-    }
+        PerRow(Seq("id"), mf -> idCol))
 
     /** TF-IDF top terms: one row per (doc, rank) — a row EXPANSION, so the
       * output is keyed by (id, rank) exactly when the parent was keyed by
       * `idCol`: ranks are unique within a doc by row_number construction,
       * so the parent's uniqueness proof extends to the pair. */
-    def tfidfTopTerms(idCol: String, textCol: String, k: Int = 3): MetaFrame = {
-      val parentKeyed = mf.primaryKey.contains(Seq(idCol))
+    def tfidfTopTerms(idCol: String, textCol: String, k: Int = 3): MetaFrame =
       derived(mf, Corpus.tfidfTopTerms(mf.df, idCol, textCol, k),
         "tfidf_top_terms",
         Map("id" -> idCol, "text" -> textCol, "k" -> k),
-        pk = if (parentKeyed) Some(Seq("id", "rank")) else None,
-        pkVerified = parentKeyed &&
-          mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
-    }
+        PerRow(Seq("id", "rank"), mf -> idCol))
 
     /** Per-group cap (top `cap` by score): row-SUBSET plus a rank column, so
       * parent pk survives (verified-if-it-was) — filtering can't introduce
@@ -544,8 +510,7 @@ object PipelineSyntax {
       derived(mf, Corpus.capPerGroup(mf.df, groupCol, scoreCol, idCol, cap),
         "cap_per_group",
         Map("group" -> groupCol, "score" -> scoreCol, "id" -> idCol, "cap" -> cap),
-        pk = mf.primaryKey,
-        pkVerified = mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
+        SameAsParent)
 
     /** End-to-end corpus assembly ([[Assembly.assembleCorpus]]): the full
       * gate → near-dedup → decontaminate → split → cap → shard-pack chain
@@ -561,8 +526,7 @@ object PipelineSyntax {
         maxAvgNll: Double = Double.MaxValue,
         minJaccard: Double = 0.8, shingleWidth: Int = 3, minShared: Long = 1L,
         salt: String = "graft", trainPct: Int = 80, valPct: Int = 10,
-        capPerSource: Int = Int.MaxValue, shardTokens: Long = 5000L): MetaFrame = {
-      val parentKeyed = mf.primaryKey.contains(Seq(idCol))
+        capPerSource: Int = Int.MaxValue, shardTokens: Long = 5000L): MetaFrame =
       derived(mf,
         Assembly.assembleCorpus(mf.df, benchmark.df, idCol, textCol, sourceCol, langCol,
           minTokens, maxTokens, maxTopNgramFrac, maxDupNgramFrac, maxAvgNll,
@@ -576,22 +540,13 @@ object PipelineSyntax {
             "shingleWidth" -> shingleWidth, "minShared" -> minShared,
             "salt" -> salt, "trainPct" -> trainPct, "valPct" -> valPct,
             "capPerSource" -> capPerSource, "shardTokens" -> shardTokens),
-        pk = if (parentKeyed) Some(Seq("id")) else None,
-        pkVerified = parentKeyed &&
-          mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
-    }
+        PerRow(Seq("id"), mf -> idCol))
 
-    /** Shared contract of the curation-era per-doc ops (one output row per
-      * input row, keyed by `id`): pk carries iff the parent was keyed on
-      * the id column, verified iff the parent's proof was. */
+    /** Shared contract of the curation-era per-doc ops: one output row per
+      * input row, keyed by `id` ([[PerRow]] on the id column). */
     private def perDoc(df: DataFrame, op: String, idCol: String,
-        params: Map[String, Any]): MetaFrame = {
-      val parentKeyed = mf.primaryKey.contains(Seq(idCol))
-      derived(mf, df, op, params,
-        pk = if (parentKeyed) Some(Seq("id")) else None,
-        pkVerified = parentKeyed &&
-          mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
-    }
+        params: Map[String, Any]): MetaFrame =
+      derived(mf, df, op, params, PerRow(Seq("id"), mf -> idCol))
 
     /** Corpus-wide line dedup (CCNet/RefinedWeb): one row per doc. */
     def lineDeduped(idCol: String, textCol: String, sep: String = "\n",
@@ -652,16 +607,12 @@ object PipelineSyntax {
       * position (shard, seq_id, start_in_seq) when the parent is keyed
       * (duplicate input ids would make the digest order ambiguous). */
     def packedSequences(idCol: String, textCol: String, seqLen: Int,
-        shardCol: String, salt: String = "pack"): MetaFrame = {
-      val parentKeyed = mf.primaryKey.contains(Seq(idCol))
+        shardCol: String, salt: String = "pack"): MetaFrame =
       derived(mf, Corpus.packSequences(mf.df, idCol, textCol, seqLen, shardCol, salt),
         "pack_sequences",
         Map("id" -> idCol, "text" -> textCol, "seqLen" -> seqLen,
             "shard" -> shardCol, "salt" -> salt),
-        pk = if (parentKeyed) Some(Seq("shard", "seq_id", "start_in_seq")) else None,
-        pkVerified = parentKeyed &&
-          mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
-    }
+        PerRow(Seq("shard", "seq_id", "start_in_seq"), mf -> idCol))
 
     /** BPE vocabulary training: the merge table keyed by rank
       * (`batchSize` merges per round; 1 is exact sequential BPE). */
@@ -671,7 +622,7 @@ object PipelineSyntax {
         "bpe_train",
         Map("text" -> textCol, "nMerges" -> nMerges, "batchSize" -> batchSize,
             "candidateWindow" -> candidateWindow),
-        pk = Some(Seq("merge_rank")))
+        Unique("merge_rank"))
 
     /** BPE segmentation against a trained merge table. */
     def bpeSegmented(merges: MetaFrame, idCol: String, textCol: String): MetaFrame =
@@ -725,16 +676,12 @@ object PipelineSyntax {
 
     /** Epoch-aware data-constrained mixing: row-preserving plan. */
     def epochMixed(idCol: String, sourceCol: String, salt: String,
-        budget: Long, maxEpochs: Int): MetaFrame = {
-      val parentKeyed = mf.primaryKey.contains(Seq(idCol))
+        budget: Long, maxEpochs: Int): MetaFrame =
       derived(mf, Corpus.epochMix(mf.df, idCol, sourceCol, salt, budget, maxEpochs),
         "epoch_mix",
         Map("id" -> idCol, "source" -> sourceCol, "salt" -> salt,
             "budget" -> budget, "maxEpochs" -> maxEpochs),
-        pk = if (parentKeyed) Some(Seq(idCol)) else None,
-        pkVerified = parentKeyed &&
-          mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
-    }
+        PerRow(Seq(idCol), mf -> idCol))
 
     /** Four-stage curation composite (line dedup → span decontamination →
       * OOV gate → epoch mix): one audit row per doc. */
@@ -751,8 +698,8 @@ object PipelineSyntax {
             "budget" -> budget, "maxEpochs" -> maxEpochs))
 
     /** Per-doc text-analysis annotation: adds token/quality/lang/fingerprint
-      * and PII-audit columns; row-preserving so existing pk metadata
-      * stands. */
+      * and PII-audit columns; row-preserving so the parent's key and proof
+      * stand. */
     def annotateText(textCol: String): MetaFrame = {
       val out = mf.df
         .withColumn("n_tokens", TextFunctions.tokenCount(col(textCol)))
@@ -760,10 +707,7 @@ object PipelineSyntax {
         .withColumn("lang_pred", TextFunctions.langId(col(textCol)))
         .withColumn("fingerprint", TextFunctions.fingerprint(col(textCol)))
         .withColumn("n_pii", TextFunctions.piiCount(col(textCol)))
-      derived(mf, out, "annotate_text", Map("text" -> textCol),
-        pk = mf.primaryKey, // row-preserving: pk carries over...
-        pkVerified = mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
-        // ...but "verified" only if the parent's proof was still standing
+      derived(mf, out, "annotate_text", Map("text" -> textCol), SameAsParent)
     }
 
     /** Incremental SemDeDup verdicts for this batch against a store under
@@ -819,8 +763,8 @@ object PipelineSyntax {
             "dropPct" -> dropPct, "maxCellSize" -> maxCellSize))
 
     /** IVF-blocked kNN graph: one row per (doc, rank ≤ k) — pk is the
-      * (id, rank) pair, set and verified (knnGraph emits each rank once
-      * per doc by construction). */
+      * (id, rank) pair, proven when the parent is proven on `idCol`
+      * (knnGraph emits each rank once per doc by construction). */
     def knnGraphOf(idCol: String, vecCol: String, centroids: MetaFrame,
         centroidIdCol: String, centroidVecCol: String, k: Int,
         maxCellNeighbors: Long = Dedup.DefaultMaxCellSize): MetaFrame =
@@ -830,9 +774,7 @@ object PipelineSyntax {
         "knn_graph",
         Map("id" -> idCol, "vec" -> vecCol, "k" -> k,
             "maxCellNeighbors" -> maxCellNeighbors),
-        pk = Some(Seq("id", "rank")),
-        pkVerified = mf.primaryKey.contains(Seq(idCol)) &&
-          mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
+        Claimed(Seq("id", "rank"), mf -> idCol))
 
     /** WIMBD-style per-source corpus profile: one row per source. */
     def corpusReported(idCol: String, textCol: String, sourceCol: String,
@@ -842,36 +784,27 @@ object PipelineSyntax {
         "corpus_report",
         Map("id" -> idCol, "text" -> textCol, "source" -> sourceCol,
             "lang" -> langCol),
-        pk = Some(Seq("source")),
-        pkVerified = true) // one row per source is the groupBy contract
+        Unique("source")) // one row per source is the groupBy contract
 
     // -------------------------------------------------- round-13 ops layer
 
     /** Gap-based sessionization: one row per event, keyed by event_id. */
     def sessionizedBy(userCol: String, tsCol: String, idCol: String,
-        gapSeconds: Long): MetaFrame = {
-      val parentKeyed = mf.primaryKey.contains(Seq(idCol))
+        gapSeconds: Long): MetaFrame =
       derived(mf, Events.sessionize(mf.df, userCol, tsCol, idCol, gapSeconds),
         "sessionize",
         Map("user" -> userCol, "ts" -> tsCol, "id" -> idCol, "gapSeconds" -> gapSeconds),
-        pk = if (parentKeyed) Some(Seq("event_id")) else None,
-        pkVerified = parentKeyed &&
-          mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
-    }
+        PerRow(Seq("event_id"), mf -> idCol))
 
     /** Incremental sessionization of this frame (the new batch) against a
       * [[Events.sessionStore]]: one row per batch event. */
     def sessionizedIncrementally(store: MetaFrame, userCol: String, tsCol: String,
-        idCol: String, gapSeconds: Long): MetaFrame = {
-      val parentKeyed = mf.primaryKey.contains(Seq(idCol))
+        idCol: String, gapSeconds: Long): MetaFrame =
       derived(mf,
         Events.sessionizeIncremental(mf.df, store.df, userCol, tsCol, idCol, gapSeconds),
         "sessionize_incremental",
         Map("user" -> userCol, "ts" -> tsCol, "id" -> idCol, "gapSeconds" -> gapSeconds),
-        pk = if (parentKeyed) Some(Seq("event_id")) else None,
-        pkVerified = parentKeyed &&
-          mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
-    }
+        PerRow(Seq("event_id"), mf -> idCol))
 
     /** Apply this frame as the next snapshot onto an SCD2 history: no
       * uniqueness claim — (id, valid_from) is unique only under the pk
@@ -882,7 +815,7 @@ object PipelineSyntax {
         Corpus.scd2Apply(dim.df, mf.df, idCol, compareCols, version),
         "scd2_apply",
         Map("id" -> idCol, "compare" -> compareCols.mkString(","), "version" -> version),
-        pk = None)
+        NoKey)
 
     /** Per-session rollup: one row per (user, session) — groupBy contract. */
     def sessionStatsOf(userCol: String, tsCol: String, idCol: String,
@@ -892,8 +825,7 @@ object PipelineSyntax {
         "session_stats",
         Map("user" -> userCol, "ts" -> tsCol, "id" -> idCol,
             "type" -> typeCol, "gapSeconds" -> gapSeconds),
-        pk = Some(Seq("user_id", "session_idx")),
-        pkVerified = true)
+        Unique("user_id", "session_idx"))
 
     /** Ordered funnel: one row per user — groupBy contract. */
     def funnelOf(userCol: String, tsCol: String, typeCol: String,
@@ -903,8 +835,7 @@ object PipelineSyntax {
         "funnel",
         Map("user" -> userCol, "ts" -> tsCol, "type" -> typeCol,
             "steps" -> steps.mkString(">"), "maxStepEventsPerUser" -> maxStepEventsPerUser),
-        pk = Some(Seq("user_id")),
-        pkVerified = true)
+        Unique("user_id"))
 
     /** Journey-scoped conversion attribution: one row per conversion —
       * journeys hold at most one conversion by construction. */
@@ -918,8 +849,7 @@ object PipelineSyntax {
         Map("user" -> userCol, "ts" -> tsCol, "id" -> idCol,
             "type" -> typeCol, "conversion" -> conversionType,
             "touches" -> touchTypes.mkString(",")),
-        pk = Some(Seq("conversion_id")),
-        pkVerified = true)
+        Unique("conversion_id"))
 
     /** Incremental attribution against an O(users) store: one row per
       * batch conversion. */
@@ -933,8 +863,7 @@ object PipelineSyntax {
         Map("user" -> userCol, "ts" -> tsCol, "id" -> idCol,
             "type" -> typeCol, "conversion" -> conversionType,
             "touches" -> touchTypes.mkString(",")),
-        pk = Some(Seq("conversion_id")),
-        pkVerified = true)
+        Unique("conversion_id"))
 
     /** Top user-journey paths: rank is unique by the re-rank window. */
     def topPathsOf(userCol: String, tsCol: String, idCol: String,
@@ -944,8 +873,7 @@ object PipelineSyntax {
         "top_paths",
         Map("user" -> userCol, "ts" -> tsCol, "id" -> idCol,
             "type" -> typeCol, "depth" -> depth, "k" -> k),
-        pk = Some(Seq("rank")),
-        pkVerified = true)
+        Unique("rank"))
 
     /** Session-scoped top paths: rank is unique by the re-rank window. */
     def topPathsBySessionOf(userCol: String, tsCol: String, idCol: String,
@@ -958,8 +886,7 @@ object PipelineSyntax {
         Map("user" -> userCol, "ts" -> tsCol, "id" -> idCol,
             "type" -> typeCol, "gapSeconds" -> gapSeconds,
             "depth" -> depth, "k" -> k),
-        pk = Some(Seq("rank")),
-        pkVerified = true)
+        Unique("rank"))
 
     /** Markov transition matrix: one row per (src, dst) — groupBy contract. */
     def transitionsOf(userCol: String, tsCol: String, idCol: String,
@@ -968,8 +895,7 @@ object PipelineSyntax {
         Events.transitions(mf.df, userCol, tsCol, idCol, typeCol),
         "transitions",
         Map("user" -> userCol, "ts" -> tsCol, "id" -> idCol, "type" -> typeCol),
-        pk = Some(Seq("src_type", "dst_type")),
-        pkVerified = true)
+        Unique("src_type", "dst_type"))
 
     /** PSI drift vs a reference frame: one row per bucket. */
     def driftPsiAgainst(reference: MetaFrame, valueCol: String,
@@ -977,8 +903,7 @@ object PipelineSyntax {
       derived(mf, Checks.driftPsi(reference.df, mf.df, valueCol, buckets),
         "drift_psi",
         Map("value" -> valueCol, "buckets" -> buckets),
-        pk = Some(Seq("bucket")),
-        pkVerified = true)
+        Unique("bucket"))
 
     /** Embedding centroid drift vs a reference frame: one row per label
       * (full-outer over both sides' label sets). */
@@ -989,8 +914,7 @@ object PipelineSyntax {
           labelCol, vecCol, dim),
         "centroid_drift",
         Map("label" -> labelCol, "vec" -> vecCol, "dim" -> dim),
-        pk = Some(Seq("label")),
-        pkVerified = true)
+        Unique("label"))
 
     /** Categorical PSI drift vs a reference frame: one row per domain
       * label. */
@@ -1000,8 +924,7 @@ object PipelineSyntax {
         Checks.driftPsiCategorical(reference.df, mf.df, catCol, maxCategories),
         "drift_psi_cat",
         Map("cat" -> catCol, "maxCategories" -> maxCategories),
-        pk = Some(Seq("category")),
-        pkVerified = true)
+        Unique("category"))
 
     /** MAD outlier flags: row-preserving, parent pk survives. */
     def outliersMadOf(groupCol: String, valueCol: String,
@@ -1009,8 +932,7 @@ object PipelineSyntax {
       derived(mf, Checks.outliersMad(mf.df, groupCol, valueCol, k),
         "outliers_mad",
         Map("group" -> groupCol, "value" -> valueCol, "k" -> k),
-        pk = mf.primaryKey,
-        pkVerified = mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
+        SameAsParent)
 
     /** Join-key skew report: rank is unique by the re-rank window. */
     def skewReportOf(keyCol: String, k: Int = 20,
@@ -1018,8 +940,7 @@ object PipelineSyntax {
       derived(mf, Checks.skewReport(mf.df, keyCol, k, targetPartitions),
         "skew_report",
         Map("key" -> keyCol, "k" -> k, "targetPartitions" -> targetPartitions),
-        pk = Some(Seq("rank")),
-        pkVerified = true)
+        Unique("rank"))
 
     /** Daily volume anomaly scores: one row per (type, day) — groupBy
       * contract. */
@@ -1031,46 +952,36 @@ object PipelineSyntax {
         "daily_anomalies",
         Map("ts" -> tsCol, "type" -> typeCol, "window" -> window,
             "minPrior" -> minPrior, "thresholdMicro" -> thresholdMicro),
-        pk = Some(Seq("event_type", "day")),
-        pkVerified = true)
+        Unique("event_type", "day"))
 
     /** Data-quality constraint verdicts: one row per constraint. The
-      * check_name pk holds only when the declared ids are distinct (two
-      * constraints of the same kind on the same column share an id). */
+      * check_name pk is claimed only when the declared ids are distinct
+      * (two constraints of the same kind on the same column share an id)
+      * and is never proven. */
     def checked(constraints: Seq[Checks.Constraint]): MetaFrame = {
       val ids = constraints.map(c => Checks.meta(c)._1)
       derived(mf, Checks.check(mf.df, constraints),
         "dq_check", Map("constraints" -> ids.mkString("; ")),
-        pk = if (ids.distinct.length == ids.length) Some(Seq("check_name")) else None,
-        pkVerified = false) // ids can collide across differing bounds
+        if (ids.distinct.length == ids.length) Claimed(Seq("check_name")) else NoKey)
     }
 
     /** Snapshot diff against a second snapshot (one row per id in either
-      * side; unique iff BOTH snapshots were verified-unique on the id). */
+      * side; keyed when both snapshots are keyed on the id, proven when
+      * both are proven). */
     def snapshotDiffAgainst(newer: MetaFrame, idCol: String,
-        compareCols: Seq[String]): MetaFrame = {
-      val bothKeyed = mf.primaryKey.contains(Seq(idCol)) &&
-        newer.primaryKey.contains(Seq(idCol))
+        compareCols: Seq[String]): MetaFrame =
       derived(mf, Corpus.snapshotDiff(mf.df, newer.df, idCol, compareCols),
         "snapshot_diff",
         Map("id" -> idCol, "compare" -> compareCols.mkString(",")),
-        pk = if (bothKeyed) Some(Seq("id")) else None,
-        pkVerified = bothKeyed &&
-          mf.metadata.get(MetaFrame.PkVerifiedField).contains(true) &&
-          newer.metadata.get(MetaFrame.PkVerifiedField).contains(true))
-    }
+        PerRow(Seq("id"), mf -> idCol, newer -> idCol))
 
     /** Canary scan: one row per leaking (doc, canary) pair. */
     def canaryScanned(idCol: String, textCol: String,
-        canaries: Seq[String]): MetaFrame = {
-      val parentKeyed = mf.primaryKey.contains(Seq(idCol))
+        canaries: Seq[String]): MetaFrame =
       derived(mf, Corpus.canaryScan(mf.df, idCol, textCol, canaries),
         "canary_scan",
         Map("id" -> idCol, "text" -> textCol, "canaries" -> canaries.mkString(",")),
-        pk = if (parentKeyed) Some(Seq("id", "canary")) else None,
-        pkVerified = parentKeyed &&
-          mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
-    }
+        PerRow(Seq("id", "canary"), mf -> idCol))
 
     /** Integer PageRank over this frame as an edge list: one row per
       * node — the distinct-nodes contract. */
@@ -1081,8 +992,7 @@ object PipelineSyntax {
         "pagerank_int",
         Map("src" -> srcCol, "dst" -> dstCol, "iterations" -> iterations,
             "dampingMicro" -> dampingMicro),
-        pk = Some(Seq("id")),
-        pkVerified = true)
+        Unique("id"))
 
     /** Train the hashed-bag-of-words logistic quality model on this
       * frame's labels: one row per model feature (bias at f = -1). */
@@ -1093,21 +1003,16 @@ object PipelineSyntax {
         "logistic_train",
         Map("id" -> idCol, "text" -> textCol, "label" -> labelCol,
             "dim" -> dim, "iters" -> iters, "lrMicro" -> lrMicro),
-        pk = Some(Seq("f")),
-        pkVerified = true) // full-outer on f keeps the model unique per feature
+        Unique("f")) // full-outer on f keeps the model unique per feature
 
     /** Score this frame under a trained logistic model: one row per doc. */
     def logisticScored(model: MetaFrame, idCol: String, textCol: String,
-        dim: Int = 256): MetaFrame = {
-      val parentKeyed = mf.primaryKey.contains(Seq(idCol))
+        dim: Int = 256): MetaFrame =
       derived(mf,
         Classifier.scoreLogistic(mf.df, idCol, textCol, model.df, dim),
         "logistic_score",
         Map("id" -> idCol, "text" -> textCol, "dim" -> dim),
-        pk = if (parentKeyed) Some(Seq("id")) else None,
-        pkVerified = parentKeyed &&
-          mf.metadata.get(MetaFrame.PkVerifiedField).contains(true))
-    }
+        PerRow(Seq("id"), mf -> idCol))
 
     /** BM25 top-k per query: one row per (query, rank) — TopKAgg emits
       * each rank once per query by construction. */
@@ -1119,8 +1024,7 @@ object PipelineSyntax {
           queryTextCol, k, k1, b),
         "bm25_topk",
         Map("id" -> idCol, "text" -> textCol, "k" -> k, "k1" -> k1, "b" -> b),
-        pk = Some(Seq("query_id", "rank")),
-        pkVerified = true)
+        Unique("query_id", "rank"))
 
     /** BM25 with pseudo-relevance-feedback expansion: one row per
       * (query, rank) — TopKAgg contract like [[bm25TopKOf]]. */
@@ -1134,8 +1038,7 @@ object PipelineSyntax {
         "bm25_expanded_topk",
         Map("id" -> idCol, "text" -> textCol, "k" -> k,
             "fbDocs" -> fbDocs, "fbTerms" -> fbTerms, "k1" -> k1, "b" -> b),
-        pk = Some(Seq("query_id", "rank")),
-        pkVerified = true)
+        Unique("query_id", "rank"))
 
     /** Ranking evaluation against a qrels table: one row per query —
       * groupBy contract. */
@@ -1148,8 +1051,7 @@ object PipelineSyntax {
         "eval_ranking",
         Map("k" -> k, "queryId" -> queryIdCol, "id" -> idCol,
             "rank" -> rankCol, "rel" -> relCol),
-        pk = Some(Seq("query_id")),
-        pkVerified = true)
+        Unique("query_id"))
 
     /** Reciprocal-rank fusion of this ranked list with `others` (hybrid
       * retrieval): one row per (query, rank) by construction of the
@@ -1162,7 +1064,6 @@ object PipelineSyntax {
           queryIdCol, idCol, rankCol),
         "rrf_fuse",
         Map("k" -> k, "k0" -> k0, "lists" -> (others.size + 1)),
-        pk = Some(Seq("query_id", "rank")),
-        pkVerified = true)
+        Unique("query_id", "rank"))
   }
 }

@@ -43,7 +43,7 @@ object MetaPersist {
   /** Writes just the sidecar for an output directory that already exists (or
     * is being produced by a streaming file sink). */
   def writeSidecar(path: String, metadata: Map[String, Any]): Unit = {
-    val entries = (metadata - MetaFrame.PkVerifiedField).map {
+    val entries = MetaFrame.withoutProof(metadata).map {
       case (k, v: Seq[_]) =>
         s""""${esc(k)}": [${v.map(x => s""""${esc(x.toString)}"""").mkString(", ")}]"""
       case (k, v) => s""""${esc(k)}": "${esc(String.valueOf(v))}""""

@@ -255,6 +255,37 @@ class MetaFrameSpec extends AnyFunSuite {
     assert(withMd.dropDuplicates(Seq("k")).df eq withMd.df) // elision still proven
   }
 
+  test("a hand-set primary key is a claim: changing it drops the proof, keeping it does not") {
+    import spark.implicits._
+    val proven = MetaFrame(Seq(("a", 1L), ("b", 1L)).toDF("k", "v"), Map.empty)
+      .dropDuplicates(Seq("k"))
+    // v repeats, so a dedup on it must really run after the key is moved there
+    val moved = proven.withPrimaryKey(Seq("v"))
+    assert(moved.primaryKey.contains(Seq("v")))
+    assert(moved.dropDuplicates(Seq("v")).count() == 1L)
+    assert(proven.setMetadata(MetaFrame.PrimaryKeyField -> Seq("v"))
+      .dropDuplicates(Seq("v")).count() == 1L)
+    // other entries, or the same key again, leave the proof standing
+    val tagged = proven.setMetadata("owner" -> "spec").withPrimaryKey(Seq("k"))
+    assert(tagged.dropDuplicates(Seq("k")).df eq tagged.df)
+  }
+
+  test("a column renamed onto a pk name, or a sample with replacement, is not proven unique") {
+    import spark.implicits._
+    val proven = MetaFrame(Seq((1L, 7L), (2L, 7L)).toDF("a", "b"), Map.empty)
+      .dropDuplicates(Seq("a"))
+    val swapped = proven.withColumnRenamed("a", "t").withColumnRenamed("b", "a")
+    assert(swapped.dropDuplicates(Seq("a")).count() == 1L)
+    assert(proven.drop("a").withColumnsRenamed(Map("b" -> "a"))
+      .dropDuplicates(Seq("a")).count() == 1L)
+    val resampled = proven.sample(true, 3.0, 7L)
+    assert(resampled.dropDuplicates(Seq("a")).count() == resampled.df.dropDuplicates(Seq("a")).count())
+    assert(!(resampled.dropDuplicates(Seq("a")).df eq resampled.df))
+    // renaming or dropping another column, or sampling without replacement, keeps the proof
+    val kept = proven.withColumnRenamed("b", "c").drop("c").sample(false, 0.5, 7L)
+    assert(kept.dropDuplicates(Seq("a")).df eq kept.df)
+  }
+
   test("overload forwarders: localCheckpoint(eager), observe(Observation), show int-truncate") {
     val mf = MetaFrame(fixture, metadata)
     // lazy local checkpoint keeps metadata and truncates lineage on action

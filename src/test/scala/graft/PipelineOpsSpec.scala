@@ -861,12 +861,71 @@ class PipelineOpsSpec extends AnyFunSuite {
     import spark.implicits._
     val batch = MetaFrame(
       Seq((20L, "the quick brown fox jumps over the lazy dog near the quiet river bank today"))
-        .toDF("doc_id", "text"), Map.empty)
+        .toDF("doc_id", "text"), Map.empty).dropDuplicates(Seq("doc_id"))
     val inc = batch.dedupIncremental(mf, "doc_id", "text")
     assert(inc.metadata("lineage").asInstanceOf[Seq[Map[String, Any]]]
       .map(_("op")) == Seq("dedup_incremental"))
     assert(inc.primaryKey.contains(Seq("id")))
     assert(inc.dropDuplicates(Seq("id")).df eq inc.df) // proof survives
+  }
+
+  test("PipelineSyntax: fuzzy, entity and incremental-dedup keys are proven only by a proven id") {
+    import graft.operators.PipelineSyntax._
+    import spark.implicits._
+    // id 1 twice with different texts; every text is within 2 edits of the others
+    val base = "the quick brown fox jumps over the lazy dog"
+    val left = MetaFrame(Seq((1L, base), (1L, base.replace("dog", "dot")),
+      (2L, base.replace("dog", "dig"))).toDF("doc_id", "text"), Map.empty)
+    val right = MetaFrame(Seq((7L, base), (7L, base.replace("fox", "fix")))
+      .toDF("oid", "otext"), Map.empty)
+    val corpus = MetaFrame(docs, Map.empty)
+    val verbs: Seq[(String, Seq[String], (MetaFrame, MetaFrame) => MetaFrame)] = Seq(
+      ("fuzzyEditPairs", Seq("id_a", "id_b"), (l, _) => l.fuzzyEditPairs("doc_id", "text", 2)),
+      ("fuzzyEditJoin", Seq("id_a", "id_b"),
+        (l, r) => l.fuzzyEditJoin("doc_id", "text", r, "oid", "otext", 2)),
+      ("entityResolved", Seq("doc_id"), (l, _) => l.entityResolved("doc_id", "text", 2)),
+      ("dedupIncremental", Seq("id"), (l, _) => l.dedupIncremental(corpus, "doc_id", "text")))
+    verbs.foreach { case (name, pk, verb) =>
+      val out = verb(left, right)
+      assert(out.primaryKey.contains(pk), s"$name claims ${out.primaryKey}")
+      val keys = out.df.dropDuplicates(pk).count()
+      assert(out.df.count() > keys, s"$name: the fixture must repeat an output key")
+      assert(out.dropDuplicates(pk).count() == keys, s"$name: dedup on the claimed key was skipped")
+      val proven = verb(left.dropDuplicates(Seq("doc_id")), right.dropDuplicates(Seq("oid")))
+      assert(proven.primaryKey.contains(pk), name)
+      assert(proven.dropDuplicates(pk).df eq proven.df, s"$name: a proven id must still elide")
+    }
+  }
+
+  test("PipelineSyntax: unique-by-construction keys hold on duplicate-id input") {
+    import graft.operators.PipelineSyntax._
+    import spark.implicits._
+    val dupDocs = MetaFrame(docs.union(docs.filter(col("doc_id") === 1L)), Map.empty)
+    val baskets = MetaFrame(Seq((1L, "a"), (1L, "a"), (1L, "b"), (2L, "a"), (2L, "b"), (2L, "b"))
+      .toDF("basket", "item"), Map.empty)
+    val edges = MetaFrame(Seq((1L, 2L), (1L, 2L), (2L, 3L), (3L, 1L), (3L, 1L)).toDF("s", "t"),
+      Map.empty)
+    val queries = MetaFrame(Seq((9L, "quick fox"), (9L, "query engines")).toDF("qid", "qtext"),
+      Map.empty)
+    val ranked = MetaFrame(Seq((9L, 1L, 1L), (9L, 2L, 1L), (9L, 3L, 2L)).toDF("query_id", "rank",
+      "doc_id"), Map.empty)
+    val other = MetaFrame(Seq((9L, 1L, 2L), (9L, 2L, 2L)).toDF("query_id", "rank", "doc_id"),
+      Map.empty)
+    val verbs: Seq[(String, Seq[String], () => MetaFrame)] = Seq(
+      ("dedupMinHash", Seq("doc_id"), () => dupDocs.dedupMinHash("doc_id", "text")),
+      ("coOccurrenceOf", Seq("item_a", "item_b"), () => baskets.coOccurrenceOf("basket", "item")),
+      ("trianglesOf", Seq("id"), () => edges.trianglesOf("s", "t")),
+      ("pageRankedInt", Seq("id"), () => edges.pageRankedInt("s", "t", iterations = 2)),
+      ("bm25TopKOf", Seq("query_id", "rank"),
+        () => dupDocs.bm25TopKOf("doc_id", "text", queries, "qid", "qtext", k = 3)),
+      ("rrfFuseWith", Seq("query_id", "rank"), () => ranked.rrfFuseWith(Seq(other), k = 3)))
+    verbs.foreach { case (name, pk, verb) =>
+      val out = verb()
+      assert(out.primaryKey.contains(pk), s"$name claims ${out.primaryKey}")
+      assert(out.dropDuplicates(pk).df eq out.df, s"$name: the key is proven by construction")
+      val rows = out.df.count()
+      assert(rows > 0 && rows == out.df.dropDuplicates(pk).count(), s"$name repeats a key")
+    }
   }
 
   test("PipelineSyntax: corpus-assembly ops record lineage and pk semantics") {

@@ -605,8 +605,9 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import java.nio.file.Files
     val base = Files.createDirectories(java.nio.file.Paths.get("target/streaming_spec"))
-    val out = base.resolve("sink_out").toString
-    val ckpt = base.resolve("sink_ckpt_" + System.nanoTime()).toString
+    val run = System.nanoTime()
+    val out = base.resolve("sink_out_" + run).toString
+    val ckpt = base.resolve("sink_ckpt_" + run).toString
     val ms = MemoryStream[Event](spark)
     ms.addData(Event(1L, ts(1), 100L, "click", 1.0), Event(2L, ts(2), 100L, "buy", 2.0))
     val mf = MetaFrame(ms.toDF(), Map("pipeline" -> "events", "primary_key" -> Seq("event_id")))
