@@ -6,10 +6,22 @@
 # the round-10 TIMESTAMP_NTZ ClassCastException five hours before the
 # driver's sf0.1 run did.
 #
+# graft.Bench writes its full result to BENCH_OUT.json in the repository
+# root; the gate puts back whatever file was there before, so a gate run
+# leaves the working tree as it found it.
+#
 # Usage: scripts/bench_gate.sh [sf_dir]   (default /root/testdata/sf0.001)
 set -u
 SF_DIR="${1:-/root/testdata/sf0.001}"
-OUT=$(cd "$(dirname "$0")/.." && \
+ROOT=$(cd "$(dirname "$0")/.." && pwd)
+SAVED=$(mktemp)
+if [ -f "$ROOT/BENCH_OUT.json" ]; then
+  cp "$ROOT/BENCH_OUT.json" "$SAVED"
+  trap 'mv "$SAVED" "$ROOT/BENCH_OUT.json"' EXIT
+else
+  trap 'rm -f "$SAVED" "$ROOT/BENCH_OUT.json"' EXIT
+fi
+OUT=$(cd "$ROOT" && \
   SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
   sbt -batch "runMain graft.Bench" 2>&1)
 RC=$?

@@ -433,7 +433,9 @@ object Checks {
   /** Frozen chi-square baseline: one row per domain label — (category,
     * ref_cnt, ref_n). The O(labels) table a streaming monitor
     * (`Streams.eachBatch` over [[scoreChi2Against]]) broadcasts against
-    * each micro-batch; persist and rebuild on the reference's cadence. */
+    * each micro-batch; persist and rebuild on the reference's cadence.
+    * Lazy: building it runs no Spark job (the categorical drift pair pins
+    * the whole baseline once). */
   def chi2Baseline(
       reference: DataFrame,
       catCol: String,
@@ -441,15 +443,14 @@ object Checks {
     require(maxCategories >= 1, "maxCategories must be at least 1")
     val s = reference.sparkSession
     import s.implicits._
-    // r18: pinned domain + window-sum total (grid and labelOntoDomain
-    // both read `top`; ref_n is the exact sum of the label counts since
-    // every row maps onto exactly one grid label)
-    val top = Materialize.pin(reference.filter(col(catCol).isNotNull)
+    // window-sum total: ref_n is the exact sum of the label counts since
+    // every row maps onto exactly one grid label
+    val top = reference.filter(col(catCol).isNotNull)
       .groupBy(col(catCol).cast("string").as("category"))
       .agg(count(lit(1)).as("__cnt"))
       .orderBy(col("__cnt").desc, col("category").asc)
       .limit(maxCategories)
-      .select("category"))
+      .select("category")
     val grid = top.union(Seq("__other__", "__null__").toDF("category"))
     grid
       .join(labelOntoDomain(reference, catCol, top, "ref_cnt"), Seq("category"), "left")

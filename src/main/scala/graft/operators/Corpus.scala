@@ -292,91 +292,12 @@ object Corpus {
   }
 
   /** The distinct w-token shingle set of a text column as rolled 64-bit
-    * hashes — the representation shared by [[decontaminate]],
-    * [[decontaminateBloom]], and the dedup family. */
+    * hashes — the representation shared by [[decontaminate]] and the
+    * dedup family. */
   private def shingleSetCol(textCol: String, shingleWidth: Int): Column =
     array_distinct(graft.expressions.MinHashSignature.shingleHashes(
       transform(graft.functions.TextFunctions.tokens(col(textCol)), t => xxhash64(t)),
       shingleWidth))
-
-  /** [[decontaminate]]'s 100 TB-broadcast scale path: IDENTICAL output (one
-    * row per corpus doc, same counts, same flags — the declared query
-    * shares [[decontaminate]]'s exact oracle), different candidate plumbing.
-    *
-    * The exact operator broadcasts the full distinct benchmark shingle-hash
-    * set to every task — at a 100M-shingle eval suite that is a ~800 MB
-    * exact broadcast. Here the benchmark side instead aggregates into ONE
-    * Bloom filter binary (Spark's `BloomFilterAggregate`, delivered to
-    * executors as a scalar-subquery literal — the same mechanism as Spark's
-    * own runtime join filters): ~1.1 GB of exact set becomes
-    * `-n·ln(fpp)/ln²2` BITS (e.g. 100M shingles at 3% fpp ≈ 87 MB), and the
-    * corpus-side prefilter is one row-local `might_contain` probe that
-    * drops ~(1−fpp) of the non-matching shingle stream before anything
-    * shuffles. Bloom filters have NO false negatives, so the prefilter
-    * loses nothing; the surviving sliver (true matches + fpp stragglers)
-    * then confirms against the exact benchmark set with a plain equi-join —
-    * which AQE sizes off the post-filter statistics (broadcast when tiny,
-    * shuffle when not; at 100 TB the confirm join shuffles only the
-    * surviving (id, hash) pairs, never text, never the full corpus shingle
-    * stream). False positives die in the confirm join, which is why the
-    * output is bit-identical to [[decontaminate]] at ANY fpp — the dial
-    * trades prefilter selectivity against filter size, not correctness.
-    *
-    * `expectedShingles` sizes the filter for the DISTINCT benchmark shingle
-    * count; undersizing degrades fpp (more confirm-join traffic), never
-    * correctness. `numBits` is clamped to Spark's
-    * `spark.sql.optimizer.runtime.bloomFilter.maxNumBits` ceiling by the
-    * aggregate itself. The benchmark side tokenizes twice (once into the
-    * bloom subquery, once into the confirm set) — the benchmark is tiny by
-    * this operator's contract, and keeping both derivations lazy beats
-    * forcing an eager checkpoint at operator-construction time.
-    */
-  def decontaminateBloom(
-      corpus: DataFrame,
-      benchmark: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleWidth: Int = 3,
-      minShared: Long = 1L,
-      expectedShingles: Long = 4L * 1000 * 1000,
-      fpp: Double = 0.03): DataFrame = {
-    require(minShared >= 1, "minShared must be at least 1")
-    require(expectedShingles >= 1, "expectedShingles must be at least 1")
-    require(fpp > 0.0 && fpp < 1.0, "fpp must be in (0, 1)")
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, ScalarSubquery}
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.graftbridge
-
-    val shingleSet = shingleSetCol(textCol, shingleWidth)
-    val benchShingles = benchmark.select(explode(shingleSet).as("s")).distinct()
-    val numBits = math.max(64L,
-      math.ceil(-expectedShingles.toDouble * math.log(fpp) / (math.log(2) * math.log(2))).toLong)
-    val bloomDf = benchShingles.agg(
-      graftbridge.toColumn(new BloomFilterAggregate(
-          graftbridge.toExpression(col("s")),
-          Literal(expectedShingles), Literal(numBits))
-        .toAggregateExpression()).as("bf"))
-    val mightContain = graftbridge.toColumn(BloomFilterMightContain(
-      ScalarSubquery(bloomDf.queryExecution.analyzed),
-      graftbridge.toExpression(col("s"))))
-
-    val candidates = corpus
-      .select(col(idCol).as("id"), explode(shingleSet).as("s"))
-      .filter(mightContain)
-    // exact confirm: false positives die here; no broadcast() hint — AQE
-    // sizes the join off the post-prefilter statistics
-    val shared = candidates
-      .join(benchShingles, Seq("s"))
-      .groupBy("id")
-      .agg(count(lit(1)).as("n_shared_shingles"))
-      .withColumnRenamed("id", "__shared_id")
-    corpus.select(col(idCol).as("id"))
-      .join(shared, col("id") <=> col("__shared_id"), "left")
-      .select(
-        col("id"),
-        coalesce(col("n_shared_shingles"), lit(0L)).as("n_shared_shingles"),
-        (coalesce(col("n_shared_shingles"), lit(0L)) >= minShared).as("contaminated"))
-  }
 
   /** The md5 hex-prefix bucket shared by [[hashSplit]] and [[mixSources]]:
     * (first 8 hex chars of md5(id ":" salt)) mod 100 — a pure row-local

@@ -144,15 +144,15 @@ object Dedup {
     * `array_union` additionally materialized the merged array just to
     * take its size. Bit-identical result (integer arithmetic on exact
     * set sizes), measurably cheaper on every candidate-confirm path. */
-  private[graft] def setJaccard(a: Column, b: Column): Column = {
+  private def setJaccard(a: Column, b: Column): Column = {
     val inter = size(array_intersect(a, b)).cast("double")
     val uni = (size(a) + size(b)).cast("double") - inter
     when(uni === 0.0, 0.0).otherwise(inter / uni)
   }
 
   /** (id, distinct rolled-shingle-hash set) projection shared by the
-    * confirm step below and the streaming variant. */
-  private[graft] def shingleSets(
+    * confirm step below and [[winnowNearDup]]. */
+  private def shingleSets(
       df: DataFrame, idCol: String, textCol: String, shingleWidth: Int, out: String): DataFrame =
     df.select(
       col(idCol).as(out),
@@ -162,9 +162,9 @@ object Dedup {
   /** Exact-Jaccard confirmation of (batch_id, corpus_id) candidate pairs:
     * row-local set arithmetic on rolled shingle hashes, quadratic work
     * confined to the candidate set. Returns pairs with `jaccard` ≥
-    * `minJaccard`. Shared by [[incrementalNearDup]] and the streaming
-    * variant in `graft.streaming.Streams`. */
-  private[graft] def confirmedMatches(
+    * `minJaccard`. Shared by [[incrementalNearDup]] and
+    * [[winnowIncremental]]. */
+  private def confirmedMatches(
       cand: DataFrame, batch: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String, shingleWidth: Int, minJaccard: Double): DataFrame =
     confirmedMatchesFromSets(cand,
@@ -177,7 +177,7 @@ object Dedup {
     * shingle each document ONCE instead of once per join side: `bSets`
     * must carry (b_id, b_id_sh), `cSets` (c_id, c_id_sh), both as
     * [[shingleSets]] produces them. */
-  private[graft] def confirmedMatchesFromSets(
+  private def confirmedMatchesFromSets(
       cand: DataFrame, bSets: DataFrame, cSets: DataFrame,
       minJaccard: Double): DataFrame =
     cand
@@ -1277,9 +1277,23 @@ object Dedup {
     // O((batch + store) × dim) executor-local bytes (full vector columns),
     // ContextCleaner-reclaimed (see [[Materialize.pin]]).
     val b = Materialize.pin(assignCells(batch, idCol, vecCol, cents, "id", "__bv"))
-    val store = cappedCellStore(
-      Materialize.pin(assignCells(corpus, idCol, vecCol, cents, "corpus_id", "__cv")),
-      maxCellStore)
+    val assigned = Materialize.pin(assignCells(corpus, idCol, vecCol, cents, "corpus_id", "__cv"))
+    // the maxCellStore cap, count-gated: only oversized cells pay the
+    // ranking window
+    val store =
+      if (maxCellStore == Exact) assigned.select("cell", "corpus_id", "__cv")
+      else {
+        val counts = assigned.groupBy("cell").agg(count(lit(1)).as("__n"))
+        val withN = assigned.join(broadcast(counts), Seq("cell"))
+        val small = withN.filter(col("__n") <= maxCellStore)
+          .select("cell", "corpus_id", "__cv")
+        val w = Window.partitionBy(col("cell")).orderBy(desc("cent_cos"), asc("corpus_id"))
+        val capped = withN.filter(col("__n") > maxCellStore)
+          .withColumn("__rk", row_number().over(w))
+          .filter(col("__rk") <= maxCellStore)
+          .select("cell", "corpus_id", "__cv")
+        small.union(capped)
+      }
     val matched = b.select(col("id").as("__bid"), col("cell"), col("__bv"))
       .join(store, Seq("cell"))
       .withColumn("__cos", cosine(col("__bv"), col("__cv")))
@@ -1294,9 +1308,9 @@ object Dedup {
 
   /** Row-local best-cell assignment against a broadcast 1-row centroid
     * array ([[Similarity.centroidArray]]): (idOut, vecOut, cell,
-    * cent_cos), cent_cos rounded to 6 places. Shared by [[semanticDedup]],
-    * [[semanticDedupIncremental]] and `Streams.semanticDedupStream`. */
-  private[graft] def assignCells(
+    * cent_cos), cent_cos rounded to 6 places. Shared by [[semanticDedup]]
+    * and [[semanticDedupIncremental]]. */
+  private def assignCells(
       df: DataFrame, idCol: String, vecCol: String, cents: DataFrame,
       idOut: String, vecOut: String): DataFrame =
     df.crossJoin(broadcast(cents))
@@ -1304,27 +1318,6 @@ object Dedup {
         explode(Similarity.topCellsLocal(col(vecCol), 1)).as("__best"))
       .select(col(idCol).as(idOut), col(vecCol).as(vecOut),
         col("__best.cell").as("cell"), round(col("__best.cos"), 6).as("cent_cos"))
-
-  /** The `maxCellStore` cap of [[semanticDedupIncremental]] over an
-    * [[assignCells]] store (corpus_id, __cv, cell, cent_cos): cells over
-    * the cap keep their `maxCellStore` most central members (cent_cos
-    * descending, id tiebreak). Count-gated — only oversized cells pay the
-    * ranking window. Returns (cell, corpus_id, __cv); the caller decides
-    * whether the store is pinned. */
-  private[graft] def cappedCellStore(store: DataFrame, maxCellStore: Long): DataFrame =
-    if (maxCellStore == Exact) store.select("cell", "corpus_id", "__cv")
-    else {
-      val counts = store.groupBy("cell").agg(count(lit(1)).as("__n"))
-      val withN = store.join(broadcast(counts), Seq("cell"))
-      val small = withN.filter(col("__n") <= maxCellStore)
-        .select("cell", "corpus_id", "__cv")
-      val w = Window.partitionBy(col("cell")).orderBy(desc("cent_cos"), asc("corpus_id"))
-      val capped = withN.filter(col("__n") > maxCellStore)
-        .withColumn("__rk", row_number().over(w))
-        .filter(col("__rk") <= maxCellStore)
-        .select("cell", "corpus_id", "__cv")
-      small.union(capped)
-    }
 
   /** D4 data selection (Tirumala et al., "D4: Improving LLM Pretraining
     * via Document De-Duplication and Diversification", arXiv:2308.12284):

@@ -321,22 +321,6 @@ object PipelineSyntax {
             "minShared" -> minShared),
         PerRow(Seq("id"), mf -> idCol))
 
-    /** [[decontaminateAgainst]]'s Bloom-prefiltered scale path: identical
-      * output (and pk semantics) at any fpp — the dial moves broadcast
-      * bytes, not answers. */
-    def decontaminateAgainstBloom(
-        benchmark: MetaFrame, idCol: String, textCol: String,
-        shingleWidth: Int = 3, minShared: Long = 1L,
-        expectedShingles: Long = 4L * 1000 * 1000, fpp: Double = 0.03): MetaFrame =
-      derived(mf,
-        Corpus.decontaminateBloom(mf.df, benchmark.df, idCol, textCol, shingleWidth,
-          minShared, expectedShingles, fpp),
-        "decontaminate_bloom",
-        Map("id" -> idCol, "text" -> textCol, "shingleWidth" -> shingleWidth,
-            "minShared" -> minShared, "expectedShingles" -> expectedShingles,
-            "fpp" -> fpp),
-        PerRow(Seq("id"), mf -> idCol))
-
     /** Deterministic exact-size stratified sample: row SUBSET plus a
       * sample_rank column, so parent pk survives (verified-if-it-was). */
     def stratifiedSampleBy(

@@ -337,171 +337,6 @@ object Streams {
       }
       .start()
 
-  /** Streaming SemDeDup: a STREAM of new embeddings matched against a
-    * STATIC deduplicated corpus under a FROZEN coarse quantizer — the
-    * ingestion-time twin of `Dedup.semanticDedupIncremental`, same shape
-    * as [[incrementalNearDupStream]]: the stream side stays stateless
-    * through the row-local cell assignment (broadcast 1-row centroid
-    * array, the [[annTopKStream]] fold), candidates are ONE stream-static
-    * equi-join on the cell key (the corpus never self-joins), every
-    * candidate passes the exact cosine confirm, and confirmed matches
-    * aggregate per stream doc in UPDATE mode — state is O(matched docs).
-    * The static side carries the same count-gated `maxCellStore` cap as
-    * the batch twin (oversized store cells keep their most central
-    * members; computed once on the static subplan, no per-batch cost).
-    * Emits only matched docs — the "semantically new" NULL row of the
-    * batch operator has no anchor in update mode. Matches are pinned
-    * bit-equal to the batch operator's non-NULL verdicts in
-    * StreamingSpec. */
-  def semanticDedupStream(
-      stream: DataFrame,
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      centroids: DataFrame,
-      centroidIdCol: String,
-      centroidVecCol: String,
-      threshold: Double,
-      maxCellStore: Long = graft.operators.Dedup.DefaultMaxCellSize): DataFrame = {
-    import graft.functions.VectorFunctions.cosine
-    import graft.operators.{Dedup, Similarity}
-    require(maxCellStore >= 1, "maxCellStore must be at least 1")
-    val cents = Similarity.centroidArray(centroids, centroidIdCol, centroidVecCol)
-    val s = Dedup.assignCells(stream, idCol, vecCol, cents, "stream_id", "__sv")
-    val store = Dedup.cappedCellStore(
-      Dedup.assignCells(corpus, idCol, vecCol, cents, "corpus_id", "__cv"), maxCellStore)
-    s.join(store, Seq("cell"))
-      .withColumn("__cos", cosine(col("__sv"), col("__cv")))
-      .filter(col("__cos") >= threshold)
-      .groupBy(col("stream_id").as("id"))
-      .agg(min(col("corpus_id")).as("matched_id"),
-        round(max(col("__cos")), 6).as("best_cos"))
-  }
-
-  /** Streaming incremental near-dedup: a STREAM of new documents matched
-    * against a STATIC corpus — the stream-static equi-join enrichment
-    * pattern. The stream side stays stateless through banding
-    * (`Dedup.bandKeys` is a row-local projection + explode), candidates are
-    * stream-band × corpus-band collisions only (the corpus never
-    * self-joins, same as the batch `Dedup.incrementalNearDup`), and
-    * confirmed matches aggregate per stream doc in UPDATE mode — state is
-    * O(matched docs), not O(stream). Band collisions can surface the same
-    * pair in several micro-batches; the min/max aggregate makes re-emission
-    * idempotent for an upsert sink. */
-  def incrementalNearDupStream(
-      stream: DataFrame,
-      corpus: DataFrame,
-      idCol: String,
-      textCol: String,
-      numHashes: Int = 32,
-      bands: Int = 8,
-      shingleWidth: Int = 3,
-      minJaccard: Double = 0.8): DataFrame = {
-    import graft.expressions.MinHashSignature.{minhashSignature, shingleHashes}
-    import graft.functions.TextFunctions.tokens
-    import graft.operators.Dedup
-    require(numHashes % bands == 0, "numHashes must divide into equal bands")
-    val r = numHashes / bands
-    // the stream doc's shingle set rides along through the band explode —
-    // re-deriving it later would need a stream-stream self-join, which is
-    // exactly the state bomb this operator exists to avoid
-    val sBands = stream.select(
-        col(idCol).as("batch_id"),
-        array_distinct(shingleHashes(
-          transform(tokens(col(textCol)), t => xxhash64(t)), shingleWidth)).as("b_sh"),
-        minhashSignature(
-          transform(tokens(col(textCol)), t => xxhash64(t)), numHashes, shingleWidth).as("sig"))
-      // the same Exchange barrier Dedup.bandKeys carries: without it
-      // CollapseProject inlines the signature loop into every band lambda
-      // and recomputes it `bands` times per row (repartition is legal on
-      // streaming frames)
-      .repartition(col("batch_id"))
-      .select(col("batch_id"), col("b_sh"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          j => xxhash64(j, slice(col("sig"), j * lit(r) + lit(1), lit(r))))))
-      .withColumnRenamed("pos", "band_id")
-      .withColumnRenamed("col", "band_hash")
-    val cBands = Dedup.bandKeys(corpus, idCol, textCol, numHashes, bands, shingleWidth)
-      .select(col(idCol).as("corpus_id"), col("band_id"), col("band_hash"))
-    val cSets = Dedup.shingleSets(corpus, idCol, textCol, shingleWidth, "c_id")
-    // both joins are stream-static; no distinct on candidates — that would
-    // be a second streaming aggregate, and duplicate band collisions
-    // confirm to identical (pair, jaccard) rows that collapse in the final
-    // min/max aggregate anyway
-    sBands.join(cBands, Seq("band_id", "band_hash"))
-      .join(cSets, col("corpus_id") === col("c_id"))
-      .withColumn("jaccard", Dedup.setJaccard(col("b_sh"), col("c_id_sh")))
-      .filter(col("jaccard") >= minJaccard)
-      .groupBy(col("batch_id").as("id"))
-      .agg(min(col("corpus_id")).as("matched_id"),
-        round(max(col("jaccard")), 6).as("best_jaccard"))
-  }
-
-  /** Streaming WINNOWING near-dedup: a STREAM of new documents matched
-    * against a STATIC corpus via winnow fingerprints — the ingestion-time
-    * twin of `Dedup.winnowIncremental`, and the deterministic-recall
-    * counterpart of [[incrementalNearDupStream]]: where banding misses a
-    * true pair with probability (1−J^r)^b, the winnowing guarantee makes
-    * every ≥ w+k−1-token shared run a CANDIDATE by construction, so the
-    * emitted matches are exactly the batch operator's (no probabilistic
-    * recall caveat on the ingestion path).
-    *
-    * The stream side stays STATELESS through the row-local fingerprint
-    * explode (the doc's own shingle set rides along — re-deriving it later
-    * would need a stream-stream self-join); candidates are stream-fp ×
-    * corpus-fp collisions only, the corpus never self-joins, and confirmed
-    * matches aggregate per stream doc in UPDATE mode — state is O(matched
-    * docs). Duplicate fp collisions for one pair confirm to identical
-    * (pair, jaccard) rows that collapse in the final min/max aggregate, so
-    * no candidate `distinct` (a second streaming aggregate) is needed.
-    *
-    * DIVERGENCE from the batch twin, stated: the boilerplate `maxFpDf` cut
-    * here counts CORPUS-side document frequency only — the combined
-    * batch+corpus count the batch operator uses would itself be a streaming
-    * aggregate. A fingerprint boilerplate in the static corpus is dropped
-    * identically; one only ever seen streaming cannot be (its join fan-out
-    * is bounded by the corpus posting list it hits, which the cap bounds).
-    * Emits only matched docs — the "genuinely new" NULL row of the batch
-    * operator has no anchor in update mode. */
-  def winnowIncrementalStream(
-      stream: DataFrame,
-      corpus: DataFrame,
-      idCol: String,
-      textCol: String,
-      k: Int = 3,
-      w: Int = 4,
-      minJaccard: Double = 0.8,
-      maxFpDf: Long = graft.operators.Dedup.DefaultMaxFpDf,
-      shingleWidth: Int = 3): DataFrame = {
-    import graft.expressions.MinHashSignature.shingleHashes
-    import graft.functions.TextFunctions
-    import graft.functions.TextFunctions.tokens
-    import graft.operators.Dedup
-    require(maxFpDf >= 1, "maxFpDf must be at least 1")
-    val sFps = stream.select(
-        col(idCol).as("batch_id"),
-        array_distinct(shingleHashes(
-          transform(tokens(col(textCol)), t => xxhash64(t)), shingleWidth)).as("b_sh"),
-        explode(TextFunctions.winnowFingerprints(col(textCol), k, w)).as("fp"))
-    val cFpsAll = corpus.select(
-      col(idCol).as("corpus_id"),
-      explode(TextFunctions.winnowFingerprints(col(textCol), k, w)).as("fp"))
-    val cFps =
-      if (maxFpDf == Long.MaxValue) cFpsAll
-      else cFpsAll.join(
-        cFpsAll.groupBy("fp").agg(count(lit(1)).as("__df"))
-          .filter(col("__df") <= maxFpDf).select("fp"),
-        Seq("fp"), "left_semi")
-    val cSets = Dedup.shingleSets(corpus, idCol, textCol, shingleWidth, "c_id")
-    sFps.join(cFps, Seq("fp"))
-      .join(cSets, col("corpus_id") === col("c_id"))
-      .withColumn("jaccard", Dedup.setJaccard(col("b_sh"), col("c_id_sh")))
-      .filter(col("jaccard") >= minJaccard)
-      .groupBy(col("batch_id").as("id"))
-      .agg(min(col("corpus_id")).as("matched_id"),
-        round(max(col("jaccard")), 6).as("best_jaccard"))
-  }
-
   /** Runs a batch operator on every micro-batch: `score` gets each
     * micro-batch of `stream` through `foreachBatch`, its result is tagged
     * with the micro-batch id as `batch_id` and handed to `sink`, and the
@@ -511,7 +346,11 @@ object Streams {
     * baseline (`Checks.scorePsiAgainst`, `Checks.scoreChi2Against`,
     * `Similarity.scoreCentroidDriftAgainst`,
     * `Events.scoreAgainstBaseline`), `Checks.fdCheck`, BM25 serving
-    * (`Retrieval.bm25TopKIndexed`) or `Graph.coOccurrenceStore`.
+    * (`Retrieval.bm25TopKIndexed`), `Graph.coOccurrenceStore`, and
+    * batch-vs-corpus dedup against a static corpus
+    * (`Dedup.incrementalNearDup`, `Dedup.winnowIncremental`,
+    * `Dedup.semanticDedupIncremental`, each called as
+    * `eachBatch(stream)(Dedup.<op>(corpus, _, …))(sink)`).
     *
     * Verdicts are batch-scoped with zero cross-batch streaming state:
     * each result describes its micro-batch alone, and cumulative
@@ -525,7 +364,18 @@ object Streams {
     * upstream guarantees it), and its per-batch stores re-merge through
     * `Graph.coOccurrenceFromStore` to exactly the one-shot operator, with
     * the `minPairCount` floor applied at serve time. Independent rows
-    * (BM25 queries) lose nothing to batch scope.
+    * (BM25 queries) lose nothing to batch scope. The dedup operators give
+    * every doc of the micro-batch one row, `matched_id` NULL when the doc
+    * is new against the corpus; docs of the same micro-batch are not
+    * matched against each other, and the `winnowIncremental` df cap counts
+    * the micro-batch's document frequency plus the corpus's, the batch
+    * operator's own rule.
+    *
+    * Each delivery is owned ([[graft.operators.Materialize.owned]]): pins
+    * made by `score` (the drift monitors' baselines, the dedup operators'
+    * fingerprint and cell frames) are freed when `sink` returns, so `sink`
+    * must consume the frame before it returns — `foreachBatch`'s own
+    * contract.
     *
     * Row-local operators need no wrapper: the batch call runs unchanged
     * on a streaming frame, in append mode with zero state (`Corpus`'s
@@ -539,7 +389,9 @@ object Streams {
       sink: DataFrame => Unit): StreamingQuery =
     stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(score(batch).withColumn("batch_id", lit(batchId)))
+        graft.operators.Materialize.owned {
+          sink(score(batch).withColumn("batch_id", lit(batchId)))
+        }
       }
       .start()
 

@@ -158,8 +158,7 @@ class AdviceRegressionSpec extends AnyFunSuite {
 
   test("metadata sidecar roundtrips backslash-n and control characters") {
     import spark.implicits._
-    val dir = Files.createDirectories(java.nio.file.Paths.get("target/advice_spec"))
-      .resolve("sidecar").toString
+    val dir = TestSparkSession.freshDir("advice_sidecar")
     val tricky = "a\\nb\tq\"uote\nline2end\\t"
     val mf = MetaFrame(Seq((1L, "x")).toDF("id", "v"), Map("tricky" -> tricky, "plain" -> "ok"))
     MetaPersist.writeParquet(mf, dir)

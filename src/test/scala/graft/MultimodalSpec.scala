@@ -85,7 +85,7 @@ class MultimodalSpec extends AnyFunSuite {
   test("binaryFile ingestion round-trips real AVI files through the codec") {
     import spark.implicits._
     import java.nio.file.{Files, Paths}
-    val dir = Files.createDirectories(Paths.get("target/mm_spec/avis"))
+    val dir = Paths.get(TestSparkSession.freshDir("mm_avis"))
     // write three real AVI files, then ingest them back through Spark's
     // binaryFile source and decode — the full blob-store entry path
     val byId = Multimodal.encodeDemoAvi(Seq(1L, 2L, 3L).toDF("id"), "id")

@@ -1533,6 +1533,22 @@ class OpsSpec extends AnyFunSuite {
     assert(drift("c") == 0L)
   }
 
+  test("chi2Baseline builds without a Spark job; the categorical drift pair pins it once") {
+    import TestSparkSession.jobsDuring
+    import graft.operators.Checks
+    val spark2 = spark
+    import spark2.implicits._
+    val ref = Seq("a", "a", "a", "b", "b", "c").toDF("cat")
+    val cur = Seq("a", "b", "b", "b", "b", "c").toDF("cat")
+    val (_, baselineJobs) = jobsDuring(Checks.chi2Baseline(ref, "cat", maxCategories = 3))
+    assert(baselineJobs == 0, s"chi2Baseline ran $baselineJobs jobs")
+    val (chi2, chi2Jobs) = jobsDuring(Checks.driftChi2Categorical(ref, cur, "cat", maxCategories = 3))
+    assert(chi2Jobs == 6, s"driftChi2Categorical ran $chi2Jobs jobs")
+    val (psi, psiJobs) = jobsDuring(Checks.driftPsiCategorical(ref, cur, "cat", maxCategories = 3))
+    assert(psiJobs == 6, s"driftPsiCategorical ran $psiJobs jobs")
+    assert(chi2.count() == 5L && psi.count() == 5L) // 3 categories + 2 sentinels
+  }
+
   test("trendSlope: exact slope on a linear fixture; missing days count as zero; single day is NULL") {
     val spark2 = spark
     import spark2.implicits._

@@ -1559,12 +1559,12 @@ class PipelineOpsSpec extends AnyFunSuite {
     import graft.operators.PipelineSyntax._
     val mf = MetaFrame(docs, Map("corpus" -> "unit")).dropDuplicates(Seq("doc_id"))
     val bench = MetaFrame(docs.filter(col("doc_id") === 1L), Map.empty[String, Any])
-    // bloom decontamination keys by id, like the exact path
-    val decon = mf.decontaminateAgainstBloom(bench, "doc_id", "text")
+    // decontamination keys by id
+    val decon = mf.decontaminateAgainst(bench, "doc_id", "text")
     assert(decon.primaryKey.contains(Seq("id")))
     assert(decon.dropDuplicates(Seq("id")).df eq decon.df)
     assert(decon.metadata("lineage").asInstanceOf[Seq[Map[String, Any]]]
-      .map(_("op")) == Seq("decontaminate_bloom"))
+      .map(_("op")) == Seq("decontaminate"))
     // stratified sample is a row subset: parent pk survives verified
     val samp = mf.stratifiedSampleBy("text", "doc_id", "s1", k = 1)
     assert(samp.primaryKey.contains(Seq("doc_id")))
@@ -1661,28 +1661,6 @@ class PipelineOpsSpec extends AnyFunSuite {
     val diff = m1.diffAgainst(m2, "doc_id", "text")
     assert(diff.primaryKey.contains(Seq("id")))
     assert(diff.dropDuplicates(Seq("id")).df eq diff.df)
-  }
-
-  test("decontaminateBloom is bit-identical to the exact path at any fpp") {
-    val bench = docs.filter(col("doc_id") === 1L)
-    val corpus = docs.filter(col("doc_id") =!= 1L)
-    val exact = Corpus.decontaminate(corpus, bench, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).sortBy(_._1).toSeq
-    // a well-sized filter AND a deliberately saturated one (64 bits for the
-    // whole benchmark shingle set → prefilter passes nearly everything):
-    // output must be identical either way — fpp moves bytes, not answers
-    for ((items, fpp) <- Seq((1000L, 0.01), (1L, 0.5))) {
-      val bloom = Corpus.decontaminateBloom(corpus, bench, "doc_id", "text",
-          expectedShingles = items, fpp = fpp)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).sortBy(_._1).toSeq
-      assert(bloom == exact, s"bloom path diverged at expectedShingles=$items fpp=$fpp")
-    }
-    // the prefilter must actually be in the plan: one row-local
-    // might_contain probe on the corpus shingle stream before any join
-    val plan = Corpus.decontaminateBloom(corpus, bench, "doc_id", "text")
-      .queryExecution.optimizedPlan.toString
-    assert(plan.contains("might_contain"), s"bloom prefilter missing from plan:\n$plan")
-    assert(plan.contains("bloom_filter_agg"), s"bloom aggregate missing from plan:\n$plan")
   }
 
   test("stratifiedSample draws exactly min(k, stratum) rows, stable across layouts and salts") {

@@ -15,7 +15,8 @@ class SourcesSpec extends AnyFunSuite {
 
   private lazy val base = Tables.load(spark, "/root/testdata/sf0.001", "nation")
 
-  private def out(fmt: String): String = s"target/sources_spec/$fmt"
+  private lazy val outDir = TestSparkSession.freshDir("sources_spec")
+  private def out(fmt: String): String = s"$outDir/$fmt"
 
   test("trained LM counts round-trip through MetaPersist and score bit-identically") {
     import org.apache.spark.sql.functions.col

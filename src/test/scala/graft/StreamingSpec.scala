@@ -130,19 +130,27 @@ class StreamingSpec extends AnyFunSuite {
     ).toDF("doc_id", "text")
     val ms = MemoryStream[(Long, String)](spark)
     val stream = ms.toDF().toDF("doc_id", "text")
-    val out = Streams.incrementalNearDupStream(stream, corpus, "doc_id", "text")
-    // batch 1: one duplicate of corpus doc 1, one novel doc
-    ms.addData((10L, base), (11L, "novel text on watermark semantics in state stores"))
-    val q = Streams.runToMemory(out, "inc_dedup_out", OutputMode.Update())
+    val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
+    val q = Streams.eachBatch(stream)(
+        graft.operators.Dedup.incrementalNearDup(corpus, _, "doc_id", "text")) { out =>
+      buf.synchronized { buf ++= out.select("id", "matched_id", "batch_id").collect() }
+    }
+    def matched = buf.synchronized(buf.toList).filterNot(_.isNullAt(1))
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     try {
-      val rows1 = spark.table("inc_dedup_out").collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(rows1 == Map(10L -> 1L), s"got $rows1") // novel doc emits nothing
+      // batch 1: one duplicate of corpus doc 1, one novel doc
+      ms.addData((10L, base), (11L, "novel text on watermark semantics in state stores"))
+      q.processAllAvailable()
+      val rows1 = matched
+      assert(rows1 == Map(10L -> 1L), s"got $rows1") // novel doc: matched_id NULL
+      // every batch doc gets one row tagged with its micro-batch
+      assert(buf.synchronized(buf.toList).map(r =>
+          (r.getLong(0), Option(r.get(1)), r.getLong(2))).toSet ==
+        Set((10L, Some(1L), 0L), (11L, None, 0L)))
       // batch 2: a second micro-batch matches too — the stream keeps going
       ms.addData((12L, base))
       q.processAllAvailable()
-      val rows2 = spark.table("inc_dedup_out").collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val rows2 = matched
       assert(rows2 == Map(10L -> 1L, 12L -> 1L), s"got $rows2")
     } finally q.stop()
   }
@@ -159,16 +167,23 @@ class StreamingSpec extends AnyFunSuite {
       (10L, nearDup),
       (11L, "novel text on watermark semantics in state stores"))
     val ms = MemoryStream[(Long, String)](spark)
-    val out = Streams.winnowIncrementalStream(
-      ms.toDF().toDF("doc_id", "text"), corpus, "doc_id", "text")
-    ms.addData(batchDocs: _*)
-    val q = Streams.runToMemory(out, "winnow_inc_out", OutputMode.Update())
+    val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
+    val q = Streams.eachBatch(ms.toDF().toDF("doc_id", "text"))(
+        graft.operators.Dedup.winnowIncremental(corpus, _, "doc_id", "text")) { out =>
+      buf.synchronized {
+        buf ++= out.filter(col("matched_id").isNotNull)
+          .select("id", "matched_id", "best_jaccard").collect()
+      }
+    }
+    def streamedRows = buf.synchronized(buf.toList)
     try {
-      val streamed = spark.table("winnow_inc_out").collect()
+      ms.addData(batchDocs: _*)
+      q.processAllAvailable()
+      val streamed = streamedRows
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      // the batch twin on the same batch: matched rows must agree bit-for-bit
-      // (winnowing recall is deterministic, confirm is exact arithmetic);
-      // the stream emits only matched docs, the batch also NULL-rows new ones
+      // the batch operator on the same batch: matched rows must agree
+      // bit-for-bit (winnowing recall is deterministic, confirm is exact
+      // arithmetic)
       val batch = graft.operators.Dedup.winnowIncremental(
           corpus, batchDocs.toDF("doc_id", "text"), "doc_id", "text")
         .filter(col("matched_id").isNotNull).collect()
@@ -178,7 +193,7 @@ class StreamingSpec extends AnyFunSuite {
       // a later micro-batch keeps matching — the static index re-joins
       ms.addData((12L, base))
       q.processAllAvailable()
-      val rows2 = spark.table("winnow_inc_out").collect()
+      val rows2 = streamedRows
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(rows2 == Map(10L -> 1L, 12L -> 1L), s"got $rows2")
     } finally q.stop()
@@ -195,16 +210,23 @@ class StreamingSpec extends AnyFunSuite {
       (1L, Seq(0f, 0f, 1.0f, 0f))).toDF("cell", "cvec")
     val batchDocs = Seq(
       (11L, Seq(0.995f, 0.0998f, 0f, 0f)), // dup of store 1
-      (12L, Seq(0f, 1.0f, 0f, 0f)),        // semantically new — emits nothing
+      (12L, Seq(0f, 1.0f, 0f, 0f)),        // semantically new — matched_id NULL
       (13L, Seq(0f, 0f, 0.98f, 0.15f)))    // dup of store 3
     val ms = MemoryStream[(Long, Seq[Float])](spark)
-    val out = Streams.semanticDedupStream(
-      ms.toDF().toDF("vec_id", "embedding"), store, "vec_id", "embedding",
-      centroids, "cell", "cvec", threshold = 0.95)
-    ms.addData(batchDocs: _*)
-    val q = Streams.runToMemory(out, "semdedup_out", OutputMode.Update())
+    val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
+    val q = Streams.eachBatch(ms.toDF().toDF("vec_id", "embedding"))(
+        graft.operators.Dedup.semanticDedupIncremental(store, _, "vec_id", "embedding",
+          centroids, "cell", "cvec", threshold = 0.95)) { out =>
+      buf.synchronized {
+        buf ++= out.filter(col("matched_id").isNotNull)
+          .select("id", "matched_id", "best_cos").collect()
+      }
+    }
+    def streamedRows = buf.synchronized(buf.toList)
     try {
-      val streamed = spark.table("semdedup_out").collect()
+      ms.addData(batchDocs: _*)
+      q.processAllAvailable()
+      val streamed = streamedRows
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       // bit-equal to the batch twin's non-NULL verdicts: same assignment
       // fold, same exact-cosine confirm, same min/max aggregate
@@ -219,10 +241,40 @@ class StreamingSpec extends AnyFunSuite {
       // a later micro-batch keeps matching against the static store
       ms.addData((14L, Seq(0.99f, 0f, 0f, 0.1f)))
       q.processAllAvailable()
-      val rows2 = spark.table("semdedup_out").collect()
+      val rows2 = streamedRows
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(rows2 == Map(11L -> 1L, 13L -> 3L, 14L -> 1L), s"got $rows2")
     } finally q.stop()
+  }
+
+  test("eachBatch frees the pins each micro-batch's operator makes") {
+    import spark.implicits._
+    val store = Seq(
+      (1L, Seq(1.0f, 0f, 0f, 0f)),
+      (3L, Seq(0f, 0f, 1.0f, 0f))).toDF("vec_id", "embedding")
+    val centroids = Seq(
+      (0L, Seq(1.0f, 0f, 0f, 0f)),
+      (1L, Seq(0f, 0f, 1.0f, 0f))).toDF("cell", "cvec")
+    def cachedRdds: Set[Int] =
+      spark.sparkContext.getRDDStorageInfo.filter(_.numCachedPartitions > 0).map(_.id).toSet
+    val before = cachedRdds
+    val ms = MemoryStream[(Long, Seq[Float])](spark)
+    val rows = new java.util.concurrent.atomic.AtomicLong
+    val q = Streams.eachBatch(ms.toDF().toDF("vec_id", "embedding"))(
+        graft.operators.Dedup.semanticDedupIncremental(store, _, "vec_id", "embedding",
+          centroids, "cell", "cvec", threshold = 0.95))(out => rows.addAndGet(out.count()))
+    try {
+      ms.addData((11L, Seq(0.995f, 0.0998f, 0f, 0f)), (12L, Seq(0f, 1.0f, 0f, 0f)))
+      q.processAllAvailable()
+      ms.addData((13L, Seq(0f, 0f, 0.98f, 0.15f)))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(rows.get == 3L) // one row per batch doc
+    // unpersist is asynchronous: give the block removals a moment to land
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while ((cachedRdds -- before).nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+    assert((cachedRdds -- before).isEmpty,
+      s"pins left after the query stopped: ${cachedRdds -- before}")
   }
 
   test("streaming decontamination is stateless append and matches the batch operator") {
@@ -603,11 +655,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming parquet sink persists the metadata sidecar") {
     import spark.implicits._
-    import java.nio.file.Files
-    val base = Files.createDirectories(java.nio.file.Paths.get("target/streaming_spec"))
-    val run = System.nanoTime()
-    val out = base.resolve("sink_out_" + run).toString
-    val ckpt = base.resolve("sink_ckpt_" + run).toString
+    val out = TestSparkSession.freshDir("sink_out")
+    val ckpt = TestSparkSession.freshDir("sink_ckpt")
     val ms = MemoryStream[Event](spark)
     ms.addData(Event(1L, ts(1), 100L, "click", 1.0), Event(2L, ts(2), 100L, "buy", 2.0))
     val mf = MetaFrame(ms.toDF(), Map("pipeline" -> "events", "primary_key" -> Seq("event_id")))
@@ -1335,8 +1384,7 @@ class StreamingSpec extends AnyFunSuite {
   test("funnel-latency monitor: last verdict ≡ batch funnelLatency over all events") {
     import spark.implicits._
     import graft.operators.Events
-    val storeDir = "target/streaming_spec/funnel_latency_store"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(storeDir))
+    val storeDir = TestSparkSession.freshDir("funnel_latency_store")
     val ms = MemoryStream[Streams.Event](spark)
     val buf = scala.collection.mutable.ArrayBuffer[(Long, Seq[org.apache.spark.sql.Row])]()
     val q = Streams.funnelLatencyMonitorStream(ms.toDS(),
@@ -1371,8 +1419,7 @@ class StreamingSpec extends AnyFunSuite {
   test("retention monitor: last verdict ≡ batch retentionCohorts; replay and duplicates harmless") {
     import spark.implicits._
     import graft.operators.Events
-    val storeDir = "target/streaming_spec/retention_store"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(storeDir))
+    val storeDir = TestSparkSession.freshDir("retention_store")
     def week(n: Int): Timestamp = Timestamp.valueOf(f"2024-01-${1 + 7 * n}%02d 10:00:00")
     val ms = MemoryStream[(Long, Timestamp)](spark)
     val buf = scala.collection.mutable.ArrayBuffer[(Long, Set[(java.sql.Date, Long, Long, Double)])]()
@@ -1638,10 +1685,8 @@ class StreamingSpec extends AnyFunSuite {
   test("monitor stores prune to keepVersions and survive a checkpointed restart") {
     import spark.implicits._
     import graft.operators.Events
-    val storeDir = "target/streaming_spec/retention_prune_store"
-    val ckptDir = "target/streaming_spec/retention_prune_ckpt"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(storeDir))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckptDir))
+    val storeDir = TestSparkSession.freshDir("retention_prune_store")
+    val ckptDir = TestSparkSession.freshDir("retention_prune_ckpt")
     def week(n: Int): Timestamp = Timestamp.valueOf(f"2024-01-${1 + 7 * n}%02d 10:00:00")
     def versionIds(): Seq[Long] =
       Streams.storeVersionIds(spark, storeDir).map(_._1)

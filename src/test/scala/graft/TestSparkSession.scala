@@ -24,6 +24,14 @@ object TestSparkSession {
     s
   }
 
+  /** A new empty directory under `target/test-dirs`, one per call, so no
+    * test reads an earlier run's output. */
+  def freshDir(name: String): String = {
+    import java.nio.file.{Files, Paths}
+    Files.createTempDirectory(Files.createDirectories(Paths.get("target/test-dirs")), name + "_")
+      .toString
+  }
+
   /** `body`'s result and the number of Spark jobs it started on this thread
     * (jobs are tagged with a job group unique to the call). */
   def jobsDuring[T](body: => T): (T, Int) = {

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,7 +13,7 @@ class WriterSpec extends AnyFunSuite {
   private lazy val spark = TestSparkSession.spark
 
   test("MetaWriter writes parquet and the data roundtrips") {
-    val dir = Files.createDirectories(java.nio.file.Paths.get("target/writer_spec")).resolve("plain").toString
+    val dir = TestSparkSession.freshDir("writer_spec_plain")
     val li = Tables.loadMeta(spark, "/root/testdata/sf0.001", "lineitem")
       .select("l_orderkey", "l_returnflag", "l_quantity")
     li.write.mode("overwrite").parquet(dir)
@@ -26,7 +24,7 @@ class WriterSpec extends AnyFunSuite {
   test("metadata sidecar survives a write/read roundtrip") {
     import graft.operators.PipelineSyntax._
     import graft.sources.MetaPersist
-    val dir = Files.createDirectories(java.nio.file.Paths.get("target/writer_spec")).resolve("sidecar").toString
+    val dir = TestSparkSession.freshDir("writer_spec_sidecar")
     val annotated = Tables.loadMeta(spark, "/root/testdata/sf0.001", "documents")
       .dedupExact("doc_id", "text")
       .setMetadata("owner" -> "pipeline-team")
@@ -40,7 +38,7 @@ class WriterSpec extends AnyFunSuite {
   }
 
   test("MetaWriter text terminal writes line-per-row files") {
-    val dir = Files.createDirectories(java.nio.file.Paths.get("target/writer_spec")).resolve("text").toString
+    val dir = TestSparkSession.freshDir("writer_spec_text")
     val li = Tables.loadMeta(spark, "/root/testdata/sf0.001", "region").select("r_name")
     li.write.mode("overwrite").text(dir)
     val back = spark.read.text(dir)
@@ -67,7 +65,7 @@ class WriterSpec extends AnyFunSuite {
   }
 
   test("partitionBy layout enables partition pruning on read") {
-    val dir = Files.createDirectories(java.nio.file.Paths.get("target/writer_spec")).resolve("parted").toString
+    val dir = TestSparkSession.freshDir("writer_spec_parted")
     val li = Tables.loadMeta(spark, "/root/testdata/sf0.001", "lineitem")
       .select("l_orderkey", "l_returnflag", "l_quantity")
     li.write.mode("overwrite").partitionBy("l_returnflag").parquet(dir)
