@@ -37,7 +37,7 @@ import org.apache.spark.util.sketch
   *   - `.write` / `.na` / `.stat` / `randomSplit` return metadata-preserving
   *     facades (the reference loses metadata on all of them, metaframe.py:87-88).
   */
-final case class MetaFrame(df: DataFrame, metadata: Map[String, Any]) {
+sealed case class MetaFrame(df: DataFrame, metadata: Map[String, Any]) {
 
   import MetaFrame.PrimaryKeyField
 
@@ -48,15 +48,18 @@ final case class MetaFrame(df: DataFrame, metadata: Map[String, Any]) {
     case s: Seq[_] => s.map(_.toString)
   }
 
+  /** The key this frame is PROVEN unique on (beyond reference, SURVEY §4.3),
+    * which lets a later dedup skip its shuffle. Never part of `metadata`:
+    * only the forwarders below and [[MetaFrame.keyed]] create or carry it,
+    * so `MetaFrame(df, m)`, `copy` and every other public constructor build
+    * an unproven frame, whatever `m` says. */
+  private[graft] def provenKey: Option[Seq[String]] = None
+
   /** reference: `set_metadata(**params)` merge-and-replace, metaframe.py:179-186.
-    * A key set by hand is a claim, not a proof: changing `primary_key`
-    * drops the pk-verified flag. */
-  def setMetadata(params: (String, Any)*): MetaFrame = {
-    val next = metadata ++ params
-    copy(metadata =
-      if (next.get(PrimaryKeyField) == metadata.get(PrimaryKeyField)) next
-      else MetaFrame.withoutProof(next))
-  }
+    * A key set by hand is a claim, not a proof: the proof names its own key,
+    * so the merge neither creates nor removes it. */
+  def setMetadata(params: (String, Any)*): MetaFrame =
+    MetaFrame.provenFrame(df, metadata ++ params, provenKey)
 
   def withPrimaryKey(cols: Seq[String]): MetaFrame = setMetadata(PrimaryKeyField -> cols)
 
@@ -74,20 +77,18 @@ final case class MetaFrame(df: DataFrame, metadata: Map[String, Any]) {
 
   // -------------------------------------------------------- private plumbing
 
-  import MetaFrame.PkVerifiedField
-
-  /** Default rewrap: metadata propagates, but the internal pk-verified flag
-    * is dropped — the operation may have broken uniqueness (join can fan out
-    * left rows, union can duplicate, generators multiply). The user-visible
-    * `primary_key` still propagates reference-style (stale allowed, exactly
-    * like the reference's blind dict propagation, metaframe.py:113-114). */
-  @inline private[graft] def wrap(d: DataFrame): MetaFrame =
-    MetaFrame(d, MetaFrame.withoutProof(metadata))
+  /** Default rewrap: metadata propagates, but the proof is dropped — the
+    * operation may have broken uniqueness (join can fan out left rows, union
+    * can duplicate, generators multiply). The user-visible `primary_key`
+    * still propagates reference-style (stale allowed, exactly like the
+    * reference's blind dict propagation, metaframe.py:113-114). */
+  @inline private[graft] def wrap(d: DataFrame): MetaFrame = MetaFrame(d, metadata)
 
   /** Rewrap for operations that can only keep or remove whole rows
     * (filter/sort/limit/repartition/…): uniqueness is preserved, so the
-    * pk-verified flag survives and downstream dedups can still be elided. */
-  @inline private[graft] def wrapKeep(d: DataFrame): MetaFrame = copy(df = d)
+    * proof survives and downstream dedups can still be elided. */
+  @inline private[graft] def wrapKeep(d: DataFrame): MetaFrame =
+    MetaFrame.provenFrame(d, metadata, provenKey)
 
   /** Memoized views of THIS frame's analyzed plan, shared by every
     * projection forwarded from it: a long synthesized chain of projections
@@ -100,30 +101,29 @@ final case class MetaFrame(df: DataFrame, metadata: Map[String, Any]) {
     df.queryExecution.analyzed.output.map(a => a.name -> a.exprId).toMap
   @transient private lazy val generateCount: Int = MetaFrame.countGenerates(df)
 
-  /** Rewrap for projections: row-preserving (Project) keeps the flag, but a
+  /** Rewrap for projections: row-preserving (Project) keeps the proof, but a
     * generator (explode & co.) multiplies rows and must drop it. Detected on
     * the analyzed plans so `select(explode(...))` is caught reliably.
     *
-    * The flag also survives only while every pk column is a PASS-THROUGH
-    * attribute reference: a projection that redefines a pk column (e.g.
+    * The proof also survives only while every proven-key column is a
+    * PASS-THROUGH attribute reference: a projection that redefines one (e.g.
     * `withColumn(pkCol, lit(1))` or `select(expr.as(pkCol))`) can collide
     * previously-unique values, so uniqueness is no longer proven. Checked by
     * exprId on the analyzed outputs — an unchanged attribute keeps its
     * exprId, any rewrite allocates a fresh one. The old-plan side of both
     * checks reads the memoized fields above; the Generate walk over the new
     * plan is skipped entirely when pass-through already failed. */
-  @inline private def wrapProj(d: DataFrame): MetaFrame =
-    if (!metadata.contains(PkVerifiedField) || primaryKey.forall(_.isEmpty)) wrap(d)
-    else {
-      val pkPassThrough = primaryKey.forall { pk =>
-        val newIds = d.queryExecution.analyzed.output.map(a => a.name -> a.exprId).toMap
+  @inline private def wrapProj(d: DataFrame): MetaFrame = provenKey match {
+    case Some(pk) =>
+      val newIds = d.queryExecution.analyzed.output.map(a => a.name -> a.exprId).toMap
+      val pkPassThrough =
         pk.forall(c => analyzedOutputIds.get(c).exists(id => newIds.get(c).contains(id)))
-      }
       if (pkPassThrough && MetaFrame.countGenerates(d) == generateCount) wrapKeep(d) else wrap(d)
-    }
+    case None => wrap(d)
+  }
 
   @inline private def wrapPk(d: DataFrame, pk: Seq[String]): MetaFrame =
-    MetaFrame(d, metadata + (PrimaryKeyField -> pk) + (PkVerifiedField -> true))
+    MetaFrame.provenFrame(d, metadata + (PrimaryKeyField -> pk), Some(pk))
 
   // ------------------------------------------------- projections (SURVEY §2.2b)
 
@@ -141,8 +141,8 @@ final case class MetaFrame(df: DataFrame, metadata: Map[String, Any]) {
     wrapProj(df.withColumnsRenamed(renames))
   /** Attaches COLUMN-level (schema) metadata — orthogonal to the
     * frame-level metadata dict this wrapper carries. Row-preserving
-    * projection, so the pk-verified flag survives via [[wrapProj]]'s
-    * pass-through check. */
+    * projection, so the proof survives via [[wrapProj]]'s pass-through
+    * check. */
   def withMetadata(columnName: String, md: org.apache.spark.sql.types.Metadata): MetaFrame =
     wrapProj(df.withMetadata(columnName, md))
   def drop(colNames: String*): MetaFrame = wrapProj(df.drop(colNames: _*))
@@ -165,9 +165,9 @@ final case class MetaFrame(df: DataFrame, metadata: Map[String, Any]) {
   //
   // pk algebra (beyond reference, SURVEY §4.3): a join cannot fan out left
   // rows when (a) it is semi/anti (pure left-row filters), or (b) it is
-  // inner/left AND the right side is verified-unique on the join keys (each
+  // inner/left AND the right side is proven unique on the join keys (each
   // left row matches at most one right row) — in those cases the left's
-  // pk-verified flag survives and downstream dedups still elide.
+  // proof survives and downstream dedups still elide.
 
   /** `rightUnique`: the right side is proven unique on the `using` columns
     * (an expression join never proves it). */
@@ -202,15 +202,14 @@ final case class MetaFrame(df: DataFrame, metadata: Map[String, Any]) {
     * (reference: metaframe.py:48-50 + 152; order divergence Q2 per SURVEY §7.3). */
   def groupBy(col1: String, cols: String*): MetaGroupedData = {
     val keys = col1 +: cols
-    new MetaGroupedData(df.groupBy(col1, cols: _*),
-      metadata + (PrimaryKeyField -> keys) + (MetaFrame.PkVerifiedField -> true))
+    new MetaGroupedData(df.groupBy(col1, cols: _*), metadata + (PrimaryKeyField -> keys), Some(keys))
   }
 
   /** Column-based grouping: no pk inference (reference Q1 crashes here;
     * we accept and skip inference — SURVEY §7.3). Also covers no-arg
     * `groupBy()` ⇒ no pk (reference Q3, metaframe.py:167-172). */
   def groupBy(cols: Column*): MetaGroupedData =
-    new MetaGroupedData(df.groupBy(cols: _*), metadata - PkVerifiedField)
+    new MetaGroupedData(df.groupBy(cols: _*), metadata)
 
   /** Reference-compat snake/lower-case aliases (`groupby` at metaframe.py:49,
     * `drop_duplicates` at metaframe.py:56-58). */
@@ -220,34 +219,31 @@ final case class MetaFrame(df: DataFrame, metadata: Map[String, Any]) {
   def drop_duplicates(): MetaFrame = dropDuplicates()
 
   def rollup(cols: Column*): MetaGroupedData = // no pk (reference Q4)
-    new MetaGroupedData(df.rollup(cols: _*), metadata - PkVerifiedField)
+    new MetaGroupedData(df.rollup(cols: _*), metadata)
   def rollup(col1: String, cols: String*): MetaGroupedData =
-    new MetaGroupedData(df.rollup(col1, cols: _*), metadata - PkVerifiedField)
+    new MetaGroupedData(df.rollup(col1, cols: _*), metadata)
   def cube(cols: Column*): MetaGroupedData =
-    new MetaGroupedData(df.cube(cols: _*), metadata - PkVerifiedField)
+    new MetaGroupedData(df.cube(cols: _*), metadata)
   def cube(col1: String, cols: String*): MetaGroupedData =
-    new MetaGroupedData(df.cube(col1, cols: _*), metadata - PkVerifiedField)
+    new MetaGroupedData(df.cube(col1, cols: _*), metadata)
   def groupingSets(sets: Seq[Seq[Column]], cols: Column*): MetaGroupedData = // no pk (like rollup/cube)
-    new MetaGroupedData(df.groupingSets(sets, cols: _*), metadata - PkVerifiedField)
+    new MetaGroupedData(df.groupingSets(sets, cols: _*), metadata)
 
   def agg(expr: Column, exprs: Column*): MetaFrame = wrap(df.agg(expr, exprs: _*))
   def agg(exprs: Map[String, String]): MetaFrame = wrap(df.agg(exprs))
 
-  /** True when metadata PROVES the frame is already unique on a superset of
-    * `cols`: the pk-verified flag must have survived the whole lineage since
-    * inference (no join/union/generator in between), every pk column must
-    * still be present, and pk ⊆ cols. */
+  /** True when the frame is PROVEN unique on a subset of `cols`: the proven
+    * key is non-empty, every one of its columns is present, and it ⊆ cols. */
   private[graft] def uniqueOn(cols: Seq[String]): Boolean =
-    metadata.get(PkVerifiedField).contains(true) &&
-      primaryKey.exists(pk =>
-        pk.nonEmpty && pk.forall(df.columns.contains) && pk.forall(cols.contains))
+    provenKey.exists(pk =>
+      pk.nonEmpty && pk.forall(df.columns.contains) && pk.forall(cols.contains))
 
   /** pk = subset (reference: metaframe.py:51-58, 150-160).
     *
     * pk-aware short-circuit (SURVEY §4.3, beyond reference): when metadata
     * already proves uniqueness on a subset of `colNames`, the deduplication
     * shuffle is a no-op and is elided — an O(1) driver-side rewrite the
-    * plan-level optimizer cannot see because pk lives outside Catalyst. */
+    * plan-level optimizer cannot see because the proof lives outside Catalyst. */
   def dropDuplicates(colNames: Seq[String]): MetaFrame =
     if (uniqueOn(colNames)) wrapPk(df, colNames)
     else wrapPk(df.dropDuplicates(colNames), colNames)
@@ -274,7 +270,7 @@ final case class MetaFrame(df: DataFrame, metadata: Map[String, Any]) {
   def summary(statistics: String*): MetaFrame = wrap(df.summary(statistics: _*))
 
   /** Wide→long reshape (Spark ≥3.4). A row multiplies into one row per value
-    * column, so the pk-verified flag cannot survive. */
+    * column, so the proof cannot survive. */
   def unpivot(ids: Array[Column], values: Array[Column],
       variableColumnName: String, valueColumnName: String): MetaFrame =
     wrap(df.unpivot(ids, values, variableColumnName, valueColumnName))
@@ -286,7 +282,7 @@ final case class MetaFrame(df: DataFrame, metadata: Map[String, Any]) {
 
   /** Spark 4 transpose: rows become columns keyed by the index column (first
     * column when unspecified). The output's row identity is the former
-    * column axis, so any verified pk is necessarily gone — plain [[wrap]].
+    * column axis, so any proof is necessarily gone — plain [[wrap]].
     * Driver-materializes the index values (Spark's own contract: at most
     * `spark.sql.transposeMaxValues` of them) — a reshape for small frames,
     * not a distributed pivot. */
@@ -358,8 +354,8 @@ final case class MetaFrame(df: DataFrame, metadata: Map[String, Any]) {
     * through its wrapper (metaframe.py:77-89, re-wrap at :113-114): the
     * function sees each partition as one row iterator (per-partition init,
     * batch iteration, no driver involvement) and declares its output schema
-    * explicitly. Metadata propagates; the pk-verified flag is dropped — an
-    * arbitrary partition function can add, remove or rewrite rows. */
+    * explicitly. Metadata propagates; the proof is dropped — an arbitrary
+    * partition function can add, remove or rewrite rows. */
   def mapPartitions(schema: StructType)(f: Iterator[Row] => Iterator[Row]): MetaFrame =
     wrap(df.mapPartitions(f)(Encoders.row(schema)).toDF())
 
@@ -367,8 +363,8 @@ final case class MetaFrame(df: DataFrame, metadata: Map[String, Any]) {
   // The reference has no typed API (Python), but the Scala engine must not
   // make `as[T]`/`map` a silent metadata-loss path — the §1.2 failure mode
   // the na/stat/writer facades close. Each forwarder decodes, transforms,
-  // and re-encodes WITHOUT leaving the metadata layer; the pk-verified flag
-  // is dropped (an arbitrary row function can add, remove or rewrite keys)
+  // and re-encodes WITHOUT leaving the metadata layer; the proof is dropped
+  // (an arbitrary row function can add, remove or rewrite keys)
   // except for typed FILTERS, which can only keep or remove whole rows.
 
   /** Raw typed view — returns a bare Dataset[T], so metadata is LOST by
@@ -388,12 +384,12 @@ final case class MetaFrame(df: DataFrame, metadata: Map[String, Any]) {
   def mapTyped[T: Encoder, U: Encoder](f: T => U): MetaFrame =
     wrap(df.as[T].map(f).toDF())
 
-  /** Fully typed flatMap (metadata kept, pk-verified dropped). */
+  /** Fully typed flatMap (metadata kept, proof dropped). */
   def flatMapTyped[T: Encoder, U: Encoder](f: T => IterableOnce[U]): MetaFrame =
     wrap(df.as[T].flatMap(f).toDF())
 
-  /** Typed predicate filter: a pure row subset, so pk metadata INCLUDING
-    * the verified flag survives — same rule as the Column filter. */
+  /** Typed predicate filter: a pure row subset, so pk metadata AND the
+    * proof survive — same rule as the Column filter. */
   def filterTyped[T: Encoder](f: T => Boolean): MetaFrame =
     wrapKeep(df.as[T].filter(f).toDF())
 
@@ -440,9 +436,9 @@ final case class MetaFrame(df: DataFrame, metadata: Map[String, Any]) {
   // PySpark-name aliases (`fillna`/`dropna` are delegated by the reference
   // router, metaframe.py:77-89, so its users call them directly on the
   // frame; here they ride the metadata-keeping na facade — same
-  // improvement-over-reference contract as the facade itself, same
-  // pk-verified-flag rules: fill mutates values → flag dropped, drop only
-  // removes rows → flag kept)
+  // improvement-over-reference contract as the facade itself, same proof
+  // rules: fill mutates values → proof dropped, drop only removes rows →
+  // proof kept)
   def fillna(value: Long): MetaFrame = na.fill(value)
   def fillna(value: Double): MetaFrame = na.fill(value)
   def fillna(value: String): MetaFrame = na.fill(value)
@@ -511,7 +507,9 @@ final case class MetaFrame(df: DataFrame, metadata: Map[String, Any]) {
     * pk) do NOT round-trip through the catalog. The reference has the
     * identical hole (its router delegates the registration and `sql`
     * returns a raw frame). Re-wrap with `MetaFrame(spark.sql(...), m)` or
-    * persist provenance with `MetaPersist` when it must survive. */
+    * persist provenance with `MetaPersist` when it must survive. The
+    * re-wrap is safe whatever the query does: it restores the metadata but
+    * never a proof, so its dedups always run. */
   def createOrReplaceTempView(name: String): Unit = df.createOrReplaceTempView(name)
   def createTempView(name: String): Unit = df.createTempView(name)
   def createGlobalTempView(name: String): Unit = df.createGlobalTempView(name)
@@ -524,29 +522,26 @@ object MetaFrame {
   /** The one semantically distinguished metadata key (metaframe.py:188-197). */
   val PrimaryKeyField = "primary_key"
 
-  /** Internal flag (beyond reference, SURVEY §4.3): present only while the
-    * lineage since pk inference is provably uniqueness-preserving, enabling
-    * the dedup short-circuits. Any operation that can duplicate or fan out
-    * rows drops it; the user-visible `primary_key` is never touched. */
-  private[graft] val PkVerifiedField = "__pk_verified"
+  /** The one kind of frame that carries a proof. A subclass, so `copy`,
+    * equality and the two-field pattern stay those of the case class (and a
+    * `copy` is unproven). */
+  private final class Proven(df: DataFrame, metadata: Map[String, Any],
+      override private[graft] val provenKey: Option[Seq[String]])
+      extends MetaFrame(df, metadata)
 
-  /** `metadata` without the proof flag — what leaves the process (a
-    * sidecar never carries a proof) or starts a derived frame's metadata. */
-  private[graft] def withoutProof(metadata: Map[String, Any]): Map[String, Any] =
-    metadata - PkVerifiedField
+  /** `df` with `metadata`, proven unique on `key` when one is given. */
+  private[graft] def provenFrame(df: DataFrame, metadata: Map[String, Any],
+      key: Option[Seq[String]]): MetaFrame =
+    if (key.isEmpty) MetaFrame(df, metadata) else new Proven(df, metadata, key)
 
   /** A derived frame over `df`: `primary_key` set to `pk` (removed when
     * None), proven exactly when `proven` and a key is set. The proof is
     * decided by the caller through [[MetaFrame.uniqueOn]]; this is the one
-    * writer of the flag outside the forwarders. */
+    * maker of a proof outside the forwarders. */
   private[graft] def keyed(df: DataFrame, metadata: Map[String, Any],
-      pk: Option[Seq[String]], proven: Boolean): MetaFrame = {
-    val base = withoutProof(metadata)
-    MetaFrame(df, pk.fold(base - PrimaryKeyField) { cols =>
-      val withPk = base + (PrimaryKeyField -> cols)
-      if (proven) withPk + (PkVerifiedField -> true) else withPk
-    })
-  }
+      pk: Option[Seq[String]], proven: Boolean): MetaFrame =
+    provenFrame(df, pk.fold(metadata - PrimaryKeyField)(cols => metadata + (PrimaryKeyField -> cols)),
+      pk.filter(_ => proven))
 
   /** reference: default metadata `{}` (metaframe.py:66-69). */
   def apply(df: DataFrame): MetaFrame = MetaFrame(df, Map.empty)
@@ -561,8 +556,10 @@ object MetaFrame {
   * the same way (`RETURNED_CLASSES`, metaframe.py:46) so that pk metadata set
   * by `groupBy` flows into the subsequent `.agg` result (quirk Q6,
   * metaframe.py:115-116; test_metaframe.py:119-123). */
-final class MetaGroupedData(val gd: RelationalGroupedDataset, val metadata: Map[String, Any]) {
-  @inline private def wrap(d: DataFrame): MetaFrame = MetaFrame(d, metadata)
+final class MetaGroupedData private[graft] (val gd: RelationalGroupedDataset,
+    val metadata: Map[String, Any], provenKey: Option[Seq[String]]) {
+  def this(gd: RelationalGroupedDataset, metadata: Map[String, Any]) = this(gd, metadata, None)
+  @inline private def wrap(d: DataFrame): MetaFrame = MetaFrame.provenFrame(d, metadata, provenKey)
 
   def agg(expr: Column, exprs: Column*): MetaFrame = wrap(gd.agg(expr, exprs: _*))
   def agg(exprs: Map[String, String]): MetaFrame = wrap(gd.agg(exprs))
@@ -575,13 +572,13 @@ final class MetaGroupedData(val gd: RelationalGroupedDataset, val metadata: Map[
   def min(colNames: String*): MetaFrame = wrap(gd.min(colNames: _*))
   def sum(colNames: String*): MetaFrame = wrap(gd.sum(colNames: _*))
   def pivot(pivotColumn: String): MetaGroupedData =
-    new MetaGroupedData(gd.pivot(pivotColumn), metadata)
+    new MetaGroupedData(gd.pivot(pivotColumn), metadata, provenKey)
   def pivot(pivotColumn: String, values: Seq[Any]): MetaGroupedData =
-    new MetaGroupedData(gd.pivot(pivotColumn, values), metadata)
+    new MetaGroupedData(gd.pivot(pivotColumn, values), metadata, provenKey)
   def pivot(pivotColumn: Column): MetaGroupedData =
-    new MetaGroupedData(gd.pivot(pivotColumn), metadata)
+    new MetaGroupedData(gd.pivot(pivotColumn), metadata, provenKey)
   def pivot(pivotColumn: Column, values: Seq[Any]): MetaGroupedData =
-    new MetaGroupedData(gd.pivot(pivotColumn, values), metadata)
+    new MetaGroupedData(gd.pivot(pivotColumn, values), metadata, provenKey)
 }
 
 /** Metadata-carrying DataFrameWriterV2 facade (V2 catalogs — Iceberg/Delta

@@ -566,28 +566,8 @@ object Events {
       typeCol: String,
       window: Int = 7,
       minPrior: Int = 3,
-      thresholdMicro: Long = 3000000L): DataFrame = {
-    require(window >= 1, "window must be at least 1")
-    require(minPrior >= 1, "minPrior must be at least 1")
-    require(thresholdMicro >= 0, "thresholdMicro must be non-negative")
-    val daily = events
-      .groupBy(col(typeCol).as("event_type"), to_date(col(tsCol)).as("day"))
-      .agg(count(lit(1)).as("n"))
-    val win = Window.partitionBy(col("event_type")).orderBy(col("day").asc)
-      .rowsBetween(-window, -1)
-    val scored = daily
-      .withColumn("n_prior", count(col("n")).over(win))
-      .withColumn("__s", sum(col("n")).over(win).cast("double"))
-      .withColumn("__ss",
-        sum((col("n").cast("decimal(19,0)") * col("n").cast("decimal(19,0)")))
-          .over(win).cast("double"))
-    scored
-      .withColumn("z_micro",
-        zMicro(col("n"), col("n_prior"), col("__s"), col("__ss"), minPrior))
-      .withColumn("is_anomaly",
-        col("z_micro").isNotNull && abs(col("z_micro")) >= thresholdMicro)
-      .select("event_type", "day", "n", "n_prior", "z_micro", "is_anomaly")
-  }
+      thresholdMicro: Long = 3000000L): DataFrame =
+    scoredDaily(events, tsCol, typeCol, None, window, minPrior, thresholdMicro)
 
   /** Dense daily resampling with gap fill — the step between raw events
     * and anything windowed over days (anomaly baselines, retention
@@ -641,20 +621,28 @@ object Events {
       typeCol: String,
       window: Int = 4,
       minPrior: Int = 3,
-      thresholdMicro: Long = 3000000L): DataFrame = {
+      thresholdMicro: Long = 3000000L): DataFrame =
+    scoredDaily(events, tsCol, typeCol,
+      Some(pmod(datediff(col("day"), lit("2024-01-05").cast("date")), lit(7)).cast("long")),
+      window, minPrior, thresholdMicro)
+
+  /** The body of both daily monitors: per (type, day) counts, scored over
+    * the previous `window` observed days of the same type — and of the same
+    * `dow` when given, which then also becomes an output column after
+    * `day`. */
+  private def scoredDaily(events: DataFrame, tsCol: String, typeCol: String,
+      dow: Option[Column], window: Int, minPrior: Int, thresholdMicro: Long): DataFrame = {
     require(window >= 1, "window must be at least 1")
     require(minPrior >= 1, "minPrior must be at least 1")
     require(thresholdMicro >= 0, "thresholdMicro must be non-negative")
     val daily = events
       .groupBy(col(typeCol).as("event_type"), to_date(col(tsCol)).as("day"))
       .agg(count(lit(1)).as("n"))
-      .withColumn("dow",
-        pmod(datediff(col("day"), lit("2024-01-05").cast("date")), lit(7))
-          .cast("long"))
-    val win = Window.partitionBy(col("event_type"), col("dow"))
+    val dowCol = dow.map(_ => "dow").toSeq
+    val win = Window.partitionBy(("event_type" +: dowCol).map(col): _*)
       .orderBy(col("day").asc)
       .rowsBetween(-window, -1)
-    daily
+    dow.fold(daily)(daily.withColumn("dow", _))
       .withColumn("n_prior", count(col("n")).over(win))
       .withColumn("__s", sum(col("n")).over(win).cast("double"))
       .withColumn("__ss",
@@ -664,7 +652,8 @@ object Events {
         zMicro(col("n"), col("n_prior"), col("__s"), col("__ss"), minPrior))
       .withColumn("is_anomaly",
         col("z_micro").isNotNull && abs(col("z_micro")) >= thresholdMicro)
-      .select("event_type", "day", "dow", "n", "n_prior", "z_micro", "is_anomaly")
+      .select((Seq("event_type", "day") ++ dowCol ++
+        Seq("n", "n_prior", "z_micro", "is_anomaly")).map(col): _*)
   }
 
   /** The ONE z-score parenthesization shared by [[dailyAnomalies]] and the

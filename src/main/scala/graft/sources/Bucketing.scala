@@ -45,8 +45,8 @@ object Bucketing {
       .saveAsTable(table)
     // pk/provenance sidecar in the table's storage location, so the catalog
     // round-trip this module exists for does not lose the metadata layer
-    // (same policy as MetaPersist: the pk-verified elision proof never
-    // crosses a job boundary). MetaPersist is java.nio-based, so only
+    // (same policy as MetaPersist: a uniqueness proof never crosses a job
+    // boundary). MetaPersist is java.nio-based, so only
     // file:-scheme locations carry a sidecar; remote object stores skip it.
     try MetaPersist.writeSidecar(
       new java.io.File(org.apache.spark.sql.graftbridge.tableLocation(spark, table)).getPath,

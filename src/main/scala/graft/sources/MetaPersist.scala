@@ -12,10 +12,10 @@ import graft.MetaFrame
   * parquet output and restores it on read, so pipeline provenance and
   * `primary_key` survive across jobs.
   *
-  * Sidecar values are stringified except pk (kept as a list); the internal
-  * pk-verified flag is deliberately NOT persisted — a fresh reader cannot
-  * prove the file wasn't modified, so elision proofs never cross a job
-  * boundary. Driver-side, O(metadata) — nothing touches executors.
+  * Sidecar values are stringified except pk (kept as a list). A uniqueness
+  * proof is not part of `metadata`, so it is never persisted — a fresh
+  * reader cannot prove the file wasn't modified, and a read frame starts
+  * unproven. Driver-side, O(metadata) — nothing touches executors.
   */
 object MetaPersist {
 
@@ -43,7 +43,7 @@ object MetaPersist {
   /** Writes just the sidecar for an output directory that already exists (or
     * is being produced by a streaming file sink). */
   def writeSidecar(path: String, metadata: Map[String, Any]): Unit = {
-    val entries = MetaFrame.withoutProof(metadata).map {
+    val entries = metadata.map {
       case (k, v: Seq[_]) =>
         s""""${esc(k)}": [${v.map(x => s""""${esc(x.toString)}"""").mkString(", ")}]"""
       case (k, v) => s""""${esc(k)}": "${esc(String.valueOf(v))}""""

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -277,7 +275,7 @@ class AdviceRegressionSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.operators.Corpus
     import graft.streaming.Ingest
-    val dirBase = Files.createTempDirectory("graft_replay_pins").toString
+    val dirBase = TestSparkSession.freshDir("graft_replay_pins")
     val good = "the quick brown fox jumps over the lazy dog near the quiet river bank today"
     val novel = "spark catalyst optimizer pushes filters below joins for scan pruning wins"
     val bench = Seq((1L, "benchmark held out text strictly")).toDF("doc_id", "text")
@@ -996,7 +994,7 @@ class AdviceRegressionSpec extends AnyFunSuite {
 
   test("monitor store lookup: strict-below-batch bound + _SUCCESS gate (replay safety)") {
     import graft.streaming.Streams
-    val dir = Files.createTempDirectory("advice_store_lookup").toFile
+    val dir = new java.io.File(TestSparkSession.freshDir("advice_store_lookup"))
     def mkVersion(id: Long, committed: Boolean): Unit = {
       val d = new java.io.File(dir, s"v$id"); d.mkdirs()
       if (committed) new java.io.File(d, "_SUCCESS").createNewFile()
@@ -1028,7 +1026,7 @@ class AdviceRegressionSpec extends AnyFunSuite {
 
   test("monitor store pruning keeps top-K committed; partials above the floor survive") {
     import graft.streaming.Streams
-    val dir = Files.createTempDirectory("advice_store_prune").toFile
+    val dir = new java.io.File(TestSparkSession.freshDir("advice_store_prune"))
     def mkVersion(id: Long, committed: Boolean): Unit = {
       val d = new java.io.File(dir, s"v$id"); d.mkdirs()
       if (committed) new java.io.File(d, "_SUCCESS").createNewFile()
@@ -1086,7 +1084,7 @@ class AdviceRegressionSpec extends AnyFunSuite {
   test("text_html_extract renders the boilerplate shell for NULL text (4 blocks)") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = Files.createTempDirectory("advice_html_null").toString
+    val dir = TestSparkSession.freshDir("advice_html_null")
     Seq((1L, null: String), (2L, "plain words " * 10))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -68,7 +68,7 @@ class LayoutSpec extends AnyFunSuite {
   test("cluster delivers tight per-file ranges on BOTH zorder columns") {
     val li = Tables.load(spark, "/root/testdata/sf0.01", "lineitem")
       .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-    val out = java.nio.file.Files.createTempDirectory("graft_zorder").toString
+    val out = TestSparkSession.freshDir("graft_zorder")
     Layout.cluster(li, Seq("l_partkey", "l_suppkey"), numPartitions = 16)
       .write.mode("overwrite").parquet(out)
     val back = spark.read.parquet(out)

@@ -239,19 +239,18 @@ class MetaFrameSpec extends AnyFunSuite {
 
   test("transpose reshapes rows to columns and drops pk; withMetadata keeps it") {
     import spark.implicits._
-    val mf = MetaFrame(
-      Seq(("a", 1L), ("b", 2L)).toDF("k", "v"),
-      Map(MetaFrame.PrimaryKeyField -> Seq("k"), MetaFrame.PkVerifiedField -> true))
+    val mf = MetaFrame(Seq(("a", 1L), ("b", 2L)).toDF("k", "v"), Map.empty)
+      .dropDuplicates(Seq("k"))
     val tr = mf.transpose()
-    // the former k values become columns; metadata dict survives, pk flag gone
+    // the former k values become columns; metadata dict survives, proof gone
     assert(tr.df.columns.toSet == Set("key", "a", "b"))
     assert(tr.metadata.contains(MetaFrame.PrimaryKeyField))
-    assert(!tr.metadata.contains(MetaFrame.PkVerifiedField))
-    // column-level metadata attach is row-preserving: verified flag survives
+    assert(tr.provenKey.isEmpty)
+    // column-level metadata attach is row-preserving: the proof survives
     val md = new org.apache.spark.sql.types.MetadataBuilder().putString("unit", "items").build()
     val withMd = mf.withMetadata("v", md)
     assert(withMd.df.schema("v").metadata.getString("unit") == "items")
-    assert(withMd.metadata.contains(MetaFrame.PkVerifiedField))
+    assert(withMd.provenKey.contains(Seq("k")))
     assert(withMd.dropDuplicates(Seq("k")).df eq withMd.df) // elision still proven
   }
 
@@ -268,6 +267,41 @@ class MetaFrameSpec extends AnyFunSuite {
     // other entries, or the same key again, leave the proof standing
     val tagged = proven.setMetadata("owner" -> "spec").withPrimaryKey(Seq("k"))
     assert(tagged.dropDuplicates(Seq("k")).df eq tagged.df)
+  }
+
+  test("a proven frame's metadata, toString and writers hold only the user map plus primary_key") {
+    val stream = spark.readStream.format("rate").load()
+    val expected = Map("owner" -> "me", MetaFrame.PrimaryKeyField -> Seq("value"))
+    for (proven <- Seq(
+        MetaFrame(spark.range(3).toDF("value"), Map("owner" -> "me")).dropDuplicates(Seq("value")),
+        MetaFrame(stream, Map("owner" -> "me")).dropDuplicates(Seq("value")))) {
+      assert(proven.provenKey.contains(Seq("value")))
+      assert(proven.metadata == expected)
+      assert(proven.toString == s"${proven.df} metadata: $expected")
+      if (proven.isStreaming) assert(proven.writeStream.metadata == expected)
+      else assert(proven.write.metadata == expected)
+    }
+  }
+
+  test("re-wrapping a proven frame's metadata around a fanned-out query carries no proof") {
+    import spark.implicits._
+    import graft.sources.Bucketing
+    val proven = MetaFrame(Seq(("a", 1L), ("b", 2L)).toDF("k", "v"), Map("owner" -> "me"))
+      .dropDuplicates(Seq("k"))
+    val m = proven.metadata
+    proven.createOrReplaceTempView("__proof_src")
+    val fanned = spark.sql("SELECT * FROM __proof_src UNION ALL SELECT * FROM __proof_src")
+    fanned.createOrReplaceTempView("__proof_fanned")
+    try for (rewrapped <- Seq(MetaFrame(fanned, m), fanned.meta(m),
+        Bucketing.table(spark, "__proof_fanned", metadata = m))) {
+      assert(rewrapped.provenKey.isEmpty)
+      val deduped = rewrapped.dropDuplicates(Seq("k"))
+      assert(!(deduped.df eq rewrapped.df), "a re-wrapped frame's dedup must run")
+      assert(deduped.count() == 2L)
+    } finally {
+      spark.catalog.dropTempView("__proof_src")
+      spark.catalog.dropTempView("__proof_fanned"): Unit
+    }
   }
 
   test("a column renamed onto a pk name, or a sample with replacement, is not proven unique") {
@@ -350,7 +384,7 @@ class MetaFrameSpec extends AnyFunSuite {
     val unique = mf.groupBy("product_id")
       .agg(org.apache.spark.sql.functions.max(col("quantity")).as("q"))
     val dropped = unique.dropna()
-    assert(dropped.metadata.contains(MetaFrame.PkVerifiedField),
+    assert(dropped.provenKey.contains(Seq("product_id")),
       "row-subset op keeps the pk proof, like na.drop")
     assert(mf.dropna(Seq("quantity")).count() == 2L)
     assert(mf.dropna("any").count() == 2L && mf.dropna(1).count() == 3L)

@@ -29,8 +29,7 @@ object MetadataLawsSpec extends Properties("MetadataLaws") {
   property("groupBy(ks).agg.primaryKey == Some(ks); other metadata survives") =
     Prop.forAll(keysGen, metaGen) { (ks, m) =>
       val out = MetaFrame(base, m).groupBy(ks.head, ks.tail: _*).agg(Map("v" -> "max"))
-      out.primaryKey.contains(ks) &&
-        (m - MetaFrame.PrimaryKeyField).forall { case (k, v) => out.metadata.get(k).contains(v) }
+      out.primaryKey.contains(ks) && out.metadata == m + (MetaFrame.PrimaryKeyField -> ks)
     }
 
   property("dropDuplicates(ks).primaryKey == Some(ks)") =
@@ -60,7 +59,7 @@ object MetadataLawsSpec extends Properties("MetadataLaws") {
   property("typed forwarders carry metadata; row functions drop the pk proof") =
     Prop.forAll(metaGen) { m =>
       import spark.implicits._
-      val mf = MetaFrame(base, m - MetaFrame.PkVerifiedField)
+      val mf = MetaFrame(base, m)
       val meta = mf.metadata
       // every typed path stays inside the metadata layer...
       mf.map(r => r.getString(0)).metadata == meta &&
@@ -70,10 +69,10 @@ object MetadataLawsSpec extends Properties("MetadataLaws") {
         mf.filterTyped[(String, Long, String)](_._2 > 0).metadata == meta &&
         mf.mapGroupsTyped[(String, Long, String), String, (String, Long)](_._3)(
           (k, it) => (k, it.size.toLong)).metadata == meta &&
-        // ...and none of the row-identity-changing ops claims a proof
-        !mf.map(r => r.getString(0)).metadata.contains(MetaFrame.PkVerifiedField) &&
-        !mf.mapTyped[(String, Long, String), String](_._1)
-          .metadata.contains(MetaFrame.PkVerifiedField)
+        // ...and none of the row-identity-changing ops keeps a proof
+        mf.dropDuplicates(Seq("k1")).map(r => r.getString(0)).provenKey.isEmpty &&
+        mf.dropDuplicates(Seq("k1")).mapTyped[(String, Long, String), String](_._1)
+          .provenKey.isEmpty
     }
 
   property("typed filter is a row subset: the verified pk proof survives it alone") = {
@@ -89,7 +88,7 @@ object MetadataLawsSpec extends Properties("MetadataLaws") {
         // ...but an identity-typed MAP is still an arbitrary row function —
         // it re-encodes (tuple columns _1/_2/_3) and the PROOF is dropped:
         // deduplicating the new schema must really run
-        !mapped.metadata.contains(MetaFrame.PkVerifiedField) &&
+        mapped.provenKey.isEmpty &&
         !(mapped.dropDuplicates(Seq("_1")).df eq mapped.df)
     }
   }

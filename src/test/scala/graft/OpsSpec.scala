@@ -99,7 +99,7 @@ class OpsSpec extends AnyFunSuite {
     // C's best: A — both directions of every pair participate
     assert(got == Map("A" -> ((1L, "C")), "B" -> ((1L, "A")), "C" -> ((1L, "A"))), s"$got")
     // freeze + wrong-kind rejection + serve
-    val dir = java.nio.file.Files.createTempDirectory("graft_related").toString
+    val dir = TestSparkSession.freshDir("graft_related")
     graft.sources.MetaPersist.writeModel(idx, dir, "related_items", Map("k" -> 1))
     intercept[IllegalArgumentException] {
       graft.sources.MetaPersist.readModel(spark, dir, "bm25_index")
@@ -868,7 +868,7 @@ class OpsSpec extends AnyFunSuite {
       (1L, "apple banana apple"), (2L, "banana cherry"),
       (3L, "apple cherry cherry date"), (4L, "date egg")).toDF("doc_id", "text")
     val qs = Seq((100L, "apple cherry"), (200L, "banana egg")).toDF("qid", "qtext")
-    val dir = java.nio.file.Files.createTempDirectory("bm25idx").toString + "/idx"
+    val dir = TestSparkSession.freshDir("bm25idx") + "/idx"
     Retrieval.bm25Index(corpus, "doc_id", "text", dir)
     val inline = Retrieval.bm25TopK(corpus, "doc_id", "text", qs, "qid", "qtext", k = 3)
       .collect().map(_.toSeq).toSet
@@ -876,7 +876,7 @@ class OpsSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSet
     assert(indexed == inline, s"indexed=$indexed inline=$inline")
     // a wrong-kind artifact fails loudly at load, not silently downstream
-    val lmDir = java.nio.file.Files.createTempDirectory("bm25wrong").toString + "/m"
+    val lmDir = TestSparkSession.freshDir("bm25wrong") + "/m"
     graft.sources.MetaPersist.writeModel(corpus, lmDir, "unigram_lm", Map.empty)
     val e = intercept[IllegalArgumentException] {
       Retrieval.bm25TopKIndexed(spark, lmDir, qs, "qid", "qtext", k = 3)
@@ -1055,7 +1055,7 @@ class OpsSpec extends AnyFunSuite {
     val df = rows.toDF("grp", "user", "i")
     val whole = Sketches.hllByGroup(df, "grp", "user")
     // two half-batches, written to a parquet "store" and read back
-    val dir = java.nio.file.Files.createTempDirectory("hllstore").toString
+    val dir = TestSparkSession.freshDir("hllstore")
     Sketches.hllByGroup(df.filter(col("i") % 2 === 0), "grp", "user")
       .write.mode("append").parquet(dir)
     Sketches.hllByGroup(df.filter(col("i") % 2 =!= 0), "grp", "user")
@@ -1080,7 +1080,7 @@ class OpsSpec extends AnyFunSuite {
     val rows = (0 until 4000).map(i => (s"g${i % 2}", (i / 2 + 1).toDouble, i))
     val df = rows.toDF("grp", "value", "i")
     val ranks = Seq(0.25, 0.5, 0.9)
-    val dir = java.nio.file.Files.createTempDirectory("kllstore").toString
+    val dir = TestSparkSession.freshDir("kllstore")
     Sketches.kllByGroup(df.filter(col("i") % 4 < 2), "grp", "value")
       .write.mode("append").parquet(dir)
     Sketches.kllByGroup(df.filter(col("i") % 4 >= 2), "grp", "value")
@@ -1139,7 +1139,7 @@ class OpsSpec extends AnyFunSuite {
         (0 until 1000).map(i => (s"g$g", 100L + i, 300 + i))
     }
     val df = rows.toDF("grp", "item", "i")
-    val dir = java.nio.file.Files.createTempDirectory("freqstore").toString
+    val dir = TestSparkSession.freshDir("freqstore")
     Sketches.freqByGroup(df.filter(col("i") % 2 === 0), "grp", "item", maxMapSize = 16)
       .write.mode("append").parquet(dir)
     Sketches.freqByGroup(df.filter(col("i") % 2 =!= 0), "grp", "item", maxMapSize = 16)
@@ -1167,7 +1167,7 @@ class OpsSpec extends AnyFunSuite {
     // byte-determinism: 4-way split store, re-merged, must serialize
     // IDENTICALLY to the direct whole-input sketch (min-k hash retention
     // is order-independent) — the store's strongest pin
-    val dir = java.nio.file.Files.createTempDirectory("thetastore").toString
+    val dir = TestSparkSession.freshDir("thetastore")
     (0 until 4).foreach { k =>
       Sketches.thetaByGroup(df.filter(col("i") % 4 === k), "grp", "user", lgK = 8)
         .write.mode("append").parquet(dir)

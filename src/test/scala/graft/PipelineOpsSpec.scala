@@ -1320,7 +1320,7 @@ class PipelineOpsSpec extends AnyFunSuite {
       (1L, "banana banana bandana"),
       (2L, "banana band and sand")).toDF("doc_id", "text")
     val serve = Seq((9L, "banana bandana sandbox")).toDF("doc_id", "text")
-    val base = java.nio.file.Files.createTempDirectory("graft_tok").toString
+    val base = TestSparkSession.freshDir("graft_tok")
     // BPE: persisted merge table serves exactly like the in-session one
     val merges = Corpus.bpeTrain(docs, "text", nMerges = 3)
     Corpus.writeBpeModel(merges, s"$base/bpe", Map("nMerges" -> 3))
@@ -1590,10 +1590,9 @@ class PipelineOpsSpec extends AnyFunSuite {
     import graft.operators.PipelineSyntax._
     val mf = MetaFrame(docs, Map("corpus" -> "unit")).dropDuplicates(Seq("doc_id"))
     // token-budget selection: one verdict row per doc, keyed by id
-    val scored = MetaFrame(mf.df
-        .withColumn("q", graft.functions.TextFunctions.qualityScore(col("text")))
-        .withColumn("nt", graft.functions.TextFunctions.tokenCount(col("text"))),
-      mf.metadata)
+    val scored = mf
+      .withColumn("q", graft.functions.TextFunctions.qualityScore(col("text")))
+      .withColumn("nt", graft.functions.TextFunctions.tokenCount(col("text")))
     val sel = scored.tokenBudgetSelected("doc_id", "q", "nt", budget = 100L)
     assert(sel.primaryKey.contains(Seq("id")))
     assert(sel.dropDuplicates(Seq("id")).df eq sel.df)

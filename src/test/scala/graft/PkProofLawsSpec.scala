@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
 /** Soundness of MetaFrame's own uniqueness proof: over random forwarder
-  * chains (and hand-set keys) on a small frame with duplicate rows, an
+  * chains (hand-set keys and public re-wraps of a frame's metadata
+  * included) on a small frame with duplicate rows, an
   * elided `dropDuplicates` never returns more rows than the real one. Each
   * case runs Spark jobs, so the case count is capped. */
 object PkProofLawsSpec extends Properties("PkProofLaws") {
@@ -42,6 +43,8 @@ object PkProofLawsSpec extends Properties("PkProofLaws") {
     },
     Gen.const((m: MetaFrame, base: DataFrame) =>
       m.union(MetaFrame(base.select(m.columns.toSeq.map(col): _*)))),
+    Gen.const((m: MetaFrame, base: DataFrame) => // re-wrap the metadata around a fan-out
+      MetaFrame(m.df.union(base.select(m.columns.toSeq.map(col): _*)), m.metadata)),
     Gen.const((m: MetaFrame, _: DataFrame) => m.select(m.columns.toSeq.map(c =>
       if (c == "c") explode(array(col("c"), col("c"))).as("c") else col(c)): _*)),
     Gen.const((m: MetaFrame, _: DataFrame) => // swap a and b by renaming

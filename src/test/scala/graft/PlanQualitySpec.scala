@@ -136,7 +136,7 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(back.primaryKey.contains(Seq("s_suppkey")))
     assert(back.metadata("owner") == "bucketing-spec")
     // elision proofs never cross the job boundary (MetaPersist policy)
-    assert(!back.metadata.contains(MetaFrame.PkVerifiedField))
+    assert(back.provenKey.isEmpty)
     // explicit caller metadata overlays the restored sidecar
     val overlaid = Bucketing.table(spark, "bkt_meta_rt", Map("owner" -> "caller"))
     assert(overlaid.metadata("owner") == "caller")

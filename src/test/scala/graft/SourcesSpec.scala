@@ -519,11 +519,8 @@ class SourcesSpec extends AnyFunSuite {
 
   /** A fresh directory under target/, so a test starts from cold schema
     * entries and may rewrite its sources. */
-  private def freshDir(): java.nio.file.Path = {
-    val parent = java.nio.file.Paths.get(out("resolution"))
-    java.nio.file.Files.createDirectories(parent)
-    java.nio.file.Files.createTempDirectory(parent, "sf")
-  }
+  private def freshDir(): java.nio.file.Path =
+    java.nio.file.Paths.get(TestSparkSession.freshDir("resolution_sf"))
 
   /** A fresh copy of fixture tables from the sf0.001 directory `base` reads. */
   private def freshSf(tables: Seq[String]): String = {

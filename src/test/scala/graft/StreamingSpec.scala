@@ -688,7 +688,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.operators.Similarity
     val emb = graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     val cents = Similarity.trainCentroids(emb, "vec_id", "embedding", k = 4, iters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann_stream").toString
+    val dir = TestSparkSession.freshDir("graft_ann_stream")
     Similarity.writeIvfIndex(emb, "vec_id", "embedding", cents, "cell", "cvec", dir)
     val corpusCells = graft.sources.MetaPersist.readModel(
       spark, s"${Similarity.resolveIvfIndex(spark, dir)}/corpus", "ivf_corpus").df
@@ -726,7 +726,7 @@ class StreamingSpec extends AnyFunSuite {
     val cents = Similarity.trainCentroids(emb, "vec_id", "embedding", k = 4, iters = 2)
     val cb = Similarity.trainPqCodebooks(emb, "vec_id", "embedding",
       dim = 64, m = 8, ksub = 4, iters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_stream").toString
+    val dir = TestSparkSession.freshDir("graft_ivfpq_stream")
     Similarity.writeIvfIndex(emb, "vec_id", "embedding", cents, "cell", "cvec", dir,
       pqCodebooks = Some(cb), pqDim = 64, pqM = 8)
     val vdir = Similarity.resolveIvfIndex(spark, dir)
@@ -770,8 +770,8 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.streaming.Trigger
     import graft.operators.Similarity
     val emb = graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_serve").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ivfpq_serve_ckpt").toString
+    val dir = TestSparkSession.freshDir("graft_ivfpq_serve")
+    val ckpt = TestSparkSession.freshDir("graft_ivfpq_serve_ckpt")
     val c1 = Similarity.trainCentroids(emb, "vec_id", "embedding", k = 4, iters = 1)
     val cb1 = Similarity.trainPqCodebooks(emb, "vec_id", "embedding",
       dim = 64, m = 8, ksub = 4, iters = 1)
@@ -920,7 +920,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.streaming.Trigger
     import graft.operators.Corpus
     import graft.streaming.Ingest
-    val dirBase = java.nio.file.Files.createTempDirectory("graft_ingest").toString
+    val dirBase = TestSparkSession.freshDir("graft_ingest")
     val (corpusDir, auditDir, ckpt) = (s"$dirBase/corpus", s"$dirBase/audit", s"$dirBase/ckpt")
     val good = "the quick brown fox jumps over the lazy dog near the quiet river bank today"
     val novel = "spark catalyst optimizer pushes filters below joins for scan pruning wins"
@@ -1026,7 +1026,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.streaming.Trigger
     import graft.operators.Corpus
     import graft.streaming.Ingest
-    val dirBase = java.nio.file.Files.createTempDirectory("graft_curated").toString
+    val dirBase = TestSparkSession.freshDir("graft_curated")
     val (corpusDir, auditDir) = (s"$dirBase/corpus", s"$dirBase/audit")
     val leak = "b1 b2 b3 b4"
     val bench = Seq((1L, s"held out $leak benchmark", "b", "x")).toDF("doc_id", "text", "source", "lang")
@@ -1081,7 +1081,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.streaming.Trigger
     import graft.operators.Corpus
     import graft.streaming.Ingest
-    val dirBase = java.nio.file.Files.createTempDirectory("graft_curated_pii").toString
+    val dirBase = TestSparkSession.freshDir("graft_curated_pii")
     val (corpusDir, auditDir) = (s"$dirBase/corpus", s"$dirBase/audit")
     val bench = Seq((1L, "held out b1 b2 b3 b4 benchmark", "b", "x"))
       .toDF("doc_id", "text", "source", "lang")
@@ -1132,7 +1132,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.streaming.Trigger
     import graft.operators.Corpus
     import graft.streaming.Ingest
-    val dirBase = java.nio.file.Files.createTempDirectory("graft_replay").toString
+    val dirBase = TestSparkSession.freshDir("graft_replay")
     val (corpusDir, auditDir) = (s"$dirBase/corpus", s"$dirBase/audit")
     val good = "the quick brown fox jumps over the lazy dog near the quiet river bank today"
     val novel = "spark catalyst optimizer pushes filters below joins for scan pruning wins"
@@ -1178,7 +1178,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.operators.Corpus
     import graft.streaming.Ingest
-    val dirBase = java.nio.file.Files.createTempDirectory("graft_acompact").toString
+    val dirBase = TestSparkSession.freshDir("graft_acompact")
     val (corpusDir, auditDir) = (s"$dirBase/corpus", s"$dirBase/audit")
     val good = "the quick brown fox jumps over the lazy dog near the quiet river bank today"
     val novel = "spark catalyst optimizer pushes filters below joins for scan pruning wins"
@@ -1251,7 +1251,7 @@ class StreamingSpec extends AnyFunSuite {
   test("compactStore auto-recovers a half-swapped crash state") {
     import spark.implicits._
     import graft.streaming.Ingest
-    val dir = java.nio.file.Files.createTempDirectory("graft_swap").toString + "/store"
+    val dir = TestSparkSession.freshDir("graft_swap") + "/store"
     Seq((1L, "a"), (2L, "b")).toDF("id", "text")
       .write.parquet(s"$dir/batch_id=0")
     Seq((3L, "c")).toDF("id", "text").write.parquet(s"$dir/batch_id=1")
@@ -1317,7 +1317,7 @@ class StreamingSpec extends AnyFunSuite {
     val corpus = Seq(
       (1L, "apple banana apple"), (2L, "banana cherry"),
       (3L, "apple cherry cherry date"), (4L, "date egg")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("bm25srv").toString + "/idx"
+    val dir = TestSparkSession.freshDir("bm25srv") + "/idx"
     Retrieval.bm25Index(corpus, "doc_id", "text", dir)
     val ms = MemoryStream[(Long, String)](spark)
     val buf = scala.collection.mutable.ArrayBuffer[(Long, Seq[Any])]()

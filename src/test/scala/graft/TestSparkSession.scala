@@ -24,13 +24,19 @@ object TestSparkSession {
     s
   }
 
-  /** A new empty directory under `target/test-dirs`, one per call, so no
-    * test reads an earlier run's output. */
-  def freshDir(name: String): String = {
-    import java.nio.file.{Files, Paths}
-    Files.createTempDirectory(Files.createDirectories(Paths.get("target/test-dirs")), name + "_")
-      .toString
+  /** Root of every [[freshDir]]: emptied once per test JVM, so earlier runs'
+    * directories do not pile up. */
+  private lazy val testDirs: java.nio.file.Path = {
+    val root = java.nio.file.Paths.get("target/test-dirs")
+    org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+    java.nio.file.Files.createDirectories(root)
   }
+
+  /** A new empty directory under `target/test-dirs`, one per call, so no
+    * test reads an earlier run's output. Tests write here, never to the
+    * system temp directory, which no test cleans. */
+  def freshDir(name: String): String =
+    java.nio.file.Files.createTempDirectory(testDirs, name + "_").toString
 
   /** `body`'s result and the number of Spark jobs it started on this thread
     * (jobs are tagged with a job group unique to the call). */

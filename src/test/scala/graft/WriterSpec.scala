@@ -34,7 +34,7 @@ class WriterSpec extends AnyFunSuite {
     assert(back.primaryKey.contains(Seq("content_hash")))
     assert(back.metadata("owner") == "pipeline-team")
     // elision proofs must NOT survive persistence
-    assert(!back.metadata.contains(MetaFrame.PkVerifiedField))
+    assert(back.provenKey.isEmpty)
   }
 
   test("MetaWriter text terminal writes line-per-row files") {
