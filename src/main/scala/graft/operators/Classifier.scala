@@ -61,7 +61,8 @@ object Classifier {
     * model as (f, w_micro) with the bias at f = [[BiasFeature]] — exactly
     * `iters` full-batch gradient steps from the zero model at learning
     * rate lrMicro/10⁶. Every feature occurring in the corpus has a row
-    * after the first iteration (its gradient sums at least one err). */
+    * after the first iteration (its gradient sums at least one err); with
+    * no labeled row the model is empty (the all-zero model). */
   def trainLogistic(
       docs: DataFrame,
       idCol: String,
@@ -80,7 +81,8 @@ object Classifier {
     Materialize.rounds(docs.sparkSession) { rounds =>
       val feats = rounds.invariant(features(base, "id", "__t", dim))
       val labels = rounds.invariant(base.select("id", "y"))
-      val nRow = labels.agg(count(lit(1)).as("n"))
+      // no labeled row: no gradient step, so the model stays empty
+      val nRow = labels.agg(count(lit(1)).as("n")).filter(col("n") > 0)
       // model rows: (f, w_micro); bias at f = -1; starts EMPTY ≡ all-zero
       var model = rounds.next(labels.sparkSession.createDataFrame(
         labels.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],

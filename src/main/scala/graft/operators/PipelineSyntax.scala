@@ -64,13 +64,6 @@ object PipelineSyntax {
         "dedup_exact", Map("id" -> idCol, "content" -> contentCol),
         Unique("content_hash"))
 
-    /** [[dedupExact]] over the canonical rendering (Unicode NFC + casefold
-      * + whitespace collapse) — same pk contract on the normalized hash. */
-    def dedupExactNormalized(idCol: String, contentCol: String): MetaFrame =
-      derived(mf, Dedup.exactNormalized(mf.df, idCol, contentCol),
-        "dedup_exact_normalized", Map("id" -> idCol, "content" -> contentCol),
-        Unique("content_hash"))
-
     /** MinHash+LSH clusters: one row per input id (pk set + verified). */
     def dedupMinHash(
         idCol: String, textCol: String,
@@ -117,96 +110,6 @@ object PipelineSyntax {
             "minPairCount" -> minPairCount, "maxBasketSize" -> maxBasketSize),
         Unique("item_a", "item_b"))
 
-    /** CDC change application: this frame is the BASE snapshot; `changes`
-      * is the feed. One row per surviving id, base schema preserved, so
-      * the id pk survives verified-if-it-was (latest-wins yields at most
-      * one row per id, base rows were unique iff they were). */
-    def changesApplied(changes: MetaFrame, idCol: String, opCol: String,
-        tsCol: String): MetaFrame =
-      derived(mf,
-        Corpus.applyChanges(mf.df, changes.df, idCol, opCol, tsCol),
-        "apply_changes",
-        Map("id" -> idCol, "op" -> opCol, "ts" -> tsCol),
-        Claimed(Seq(idCol), mf -> idCol))
-
-    /** Cross-source quantile normalization of `scoreCol` within
-      * `groupCol`: one row per input row keyed by `id`. */
-    def quantileNormalizedBy(groupCol: String, idCol: String, scoreCol: String,
-        binWidthMicro: Long = 1000L): MetaFrame =
-      derived(mf,
-        Corpus.quantileNormalizeBy(mf.df, groupCol, idCol, scoreCol, binWidthMicro),
-        "quantile_normalize",
-        Map("group" -> groupCol, "id" -> idCol, "score" -> scoreCol,
-            "binWidthMicro" -> binWidthMicro),
-        Claimed(Seq("id"), mf -> idCol))
-
-    /** Dense per-key daily resample with explicit zero fill: one row per
-      * (key, day) in each key's observed range. */
-    def resampledDaily(keyCol: String, tsCol: String): MetaFrame =
-      derived(mf, Events.resampleDaily(mf.df, keyCol, tsCol),
-        "resample_daily",
-        Map("key" -> keyCol, "ts" -> tsCol),
-        Unique("key", "day"))
-
-    /** Seasonal (same-weekday) daily volume anomalies over the frame's
-      * events: one row per (event_type, day). */
-    def anomaliesSeasonal(tsCol: String, typeCol: String, window: Int = 4,
-        minPrior: Int = 3, thresholdMicro: Long = 3000000L): MetaFrame =
-      derived(mf,
-        Events.dailyAnomaliesSeasonal(mf.df, tsCol, typeCol, window, minPrior,
-          thresholdMicro),
-        "anomaly_seasonal",
-        Map("ts" -> tsCol, "type" -> typeCol, "window" -> window,
-            "minPrior" -> minPrior, "thresholdMicro" -> thresholdMicro),
-        Unique("event_type", "day"))
-
-    /** Calibration report (ECE) over scored+labeled rows: one row per
-      * populated bin. */
-    def calibrationReported(labelCol: String,
-        scoreMicroCol: String = "score_micro", bins: Int = 10): MetaFrame =
-      derived(mf,
-        Classifier.calibrationReport(mf.df, labelCol, scoreMicroCol, bins),
-        "calibration_report",
-        Map("label" -> labelCol, "score" -> scoreMicroCol, "bins" -> bins),
-        Unique("bin"))
-
-    /** Referential-integrity check of this frame's `fkCol` against
-      * `parent`'s `pkCol`: named orphan keys + totals (no pk — the clean
-      * case emits a NULL-key totals row). */
-    def refIntegrityAgainst(fkCol: String, parent: MetaFrame, pkCol: String,
-        sampleK: Int = 10): MetaFrame =
-      derived(mf,
-        Checks.referentialIntegrity(mf.df, fkCol, parent.df, pkCol, sampleK),
-        "ref_integrity",
-        Map("fk" -> fkCol, "pk" -> pkCol, "sampleK" -> sampleK),
-        NoKey)
-
-    /** Join pre-flight against `right`: top-K contributing keys + totals;
-      * each surviving key appears once, so `key` is the pk. */
-    def joinPreflightWith(leftKey: String, right: MetaFrame, rightKey: String,
-        topK: Int = 10): MetaFrame =
-      derived(mf,
-        Checks.joinPreflight(mf.df, leftKey, right.df, rightKey, topK),
-        "join_preflight",
-        Map("leftKey" -> leftKey, "rightKey" -> rightKey, "topK" -> topK),
-        Unique("key"))
-
-    /** Functional-dependency check over candidate column pairs: one row
-      * per candidate, so (lhs, rhs) is the pk. */
-    def fdChecked(candidates: Seq[(String, String)]): MetaFrame =
-      derived(mf, Checks.fdCheck(mf.df, candidates),
-        "fd_check",
-        Map("candidates" -> candidates.map { case (l, r) => s"$l->$r" }.mkString(",")),
-        Unique("lhs", "rhs"))
-
-    /** Related-items top-k index over the frame's co-occurrence pairs:
-      * one row per (item, rank). */
-    def relatedItemsIndexed(k: Int = 10): MetaFrame =
-      derived(mf, Graph.relatedItemsIndex(mf.df, k),
-        "related_items_index",
-        Map("k" -> k),
-        Unique("item", "rank"))
-
     /** Per-node triangle counts + clustering over the frame's edge list:
       * one row per node, so `id` is the pk. */
     def trianglesOf(srcCol: String, dstCol: String): MetaFrame =
@@ -214,18 +117,6 @@ object PipelineSyntax {
         "triangles",
         Map("src" -> srcCol, "dst" -> dstCol),
         Unique("id"))
-
-    /** Z-order (Morton) layout rewrite: range-partition + in-partition
-      * sort on the interleaved bucket bits of `cols`, so parquet min/max
-      * stats prune on every listed column at once. Row-preserving (the
-      * z column is internal), so the parent pk survives. */
-    def zordered(cols: Seq[String], numPartitions: Int,
-        bitsPerCol: Int = 8): MetaFrame =
-      derived(mf, Layout.cluster(mf.df, cols, numPartitions, bitsPerCol),
-        "zorder_cluster",
-        Map("cols" -> cols.mkString(","), "numPartitions" -> numPartitions,
-            "bitsPerCol" -> bitsPerCol),
-        SameAsParent)
 
     /** One-call entity resolution (fuzzy pairs → components → canonical
       * election): one output row per input row, so the id is the pk,
@@ -238,13 +129,6 @@ object PipelineSyntax {
         Map("id" -> idCol, "str" -> strCol, "maxDist" -> maxDist,
             "score" -> scoreCol.getOrElse("")),
         Claimed(Seq(idCol), mf -> idCol))
-
-    /** SimHash near-dup pairs (no uniqueness guarantee → no pk). */
-    def dedupSimHashPairs(idCol: String, textCol: String, maxHamming: Int = 8): MetaFrame =
-      derived(mf, Dedup.simhashNearDup(mf.df, idCol, textCol, maxHamming),
-        "dedup_simhash_pairs",
-        Map("id" -> idCol, "text" -> textCol, "maxHamming" -> maxHamming),
-        NoKey)
 
     /** As-of backward join (provenance recorded; join can't fan out left
       * rows — one match max per left row — but unmatched tolerance nulls
@@ -293,20 +177,6 @@ object PipelineSyntax {
         Map("id" -> idCol, "salt" -> salt, "trainPct" -> trainPct, "valPct" -> valPct),
         SameAsParent)
 
-    /** Leakage-safe split: hashSplit keyed on the near-dup component from
-      * `pairs`, so near-duplicates never straddle a train/eval boundary.
-      * Row-preserving column adds, so parent pk survives. */
-    def splitLeakageSafe(
-        idCol: String, pairs: MetaFrame, idACol: String, idBCol: String,
-        salt: String, trainPct: Int = 80, valPct: Int = 10): MetaFrame =
-      derived(mf,
-        Corpus.leakageSafeSplit(mf.df, idCol, pairs.df, idACol, idBCol,
-          salt, trainPct, valPct),
-        "split_leakage_safe",
-        Map("id" -> idCol, "salt" -> salt, "trainPct" -> trainPct,
-            "valPct" -> valPct),
-        SameAsParent)
-
     /** Benchmark decontamination of THIS frame against an eval suite: one
       * row per corpus ROW, so the output is keyed by `id` only when the
       * parent was keyed by `idCol` — the pk claim (and its proof) carries
@@ -329,35 +199,6 @@ object PipelineSyntax {
         "stratified_sample",
         Map("stratum" -> stratumCol, "id" -> idCol, "salt" -> salt, "k" -> k),
         SameAsParent)
-
-    /** PMI collocation mining: rank is unique by the re-rank window. */
-    def pmiCollocationsOf(textCol: String, minCount: Long = 5L,
-        k: Int = 50): MetaFrame =
-      derived(mf, Corpus.pmiCollocations(mf.df, textCol, minCount, k),
-        "pmi_collocations",
-        Map("text" -> textCol, "minCount" -> minCount, "k" -> k),
-        Unique("rank"))
-
-    /** Deterministic weighted sample without replacement (A-ES): rank is
-      * unique by the re-rank window over the k survivors. */
-    def weightedSampleOf(idCol: String, weightCol: String, k: Int,
-        salt: String): MetaFrame =
-      derived(mf, Corpus.weightedSample(mf.df, idCol, weightCol, k, salt),
-        "weighted_sample",
-        Map("id" -> idCol, "weight" -> weightCol, "k" -> k, "salt" -> salt),
-        Unique("rank"))
-
-    /** Per-group weighted sample: (stratum, rank) unique by the per-group
-      * window. */
-    def weightedSampleByOf(stratumCol: String, idCol: String,
-        weightCol: String, kPerGroup: Int, salt: String): MetaFrame =
-      derived(mf,
-        Corpus.weightedSampleBy(mf.df, stratumCol, idCol, weightCol,
-          kPerGroup, salt),
-        "weighted_sample_by",
-        Map("stratum" -> stratumCol, "id" -> idCol, "weight" -> weightCol,
-            "kPerGroup" -> kPerGroup, "salt" -> salt),
-        Unique(stratumCol, "rank"))
 
     /** [[qualityGate]] against a FROZEN pre-trained count table (e.g. a
       * `MetaPersist.readModel` artifact) — the stable ingestion bar. Same
@@ -410,17 +251,6 @@ object PipelineSyntax {
       derived(mf, Corpus.corpusDiff(mf.df, newer.df, idCol, contentCol),
         "corpus_diff", Map("id" -> idCol, "content" -> contentCol),
         PerRow(Seq("id"), mf -> idCol, newer -> idCol))
-
-    /** Deterministic corpus mixing: row SUBSET plus bucket/retain_pct
-      * columns, so parent pk survives (verified-if-it-was). */
-    def mixByHash(
-        idCol: String, sourceCol: String, salt: String,
-        weights: Map[String, Int], defaultPct: Int = 100): MetaFrame =
-      derived(mf, Corpus.mixSources(mf.df, idCol, sourceCol, salt, weights, defaultPct),
-        "corpus_mix",
-        Map("id" -> idCol, "source" -> sourceCol, "salt" -> salt,
-            "weights" -> weights, "defaultPct" -> defaultPct),
-        SameAsParent)
 
     /** Intra-doc repetition signals: one row per corpus ROW (same pk rule
       * as [[decontaminateAgainst]] — keyed by `id` exactly when the parent
@@ -477,15 +307,14 @@ object PipelineSyntax {
             "maxDupNgramFrac" -> maxDupNgramFrac, "maxAvgNll" -> maxAvgNll),
         PerRow(Seq("id"), mf -> idCol))
 
-    /** TF-IDF top terms: one row per (doc, rank) — a row EXPANSION, so the
-      * output is keyed by (id, rank) exactly when the parent was keyed by
-      * `idCol`: ranks are unique within a doc by row_number construction,
-      * so the parent's uniqueness proof extends to the pair. */
+    /** TF-IDF top terms: one row per (id, rank) whatever the parent's key —
+      * term frequencies group by id, and ranks are a row_number within
+      * each id. */
     def tfidfTopTerms(idCol: String, textCol: String, k: Int = 3): MetaFrame =
       derived(mf, Corpus.tfidfTopTerms(mf.df, idCol, textCol, k),
         "tfidf_top_terms",
         Map("id" -> idCol, "text" -> textCol, "k" -> k),
-        PerRow(Seq("id", "rank"), mf -> idCol))
+        Unique("id", "rank"))
 
     /** Per-group cap (top `cap` by score): row-SUBSET plus a rank column, so
       * parent pk survives (verified-if-it-was) — filtering can't introduce
@@ -539,31 +368,10 @@ object PipelineSyntax {
         "line_dedup", idCol,
         Map("id" -> idCol, "text" -> textCol, "sep" -> sep, "minLineChars" -> minLineChars))
 
-    /** Incremental line dedup against an accepted-corpus store. */
-    def lineDedupedAgainst(corpus: MetaFrame, idCol: String, textCol: String,
-        sep: String = "\n", minLineChars: Int = 0): MetaFrame =
-      perDoc(Corpus.lineDedupAgainst(mf.df, corpus.df, idCol, textCol, sep, minLineChars),
-        "line_dedup_incremental", idCol,
-        Map("id" -> idCol, "text" -> textCol, "sep" -> sep, "minLineChars" -> minLineChars))
-
     /** Exact-substring span dedup (Lee et al. 2022): one row per doc. */
     def spanDeduped(idCol: String, textCol: String, spanLen: Int = 20): MetaFrame =
       perDoc(Dedup.spanDedup(mf.df, idCol, textCol, spanLen),
         "span_dedup", idCol, Map("id" -> idCol, "text" -> textCol, "spanLen" -> spanLen))
-
-    /** Incremental span dedup against an accepted-corpus span store. */
-    def spanDedupedAgainst(corpus: MetaFrame, idCol: String, textCol: String,
-        spanLen: Int = 20): MetaFrame =
-      perDoc(Dedup.spanDedupAgainst(mf.df, corpus.df, idCol, textCol, spanLen),
-        "span_dedup_incremental", idCol,
-        Map("id" -> idCol, "text" -> textCol, "spanLen" -> spanLen))
-
-    /** Surgical span decontamination against a benchmark suite. */
-    def decontaminateSpansAgainst(benchmark: MetaFrame, idCol: String,
-        textCol: String, spanLen: Int = 20): MetaFrame =
-      perDoc(Corpus.decontaminateSpans(mf.df, benchmark.df, idCol, textCol, spanLen),
-        "decontaminate_spans", idCol,
-        Map("id" -> idCol, "text" -> textCol, "spanLen" -> spanLen))
 
     /** C4 line-and-document quality filter: one verdict row per doc. */
     def c4Filtered(idCol: String, textCol: String, minWordsPerLine: Int = 5,
@@ -579,24 +387,17 @@ object PipelineSyntax {
         "vocab_coverage", idCol,
         Map("id" -> idCol, "text" -> textCol, "perMille" -> perMille))
 
-    /** Score-quantile bucketing (curriculum / quality tiers). */
-    def scoreBucketed(idCol: String, scoreCol: String, nBuckets: Int = 10,
-        binWidthMicro: Long = 1000L): MetaFrame =
-      perDoc(Corpus.scoreBuckets(mf.df, idCol, scoreCol, nBuckets, binWidthMicro),
-        "score_buckets", idCol,
-        Map("id" -> idCol, "score" -> scoreCol, "nBuckets" -> nBuckets,
-            "binWidthMicro" -> binWidthMicro))
-
     /** GPT-style sequence packing — row-EXPANDING: keyed by the fragment
-      * position (shard, seq_id, start_in_seq) when the parent is keyed
-      * (duplicate input ids would make the digest order ambiguous). */
+      * position (shard, seq_id, start_in_seq) whatever the parent's key,
+      * since every doc row owns its own token range of the shard (duplicate
+      * ids only make the digest order ambiguous). */
     def packedSequences(idCol: String, textCol: String, seqLen: Int,
         shardCol: String, salt: String = "pack"): MetaFrame =
       derived(mf, Corpus.packSequences(mf.df, idCol, textCol, seqLen, shardCol, salt),
         "pack_sequences",
         Map("id" -> idCol, "text" -> textCol, "seqLen" -> seqLen,
             "shard" -> shardCol, "salt" -> salt),
-        PerRow(Seq("shard", "seq_id", "start_in_seq"), mf -> idCol))
+        Unique("shard", "seq_id", "start_in_seq"))
 
     /** BPE vocabulary training: the merge table keyed by rank
       * (`batchSize` merges per round; 1 is exact sequential BPE). */
@@ -715,17 +516,6 @@ object PipelineSyntax {
         Map("id" -> idCol, "score" -> scoreCol, "tokens" -> tokensCol,
             "budget" -> budget, "binWidthMicro" -> binWidthMicro))
 
-    /** Per-group token-budget selection (equal per-group allocation):
-      * one verdict row per doc. */
-    def tokenBudgetSelectedBy(groupCol: String, idCol: String, scoreCol: String,
-        tokensCol: String, budget: Long, binWidthMicro: Long = 1000L): MetaFrame =
-      perDoc(Corpus.selectTokenBudgetBy(mf.df, groupCol, idCol, scoreCol,
-          tokensCol, budget, binWidthMicro),
-        "token_budget_select_by", idCol,
-        Map("group" -> groupCol, "id" -> idCol, "score" -> scoreCol,
-            "tokens" -> tokensCol, "budget" -> budget,
-            "binWidthMicro" -> binWidthMicro))
-
     /** Soft quality sampling verdicts (deterministic id-hash coin): one
       * row per doc. */
     def softQualitySampled(idCol: String, scoreCol: String, tau: Double,
@@ -734,41 +524,6 @@ object PipelineSyntax {
         "soft_quality_sample", idCol,
         Map("id" -> idCol, "score" -> scoreCol, "tau" -> tau,
             "gamma" -> gamma, "salt" -> saltKey))
-
-    /** D4 (SemDeDup → prototype pruning, frozen quantizer) verdicts: one
-      * row per doc. */
-    def d4Selected(idCol: String, vecCol: String, centroids: MetaFrame,
-        centroidIdCol: String, centroidVecCol: String, threshold: Double,
-        dropPct: Int, maxCellSize: Long = Dedup.DefaultMaxCellSize): MetaFrame =
-      perDoc(Dedup.d4Select(mf.df, idCol, vecCol, centroids.df, centroidIdCol,
-          centroidVecCol, threshold, dropPct, maxCellSize = maxCellSize),
-        "d4_select", idCol,
-        Map("id" -> idCol, "vec" -> vecCol, "threshold" -> threshold,
-            "dropPct" -> dropPct, "maxCellSize" -> maxCellSize))
-
-    /** IVF-blocked kNN graph: one row per (doc, rank ≤ k) — pk is the
-      * (id, rank) pair, proven when the parent is proven on `idCol`
-      * (knnGraph emits each rank once per doc by construction). */
-    def knnGraphOf(idCol: String, vecCol: String, centroids: MetaFrame,
-        centroidIdCol: String, centroidVecCol: String, k: Int,
-        maxCellNeighbors: Long = Dedup.DefaultMaxCellSize): MetaFrame =
-      derived(mf,
-        Similarity.knnGraph(mf.df, idCol, vecCol, centroids.df, centroidIdCol,
-          centroidVecCol, k, maxCellNeighbors),
-        "knn_graph",
-        Map("id" -> idCol, "vec" -> vecCol, "k" -> k,
-            "maxCellNeighbors" -> maxCellNeighbors),
-        Claimed(Seq("id", "rank"), mf -> idCol))
-
-    /** WIMBD-style per-source corpus profile: one row per source. */
-    def corpusReported(idCol: String, textCol: String, sourceCol: String,
-        langCol: String): MetaFrame =
-      derived(mf,
-        Corpus.corpusReport(mf.df, idCol, textCol, sourceCol, langCol),
-        "corpus_report",
-        Map("id" -> idCol, "text" -> textCol, "source" -> sourceCol,
-            "lang" -> langCol),
-        Unique("source")) // one row per source is the groupBy contract
 
     // -------------------------------------------------- round-13 ops layer
 
@@ -820,123 +575,6 @@ object PipelineSyntax {
         Map("user" -> userCol, "ts" -> tsCol, "type" -> typeCol,
             "steps" -> steps.mkString(">"), "maxStepEventsPerUser" -> maxStepEventsPerUser),
         Unique("user_id"))
-
-    /** Journey-scoped conversion attribution: one row per conversion —
-      * journeys hold at most one conversion by construction. */
-    def attributionOf(userCol: String, tsCol: String, idCol: String,
-        typeCol: String, conversionType: String,
-        touchTypes: Seq[String]): MetaFrame =
-      derived(mf,
-        Events.attribution(mf.df, userCol, tsCol, idCol, typeCol,
-          conversionType, touchTypes),
-        "attribution",
-        Map("user" -> userCol, "ts" -> tsCol, "id" -> idCol,
-            "type" -> typeCol, "conversion" -> conversionType,
-            "touches" -> touchTypes.mkString(",")),
-        Unique("conversion_id"))
-
-    /** Incremental attribution against an O(users) store: one row per
-      * batch conversion. */
-    def attributionIncrementalOf(store: MetaFrame, userCol: String,
-        tsCol: String, idCol: String, typeCol: String,
-        conversionType: String, touchTypes: Seq[String]): MetaFrame =
-      derived(mf,
-        Events.attributionIncremental(mf.df, store.df, userCol, tsCol, idCol,
-          typeCol, conversionType, touchTypes),
-        "attribution_incremental",
-        Map("user" -> userCol, "ts" -> tsCol, "id" -> idCol,
-            "type" -> typeCol, "conversion" -> conversionType,
-            "touches" -> touchTypes.mkString(",")),
-        Unique("conversion_id"))
-
-    /** Top user-journey paths: rank is unique by the re-rank window. */
-    def topPathsOf(userCol: String, tsCol: String, idCol: String,
-        typeCol: String, depth: Int = 4, k: Int = 20): MetaFrame =
-      derived(mf,
-        Events.topPaths(mf.df, userCol, tsCol, idCol, typeCol, depth, k),
-        "top_paths",
-        Map("user" -> userCol, "ts" -> tsCol, "id" -> idCol,
-            "type" -> typeCol, "depth" -> depth, "k" -> k),
-        Unique("rank"))
-
-    /** Session-scoped top paths: rank is unique by the re-rank window. */
-    def topPathsBySessionOf(userCol: String, tsCol: String, idCol: String,
-        typeCol: String, gapSeconds: Long, depth: Int = 3,
-        k: Int = 20): MetaFrame =
-      derived(mf,
-        Events.topPathsBySession(mf.df, userCol, tsCol, idCol, typeCol,
-          gapSeconds, depth, k),
-        "session_paths",
-        Map("user" -> userCol, "ts" -> tsCol, "id" -> idCol,
-            "type" -> typeCol, "gapSeconds" -> gapSeconds,
-            "depth" -> depth, "k" -> k),
-        Unique("rank"))
-
-    /** Markov transition matrix: one row per (src, dst) — groupBy contract. */
-    def transitionsOf(userCol: String, tsCol: String, idCol: String,
-        typeCol: String): MetaFrame =
-      derived(mf,
-        Events.transitions(mf.df, userCol, tsCol, idCol, typeCol),
-        "transitions",
-        Map("user" -> userCol, "ts" -> tsCol, "id" -> idCol, "type" -> typeCol),
-        Unique("src_type", "dst_type"))
-
-    /** PSI drift vs a reference frame: one row per bucket. */
-    def driftPsiAgainst(reference: MetaFrame, valueCol: String,
-        buckets: Int = 10): MetaFrame =
-      derived(mf, Checks.driftPsi(reference.df, mf.df, valueCol, buckets),
-        "drift_psi",
-        Map("value" -> valueCol, "buckets" -> buckets),
-        Unique("bucket"))
-
-    /** Embedding centroid drift vs a reference frame: one row per label
-      * (full-outer over both sides' label sets). */
-    def centroidDriftAgainst(reference: MetaFrame, labelCol: String,
-        vecCol: String, dim: Int): MetaFrame =
-      derived(mf,
-        graft.operators.Similarity.centroidDrift(reference.df, mf.df,
-          labelCol, vecCol, dim),
-        "centroid_drift",
-        Map("label" -> labelCol, "vec" -> vecCol, "dim" -> dim),
-        Unique("label"))
-
-    /** Categorical PSI drift vs a reference frame: one row per domain
-      * label. */
-    def driftPsiCategoricalAgainst(reference: MetaFrame, catCol: String,
-        maxCategories: Int = 20): MetaFrame =
-      derived(mf,
-        Checks.driftPsiCategorical(reference.df, mf.df, catCol, maxCategories),
-        "drift_psi_cat",
-        Map("cat" -> catCol, "maxCategories" -> maxCategories),
-        Unique("category"))
-
-    /** MAD outlier flags: row-preserving, parent pk survives. */
-    def outliersMadOf(groupCol: String, valueCol: String,
-        k: Double = 3.0): MetaFrame =
-      derived(mf, Checks.outliersMad(mf.df, groupCol, valueCol, k),
-        "outliers_mad",
-        Map("group" -> groupCol, "value" -> valueCol, "k" -> k),
-        SameAsParent)
-
-    /** Join-key skew report: rank is unique by the re-rank window. */
-    def skewReportOf(keyCol: String, k: Int = 20,
-        targetPartitions: Int = 200): MetaFrame =
-      derived(mf, Checks.skewReport(mf.df, keyCol, k, targetPartitions),
-        "skew_report",
-        Map("key" -> keyCol, "k" -> k, "targetPartitions" -> targetPartitions),
-        Unique("rank"))
-
-    /** Daily volume anomaly scores: one row per (type, day) — groupBy
-      * contract. */
-    def dailyAnomaliesOf(tsCol: String, typeCol: String, window: Int = 7,
-        minPrior: Int = 3, thresholdMicro: Long = 3000000L): MetaFrame =
-      derived(mf,
-        Events.dailyAnomalies(mf.df, tsCol, typeCol, window, minPrior,
-          thresholdMicro),
-        "daily_anomalies",
-        Map("ts" -> tsCol, "type" -> typeCol, "window" -> window,
-            "minPrior" -> minPrior, "thresholdMicro" -> thresholdMicro),
-        Unique("event_type", "day"))
 
     /** Data-quality constraint verdicts: one row per constraint. The
       * check_name pk is claimed only when the declared ids are distinct
@@ -1009,33 +647,6 @@ object PipelineSyntax {
         "bm25_topk",
         Map("id" -> idCol, "text" -> textCol, "k" -> k, "k1" -> k1, "b" -> b),
         Unique("query_id", "rank"))
-
-    /** BM25 with pseudo-relevance-feedback expansion: one row per
-      * (query, rank) — TopKAgg contract like [[bm25TopKOf]]. */
-    def bm25ExpandedTopKOf(idCol: String, textCol: String, queries: MetaFrame,
-        queryIdCol: String, queryTextCol: String, k: Int = 10,
-        fbDocs: Int = 3, fbTerms: Int = 5,
-        k1: Double = 1.2, b: Double = 0.75): MetaFrame =
-      derived(mf,
-        Retrieval.bm25ExpandedTopK(mf.df, idCol, textCol, queries.df,
-          queryIdCol, queryTextCol, k, fbDocs, fbTerms, k1, b),
-        "bm25_expanded_topk",
-        Map("id" -> idCol, "text" -> textCol, "k" -> k,
-            "fbDocs" -> fbDocs, "fbTerms" -> fbTerms, "k1" -> k1, "b" -> b),
-        Unique("query_id", "rank"))
-
-    /** Ranking evaluation against a qrels table: one row per query —
-      * groupBy contract. */
-    def evalRankingAgainst(qrels: MetaFrame, k: Int = 10,
-        queryIdCol: String = "query_id", idCol: String = "doc_id",
-        rankCol: String = "rank", relCol: String = "rel"): MetaFrame =
-      derived(mf,
-        Retrieval.evalRanking(mf.df, qrels.df, k, queryIdCol, idCol,
-          rankCol, relCol),
-        "eval_ranking",
-        Map("k" -> k, "queryId" -> queryIdCol, "id" -> idCol,
-            "rank" -> rankCol, "rel" -> relCol),
-        Unique("query_id"))
 
     /** Reciprocal-rank fusion of this ranked list with `others` (hybrid
       * retrieval): one row per (query, rank) by construction of the

@@ -869,65 +869,6 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(inc.dropDuplicates(Seq("id")).df eq inc.df) // proof survives
   }
 
-  test("PipelineSyntax: fuzzy, entity and incremental-dedup keys are proven only by a proven id") {
-    import graft.operators.PipelineSyntax._
-    import spark.implicits._
-    // id 1 twice with different texts; every text is within 2 edits of the others
-    val base = "the quick brown fox jumps over the lazy dog"
-    val left = MetaFrame(Seq((1L, base), (1L, base.replace("dog", "dot")),
-      (2L, base.replace("dog", "dig"))).toDF("doc_id", "text"), Map.empty)
-    val right = MetaFrame(Seq((7L, base), (7L, base.replace("fox", "fix")))
-      .toDF("oid", "otext"), Map.empty)
-    val corpus = MetaFrame(docs, Map.empty)
-    val verbs: Seq[(String, Seq[String], (MetaFrame, MetaFrame) => MetaFrame)] = Seq(
-      ("fuzzyEditPairs", Seq("id_a", "id_b"), (l, _) => l.fuzzyEditPairs("doc_id", "text", 2)),
-      ("fuzzyEditJoin", Seq("id_a", "id_b"),
-        (l, r) => l.fuzzyEditJoin("doc_id", "text", r, "oid", "otext", 2)),
-      ("entityResolved", Seq("doc_id"), (l, _) => l.entityResolved("doc_id", "text", 2)),
-      ("dedupIncremental", Seq("id"), (l, _) => l.dedupIncremental(corpus, "doc_id", "text")))
-    verbs.foreach { case (name, pk, verb) =>
-      val out = verb(left, right)
-      assert(out.primaryKey.contains(pk), s"$name claims ${out.primaryKey}")
-      val keys = out.df.dropDuplicates(pk).count()
-      assert(out.df.count() > keys, s"$name: the fixture must repeat an output key")
-      assert(out.dropDuplicates(pk).count() == keys, s"$name: dedup on the claimed key was skipped")
-      val proven = verb(left.dropDuplicates(Seq("doc_id")), right.dropDuplicates(Seq("oid")))
-      assert(proven.primaryKey.contains(pk), name)
-      assert(proven.dropDuplicates(pk).df eq proven.df, s"$name: a proven id must still elide")
-    }
-  }
-
-  test("PipelineSyntax: unique-by-construction keys hold on duplicate-id input") {
-    import graft.operators.PipelineSyntax._
-    import spark.implicits._
-    val dupDocs = MetaFrame(docs.union(docs.filter(col("doc_id") === 1L)), Map.empty)
-    val baskets = MetaFrame(Seq((1L, "a"), (1L, "a"), (1L, "b"), (2L, "a"), (2L, "b"), (2L, "b"))
-      .toDF("basket", "item"), Map.empty)
-    val edges = MetaFrame(Seq((1L, 2L), (1L, 2L), (2L, 3L), (3L, 1L), (3L, 1L)).toDF("s", "t"),
-      Map.empty)
-    val queries = MetaFrame(Seq((9L, "quick fox"), (9L, "query engines")).toDF("qid", "qtext"),
-      Map.empty)
-    val ranked = MetaFrame(Seq((9L, 1L, 1L), (9L, 2L, 1L), (9L, 3L, 2L)).toDF("query_id", "rank",
-      "doc_id"), Map.empty)
-    val other = MetaFrame(Seq((9L, 1L, 2L), (9L, 2L, 2L)).toDF("query_id", "rank", "doc_id"),
-      Map.empty)
-    val verbs: Seq[(String, Seq[String], () => MetaFrame)] = Seq(
-      ("dedupMinHash", Seq("doc_id"), () => dupDocs.dedupMinHash("doc_id", "text")),
-      ("coOccurrenceOf", Seq("item_a", "item_b"), () => baskets.coOccurrenceOf("basket", "item")),
-      ("trianglesOf", Seq("id"), () => edges.trianglesOf("s", "t")),
-      ("pageRankedInt", Seq("id"), () => edges.pageRankedInt("s", "t", iterations = 2)),
-      ("bm25TopKOf", Seq("query_id", "rank"),
-        () => dupDocs.bm25TopKOf("doc_id", "text", queries, "qid", "qtext", k = 3)),
-      ("rrfFuseWith", Seq("query_id", "rank"), () => ranked.rrfFuseWith(Seq(other), k = 3)))
-    verbs.foreach { case (name, pk, verb) =>
-      val out = verb()
-      assert(out.primaryKey.contains(pk), s"$name claims ${out.primaryKey}")
-      assert(out.dropDuplicates(pk).df eq out.df, s"$name: the key is proven by construction")
-      val rows = out.df.count()
-      assert(rows > 0 && rows == out.df.dropDuplicates(pk).count(), s"$name repeats a key")
-    }
-  }
-
   test("PipelineSyntax: corpus-assembly ops record lineage and pk semantics") {
     import graft.operators.PipelineSyntax._
     val mf = MetaFrame(docs, Map("corpus" -> "unit")).dropDuplicates(Seq("doc_id")) // verified pk
@@ -954,14 +895,14 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(lm.dropDuplicates(Seq("id")).df eq lm.df)
     assert(lm.metadata("lineage").asInstanceOf[Seq[Map[String, Any]]]
       .map(_("op")) == Seq("lm_score"))
-    // tfidfTopTerms expands rows: keyed by (id, rank), proof extends
+    // tfidfTopTerms expands rows: keyed by (id, rank), proven by construction
     val tfidf = mf.tfidfTopTerms("doc_id", "text", k = 2)
     assert(tfidf.primaryKey.contains(Seq("id", "rank")))
     assert(tfidf.dropDuplicates(Seq("id", "rank")).df eq tfidf.df)
-    // an unkeyed parent yields no pk claim on either
+    // an unkeyed parent yields no id claim; (id, rank) needs no parent key
     val unkeyed = MetaFrame(docs, Map.empty[String, Any])
     assert(unkeyed.lmScore("doc_id", "text").primaryKey.isEmpty)
-    assert(unkeyed.tfidfTopTerms("doc_id", "text").primaryKey.isEmpty)
+    assert(unkeyed.tfidfTopTerms("doc_id", "text").primaryKey.contains(Seq("id", "rank")))
   }
 
   test("PipelineSyntax: as-of and range joins record lineage and pk semantics") {
@@ -986,6 +927,34 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(rj.primaryKey.isEmpty)
     assert(rj.metadata("lineage").asInstanceOf[Seq[Map[String, Any]]].map(_("op")) ==
       Seq("join_range_binned"))
+  }
+
+  test("PipelineSyntax: tfidf and packing keys hold on duplicate-id input without a parent key") {
+    import graft.operators.PipelineSyntax._
+    // doc 1 twice, with different texts: still one row per (id, rank) and
+    // one row per fragment position
+    val dup = MetaFrame(docs.union(docs.filter(col("doc_id") === 1L)
+      .withColumn("text", concat(col("text"), lit(" extra")))), Map.empty)
+    val tfidf = dup.tfidfTopTerms("doc_id", "text", k = 2)
+    assert(tfidf.primaryKey.contains(Seq("id", "rank")))
+    assert(tfidf.dropDuplicates(Seq("id", "rank")).df eq tfidf.df)
+    assert(tfidf.df.count() == 10 && tfidf.df.dropDuplicates("id", "rank").count() == 10)
+    // sharded by id, so both copies of doc 1 pack into one shard
+    val packed = dup.packedSequences("doc_id", "text", seqLen = 16, shardCol = "doc_id")
+    val key = Seq("shard", "seq_id", "start_in_seq")
+    assert(packed.primaryKey.contains(key) && (packed.dropDuplicates(key).df eq packed.df))
+    assert(packed.df.count() == packed.df.dropDuplicates(key).count())
+  }
+
+  test("logisticTrained on a frame with no labeled row is the empty model") {
+    import graft.operators.PipelineSyntax._
+    import spark.implicits._
+    val noLabels = MetaFrame(Seq((1L, "a b", Option.empty[Long])).toDF("doc_id", "text", "label"))
+    val model = noLabels.logisticTrained("doc_id", "text", "label", dim = 16, iters = 2)
+    assert(model.primaryKey.contains(Seq("f")))
+    assert(model.df.count() == 0)
+    val scored = noLabels.logisticScored(model, "doc_id", "text", dim = 16)
+    assert(scored.df.select("score_micro").as[Long].collect().toSeq == Seq(500000L))
   }
 
   test("int8 quantization: bounded cosine error and high top-10 recall on real embeddings") {
@@ -2127,10 +2096,11 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(em.primaryKey.contains(Seq("doc_id")))
     assert(em.metadata("lineage").asInstanceOf[Seq[Map[String, Any]]]
       .map(_("op")) == Seq("epoch_mix"))
-    // unkeyed parents make no pk claim
+    // unkeyed parents make no id claim; fragment positions need no parent key
     val unkeyed = MetaFrame(langed, Map.empty[String, Any])
     assert(unkeyed.lineDeduped("doc_id", "text").primaryKey.isEmpty)
-    assert(unkeyed.packedSequences("doc_id", "text", 16, "lang").primaryKey.isEmpty)
+    assert(unkeyed.packedSequences("doc_id", "text", 16, "lang").primaryKey
+      .contains(Seq("shard", "seq_id", "start_in_seq")))
   }
 
   test("curateCorpus stages interact: spans run over line-dedup rewrites, mix over gate survivors") {
